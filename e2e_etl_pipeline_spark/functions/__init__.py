@@ -12,9 +12,6 @@ from e2e_etl_pipeline_spark.functions.text import (  # noqa: F401
 )
 from e2e_etl_pipeline_spark.functions.salary import (  # noqa: F401
     parse_salary,
-    extract_currency,
-    extract_numbers,
-    extract_pay_period,
 )
 from e2e_etl_pipeline_spark.functions.vectors import (  # noqa: F401
     cosine_similarity,

@@ -8,8 +8,10 @@ Reference semantics (DataTransform/transform_data.py:144-173):
     MATCHED case ('gbp' stays 'gbp'); the only normalization is
     zł→PLN, case-insensitively (:154-158).
   * pay period: case-insensitive token after a slash —
-    mies.|godz.|rok|dzień|tydzień|h — mapped {mies.→month, godz.→h} by
-    exact (case-sensitive) lookup, identity fallback (:161-165).
+    mies.|godz.|rok|dzień|tydzień|h, plus the already-normalized "month"
+    that JJIT "cur/period" spans carry verbatim (:62-64) — mapped
+    {mies.→month, godz.→h} by exact (case-sensitive) lookup, identity
+    fallback (:161-165).
   * min/max: ≥2 numbers → (first, second); 1 → (n, n); 0 → missing
     (:167-173).
 
@@ -17,7 +19,8 @@ The engine returns typed NULL for missing (not the reference's "" — see
 SURVEY.md §1.2); the CSV sink re-materializes "" at the edge.
 
 Everything is built-in expressions (regexp_extract_all / transform /
-element_at / when), so Catalyst fuses the whole parse into one codegen stage.
+element_at / CASE), so Catalyst fuses the whole parse into one codegen
+stage.
 """
 
 from __future__ import annotations
@@ -25,80 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-NBSP = " "
-
-NUMBER_PATTERN = r"\d[\d\s]*(?:,\d+)?"
-CURRENCY_PATTERN = r"(?i)(zł|PLN|EUR|USD|CHF|GBP)"
-# Polish tokens from the reference (transform_data.py:160-165) plus the
-# already-normalized "month" that JJIT "cur/period" spans carry verbatim
-# (transform_data.py:62-64 splits on '/' without regexing the token).
-PERIOD_PATTERN = r"(?i)/\s*(mies\.|godz\.|rok|dzień|tydzień|month|h)"
-
-# {mies. → month, godz. → h}; other tokens map to themselves
-# (transform_data.py:161-165).
-PERIOD_MAP = {"mies.": "month", "godz.": "h"}
-
-
-def _norm(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, NBSP, " ")
-
-
-def extract_numbers(col: Column | str) -> Column:
-    """array<double> of every salary number, normalized (A18)."""
-    matches = F.regexp_extract_all(_norm(col), F.lit(NUMBER_PATTERN), 0)
-    cleaned = F.transform(
-        matches,
-        lambda m: F.regexp_replace(F.regexp_replace(m, r"\s+", ""), ",", "."),
-    )
-    return F.transform(cleaned, lambda m: m.cast("double"))
-
-
-def extract_currency(col: Column | str) -> Column:
-    """First currency token in its matched case, zł→PLN; NULL when absent
-    (A19, transform_data.py:154-158 — the reference does NOT uppercase)."""
-    raw = F.regexp_extract(_norm(col), CURRENCY_PATTERN, 1)
-    return F.when(raw == "", F.lit(None).cast("string")).otherwise(
-        F.when(F.lower(raw) == "zł", F.lit("PLN")).otherwise(raw)
-    )
-
-
-def extract_pay_period(col: Column | str) -> Column:
-    """Pay-period token after '/', mapped through PERIOD_MAP (A20)."""
-    raw = F.regexp_extract(_norm(col), PERIOD_PATTERN, 1)
-    mapped = raw
-    for k, v in PERIOD_MAP.items():
-        mapped = F.when(raw == k, F.lit(v)).otherwise(mapped)
-    return F.when(raw == "", F.lit(None).cast("string")).otherwise(mapped)
-
-
-def parse_salary_columns(col: Column | str) -> Column:
-    """Column-API formulation of parse_salary — the executable spec the
-    SQL-text fast path below is property-tested against
-    (tests/test_salary.py), and the fallback for Column (non-name)
-    inputs."""
-    nums = extract_numbers(col)
-    n = F.size(nums)
-    first = F.try_element_at(nums, F.lit(1))
-    second = F.try_element_at(nums, F.lit(2))
-    minimum = F.when(n >= 1, first).otherwise(F.lit(None).cast("double"))
-    maximum = (
-        F.when(n >= 2, second)
-        .when(n == 1, first)
-        .otherwise(F.lit(None).cast("double"))
-    )
-    return F.struct(
-        minimum.alias("minimum"),
-        maximum.alias("maximum"),
-        extract_currency(col).alias("currency"),
-        extract_pay_period(col).alias("pay_period"),
-    )
-
-
-# SQL-text twin of the Column tree above, function by function. Backslash
-# discipline (CLAUDE.md round-4 gotcha): Spark SQL string literals eat one
-# backslash level, so every regex backslash is doubled here. NBSP appears
-# as the literal character. {c} is a backtick-quoted column reference.
+# The parse as Spark SQL text. Spark SQL string literals eat one backslash
+# level, so every regex backslash is doubled here. NBSP appears as the
+# literal character. {c} is a backtick-quoted column reference.
 _NORM_SQL = "regexp_replace({c}, ' ', ' ')"
 _NUMS_SQL = (
     "transform(regexp_extract_all(" + _NORM_SQL + ", "
@@ -134,19 +66,19 @@ _PARSE_SQL = (
 ).replace("_nums", _NUMS_SQL)
 
 
-def parse_salary(col: Column | str) -> Column:
-    """Full A15-A21 composite → struct(minimum, maximum, currency, pay_period).
+def parse_salary(col: str) -> Column:
+    """Full A15-A21 composite over the column named ``col`` →
+    struct(minimum, maximum, currency, pay_period).
 
     Count-dependent min/max (A21, transform_data.py:167-173):
       >=2 numbers → (nums[0], nums[1]); 1 → (n, n); 0 → (NULL, NULL).
 
-    For string column names the tree ships as ONE F.expr SQL string: the
-    Column-API build spends ~0.5 s of py4j round-trips PER QUERY
-    CONSTRUCTION (round-11 measurement — the bench times construction),
-    while a single expr is one call and the JVM parses it. Semantics are
-    the Column formulation's, property-tested equal in
-    tests/test_salary.py."""
-    if isinstance(col, str):
-        safe = col.replace("`", "``")
-        return F.expr(_PARSE_SQL.format(c=f"`{safe}`"))
-    return parse_salary_columns(col)
+    The tree ships as ONE F.expr SQL string: a Column-API build spends
+    ~0.5 s of py4j round-trips PER QUERY CONSTRUCTION (round-11
+    measurement — the bench times construction), while a single expr is
+    one call and the JVM parses it. tests/test_salary.py checks it
+    against handcrafted cases and, on hypothesis-generated strings,
+    against the row-at-a-time Python twin
+    (queries/udf_surface._parse_salary_py)."""
+    safe = col.replace("`", "``")
+    return F.expr(_PARSE_SQL.format(c=f"`{safe}`"))

@@ -6,8 +6,6 @@ the expensive step is a key-partitioned shuffle, never a cross product.
 
 from e2e_etl_pipeline_spark.operators.dedup import (  # noqa: F401
     dedup_exact_first_wins,
-    minhash_signatures,
-    lsh_candidate_pairs,
     simhash_fingerprints,
     token_jaccard_pairs,
 )

@@ -22,7 +22,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from e2e_etl_pipeline_spark.functions.digests import md5_u60, md5_u60_spark_sql
+from e2e_etl_pipeline_spark.functions.digests import md5_u60_spark_sql
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
 
 
@@ -131,9 +131,8 @@ def minhash_signature_vector(
     hasher: str = "xxhash64",
 ) -> DataFrame:
     """(id, _m0 .. _m{k-1}) — ONE wide row per document holding all k
-    minhashes (round 12). This is the frame minhash_signatures posexplodes;
-    exposing it lets multi-consumer pipelines (banding sides, the pairwise
-    agreement estimate) run as cheap PROJECTIONS of one AQE-reused
+    minhashes (round 12). Multi-consumer pipelines (banding sides, the
+    pairwise agreement estimate) run as cheap PROJECTIONS of one AQE-reused
     exchange instead of each re-running the final min-merge aggregate and
     a posexplode, then re-aggregating rows back together
     (plans/r12/q_dedup_near_executed_before.txt: 4 consumers = 4
@@ -217,94 +216,6 @@ def minhash_signature_vector(
     return sums
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    shingle_size: int = 3,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """(id, hash_id, minhash) — one row per document per hash function;
-    the narrow row view of minhash_signature_vector (see its docstring
-    for the hashing/shuffle analysis). The trailing posexplode restores
-    the row shape consumers expect — and leaves the frame partitioned by
-    id, which keyed aggregations downstream reuse exchange-free."""
-    sums = minhash_signature_vector(
-        df, id_col, text_col, num_hashes, shingle_size, hasher
-    )
-    return sums.select(
-        "id",
-        F.posexplode(F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])).alias(
-            "hash_id", "minhash"
-        ),
-    ).select("id", F.col("hash_id").cast("long").alias("hash_id"), "minhash")
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """LSH banding: docs agreeing on all rows of any band become a candidate
-    pair. Returns (id_a, id_b, n_shared_bands) with id_a < id_b.
-
-    The join key is (band_id, band_hash) — a fine-grained key whose groups
-    are tiny for non-duplicate data, so the pair explosion is bounded by the
-    true near-duplicate clusters, not by corpus size. ``hasher`` picks the
-    band-string hash ("xxhash64" default / "md5" for the SQL-reproducible
-    md5_u60, matching minhash_signatures) — equality of the band hash
-    stands in for equality of the comma-joined minhash string either way.
-    """
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands "
-            f"({bands}); a floor split would silently create extra short "
-            "bands with far looser matching probability"
-        )
-    if hasher == "md5":
-        band_hash_fn = md5_u60
-    elif hasher == "xxhash64":
-        band_hash_fn = F.xxhash64
-    else:
-        raise ValueError(f"unsupported hasher: {hasher}")
-    rows_per_band = num_hashes // bands
-    banded = (
-        signatures.withColumn("band_id", (F.col("hash_id") / rows_per_band).cast("int"))
-        .groupBy("id", "band_id")
-        .agg(
-            band_hash_fn(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("hash_id", "minhash"))),
-                        lambda s: s["minhash"].cast("string"),
-                    ),
-                    ",",
-                )
-            ).alias("band_hash")
-        )
-    )
-    return _band_self_join(banded)
-
-
-def _band_self_join(banded: DataFrame) -> DataFrame:
-    """Shared banding epilogue: self-join (id, band_id, band_hash) on the
-    band key, count shared bands per ordered pair."""
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-
-
 def lsh_candidate_pairs_vec(
     sums: DataFrame,
     num_hashes: int = 32,
@@ -312,15 +223,18 @@ def lsh_candidate_pairs_vec(
     hasher: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding over the WIDE signature frame (minhash_signature_vector):
-    identical output to lsh_candidate_pairs(minhash_signatures(...)) —
-    the band string is the same hash_id-ordered comma join of minhash
-    values (every hash_id is always present in the wide row, so
-    concat_ws over the k columns in order IS the sorted collect_list) —
-    but built as a pure PROJECTION + 1-struct-per-band explode instead of
-    re-aggregating k posexploded rows back into bands with
-    collect_list/array_sort (round 12, guide §2.3/§2.4: each banding
-    side becomes a map-side projection of the one AQE-reused signature
-    exchange)."""
+    docs agreeing on all rows of any band become a candidate pair.
+    Returns (id_a, id_b, n_shared_bands) with id_a < id_b.
+
+    The band string is the hash_id-ordered comma join of minhash values
+    (concat_ws over the band's k columns in order); ``hasher`` picks its
+    hash ("xxhash64" default / "md5" for the SQL-reproducible md5_u60).
+    The join key is (band_id, band_hash) — a fine-grained key whose
+    groups are tiny for non-duplicate data, so the pair explosion is
+    bounded by the true near-duplicate clusters, not by corpus size.
+    Each banding side is a pure PROJECTION + 1-struct-per-band explode
+    of the one AQE-reused signature exchange (round 12, guide
+    §2.3/§2.4)."""
     if num_hashes % bands:
         raise ValueError(
             f"num_hashes ({num_hashes}) must divide evenly into bands "
@@ -363,7 +277,18 @@ def lsh_candidate_pairs_vec(
     banded = sums.select("id", F.explode(band_structs).alias("_bb")).selectExpr(
         "id", "_bb.band_id AS band_id", "_bb.band_hash AS band_hash"
     )
-    return _band_self_join(banded)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
 
 
 def minhash_similarity_vec(
@@ -372,14 +297,13 @@ def minhash_similarity_vec(
     """Estimated Jaccard for candidate pairs over the WIDE signature frame:
     two single-row joins (id_a, id_b) and a column-wise agreement
     expression — no per-hash row explosion, no (id, hash_id) join, no
-    re-aggregation (round 12; the old shape joined 2·k rows per pair and
-    averaged them back). Bit-identical to minhash_similarity: agreement
-    counts are exact small integers and k is a power-of-two-free exact
-    divisor — every sum of 0.0/1.0 terms and the final division are
-    exactly representable, so F.avg over rows and this column sum produce
-    the same double regardless of order. ``pairs`` must be unique per
-    (id_a, id_b) (both producers group by the pair); a pair whose id is
-    absent from ``sums`` drops, exactly like the old inner joins."""
+    re-aggregation (round 12). Agreement counts are exact small integers,
+    so the column sum and the division by k are exactly representable and
+    order-independent. stable_round, not round (registry rule: thresholds
+    compare the rounded value): the floor form is the one the SQL twin
+    reproduces verbatim. ``pairs`` must be unique per (id_a, id_b) (the
+    banding join groups by the pair); a pair whose id is absent from
+    ``sums`` drops (inner joins)."""
     # selectExpr / F.expr strings, not per-column Column chains — the wide
     # renames and the 32-term agreement sum otherwise cost ~0.6 s of py4j
     # construction per query (measured; the q_salary_parse rule).
@@ -537,29 +461,6 @@ def dedup_corpus(
     keep_clustered = df.join(survivors, id_col, "left_semi")
     untouched = df.join(in_pairs, id_col, "left_anti")
     return untouched.unionByName(keep_clustered)
-
-
-def minhash_similarity(signatures: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Estimated Jaccard for candidate pairs = fraction of agreeing
-    minhashes. stable_round, not round (registry rule: thresholds compare
-    the rounded value): k/num_hashes is an exact dyadic double, but the
-    floor form is the one the SQL twin reproduces verbatim."""
-    sig_a = signatures.select(
-        F.col("id").alias("id_a"), "hash_id", F.col("minhash").alias("mh_a")
-    )
-    sig_b = signatures.select(
-        F.col("id").alias("id_b"), "hash_id", F.col("minhash").alias("mh_b")
-    )
-    return (
-        pairs.join(sig_a, "id_a")
-        .join(sig_b, ["id_b", "hash_id"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            stable_round(
-                F.avg((F.col("mh_a") == F.col("mh_b")).cast("double")), 4
-            ).alias("est_jaccard")
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,23 +1,20 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
 Three tiers (SURVEY.md §2 B.8, §4.2):
-  * brute_force_topk — exact cosine top-k via crossJoin + per-query window.
-    Correctness baseline; viable when |queries| × |corpus| is small or one
-    side broadcasts.
+  * brute_force_topk — exact cosine top-k: a blocked NumPy kernel scores
+    each corpus block against every query and cuts a local top-k before the
+    final per-query window. Correctness baseline.
   * lsh_bucketed_topk — random-hyperplane (sign) LSH: vectors hash to
     sign-pattern buckets per table; candidates come from equi-joins on
     (table, bucket), so the scale cost is Σ bucket-collisions, not the cross
     product. Multiple tables trade recall for cost. Hyperplanes are seeded
-    NumPy — deterministic, broadcast as literal arrays into the plan.
+    NumPy — deterministic, regenerated inside the bucketizer kernel.
   * (IVF variant — centroid assignment + probe-N — follows the same
     bucket-join shape with k-means centroids; LSH is the default because it
     needs no training pass.)
 """
 
 from __future__ import annotations
-
-import os
-import weakref
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -30,120 +27,6 @@ from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
 def with_vector_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Attach the L2 norm (norm) — precompute once, reuse across joins."""
     return df.withColumn("norm", l2_norm(vec_col))
-
-
-# session (weak) → {tag: [(input-files signature, JVM canonicalized plan,
-# persisted frame)]}. Round-8 advice: filter_modal_dim /
-# _planes_frame_lazy used to persist() a NEW DataFrame on every
-# invocation and never unpersist — a long driver session accumulated
-# CacheManager entries (bounded only by Spark's canonical-plan dedupe)
-# and, worse, every bench query re-ran the corpus-wide modal aggregate at
-# action time (+21% on q_similarity_topk, round-8 bench). Memoizing per
-# (session, input plan, input-file identity) returns the SAME persisted
-# frame, so the aggregate materializes once per session and the cache
-# population is bounded by distinct input plans.
-#
-# Three identity lessons burned in (round-9 reviews):
-# * Plan identity is the JVM canonicalized plan compared via .equals —
-#   NOT its toString, which is PATH-BLIND for file relations ("Relation
-#   [...] parquet" prints no location, and long field lists truncate), so
-#   a string key silently shares one corpus's cached frame with a
-#   same-schema corpus from another path (caught live by the pytest
-#   suite: the 8-dim semdedup fixture was served the sf0.01 corpus's
-#   64 modal dim).
-# * The plan alone is mtime-blind: a parquet path regenerated IN PLACE
-#   mid-session keeps the same root path and compares plan-equal, so the
-#   signature also folds each input file's (mtime_ns, size) — the same
-#   invalidation signal catalog._dataset_schema uses for the same reason.
-#   Inputs with more than _MEMO_MAX_FILES files (or non-stat-able URIs)
-#   skip memoization entirely rather than risk staleness.
-# * The dict is keyed WEAKLY by session (like catalog._SCHEMA_CACHE), so
-#   a process that starts and stops several Spark sessions doesn't pin
-#   dead sessions' frames/py4j objects for the process lifetime.
-_FRAME_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_MEMO_MAX_FILES = 64
-
-
-def _input_files_signature(files_df: DataFrame) -> tuple | None:
-    """(uri, mtime_ns, size) per input file, or None when the input is
-    not memoization-safe (too many files / un-stat-able URI).
-
-    MUST be computed from the RAW INPUT frame, never from the frame being
-    memoized: Dataset.inputFiles reads the OPTIMIZED plan, and once the
-    memoized frame has been persisted+materialized, cache substitution
-    rewrites any semantically-equal plan to an InMemoryRelation with NO
-    file scans — inputFiles comes back empty, every later lookup
-    mismatches the stored signature, and the memo silently degrades to
-    one persist per invocation (found live by the memo-behavior check:
-    bucket grew on a same-path repeat)."""
-    files = sorted(files_df.inputFiles())
-    if len(files) > _MEMO_MAX_FILES:
-        return None
-    sig = []
-    for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = path[5:]
-            while path.startswith("//"):
-                path = path[1:]
-        st = os.stat(path)  # OSError → caller skips memoization
-        sig.append((uri, st.st_mtime_ns, st.st_size))
-    return tuple(sig)
-
-
-def _memoized_persist(
-    df: DataFrame, key_df: DataFrame, files_df: DataFrame, tag: str
-) -> DataFrame:
-    """Return a persisted copy of ``df``, reused across invocations whose
-    ``key_df`` has a semantically-equal analyzed plan over identical
-    input files and same ``tag``. ``key_df`` must be a PURE-RELATIONAL
-    identity proxy for ``df`` (no Python UDF nodes — re-pickled closures
-    would never compare equal; the ANALYZED plan is compared because
-    cache substitution only rewrites optimized plans); ``files_df`` is
-    the raw input frame the file signature is read from (see
-    _input_files_signature); ``tag`` must carry every non-plan parameter
-    that shapes ``df``."""
-    try:
-        sig = _input_files_signature(files_df)
-        if sig is None:
-            return df.persist()
-        canon = key_df._jdf.queryExecution().analyzed().canonicalized()
-        per_session = _FRAME_MEMO.setdefault(df.sparkSession, {})
-        bucket = per_session.setdefault(tag, [])
-        new_files = {uri: (m, s) for uri, m, s in sig}
-        for entry in list(bucket):
-            fsig, jplan, frame = entry
-            same_plan = jplan.equals(canon)
-            if same_plan and fsig == sig:
-                return frame
-            # Evict superseded entries instead of pinning dead frames for
-            # the session lifetime (unpersist is safe for any caller still
-            # holding the old frame — it recomputes on next action). Two
-            # staleness signals:
-            #   1. same plan, different file identity — the path was
-            #      regenerated in place (or its file set changed); the old
-            #      (plan, sig) key can never hit again.
-            #   2. (round-9 advice) ANY overlap between the entry's file
-            #      paths and the new signature's at a different
-            #      (mtime, size) — REGARDLESS of plan equality: an in-place
-            #      regeneration that also changes the schema/column set
-            #      produces a NON-equal plan, so signal 1 alone would keep
-            #      the superseded frame persisted forever.
-            stale = same_plan or any(
-                uri in new_files and (m, s) != new_files[uri]
-                for uri, m, s in fsig
-            )
-            if stale:
-                bucket.remove(entry)
-                try:
-                    frame.unpersist()
-                except Exception:  # pragma: no cover
-                    pass
-    except Exception:  # pragma: no cover - py4j/OS surface drift
-        return df.persist()
-    out = df.persist()
-    bucket.append((sig, canon, out))
-    return out
 
 
 # DuckDB-side twin of filter_modal_dim (embed as `__dim AS (...)` and gate
@@ -166,23 +49,16 @@ def filter_modal_dim(em: DataFrame, vec_col: str = "embedding") -> DataFrame:
     is NULL under ANSI, -1 without — never equal to a real length).
 
     The modal frame is a 1-row broadcast join, so query construction stays
-    job-free and the gate costs one tiny keyed aggregate ONCE per session
-    per corpus plan (memoized persist — see _memoized_persist)."""
-    # memoized persist(): the gated frame typically feeds several consumer
-    # subtrees (self-join sides, counts, LSH bucketize ×2) and each would
-    # otherwise embed its own copy of this full-corpus aggregate; the
-    # 1-row cache pays it once per SESSION and stays
-    # construction-job-free (lazy).
-    dim_frame = (
+    job-free. The tiny keyed aggregate is part of each query's plan
+    (identical consumer subtrees can share its exchange); no frame
+    outlives the query."""
+    dim = (
         em.where(F.col(vec_col).isNotNull())
         .groupBy(F.size(vec_col).alias("__d"))
         .agg(F.count(F.lit(1)).alias("__c"))
         .orderBy(F.desc("__c"), F.asc("__d"))
         .limit(1)
         .select("__d")
-    )
-    dim = _memoized_persist(
-        dim_frame, dim_frame, em, tag=f"modal_dim:{vec_col}"
     )
     return em.join(
         F.broadcast(dim), F.size(vec_col) == F.col("__d")
@@ -236,70 +112,14 @@ def _rank_topk(scored: DataFrame, k: int, extra_cols: list[str] | None = None) -
     )
 
 
-def brute_force_topk_expr(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    match_on: str | None = None,
-) -> DataFrame:
-    """Expression-form exact cosine top-k — the executable SPEC for
-    brute_force_topk (tests pin the Arrow kernel bit-identical to this
-    path), retained exactly as it shipped through round 11.
-
-    The (small) query side is broadcast; ranking uses row_number with a
-    neighbor-id tiebreaker so results are deterministic. Self-matches are
-    excluded.
-
-    ``match_on`` names a metadata column that must be EQUAL between query
-    and candidate (the vector-database "filtered search" shape): the
-    predicate rides the broadcast join, so candidates outside the filter
-    are never scored — pre-filtering, not post-filtering a top-k that
-    could then come up short. NULL metadata matches nothing (SQL
-    equality), on both engines. The matched value is emitted under the
-    same column name.
-    """
-    extra_q = [F.col(match_on).alias("_q_meta")] if match_on else []
-    extra_c = [F.col(match_on).alias(match_on)] if match_on else []
-    q = with_vector_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-        *extra_q,
-    )
-    c = with_vector_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-        *extra_c,
-    )
-    cond = F.col("query_id") != F.col("neighbor_id")
-    if match_on:
-        cond = cond & (F.col("_q_meta") == F.col(match_on))
-    scored = (
-        F.broadcast(q)
-        .join(c, cond)
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cosine"),
-            *([F.col(match_on)] if match_on else []),
-        )
-    )
-    return _rank_topk(scored, k, extra_cols=[match_on] if match_on else None)
-
-
 def _topk_block_scorer(k: int, has_meta: bool):
     """applyInArrow kernel for brute_force_topk: one block's query rows
     (side 0, replicated to every block) × corpus rows (side 1), emitting
     each query ROW's local top-k candidate rows (query_id, neighbor_id,
     raw cosine double[, meta]).
 
-    Bit-identity + NULL/NaN parity with brute_force_topk_expr (the
-    retained spec; gated by tests/test_similarity_blocked.py):
+    Bit-identity + NULL/NaN parity with the expression-form spec (a
+    broadcast join + window, kept in tests/test_similarity_blocked.py):
     * dot and both norms accumulate per dimension, left to right, in
       float64 — the same IEEE order as vectors.dot / l2_norm folds, so
       every emitted double is bit-identical to the expression path;
@@ -348,12 +168,21 @@ def _topk_block_scorer(k: int, has_meta: bool):
             row_has_null = np.zeros(n, dtype=bool)
         ids_np = ids.to_numpy(zero_copy_only=False)
         meta = None
+        meta_np = None
         meta_valid = None
         if has_meta:
             meta = side_tbl.column("_pmeta")
             if isinstance(meta, pa.ChunkedArray):
                 meta = meta.combine_chunks()
             meta_valid = ~np.asarray(meta.is_null())
+            # Compare in the column's own type: with NULLs present,
+            # to_numpy widens int64 to float64 and values >= 2^53 collide.
+            # NULL slots take some valid value instead; meta_valid masks
+            # them out of every match.
+            filled = meta
+            if meta.null_count and meta_valid.any():
+                filled = meta.fill_null(meta.drop_null()[0])
+            meta_np = filled.to_numpy(zero_copy_only=False)
         return {
             "arrow_ids": ids,
             "ids": ids_np,
@@ -363,9 +192,7 @@ def _topk_block_scorer(k: int, has_meta: bool):
             "vals": vals,
             "row_has_null": row_has_null,
             "meta": meta,
-            "meta_np": (
-                meta.to_numpy(zero_copy_only=False) if has_meta else None
-            ),
+            "meta_np": meta_np,
             "meta_valid": meta_valid,
             "n": n,
         }
@@ -533,9 +360,9 @@ def brute_force_topk(
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank) — the
     blocked Arrow kernel form (round 12, guide §4.2/§2.3/§8).
 
-    Semantics are IDENTICAL to brute_force_topk_expr (the retained
-    expression spec; bit-identity gated by tests/test_similarity_blocked
-    .py): same pairs, bit-identical cosine doubles, same ranking. The
+    Semantics are IDENTICAL to the expression-form spec in
+    tests/test_similarity_blocked.py (bit-identity gated there): same
+    pairs, bit-identical cosine doubles, same ranking. The
     execution shape changes: instead of scoring |Q|×|C| pairs with
     interpreted zip_with/aggregate lambdas and shuffling every scored
     pair into the rank window, corpus rows hash into ``blocks``
@@ -588,96 +415,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.randn(n_tables, n_planes, dim)
-
-
-def _planes_frame(spark, planes: np.ndarray) -> DataFrame:
-    """The hyperplane tensor as a TINY broadcastable DataFrame (one row per
-    table: table_id, array<array<double>> planes).
-
-    Shipping planes as data instead of literal expressions matters on the
-    driver: 32 tables × 6 planes × 64 dims as per-element F.lit Columns
-    cost ~40 s of py4j construction, and even a single-parse nested-array
-    literal leaves a 12k-node tree the analyzer re-walks on every
-    subsequent DataFrame op (~13 s) — round-7 profile. As rows, the
-    expression tree is O(1) and the executor-side work is identical."""
-    tensor = [[[float(x) for x in plane] for plane in table] for table in planes]
-    return spark.createDataFrame(
-        [(tensor,)], "_tensor array<array<array<double>>>"
-    )
-
-
-def _planes_frame_lazy(
-    corpus: DataFrame, vec_col: str, n_planes: int, n_tables: int, seed: int
-) -> DataFrame:
-    """The hyperplane tensor derived from the CORPUS, lazily: the dimension
-    comes from a limit-1 scan of the first non-NULL vector AT ACTION TIME,
-    and the seeded tensor is generated executor-side in a mapInPandas over
-    that single row — query construction triggers no Spark job (round-7
-    verdict: the dim probe was the registry's last construction-time job).
-
-    Empty corpus (or all-NULL vectors): the dim frame has zero rows, so the
-    planes frame is empty and the downstream crossJoin yields the empty
-    candidate set with the normal schema — an empty slice is data, not a
-    misconfiguration. isNotNull(): if the first scanned row's vector were
-    NULL, size() is NULL (ANSI) and the generator would crash."""
-    dim_df = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("__dim"))
-        .limit(1)
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"_tensor": []})
-                continue
-            d = max(int(pdf["__dim"].iloc[0]), 1)
-            planes = _hyperplanes(d, n_planes, n_tables, seed)
-            tensor = [
-                [[float(x) for x in plane] for plane in table]
-                for table in planes
-            ]
-            yield pd.DataFrame({"_tensor": [tensor]})
-
-    # memoized persist(): the planes frame is crossJoined by BOTH bucketize
-    # sides; uncached, each side would re-evaluate the limit-1 dim scan
-    # independently, and on a ragged corpus two evaluations could in
-    # principle sample different lengths (different hyperplanes per side →
-    # broken buckets). The 1-row cache materializes once per SESSION per
-    # (corpus plan, LSH params); still no construction-time job (persist
-    # is lazy). NOTE the ~n_tables*n_planes*d tensor is what's cached —
-    # memoization also bounds the round-8-advice accumulation. The memo
-    # key plan is dim_df (pure relational) — the mapInPandas node itself
-    # re-pickles its closure per call and would never compare equal; the
-    # tag pins the generator params instead.
-    return _memoized_persist(
-        dim_df.mapInPandas(gen, schema="_tensor array<array<array<double>>>"),
-        dim_df,
-        corpus,
-        tag=f"planes:{vec_col}:{n_planes}:{n_tables}:{seed}",
-    )
-
-
-def _tables_expr(vec_col: str, n_planes: int) -> Column:
-    """(table_id, bucket) struct array for ALL tables from the joined
-    ``_tensor`` row. Sign-pattern bucket id per table:
-    Σ (dot(v, plane_i) > 0) << i. NULL vectors hash to bucket 0 in every
-    table (NULL dot → IF false → 0 per plane)."""
-    return F.expr(
-        f"""
-        transform(_tensor, (tbl, t) -> named_struct(
-          'table_id', t,
-          'bucket', aggregate(
-            zip_with(tbl, sequence(0, {n_planes - 1}), (p, i) ->
-              IF(aggregate(zip_with({vec_col}, p,
-                             (x, y) -> CAST(x AS DOUBLE) * y),
-                           CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) > 0,
-                 shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
-            CAST(0 AS BIGINT), (acc, x) -> acc + x)))
-        """
-    )
 
 
 def ivf_topk(
@@ -861,8 +598,9 @@ def _lsh_bucketizer(
     dim: int | None,
 ):
     """mapInArrow kernel: append (table_id, bucket) to every input row,
-    replicated once per table — NumPy replacement for _tables_expr with
-    identical bucket values (same seeded tensor, same per-dimension
+    replicated once per table — NumPy replacement for the interpreted
+    zip_with/aggregate bucket expression (the spec kept in
+    tests/test_similarity_blocked.py) with identical bucket values (same seeded tensor, same per-dimension
     left-to-right accumulation, so every dot's sign matches the JVM fold).
 
     Row classes, mirroring the expression form exactly:
@@ -980,7 +718,7 @@ def _lsh_scored_pairs(
 
     def bucketize(df: DataFrame, prefix: str) -> DataFrame:
         # Arrow bucketizer (round-11 optimization): the sign-pattern
-        # buckets used to come from _tables_expr — n_tables × n_planes
+        # buckets used to come from a SQL expression — n_tables × n_planes
         # interpreted zip_with/aggregate dots PER VECTOR (the HOF lambdas
         # are CodegenFallback; measured ~1.5 s per bucketized side at
         # sf0.1 for 12×5). The mapInArrow form hands whole batches to

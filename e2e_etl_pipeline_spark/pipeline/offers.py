@@ -246,7 +246,7 @@ def parse_offers(raw_docs: DataFrame) -> DataFrame:
         # general-purpose number extraction stays double; the cast is the
         # staging-schema contract). try_cast, not cast: under Spark 4's
         # ANSI default a parsed digit-run >= 1e10 (e.g. a phone number
-        # matched by NUMBER_PATTERN) would otherwise throw
+        # matched by the salary number pattern) would otherwise throw
         # NUMERIC_VALUE_OUT_OF_RANGE and kill the whole job; an
         # out-of-range "salary" degrades to NULL instead.
         parsed["minimum"].try_cast(T.DecimalType(12, 2)).alias("minimum"),

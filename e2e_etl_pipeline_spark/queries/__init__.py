@@ -36,9 +36,9 @@ Module map (SURVEY.md §2 Part B):
 # (the driver can only record `no_oracle` for them). Module import order
 # below no longer affects driver ordering.
 #
-# Round-10 note: after the round-10 driver run lands, run
-#   PYTHONPATH=. python tools/gen_order.py r11 [just-fixed keys...]
-# point the import below at _order_r11, and delete _order_r11.
+# To rotate the budget: run
+#   PYTHONPATH=. python tools/gen_order.py r<N> [keys to verify first...]
+# point the import below at the new _order_r<N>, and delete the old one.
 from e2e_etl_pipeline_spark.queries import (  # noqa: F401
     relational,
     scalars,
@@ -59,14 +59,14 @@ from e2e_etl_pipeline_spark.queries import (  # noqa: F401
     curation,
 )
 from e2e_etl_pipeline_spark import registry as _registry
-from e2e_etl_pipeline_spark.queries import _order_r11
+from e2e_etl_pipeline_spark.queries import _order_r13
 
 
 def _reorder() -> None:
     """Rebuild the registry dicts in the generated driver-verification
     order (whichever _order_r{N} module is imported above)."""
-    known_first = [k for k in _order_r11.FIRST if k in _registry.QUERIES]
-    known_last = [k for k in _order_r11.LAST if k in _registry.QUERIES]
+    known_first = [k for k in _order_r13.FIRST if k in _registry.QUERIES]
+    known_last = [k for k in _order_r13.LAST if k in _registry.QUERIES]
     listed = set(known_first) | set(known_last)
     new_oracle = [
         k for k in _registry.QUERIES if k not in listed and k in _registry.ORACLES

@@ -714,7 +714,7 @@ def _lsh_planes_values(
 # the 64-dim slice reduced to ONE deterministic embedding per vec_id
 # (lexicographic min — identical list ordering in both engines); buckets =
 # the signed bit-pattern per (vector, table) — identical algebra to
-# operators/similarity._tables_expr. min-per-id, not SELECT DISTINCT
+# operators/similarity._lsh_bucketizer. min-per-id, not SELECT DISTINCT
 # (round-9 second review): a pathological corpus carrying one id with TWO
 # distinct embeddings would survive a pair-DISTINCT, and then the bucket
 # CTE's GROUP BY vec_id would sum CASE terms across both embeddings into
@@ -852,8 +852,8 @@ def q_dedup_embedding_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions whose recall legitimately collapses). Zero-norm vectors are
     excluded from pairs on both sides (nrm > 0 guards the division).
     ``n_corpus`` is derived in-plan via a broadcast scalar aggregate
-    (round-6 advice: the eager count() is gone); the LSH dim probe is
-    also in-plan since round 8 (similarity._planes_frame_lazy), so
+    (round-6 advice: the eager count() is gone); the LSH bucketizer
+    derives the dimension from each Arrow batch inside the task, so
     constructing this query triggers zero Spark jobs
     (tests/test_construction_lazy.py).
 

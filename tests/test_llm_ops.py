@@ -21,10 +21,19 @@ def near_dup_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _minhash_pairs(docs):
+    """The chain the registered MinHash keys run (32 hashes, 8 bands):
+    wide signatures → LSH banding → agreement estimate, as
+    (id_a, id_b, est_jaccard)."""
+    sums = dd.minhash_signature_vector(
+        docs, "doc_id", "text", num_hashes=32, shingle_size=3
+    )
+    pairs = dd.lsh_candidate_pairs_vec(sums, num_hashes=32, bands=8)
+    return dd.minhash_similarity_vec(sums, pairs, num_hashes=32)
+
+
 def test_minhash_finds_near_dups(near_dup_docs):
-    sigs = dd.minhash_signatures(near_dup_docs, "doc_id", "text", num_hashes=32, shingle_size=3)
-    pairs = dd.lsh_candidate_pairs(sigs, num_hashes=32, bands=8)
-    simdf = dd.minhash_similarity(sigs, pairs)
+    simdf = _minhash_pairs(near_dup_docs)
     found = {(r.id_a, r.id_b): r.est_jaccard for r in simdf.collect()}
     assert found.get((0, 3)) == 1.0  # exact dup → all minhashes agree
     assert (0, 1) in found and found[(0, 1)] > 0.3  # near dup candidate
@@ -130,11 +139,9 @@ def test_dedup_near_recall_on_planted_pairs(spark):
         truth.add((base_id, var_id))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    sigs = dd.minhash_signatures(docs, "doc_id", "text", num_hashes=32, shingle_size=3)
-    pairs = dd.lsh_candidate_pairs(sigs, num_hashes=32, bands=8)
     found = {
         (r.id_a, r.id_b)
-        for r in dd.minhash_similarity(sigs, pairs)
+        for r in _minhash_pairs(docs)
         .where(F.col("est_jaccard") >= 0.5)
         .collect()
     }
@@ -192,9 +199,7 @@ def test_connected_components_chains(spark):
 
 def test_dedup_corpus_with_minhash_pairs(spark, near_dup_docs):
     """The full pipeline: MinHash pairs -> components -> surviving corpus."""
-    sigs = dd.minhash_signatures(near_dup_docs, "doc_id", "text", num_hashes=32, shingle_size=3)
-    pairs = dd.lsh_candidate_pairs(sigs, num_hashes=32, bands=8)
-    strong = dd.minhash_similarity(sigs, pairs).where(F.col("est_jaccard") >= 0.9)
+    strong = _minhash_pairs(near_dup_docs).where(F.col("est_jaccard") >= 0.9)
     deduped = dd.dedup_corpus(near_dup_docs, strong)
     kept = sorted(r.doc_id for r in deduped.select("doc_id").collect())
     # 0 and 3 are exact dups -> one survivor (0); 1 and 2 survive untouched

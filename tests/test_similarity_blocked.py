@@ -1,11 +1,12 @@
-"""Bit-identity gates for the round-11 vectorized similarity kernels.
+"""Bit-identity gates for the vectorized similarity kernels.
 
-The blocked all-pairs scorer and the Arrow LSH bucketizer replace
-interpreted higher-order-function folds with NumPy loops that accumulate
-dimension by dimension in the same left-to-right IEEE-754 order — these
-tests pin that the replacement is BIT-identical to the expression forms it
-replaced (the expression forms stay in the tree as the executable spec:
-vectors.dot / similarity._tables_expr).
+The blocked all-pairs scorer, the Arrow LSH bucketizer and the blocked
+top-k scorer replace interpreted higher-order-function folds with NumPy
+loops that accumulate dimension by dimension in the same left-to-right
+IEEE-754 order — these tests pin that each replacement is BIT-identical
+to the expression form it replaced. Those expression forms live here as
+the executable specs (brute_force_topk_expr, _planes_frame_lazy,
+_tables_expr); the shipped package keeps only the kernels.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import struct
 
 import pytest
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
@@ -23,6 +25,113 @@ from e2e_etl_pipeline_spark.operators import similarity as sim
 
 def _bits(x: float | None) -> bytes | None:
     return None if x is None else struct.pack("<d", x)
+
+
+# ---------------------------------------------------------------------------
+# Expression-form specs the kernels are gated against
+# ---------------------------------------------------------------------------
+
+
+def brute_force_topk_expr(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    match_on: str | None = None,
+) -> DataFrame:
+    """Expression-form exact cosine top-k — the spec for
+    sim.brute_force_topk, as the operator shipped through round 11.
+
+    The query side is broadcast; ranking uses row_number with a
+    neighbor-id tiebreaker; self-matches are excluded. ``match_on`` names
+    a metadata column that must be EQUAL between query and candidate
+    (pre-filtering on the join predicate); NULL metadata matches nothing
+    (SQL equality). The matched value is emitted under the same name."""
+    extra_q = [F.col(match_on).alias("_q_meta")] if match_on else []
+    extra_c = [F.col(match_on).alias(match_on)] if match_on else []
+    q = sim.with_vector_norm(queries, vec_col).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.col("norm").alias("q_norm"),
+        *extra_q,
+    )
+    c = sim.with_vector_norm(corpus, vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        F.col("norm").alias("c_norm"),
+        *extra_c,
+    )
+    cond = F.col("query_id") != F.col("neighbor_id")
+    if match_on:
+        cond = cond & (F.col("_q_meta") == F.col(match_on))
+    scored = (
+        F.broadcast(q)
+        .join(c, cond)
+        .select(
+            "query_id",
+            "neighbor_id",
+            sim._cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+            ).alias("cosine"),
+            *([F.col(match_on)] if match_on else []),
+        )
+    )
+    return sim._rank_topk(
+        scored, k, extra_cols=[match_on] if match_on else None
+    )
+
+
+def _planes_frame_lazy(
+    corpus: DataFrame, vec_col: str, n_planes: int, n_tables: int, seed: int
+) -> DataFrame:
+    """The seeded hyperplane tensor as a 1-row frame, its dimension taken
+    from the corpus's first non-NULL vector at action time (an empty
+    corpus gives an empty planes frame)."""
+    dim_df = (
+        corpus.where(F.col(vec_col).isNotNull())
+        .select(F.size(vec_col).alias("__dim"))
+        .limit(1)
+    )
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                yield pd.DataFrame({"_tensor": []})
+                continue
+            d = max(int(pdf["__dim"].iloc[0]), 1)
+            planes = sim._hyperplanes(d, n_planes, n_tables, seed)
+            tensor = [
+                [[float(x) for x in plane] for plane in table]
+                for table in planes
+            ]
+            yield pd.DataFrame({"_tensor": [tensor]})
+
+    return dim_df.mapInPandas(
+        gen, schema="_tensor array<array<array<double>>>"
+    )
+
+
+def _tables_expr(vec_col: str, n_planes: int) -> Column:
+    """(table_id, bucket) struct array for ALL tables from the joined
+    ``_tensor`` row — the interpreted spec for sim._lsh_bucketizer.
+    Sign-pattern bucket id per table: Σ (dot(v, plane_i) > 0) << i. NULL
+    vectors hash to bucket 0 in every table (NULL dot → IF false → 0)."""
+    return F.expr(
+        f"""
+        transform(_tensor, (tbl, t) -> named_struct(
+          'table_id', t,
+          'bucket', aggregate(
+            zip_with(tbl, sequence(0, {n_planes - 1}), (p, i) ->
+              IF(aggregate(zip_with({vec_col}, p,
+                             (x, y) -> CAST(x AS DOUBLE) * y),
+                           CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) > 0,
+                 shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
+            CAST(0 AS BIGINT), (acc, x) -> acc + x)))
+        """
+    )
 
 
 @pytest.fixture(scope="module")
@@ -94,11 +203,11 @@ def test_arrow_bucketizer_matches_tables_expr(em, spark):
     expression form (the SQL-literal oracles embed the same algebra)."""
     n_planes, n_tables, seed = 5, 12, 42
     base = em.groupBy("vec_id").agg(F.min("embedding").alias("embedding"))
-    planes_df = sim._planes_frame_lazy(base, "embedding", n_planes, n_tables, seed)
+    planes_df = _planes_frame_lazy(base, "embedding", n_planes, n_tables, seed)
     ref_rows = (
         base.crossJoin(F.broadcast(planes_df))
         .select(
-            "vec_id", F.explode(sim._tables_expr("embedding", n_planes)).alias("t")
+            "vec_id", F.explode(_tables_expr("embedding", n_planes)).alias("t")
         )
         .select("vec_id", "t.table_id", "t.bucket")
         .collect()
@@ -134,7 +243,7 @@ def test_arrow_bucketizer_mismatched_dim_buckets_zero(spark):
 
 
 # ---------------------------------------------------------------------------
-# brute_force_topk Arrow kernel vs the retained expression spec (round 12)
+# brute_force_topk Arrow kernel vs the expression spec above (round 12)
 # ---------------------------------------------------------------------------
 
 
@@ -155,11 +264,11 @@ def _topk_key(rows, with_label=False):
 
 def test_brute_force_topk_bit_identical_on_corpus(em):
     queries = em.where(F.col("vec_id") < 20)
-    ref = _topk_key(sim.brute_force_topk_expr(em, queries, k=10).collect())
+    ref = _topk_key(brute_force_topk_expr(em, queries, k=10).collect())
     got = _topk_key(sim.brute_force_topk(em, queries, k=10).collect())
     assert ref == got
     reff = _topk_key(
-        sim.brute_force_topk_expr(em, queries, k=5, match_on="label").collect(),
+        brute_force_topk_expr(em, queries, k=5, match_on="label").collect(),
         with_label=True,
     )
     gotf = _topk_key(
@@ -182,9 +291,15 @@ def edge_corpus(spark):
         (2, [3.0, -1.0], 1),  # duplicated id row (pk-variant shape)
         (7, [float("nan"), 1.0], 1),  # NaN element -> NaN cosine, ranks first
         (8, [2.0, 1.0], None),  # NULL label -> dropped under match_on
+        # labels 2^53 and 2^53+1 are distinct as int64 but equal as
+        # float64 — the kernel must compare them in their own type even
+        # when a NULL label shares the batch
+        (9, [1.0, 1.0], 2**53),
+        (10, [1.0, 3.0], 2**53 + 1),
+        (11, [2.0, 3.0], None),
     ]
     return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
+        rows, "vec_id long, embedding array<float>, label long"
     )
 
 
@@ -192,13 +307,14 @@ def edge_corpus(spark):
 @pytest.mark.parametrize("match_on", [None, "label"])
 def test_brute_force_topk_edge_parity(edge_corpus, k, match_on):
     """NULL vectors/elements/ids/labels, zero norms, NaN elements, ragged
-    lengths and duplicated ids must all come out EXACTLY as the expression
-    path emits them (same rows, bit-identical cosines, same ranks)."""
+    lengths, duplicated ids and int64 labels past 2^53 must all come out
+    EXACTLY as the expression path emits them (same rows, bit-identical
+    cosines, same ranks)."""
     q = edge_corpus.where(
-        (F.col("vec_id") < 6) | F.col("vec_id").isNull()
+        (F.col("vec_id") < 6) | (F.col("vec_id") > 8) | F.col("vec_id").isNull()
     )
     ref = _topk_key(
-        sim.brute_force_topk_expr(
+        brute_force_topk_expr(
             edge_corpus, q, k=k, match_on=match_on
         ).collect(),
         with_label=match_on is not None,
@@ -212,7 +328,7 @@ def test_brute_force_topk_edge_parity(edge_corpus, k, match_on):
 
 def test_brute_force_topk_more_blocks_than_rows(edge_corpus):
     q = edge_corpus.where(F.col("vec_id") < 6)
-    ref = _topk_key(sim.brute_force_topk_expr(edge_corpus, q, k=3).collect())
+    ref = _topk_key(brute_force_topk_expr(edge_corpus, q, k=3).collect())
     got = _topk_key(
         sim.brute_force_topk(edge_corpus, q, k=3, blocks=64).collect()
     )

@@ -79,13 +79,14 @@ def test_dedup_primitives_are_total_on_short_text(spark, texts):
         # every shingle has exactly 3 words
         for s in r.sh:
             assert len(s.split(" ")) == 3
-    sigs = dd.minhash_signatures(df, "doc_id", "text", num_hashes=8, shingle_size=3)
-    per_doc = {
-        r.id: r.n for r in sigs.groupBy("id").agg(F.count("*").alias("n")).collect()
-    }
-    # docs with ≥1 shingle contribute exactly num_hashes rows; shorter docs none
+    sigs = dd.minhash_signature_vector(
+        df, "doc_id", "text", num_hashes=8, shingle_size=3
+    ).collect()
+    # docs with ≥1 shingle get one row with all num_hashes minhashes set;
+    # shorter docs get none
     n_shingled = sum(1 for r in sh if r.sh)
-    assert sum(per_doc.values()) == 8 * n_shingled
+    assert len(sigs) == n_shingled
+    assert all(r[f"_m{i}"] is not None for r in sigs for i in range(8))
     fps = dd.simhash_fingerprints(df, "doc_id", "text").collect()
     assert len(fps) <= len(texts)
 

@@ -125,15 +125,15 @@ def test_filter_modal_dim_contract(spark, tmp_path):
     assert filter_modal_dim(empty).count() == 0
 
 
-def test_filter_modal_dim_memo_is_path_aware(spark, tmp_path):
+def test_filter_modal_dim_is_path_aware(spark, tmp_path):
     """Two same-schema corpora at DIFFERENT paths in one session must each
     get their OWN modal dimension. Regression for the round-9 memoization
     bug: the canonicalized-plan toString is PATH-BLIND for file relations
-    ("Relation [...] parquet" prints no location), so a string-keyed memo
-    served the first corpus's cached modal-dim frame to every same-schema
-    corpus that followed (caught live: the 8-dim semdedup fixture got the
-    sf0.01 corpus's 64-dim gate and filtered itself to empty). The memo
-    now compares JVM canonicalized plans via .equals."""
+    ("Relation [...] parquet" prints no location), so a string-keyed
+    frame cache served the first corpus's modal-dim frame to every
+    same-schema corpus that followed (caught live: the 8-dim semdedup
+    fixture got the sf0.01 corpus's 64-dim gate and filtered itself to
+    empty)."""
     from e2e_etl_pipeline_spark.operators.similarity import filter_modal_dim
 
     wide = str(tmp_path / "wide")
@@ -146,28 +146,22 @@ def test_filter_modal_dim_memo_is_path_aware(spark, tmp_path):
     ).write.parquet(narrow)
 
     gated_wide = filter_modal_dim(spark.read.parquet(wide))
-    # Materialize the wide gate FIRST so a path-blind memo would already
+    # Materialize the wide gate FIRST so a path-blind cache would already
     # hold its 8-dim frame when the narrow corpus asks.
     assert gated_wide.count() == 2
     gated_narrow = filter_modal_dim(spark.read.parquet(narrow))
     assert gated_narrow.count() == 2, (
-        "narrow corpus was gated by another corpus's modal dimension — "
-        "the similarity frame memo is not path-aware"
+        "narrow corpus was gated by another corpus's modal dimension"
     )
 
 
-def test_filter_modal_dim_memo_hits_after_materialization(spark, tmp_path):
-    """A same-corpus repeat AFTER the gate has materialized must HIT the
-    memo, and an in-place file regeneration must MISS it. Regression for
-    the round-9 second memo bug: Dataset.inputFiles reads the OPTIMIZED
-    plan, which cache-substitutes the persisted frame to an
-    InMemoryRelation with no file scans — a signature computed from the
-    memoized frame came back empty on every post-action lookup, so the
-    memo silently degraded to one persist per invocation. The signature
-    is now read from the raw input frame."""
+def test_filter_modal_dim_sees_regenerated_corpus(spark, tmp_path):
+    """A corpus regenerated IN PLACE (same path, new content) must be
+    re-gated on the new data, never served a modal dimension computed
+    from the old files."""
     from e2e_etl_pipeline_spark.operators import similarity as sim
 
-    path = str(tmp_path / "memo_corpus")
+    path = str(tmp_path / "regen_corpus")
     spark.createDataFrame(
         [(1, [1.0] * 4), (2, [2.0] * 4)], "vec_id long, embedding array<float>"
     ).write.parquet(path)
@@ -175,17 +169,9 @@ def test_filter_modal_dim_memo_hits_after_materialization(spark, tmp_path):
     def gated():
         return sim.filter_modal_dim(spark.read.parquet(path))
 
-    assert gated().count() == 2  # materialize: the memoized frame caches
-    bucket = sim._FRAME_MEMO[spark]["modal_dim:embedding"]
-    before = len(bucket)
     assert gated().count() == 2
-    assert len(bucket) == before, (
-        "same-corpus repeat after materialization appended a new memo "
-        "entry — the input-files signature degraded (optimized-plan "
-        "cache substitution?)"
-    )
+    assert gated().count() == 2
 
-    # In-place regeneration (same path, new content/mtime) must re-gate.
     import shutil
 
     shutil.rmtree(path)
@@ -194,8 +180,53 @@ def test_filter_modal_dim_memo_hits_after_materialization(spark, tmp_path):
         "vec_id long, embedding array<float>",
     ).write.parquet(path)
     assert gated().count() == 3, (
-        "regenerated corpus was served the stale memoized modal dim"
+        "regenerated corpus was served a stale modal dim"
     )
-    # The superseded version's entry is EVICTED (its mtime/size key can
-    # never hit again), so the bucket does not grow across regenerations.
-    assert len(bucket) == before
+
+
+# Every registered key whose plan reaches similarity.filter_modal_dim.
+MODAL_DIM_KEYS = [
+    "q_similarity_topk",
+    "q_similarity_filtered",
+    "q_similarity_ivf",
+    "q_similarity_recall_bound",
+    "q_dedup_embedding_bound",
+    "q_kmeans_step",
+    "q_semdedup_prune",
+    "q_curation_pipeline",
+]
+
+
+def test_modal_dim_keys_leave_no_persisted_state(spark, sf_dir, tmp_path, monkeypatch):
+    """Collecting every key that reaches the modal-dim gate must leave the
+    session's CacheManager empty: the gate is an in-plan broadcast join,
+    not a frame cached across queries. The SemDeDup keys persist their own
+    per-query cluster frame ``v`` (queries/curation.py); the test captures
+    and releases it by handle, so only state persisted elsewhere remains.
+    The corpus is a fresh copy, so no frame cached under the shared test
+    data earlier in the session can satisfy the gate."""
+    import shutil
+
+    from e2e_etl_pipeline_spark.queries import curation
+    from e2e_etl_pipeline_spark.registry import QUERIES, load_all
+
+    load_all()
+    corpus = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, corpus)
+    held = []
+    real = curation._semdedup_v_and_victims
+
+    def capture(spark_, sf_dir_):
+        out = real(spark_, sf_dir_)
+        held.append(out[0])
+        return out
+
+    monkeypatch.setattr(curation, "_semdedup_v_and_victims", capture)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for key in MODAL_DIM_KEYS:
+        QUERIES[key](spark, corpus).collect()
+    assert held, "the SemDeDup keys no longer build their cluster frame"
+    for v in held:
+        v.unpersist()
+    assert cache.isEmpty(), "a modal-dim key left a persisted frame behind"

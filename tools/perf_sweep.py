@@ -83,6 +83,9 @@ def run_isolated(keys: list[str], sf_dir: str, n_runs: int) -> dict:
     flag = ["--min3"] if n_runs > 1 else []
     for i, key in enumerate(keys):
         child_out = f"/tmp/perf_sweep_iso_{key}.json"
+        # A failed child must report an error, not an earlier run's numbers.
+        if os.path.exists(child_out):
+            os.remove(child_out)
         cmd = [sys.executable, os.path.abspath(__file__), *flag, sf_dir, child_out, key]
         env = dict(os.environ, PYTHONPATH=REPO)
         proc = subprocess.run(cmd, env=env, capture_output=True, text=True)
