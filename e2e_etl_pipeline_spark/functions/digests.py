@@ -32,29 +32,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_u60(col: Column) -> Column:
-    """60-bit unsigned integer (as long) from the md5 of a string column —
-    engine side; identical to ``md5_u60_sql`` in DuckDB."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def md5_u60_sql(expr: str) -> str:
-    """The DuckDB-side twin of ``md5_u60``."""
+    """The DuckDB-side twin of ``md5_u60_spark_sql``."""
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def md5_u60_spark_sql(expr: str) -> str:
-    """``md5_u60`` as Spark-SQL TEXT (for F.expr composition) — shipping a
-    wide tree of these as one parsed string instead of per-column py4j
-    Column chains is the q_salary_parse construction-cost lesson
-    (round 11). tests/test_functions.py pins it value-identical to the
-    Column form."""
+    """60-bit unsigned integer (as long) from the md5 of a string, as
+    Spark-SQL TEXT (for F.expr composition) — shipping a wide tree of
+    these as one parsed string instead of per-column py4j Column chains is
+    the q_salary_parse construction-cost lesson (round 11).
+    tests/test_functions.py pins it bit-identical to ``md5_u60_sql``."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def md5_u120(col: Column) -> tuple[Column, Column]:
     """120-bit digest as TWO 60-bit longs (nibbles 1-15, 16-30) from one
-    md5 pass — the documented wide-corpus upgrade of ``md5_u60`` (birthday
+    md5 pass — the documented wide-corpus upgrade of the 60-bit carving (birthday
     bound ~2^60 keys). Returned as a column pair, not a struct: struct
     cells are unhashable at the driver edge, and two longs group/join with
     the same plan shape. Identical to ``md5_u120_sql`` in DuckDB."""

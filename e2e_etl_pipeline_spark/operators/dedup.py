@@ -148,7 +148,7 @@ def minhash_signature_vector(
     delimiter is a newline because whitespace-split tokens can never
     contain one, so no (shingle, hash_id) pairing can alias another the
     way a ':' could inside URL-like tokens (round-10 advice);
-    functions/digests.md5_u60): slower per byte but EXACTLY reproducible
+    functions/digests.md5_u60_spark_sql): slower per byte but EXACTLY reproducible
     in DuckDB SQL, which is what upgrades q_dedup_near from rows-only to
     hash-checked (round-9 verdict item 3). Identical plan shape either
     way — only the hash expression changes.

@@ -1,17 +1,22 @@
-"""Approximate-nearest-neighbor search over embedding columns.
+"""Exact and approximate nearest-neighbor search over embedding columns.
 
-Three tiers (SURVEY.md §2 B.8, §4.2):
-  * brute_force_topk — exact cosine top-k: a blocked NumPy kernel scores
-    each corpus block against every query and cuts a local top-k before the
-    final per-query window. Correctness baseline.
-  * lsh_bucketed_topk — random-hyperplane (sign) LSH: vectors hash to
-    sign-pattern buckets per table; candidates come from equi-joins on
-    (table, bucket), so the scale cost is Σ bucket-collisions, not the cross
-    product. Multiple tables trade recall for cost. Hyperplanes are seeded
-    NumPy — deterministic, regenerated inside the bucketizer kernel.
-  * (IVF variant — centroid assignment + probe-N — follows the same
-    bucket-join shape with k-means centroids; LSH is the default because it
-    needs no training pass.)
+Exact operators share one blocked Arrow kernel (_block_kernel): rows hash
+into blocks, each block's group goes to NumPy once, and every cosine is
+accumulated per dimension, left to right, in float64 — bit-identical to
+the zip_with/aggregate fold of functions/vectors.py.
+  * brute_force_topk — cosine top-k per query; each block cuts its local
+    top-k before the final per-query window.
+  * blocked_cosine_pairs — every unordered pair at or above a threshold
+    (the exact ground truth of the dedup keys).
+
+Approximate operators trade recall for cost (SURVEY.md §2 B.8, §4.2):
+  * lsh_bucketed_topk / lsh_cosine_pairs — random-hyperplane (sign) LSH:
+    vectors hash to sign-pattern buckets per table (a seeded NumPy tensor,
+    regenerated inside the bucketizer kernel); candidates come from
+    equi-joins on (table, bucket), so the cost is Σ bucket-collisions,
+    not the cross product.
+  * ivf_topk — coarse centroids plus probe-N: queries score only the
+    corpus vectors assigned to their closest centroids.
 """
 
 from __future__ import annotations
@@ -112,238 +117,258 @@ def _rank_topk(scored: DataFrame, k: int, extra_cols: list[str] | None = None) -
     )
 
 
-def _topk_block_scorer(k: int, has_meta: bool):
-    """applyInArrow kernel for brute_force_topk: one block's query rows
-    (side 0, replicated to every block) × corpus rows (side 1), emitting
-    each query ROW's local top-k candidate rows (query_id, neighbor_id,
-    raw cosine double[, meta]).
+# Bound on score-matrix cells (left rows × right rows) per kernel slice: the
+# kernel walks the right side in slices of at most this many cells, so each
+# float64 matrix stays near 8 MB however large a block grows.
+_MAX_CELLS = 1 << 20
 
-    Bit-identity + NULL/NaN parity with the expression-form spec (a
-    broadcast join + window, kept in tests/test_similarity_blocked.py):
-    * dot and both norms accumulate per dimension, left to right, in
-      float64 — the same IEEE order as vectors.dot / l2_norm folds, so
-      every emitted double is bit-identical to the expression path;
-    * cosine is NULL exactly where the expression path yields NULL: a
-      NULL vector, a NULL vector ELEMENT on either side (zip_with/
-      aggregate NULL-propagation), a length-mismatched pair (zip_with
-      pads with NULL), or a zero norm on either side (the explicit
-      F.when(norm == 0) guard). NaN ELEMENTS propagate as NaN values,
-      never NULL — F.when(NaN == 0) is false, matching here;
-    * pairs are DROPPED (not NULL) exactly where the join predicate
-      drops them: equal ids (self-match), a NULL id on either side, and
-      under ``has_meta`` a NULL or unequal metadata value — all SQL
-      comparisons against NULL are non-matches;
-    * the local top-k cut orders by the FINAL window's total order —
-      stable_round(cosine, 4) DESC with NaN first (Spark sorts NaN above
-      every double) and NULL last, then neighbor id ASC — so the union
-      of per-block cuts provably contains the global top-k rows
-      (first-k-of-a-sorted-multiset is preserved under any partition of
-      the multiset). Emitting per query ROW (not per id) preserves
-      duplicated-id multiplicity, which the pk fuzz variant requires.
-    """
 
-    def _prep(side_tbl):
-        import numpy as np
-        import pyarrow as pa
+def _block_count(df: DataFrame) -> int:
+    """Blocks for an exact operator: one per default task slot of the
+    session's cluster. A py4j read, not a Spark job, so construction stays
+    job-free. Output never depends on it (tests/test_similarity_blocked.py
+    pins that)."""
+    return max(1, df.sparkSession.sparkContext.defaultParallelism)
 
-        ids = side_tbl.column("_pid")
-        if isinstance(ids, pa.ChunkedArray):
-            ids = ids.combine_chunks()
-        col = side_tbl.column("_pvec")
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        n = len(ids)
-        valid = ~np.asarray(col.is_null())
-        off = np.asarray(col.offsets)
-        lens = np.full(n, -1, dtype=np.int64)
-        lens[valid] = (off[1:] - off[:-1])[valid]
-        child = col.values
-        vals = child.to_numpy(zero_copy_only=False).astype(np.float64)
-        if child.null_count:
-            cum = np.concatenate(
-                [[0], np.cumsum(np.asarray(child.is_null(), dtype=np.int64))]
-            )
-            row_has_null = (cum[off[1:]] - cum[off[:-1]]) > 0
-        else:
-            row_has_null = np.zeros(n, dtype=bool)
-        ids_np = ids.to_numpy(zero_copy_only=False)
-        meta = None
-        meta_np = None
-        meta_valid = None
-        if has_meta:
-            meta = side_tbl.column("_pmeta")
-            if isinstance(meta, pa.ChunkedArray):
-                meta = meta.combine_chunks()
-            meta_valid = ~np.asarray(meta.is_null())
-            # Compare in the column's own type: with NULLs present,
-            # to_numpy widens int64 to float64 and values >= 2^53 collide.
-            # NULL slots take some valid value instead; meta_valid masks
-            # them out of every match.
-            filled = meta
-            if meta.null_count and meta_valid.any():
-                filled = meta.fill_null(meta.drop_null()[0])
-            meta_np = filled.to_numpy(zero_copy_only=False)
-        return {
-            "arrow_ids": ids,
-            "ids": ids_np,
-            "valid": valid,
-            "off": off,
-            "lens": lens,
-            "vals": vals,
-            "row_has_null": row_has_null,
-            "meta": meta,
-            "meta_np": meta_np,
-            "meta_valid": meta_valid,
-            "n": n,
-        }
 
-    def _score_slice(q, c, lo, hi):
-        """Full (mq × slice) cosine/null/drop matrices for corpus rows
-        [lo, hi) — real cosines computed per matching vector length."""
-        import numpy as np
+def _block_of(id_col: str, blocks: int) -> Column:
+    """Deterministic block of a row: pmod(xxhash64(id), blocks)."""
+    return F.pmod(F.xxhash64(id_col), F.lit(blocks)).cast("int")
 
-        mq = q["n"]
-        mc = hi - lo
-        cos = np.zeros((mq, mc))
-        isnull = np.ones((mq, mc), dtype=bool)
-        c_lens = c["lens"][lo:hi]
-        c_valid = c["valid"][lo:hi]
-        c_clean = c_valid & ~c["row_has_null"][lo:hi]
-        q_clean = q["valid"] & ~q["row_has_null"]
-        for length in np.unique(q["lens"][q_clean]):
-            qi = np.nonzero(q_clean & (q["lens"] == length))[0]
-            ci = np.nonzero(c_clean & (c_lens == length))[0]
-            if len(qi) == 0 or len(ci) == 0:
-                continue
-            d = int(length)
-            qg = q["off"][:-1][qi][:, None] + np.arange(d)[None, :]
-            cg = (c["off"][:-1][lo:hi][ci])[:, None] + np.arange(d)[None, :]
-            Q = q["vals"][qg] if d else np.zeros((len(qi), 0))
-            C = c["vals"][cg] if d else np.zeros((len(ci), 0))
-            na = np.zeros(len(qi))
-            nb = np.zeros(len(ci))
-            acc = np.zeros((len(qi), len(ci)))
-            for kk in range(d):
-                na = na + Q[:, kk] * Q[:, kk]
-                nb = nb + C[:, kk] * C[:, kk]
-                acc = acc + Q[:, kk : kk + 1] * C[:, kk]
-            na = np.sqrt(na)
-            nb = np.sqrt(nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                block = acc / (na[:, None] * nb[None, :])
-            zero = (na[:, None] == 0) | (nb[None, :] == 0)
-            cos[np.ix_(qi, ci)] = np.where(zero, 0.0, block)
-            isnull[np.ix_(qi, ci)] = zero
-        drop = q["ids"][:, None] == c["ids"][None, lo:hi]
-        if has_meta:
-            mv = (
-                q["meta_valid"][:, None] & c["meta_valid"][None, lo:hi]
-            )
-            eq = np.zeros((mq, mc), dtype=bool)
-            if mv.any():
-                qm = q["meta_np"][:, None]
-                cm = c["meta_np"][None, lo:hi]
-                eq = qm == cm
-                # Spark SQL equality treats NaN = NaN as TRUE (unlike
-                # IEEE ==) — mirror it for floating metadata.
-                if (
-                    np.issubdtype(np.asarray(q["meta_np"]).dtype, np.floating)
-                    and np.issubdtype(
-                        np.asarray(c["meta_np"]).dtype, np.floating
-                    )
-                ):
-                    eq |= np.isnan(qm) & np.isnan(cm)
-            drop |= ~(mv & eq)
-        return cos, isnull, drop
 
-    def _order(cos_vals, null_flags, neighbor_ids):
-        """Indices sorted by the final total order: rounded desc (NaN
-        first, NULL last), neighbor id asc."""
-        import numpy as np
+def _tagged_sides(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    vec_col: str,
+    left_keys: list[Column],
+    right_keys: list[Column],
+    meta_col: str | None = None,
+) -> DataFrame:
+    """Both sides of a blocked operator on ONE frame, tagged ``_pside`` 0
+    (left) and 1 (right), with their group keys, ``_pid``, ``_pvec`` and
+    optional ``_pmeta``. One tagged frame, not a cogroup: two frames
+    derived from the same corpus trip the ambiguous-self-join check. NULL
+    ids never pair (every join predicate the operators mirror drops
+    them), so they are filtered here and block assignment is total."""
 
-        rounded = np.floor(cos_vals * 10000.0 + 0.5) / 10000.0
-        nanc = np.where(np.isnan(rounded) & ~null_flags, 0, 1)
-        negr = np.where(
-            np.isnan(rounded) | null_flags, 0.0, -rounded
+    def side(df: DataFrame, tag: int, keys: list[Column]) -> DataFrame:
+        meta = [F.col(meta_col).alias("_pmeta")] if meta_col else []
+        return df.where(F.col(id_col).isNotNull()).select(
+            F.lit(tag).alias("_pside"),
+            *keys,
+            F.col(id_col).alias("_pid"),
+            F.col(vec_col).alias("_pvec"),
+            *meta,
         )
-        return np.lexsort(
-            (neighbor_ids, negr, nanc, null_flags.astype(np.int8))
+
+    return side(left, 0, left_keys).unionByName(side(right, 1, right_keys))
+
+
+def _side_arrays(tbl, has_meta: bool) -> dict:
+    """One side of a block group as NumPy: ids, list offsets, lengths (-1
+    for a NULL vector), float64 element values, a per-row NULL-element
+    flag and, under ``has_meta``, the metadata in its own type."""
+    import numpy as np
+    import pyarrow as pa
+
+    col = tbl.column("_pvec")
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    valid = ~np.asarray(col.is_null())
+    off = np.asarray(col.offsets)
+    lens = np.full(n, -1, dtype=np.int64)
+    lens[valid] = (off[1:] - off[:-1])[valid]
+    # The RAW child array with absolute offsets: flatten() drops NULL
+    # entries' slots and would misalign.
+    child = col.values
+    vals = child.to_numpy(zero_copy_only=False).astype(np.float64)
+    if child.null_count:
+        cum = np.concatenate(
+            [[0], np.cumsum(np.asarray(child.is_null(), dtype=np.int64))]
         )
+        row_has_null = (cum[off[1:]] - cum[off[:-1]]) > 0
+    else:
+        row_has_null = np.zeros(n, dtype=bool)
+    side = {
+        "ids": tbl.column("_pid").to_numpy(),
+        "clean": valid & ~row_has_null,
+        "starts": off[:-1],
+        "lens": lens,
+        "vals": vals,
+        "n": n,
+    }
+    if has_meta:
+        meta = tbl.column("_pmeta")
+        if isinstance(meta, pa.ChunkedArray):
+            meta = meta.combine_chunks()
+        side["meta_valid"] = ~np.asarray(meta.is_null())
+        # Compare in the column's own type: with NULLs present, to_numpy
+        # widens int64 to float64 and values >= 2^53 collide. NULL slots
+        # take some valid value instead; meta_valid masks them out.
+        if meta.null_count and side["meta_valid"].any():
+            meta = meta.fill_null(meta.drop_null()[0])
+        side["meta"] = meta.to_numpy(zero_copy_only=False)
+    return side
+
+
+def _cosine_slice(q: dict, c: dict, lo: int, hi: int):
+    """(left rows × right rows [lo, hi)) raw cosines and NULL flags.
+
+    Dot and both norms accumulate per dimension, left to right, in float64
+    — the IEEE order of the vectors.dot / l2_norm folds, so every cosine is
+    bit-identical to the expression path. A cosine is NULL exactly where
+    that path yields NULL: a NULL vector or NULL ELEMENT on either side
+    (zip_with/aggregate NULL propagation), unequal lengths (zip_with pads
+    with NULL) or a zero norm (the explicit guard). NaN elements give NaN,
+    never NULL. Rows are grouped by vector length; only equal lengths are
+    scored."""
+    import numpy as np
+
+    c_lens = c["lens"][lo:hi]
+    c_clean = c["clean"][lo:hi]
+    c_starts = c["starts"][lo:hi]
+    cos = np.zeros((q["n"], hi - lo))
+    isnull = np.ones((q["n"], hi - lo), dtype=bool)
+    for d in np.unique(q["lens"][q["clean"]]):
+        qi = np.nonzero(q["clean"] & (q["lens"] == d))[0]
+        ci = np.nonzero(c_clean & (c_lens == d))[0]
+        if len(ci) == 0:
+            continue
+        dims = np.arange(d)
+        Q = q["vals"][q["starts"][qi][:, None] + dims]
+        C = c["vals"][c_starts[ci][:, None] + dims]
+        na = np.zeros(len(qi))
+        nb = np.zeros(len(ci))
+        acc = np.zeros((len(qi), len(ci)))
+        for kk in range(d):
+            na += Q[:, kk] * Q[:, kk]
+            nb += C[:, kk] * C[:, kk]
+            acc += Q[:, kk : kk + 1] * C[:, kk]
+        na, nb = np.sqrt(na), np.sqrt(nb)
+        # per side, not on the product: 0 * NaN is NaN, not zero
+        zero = (na == 0)[:, None] | (nb == 0)[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos[np.ix_(qi, ci)] = np.where(zero, 0.0, acc / (na[:, None] * nb[None, :]))
+        isnull[np.ix_(qi, ci)] = zero
+    return cos, isnull
+
+
+def _round4(cos):
+    """stable_round(cosine, 4) as Spark evaluates it. Spark's floor of a
+    double is a BIGINT, so a NaN cosine rounds to 0.0 (Java's (long) NaN
+    is 0), not to NaN."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore"):
+        r = np.floor(cos * 10000.0 + 0.5) / 10000.0
+    return np.where(np.isnan(r), 0.0, r)
+
+
+def _topk_cut(part: tuple, nids, k: int) -> tuple:
+    """Cut ``part`` — (left row, right row, raw cosine, NULL flag) arrays
+    — to each left row's first k candidates in the final rank window's
+    total order: NULL cosines last, stable_round(cosine, 4) DESC, neighbor
+    id (``nids``) ASC. One lexsort over (row, window order) plus a per-row
+    rank. First-k of a sorted multiset survives any partition of it, so
+    the union of block-local cuts holds the global top-k rows."""
+    import numpy as np
+
+    rows, _, cos, isnull = part
+    order = np.lexsort((nids, -np.where(isnull, 0.0, _round4(cos)), isnull, rows))
+    ranked = rows[order]
+    rank = np.arange(len(ranked)) - np.searchsorted(ranked, ranked)
+    pick = order[rank < k]
+    return tuple(a[pick] for a in part)
+
+
+def _block_kernel(k: int | None = None, threshold: float | None = None, has_meta: bool = False):
+    """applyInArrow kernel shared by the exact operators. A group holds
+    left rows (``_pside`` 0) and right rows (``_pside`` 1); their cosines
+    come from _cosine_slice, right rows walked in _MAX_CELLS slices.
+    Two emit modes:
+
+    * local top-k (``k``, brute_force_topk): per left ROW, its first k
+      right rows in the final window's order (_topk_cut), as (query_id,
+      neighbor_id, raw cosine[, _meta]). Pairs are DROPPED where the join
+      predicate drops them: equal ids (self-match) and, under
+      ``has_meta``, NULL or unequal metadata (Spark SQL equality, so
+      NaN = NaN matches). Per row, not per id, so a duplicated id keeps
+      its multiplicity.
+    * threshold pairs (``threshold``, blocked_cosine_pairs): every pair
+      with a non-NULL cosine whose stable_round reaches the threshold, as
+      (id_a, id_b, raw cosine) with id_a < id_b. A group whose two sides
+      are the same block (``_bi`` = ``_bj``) keeps left id < right id, so
+      each unordered pair comes once; other groups hold disjoint blocks
+      (the block is a function of the id) and keep every cross pair.
+
+    NULL and ragged vectors, NULL elements and zero norms give a NULL
+    cosine: top-k emits it (ranked last), pairs drop it. A NaN cosine
+    rounds to 0.0, as in Spark, in both modes."""
 
     def score(tbl):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        id_type = tbl.schema.field("_pid").type
-        meta_fields = [("_meta", tbl.schema.field("_pmeta").type)] if has_meta else []
-        empty = pa.table(
-            {
-                "query_id": pa.array([], id_type),
-                "neighbor_id": pa.array([], id_type),
-                "cosine": pa.array([], pa.float64()),
-                **{
-                    name: pa.array([], typ) for name, typ in meta_fields
-                },
-            }
-        )
         side = tbl.column("_pside")
         left = tbl.filter(pc.equal(side, 0))
         right = tbl.filter(pc.equal(side, 1))
-        if left.num_rows == 0 or right.num_rows == 0:
-            return empty
-        q = _prep(left)
-        c = _prep(right)
-        chunk = 8192  # bounds the score matrix at mq × chunk doubles
-        # per-query candidate accumulators across corpus slices
-        cand_idx: list = [[] for _ in range(q["n"])]
-        cand_cos: list = [[] for _ in range(q["n"])]
-        cand_null: list = [[] for _ in range(q["n"])]
-        for lo in range(0, c["n"], chunk):
-            hi = min(lo + chunk, c["n"])
-            cos, isnull, drop = _score_slice(q, c, lo, hi)
-            keep = ~drop
-            for qi in range(q["n"]):
-                idxs = np.nonzero(keep[qi])[0]
-                if len(idxs) == 0:
-                    continue
-                order = _order(
-                    cos[qi, idxs], isnull[qi, idxs], c["ids"][lo:hi][idxs]
-                )
-                pick = idxs[order[:k]]
-                cand_idx[qi].append(pick + lo)
-                cand_cos[qi].append(cos[qi, pick])
-                cand_null[qi].append(isnull[qi, pick])
-        out_q: list = []
-        out_c: list = []
-        out_cos: list = []
-        out_null: list = []
-        for qi in range(q["n"]):
-            if not cand_idx[qi]:
-                continue
-            gidx = np.concatenate(cand_idx[qi])
-            gcos = np.concatenate(cand_cos[qi])
-            gnull = np.concatenate(cand_null[qi])
-            order = _order(gcos, gnull, c["ids"][gidx])[:k]
-            out_q.append(np.full(len(order), qi, dtype=np.int64))
-            out_c.append(gidx[order])
-            out_cos.append(gcos[order])
-            out_null.append(gnull[order])
-        if not out_q:
-            return empty
-        qs = np.concatenate(out_q)
-        cs = np.concatenate(out_c)
-        cols = {
-            "query_id": q["arrow_ids"].take(pa.array(qs)),
-            "neighbor_id": c["arrow_ids"].take(pa.array(cs)),
-            "cosine": pa.array(
-                np.concatenate(out_cos), pa.float64(),
-                mask=np.concatenate(out_null),
-            ),
+        parts = [
+            (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0), np.zeros(0, bool))
+        ]
+        if left.num_rows and right.num_rows:
+            q = _side_arrays(left, has_meta)
+            c = _side_arrays(right, has_meta)
+            diagonal = k is None and (
+                tbl.column("_bi")[0].as_py() == tbl.column("_bj")[0].as_py()
+            )
+            step = max(1, _MAX_CELLS // q["n"])
+            for lo in range(0, c["n"], step):
+                hi = min(lo + step, c["n"])
+                cos, isnull = _cosine_slice(q, c, lo, hi)
+                q_ids, c_ids = q["ids"][:, None], c["ids"][None, lo:hi]
+                if k is None:
+                    keep = ~isnull & (_round4(cos) >= threshold)
+                    if diagonal:
+                        keep &= q_ids < c_ids
+                else:
+                    keep = q_ids != c_ids
+                    if has_meta:
+                        qm, cm = q["meta"][:, None], c["meta"][None, lo:hi]
+                        eq = qm == cm
+                        if qm.dtype.kind == "f" and cm.dtype.kind == "f":
+                            eq |= np.isnan(qm) & np.isnan(cm)
+                        keep &= eq & q["meta_valid"][:, None] & c["meta_valid"][None, lo:hi]
+                rows, cols = np.nonzero(keep)
+                part = (rows, cols + lo, cos[rows, cols], isnull[rows, cols])
+                if k is not None:
+                    part = _topk_cut(part, c["ids"][part[1]], k)
+                parts.append(part)
+        part = tuple(np.concatenate(a) for a in zip(*parts))
+        if k is not None and len(parts) > 2:
+            # several slices: cut the union of their local cuts
+            part = _topk_cut(part, c["ids"][part[1]], k)
+        rows, cols, cos, isnull = part
+        a = left.column("_pid").take(pa.array(rows))
+        b = right.column("_pid").take(pa.array(cols))
+        if k is None:
+            return pa.table(
+                {
+                    "id_a": pc.min_element_wise(a, b).cast(pa.int64()),
+                    "id_b": pc.max_element_wise(a, b).cast(pa.int64()),
+                    "cosine": pa.array(cos, pa.float64()),
+                }
+            )
+        out = {
+            "query_id": a,
+            "neighbor_id": b,
+            "cosine": pa.array(cos, pa.float64(), mask=isnull),
         }
         if has_meta:
-            cols["_meta"] = c["meta"].take(pa.array(cs))
-        return pa.table(cols)
+            out["_meta"] = right.column("_pmeta").take(pa.array(cols))
+        return pa.table(out)
 
     return score
 
@@ -355,62 +380,45 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     match_on: str | None = None,
-    blocks: int = 8,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cosine, rank) — the
-    blocked Arrow kernel form (round 12, guide §4.2/§2.3/§8).
+    """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
 
     Semantics are IDENTICAL to the expression-form spec in
     tests/test_similarity_blocked.py (bit-identity gated there): same
-    pairs, bit-identical cosine doubles, same ranking. The
-    execution shape changes: instead of scoring |Q|×|C| pairs with
-    interpreted zip_with/aggregate lambdas and shuffling every scored
-    pair into the rank window, corpus rows hash into ``blocks``
-    deterministic blocks (pmod(xxhash64(id), blocks) — guide §2.5),
-    query rows replicate to every block, and a NumPy kernel scores each
-    block's sub-matrix and emits only each query's LOCAL top-k candidate
-    rows — ≤ |Q|·k·blocks skinny rows reach the final window instead of
-    |Q|×|C| (§2.3 aggregate before you shuffle / §8 decide with small
-    rows). The local cut uses the window's exact total order, so the
-    global top-k is preserved row-for-row.
+    pairs, bit-identical cosine doubles, same ranking. The execution shape
+    differs: corpus rows hash into _block_count blocks, query rows
+    replicate to every block, and _block_kernel scores each block's
+    sub-matrix and emits only each query row's LOCAL top-k — at most
+    |Q|·k·blocks skinny rows reach the final window instead of |Q|×|C|
+    (guide §2.3 aggregate before you shuffle / §8 decide with small rows).
+    The local cut uses the window's exact total order, so the global top-k
+    is preserved row for row.
 
-    NULL-id rows on either side never pair (the join predicate's NULL
-    semantics) and are pre-filtered; everything else — NULL vectors,
-    ragged lengths, NULL elements, zero norms, NULL metadata under
-    ``match_on`` — reproduces the expression path inside the kernel
-    (docstring of _topk_block_scorer).
-
-    ``blocks`` scales the per-task sub-matrix (|Q| × |C|/blocks doubles,
-    chunked at 8192 corpus rows); raise it with corpus size."""
-    meta_q = [F.col(match_on).alias("_pmeta")] if match_on else []
-    q_side = queries.where(F.col(id_col).isNotNull()).select(
-        F.lit(0).alias("_pside"),
-        F.explode(F.sequence(F.lit(0), F.lit(blocks - 1))).alias("_blk"),
-        F.col(id_col).alias("_pid"),
-        F.col(vec_col).alias("_pvec"),
-        *meta_q,
+    NULL-id rows on either side never pair; everything else — NULL
+    vectors, ragged lengths, NULL elements, zero norms, NULL metadata
+    under ``match_on`` — reproduces the expression path inside the
+    kernel."""
+    blocks = _block_count(corpus)
+    u = _tagged_sides(
+        queries,
+        corpus,
+        id_col,
+        vec_col,
+        [F.explode(F.sequence(F.lit(0), F.lit(blocks - 1))).alias("_blk")],
+        [_block_of(id_col, blocks).alias("_blk")],
+        meta_col=match_on,
     )
-    meta_c = [F.col(match_on).alias("_pmeta")] if match_on else []
-    c_side = corpus.where(F.col(id_col).isNotNull()).select(
-        F.lit(1).alias("_pside"),
-        F.pmod(F.xxhash64(id_col), F.lit(blocks)).cast("int").alias("_blk"),
-        F.col(id_col).alias("_pid"),
-        F.col(vec_col).alias("_pvec"),
-        *meta_c,
-    )
-    u = q_side.unionByName(c_side)
     id_type = u.schema["_pid"].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
     if match_on:
         meta_type = u.schema["_pmeta"].dataType.simpleString()
         out_schema += f", _meta {meta_type}"
     cand = u.groupBy("_blk").applyInArrow(
-        _topk_block_scorer(k, has_meta=match_on is not None), out_schema
+        _block_kernel(k=k, has_meta=match_on is not None), out_schema
     )
     if match_on:
         cand = cand.withColumnRenamed("_meta", match_on)
     return _rank_topk(cand, k, extra_cols=[match_on] if match_on else None)
-
 
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> np.ndarray:
     rng = np.random.RandomState(seed)
@@ -783,184 +791,36 @@ def _lsh_scored_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# Blocked exact all-pairs cosine (the verification-harness shape, vectorized)
-# ---------------------------------------------------------------------------
-#
-# The exact all-pairs ground truth (q_dedup_embedding_bound and friends) is
-# quadratic BY DESIGN — but expressing the per-pair cosine as
-# zip_with + aggregate higher-order functions evaluates interpreted
-# per-element lambdas on every one of the N²/2 pairs (measured 35 s at
-# sf0.1 for 4M pairs). The blocked form instead ships each hash block's
-# (id, vector) matrix ONCE per block pair through Arrow and hands whole
-# blocks to NumPy (optimization guide §4.2 "do the heavy lifting in native
-# code" + §8 "move big rows once"): the dot products accumulate dimension
-# by dimension in the SAME left-to-right IEEE-754 order as the JVM fold,
-# so every emitted double is bit-identical to the higher-order-function
-# path (gated by tests/test_similarity_blocked.py; a 4M-pair live compare
-# measured 0 bit diffs).
-#
-# NaN/NULL parity notes (each mirrors the JVM path's behavior exactly):
-# * NULL vector elements arrive as NaN (Arrow null → NaN for float
-#   to_numpy) → dot/norm NaN → the rounded-threshold compare is false →
-#   pair excluded; Spark's NULL propagation excludes the same pairs.
-# * Zero/NaN norms: the mask is ~(norm <= 0), which keeps NaN like
-#   Spark's (norm > 0) does (Spark treats NaN as greater than any
-#   double); such pairs then drop at the threshold on both paths.
-# * The threshold compares floor(c*1e4 + 0.5)/1e4 — the stable_round op
-#   sequence — so the surviving edge set is the one both engines emit.
-
-
-def _arrow_block_matrix(tbl, id_name: str, vec_name: str):
-    """(int64 ids, float64 matrix) from an Arrow cogroup table whose
-    ``vec_name`` column is a list<float|double> of uniform length."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ids = tbl.column(id_name).to_numpy(zero_copy_only=False).astype(np.int64)
-    col = tbl.column(vec_name)
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    lens = np.asarray(lens, dtype="float64")
-    if len(lens) and (np.isnan(lens).any() or (lens != lens[0]).any()):
-        raise RuntimeError(
-            "blocked_cosine_pairs: ragged or NULL vectors reached the "
-            "scorer — gate the corpus with filter_modal_dim first"
-        )
-    d = int(lens[0]) if len(lens) else 0
-    vals = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    return ids, vals.reshape(len(ids), d)
-
-
-def _blocked_pair_scorer(threshold: float):
-    """Score one (block_i, block_j) pair: every cross pair's cosine via
-    per-dimension accumulation (bit-identical to the JVM fold), keep
-    id_a < id_b above the stable-rounded threshold."""
-
-    def score(tbl):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        empty = pa.table(
-            {
-                "id_a": pa.array([], pa.int64()),
-                "id_b": pa.array([], pa.int64()),
-                "cosine": pa.array([], pa.float64()),
-            }
-        )
-        side = tbl.column("_pside")
-        left = tbl.filter(pc.equal(side, 0))
-        right = tbl.filter(pc.equal(side, 1))
-        if left.num_rows == 0 or right.num_rows == 0:
-            return empty
-        # Diagonal groups hold the same block on both sides: the id_a <
-        # id_b mask enumerates each unordered pair once. Off-diagonal
-        # groups hold DISJOINT blocks (ids can never repeat across blocks
-        # — the block is a function of the id), so every cross pair is
-        # kept and emitted with its ids ordered.
-        diagonal = tbl.column("_bi")[0].as_py() == tbl.column("_bj")[0].as_py()
-        ia, A = _arrow_block_matrix(left, "_pid", "_pvec")
-        ib, B = _arrow_block_matrix(right, "_pid", "_pvec")
-        if A.shape[1] != B.shape[1]:
-            raise RuntimeError(
-                "blocked_cosine_pairs: dimension mismatch across blocks — "
-                f"{A.shape[1]} vs {B.shape[1]}; gate with filter_modal_dim"
-            )
-        d = A.shape[1]
-        nb = np.zeros(len(B))
-        for k in range(d):
-            nb = nb + B[:, k] * B[:, k]
-        nb = np.sqrt(nb)
-        out_a: list = []
-        out_b: list = []
-        out_c: list = []
-        chunk = 2048  # bounds the cosine matrix at chunk × |B| doubles
-        for s in range(0, len(A), chunk):
-            Ac, iac = A[s : s + chunk], ia[s : s + chunk]
-            na = np.zeros(len(Ac))
-            for k in range(d):
-                na = na + Ac[:, k] * Ac[:, k]
-            na = np.sqrt(na)
-            acc = np.zeros((len(Ac), len(B)))
-            for k in range(d):
-                acc = acc + Ac[:, k : k + 1] * B[:, k]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (na[:, None] * nb[None, :])
-                rounded = np.floor(cos * 10000.0 + 0.5) / 10000.0
-            keep = ~(na[:, None] <= 0) & ~(nb[None, :] <= 0) & (rounded >= threshold)
-            if diagonal:
-                keep &= iac[:, None] < ib[None, :]
-            r, c = np.nonzero(keep)
-            pa_ids, pb_ids = iac[r], ib[c]
-            if not diagonal:
-                lo = np.minimum(pa_ids, pb_ids)
-                hi = np.maximum(pa_ids, pb_ids)
-                pa_ids, pb_ids = lo, hi
-            out_a.append(pa_ids)
-            out_b.append(pb_ids)
-            out_c.append(cos[r, c])
-        return pa.table(
-            {
-                "id_a": pa.array(np.concatenate(out_a), pa.int64()),
-                "id_b": pa.array(np.concatenate(out_b), pa.int64()),
-                "cosine": pa.array(np.concatenate(out_c), pa.float64()),
-            }
-        )
-
-    return score
-
-
 def blocked_cosine_pairs(
     corpus: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    blocks: int = 8,
 ) -> DataFrame:
-    """All unordered pairs (id_a < id_b, both norms > 0) whose
-    stable_round(cosine, 4) >= threshold, over a modal-dim-gated corpus —
-    the EXACT ground-truth primitive, blocked: vectors hash into ``blocks``
-    deterministic blocks (pmod(xxhash64(id), blocks) — guide §2.5's
-    deterministic synthetic key), each unordered block pair cogroups into
-    one task, and NumPy scores the whole sub-matrix. Shuffle volume is
-    O(N·blocks) vector rows; compute is the same N²/2 cosines the
-    semantics demand, vectorized. Emitted ``cosine`` is the RAW double —
-    bit-identical to the zip_with/aggregate fold — so callers apply
-    stable_round exactly as before.
+    """All unordered pairs (id_a, id_b) with id_a < id_b, a non-NULL
+    cosine and stable_round(cosine, 4) >= threshold — the EXACT
+    ground-truth primitive, blocked. Vectors hash into _block_count
+    deterministic blocks; each unordered block pair cogroups into one
+    task, and _block_kernel scores the whole sub-matrix in NumPy instead
+    of evaluating interpreted zip_with/aggregate lambdas per pair. Shuffle
+    volume is O(N·blocks) vector rows; compute is the same N²/2 cosines
+    the semantics demand, vectorized. The emitted ``cosine`` is the RAW
+    double, bit-identical to the expression fold; callers apply
+    stable_round to it.
 
-    NULL ids never pair (the JVM path's id_a < id_b drops them); rows are
-    filtered here so block assignment is total. ``blocks`` scales the
-    per-task matrix (N/blocks)² — raise it with corpus size; the bench
-    harness corpora fit the default."""
-    em = corpus.where(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("_pid"), F.col(vec_col).alias("_pvec")
+    Pairs drop exactly where the expression form drops them: NULL ids,
+    zero norms, NULL vectors or elements and unequal lengths. Callers gate
+    the corpus with filter_modal_dim first."""
+    blocks = _block_count(corpus)
+    block = _block_of(id_col, blocks)
+    u = _tagged_sides(
+        corpus,
+        corpus,
+        id_col,
+        vec_col,
+        [block.alias("_bi"), F.explode(F.sequence(block, F.lit(blocks - 1))).alias("_bj")],
+        [F.explode(F.sequence(F.lit(0), block)).alias("_bi"), block.alias("_bj")],
     )
-    block = F.pmod(F.xxhash64("_pid"), F.lit(blocks)).cast("int")
-    # Both replica streams ride ONE grouped frame with a side tag (a
-    # cogroup of two frames derived from the same corpus trips the
-    # ambiguous-self-join check); the scorer splits the group by side.
-    side_a = em.select(
-        F.lit(0).alias("_pside"),
-        block.alias("_bi"),
-        F.explode(F.sequence(block, F.lit(blocks - 1))).alias("_bj"),
-        "_pid",
-        "_pvec",
-    )
-    side_b = em.select(
-        F.lit(1).alias("_pside"),
-        F.explode(F.sequence(F.lit(0), block)).alias("_bi"),
-        block.alias("_bj"),
-        "_pid",
-        "_pvec",
-    )
-    return (
-        side_a.unionByName(side_b)
-        .groupBy("_bi", "_bj")
-        .applyInArrow(
-            _blocked_pair_scorer(threshold),
-            "id_a long, id_b long, cosine double",
-        )
+    return u.groupBy("_bi", "_bj").applyInArrow(
+        _block_kernel(threshold=threshold), "id_a long, id_b long, cosine double"
     )

@@ -442,7 +442,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked since round 10 (previously rows-only — the LAST
     rows-only pair with q_dedup_simhash, round-9 verdict item 3): the
     per-(shingle, hash_id) hash is re-keyed from xxhash64 onto the 60-bit
-    md5 carving (functions/digests.md5_u60), which DuckDB reproduces
+    md5 carving (functions/digests.md5_u60_spark_sql), which DuckDB reproduces
     verbatim — so signatures, band hashes, the candidate equi-join, and
     the agreement estimate all restate in pure SQL. xxhash64 remains the
     production hasher (hasher param default); the plan shape is identical.

@@ -3,7 +3,6 @@ and the driver-side acquisition adapter (the engine-side generalization of
 reference operators A1-A8)."""
 
 from e2e_etl_pipeline_spark.sources.raw_zone import (  # noqa: F401
-    latest_partition,
     read_latest,
     write_raw,
 )

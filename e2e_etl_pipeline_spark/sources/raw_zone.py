@@ -28,15 +28,6 @@ def write_raw(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).partitionBy(*PARTITION_COLS).parquet(path)
 
 
-def latest_partition(spark: SparkSession, path: str) -> DataFrame:
-    """Single-row DataFrame holding max(ingest_date) over the dataset.
-
-    Reading just the partition column costs a directory listing, not a data
-    scan (partition values come from the paths).
-    """
-    return spark.read.parquet(path).agg(F.max("ingest_date").alias("max_ingest_date"))
-
-
 def read_latest(
     spark: SparkSession,
     path: str,

@@ -65,36 +65,46 @@ def test_quality_components_bounded(spark):
 
 
 def test_md5_u60_cross_engine_parity(spark):
-    """functions/digests.md5_u60 must equal its DuckDB twin md5_u60_sql
-    bit-for-bit — the contract that lets MinHash/SimHash oracles recompute
-    the engine's hashes (round 10). Covers ASCII, separators, unicode
-    (NFC/NFD, CJK, emoji), and the seeded shingle+chr(10)+k shape."""
+    """The shipped F.expr(md5_u60_spark_sql(...)) must equal its DuckDB
+    twin md5_u60_sql bit-for-bit — the contract that lets MinHash/SimHash
+    oracles recompute the engine's hashes (round 10). Covers ASCII,
+    separators, quotes, backslashes, unicode (NFC/NFD, CJK, emoji) and the
+    '\\n'-escaped seeded shingle shape, where the SQL parser's newline
+    escape must produce the byte DuckDB's chr(10) does."""
     import duckdb
 
-    from e2e_etl_pipeline_spark.functions.digests import md5_u60, md5_u60_sql
+    from e2e_etl_pipeline_spark.functions.digests import (
+        md5_u60_spark_sql,
+        md5_u60_sql,
+    )
 
     samples = [
         "a", "hello world", "foo:3", "tok1 tok2 tok3\n31",
-        "café", "café", "中文分词", "\U0001f600",
-        " leading", "trailing ", "tab\tsep", "",
+        "café", "café", "中文分词", "\U0001f600",
+        " leading", "trailing ", "tab\tsep", "", " ",
+        "back\\slash", "quote'quote",
     ]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
-    got = {r.s: r.h for r in df.select("s", md5_u60(F.col("s")).alias("h")).collect()}
+    rows = df.select(
+        "s",
+        F.expr(md5_u60_spark_sql("s")).alias("h"),
+        F.expr(md5_u60_spark_sql("concat(s, '\\n', '7')")).alias("seeded"),
+    ).collect()
+    twin = f"SELECT {md5_u60_sql('$1')}, {md5_u60_sql('$1 || chr(10) || 7')}"
     con = duckdb.connect()
-    for s in samples:
-        want = con.execute(
-            f"SELECT {md5_u60_sql('?')}", [s]
-        ).fetchone()[0]
-        assert got[s] == want, (s, got[s], want)
+    for r in rows:
+        want = con.execute(twin, [r.s]).fetchone()
+        assert (r.h, r.seeded) == want, r.s
 
 
 def test_md5_u60_spark_sql_matches_column_form(spark):
-    """md5_u60_spark_sql (the F.expr text twin used for wide-tree
-    construction, round 12) must equal the md5_u60 Column form exactly —
-    including the '\\n'-escaped seeded shingle shape, where the SQL
-    parser's newline escape must produce the same byte F.lit shipped."""
+    """md5_u60_spark_sql (the F.expr text form used for wide-tree
+    construction, round 12) must equal the Column-form 60-bit carving —
+    the first half of md5_u120 — exactly, including the '\\n'-escaped
+    seeded shingle shape, where the SQL parser's newline escape must
+    produce the same byte F.lit ships."""
     from e2e_etl_pipeline_spark.functions.digests import (
-        md5_u60,
+        md5_u120,
         md5_u60_spark_sql,
     )
 
@@ -103,9 +113,10 @@ def test_md5_u60_spark_sql_matches_column_form(spark):
         "\U0001f600", "", " ", "back\\slash", "quote'quote",
     ]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
+    col_form, _ = md5_u120(F.concat(F.col("s"), F.lit("\n"), F.lit("7")))
     rows = df.select(
         "s",
-        md5_u60(F.concat(F.col("s"), F.lit("\n"), F.lit("7"))).alias("col_form"),
+        col_form.alias("col_form"),
         F.expr(md5_u60_spark_sql("concat(s, '\\n', '7')")).alias("sql_form"),
     ).collect()
     for r in rows:

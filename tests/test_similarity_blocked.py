@@ -1,12 +1,13 @@
 """Bit-identity gates for the vectorized similarity kernels.
 
-The blocked all-pairs scorer, the Arrow LSH bucketizer and the blocked
-top-k scorer replace interpreted higher-order-function folds with NumPy
-loops that accumulate dimension by dimension in the same left-to-right
-IEEE-754 order — these tests pin that each replacement is BIT-identical
-to the expression form it replaced. Those expression forms live here as
-the executable specs (brute_force_topk_expr, _planes_frame_lazy,
-_tables_expr); the shipped package keeps only the kernels.
+The blocked cosine kernel (its top-k and threshold-pair modes) and the
+Arrow LSH bucketizer replace interpreted higher-order-function folds with
+NumPy loops that accumulate dimension by dimension in the same
+left-to-right IEEE-754 order — these tests pin that each replacement is
+BIT-identical to the expression form it replaced. Those expression
+forms live here as the executable specs (brute_force_topk_expr,
+_planes_frame_lazy, _tables_expr, _hof_pairs); the shipped package keeps
+only the kernels.
 """
 
 from __future__ import annotations
@@ -173,14 +174,15 @@ def test_blocked_cosine_pairs_bit_identical_to_hof(em, threshold):
     assert all(_bits(got[k]) == _bits(ref[k]) for k in ref)
 
 
-def test_blocked_cosine_pairs_more_blocks_than_rows(spark):
+def test_blocked_cosine_pairs_more_blocks_than_rows(spark, monkeypatch):
+    monkeypatch.setattr(sim, "_block_count", lambda df: 16)
     few = spark.range(3).select(
         F.col("id").alias("vec_id"),
         F.array(
             (F.col("id") + 1).cast("float"), F.lit(1.0).cast("float")
         ).alias("embedding"),
     )
-    rows = sim.blocked_cosine_pairs(few, threshold=0.0, blocks=16).collect()
+    rows = sim.blocked_cosine_pairs(few, threshold=0.0).collect()
     assert {(r.id_a, r.id_b) for r in rows} == {(0, 1), (0, 2), (1, 2)}
 
 
@@ -243,7 +245,7 @@ def test_arrow_bucketizer_mismatched_dim_buckets_zero(spark):
 
 
 # ---------------------------------------------------------------------------
-# brute_force_topk Arrow kernel vs the expression spec above (round 12)
+# brute_force_topk's kernel mode vs the expression spec above
 # ---------------------------------------------------------------------------
 
 
@@ -326,13 +328,71 @@ def test_brute_force_topk_edge_parity(edge_corpus, k, match_on):
     assert ref == got
 
 
-def test_brute_force_topk_more_blocks_than_rows(edge_corpus):
+@pytest.mark.parametrize("threshold", [0.0, 0.4])
+def test_blocked_cosine_pairs_edge_parity(edge_corpus, threshold):
+    """NULL vectors and elements, ragged lengths, NaN elements, zero
+    norms, NULL ids and a duplicated id must give the pairs the
+    expression form gives, with bit-identical cosines. A multiset: the
+    duplicated id 2 pairs twice with each other id."""
+    ref = sorted(
+        (r.id_a, r.id_b, _bits(r.cosine))
+        for r in _hof_pairs(edge_corpus, threshold).collect()
+    )
+    got = sorted(
+        (r.id_a, r.id_b, _bits(r.cosine))
+        for r in sim.blocked_cosine_pairs(edge_corpus, threshold).collect()
+    )
+    assert got == ref
+
+
+def test_brute_force_topk_more_blocks_than_rows(edge_corpus, monkeypatch):
+    monkeypatch.setattr(sim, "_block_count", lambda df: 64)
     q = edge_corpus.where(F.col("vec_id") < 6)
     ref = _topk_key(brute_force_topk_expr(edge_corpus, q, k=3).collect())
-    got = _topk_key(
-        sim.brute_force_topk(edge_corpus, q, k=3, blocks=64).collect()
-    )
+    got = _topk_key(sim.brute_force_topk(edge_corpus, q, k=3).collect())
     assert ref == got
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_brute_force_topk_one_block_nan_ranks_as_zero(edge_corpus, monkeypatch, k):
+    """With every corpus row in one block, the local cut alone decides
+    which candidates reach the rank window. stable_round(NaN) is 0.0 in
+    Spark (floor yields a BIGINT), so the NaN cosine of row 7 ranks as
+    0.0 — a cut that ranked NaN first would crowd out the true top-k."""
+    monkeypatch.setattr(sim, "_block_count", lambda df: 1)
+    q = edge_corpus.where(F.col("vec_id").isin(1, 2, 9))
+    ref = _topk_key(brute_force_topk_expr(edge_corpus, q, k=k).collect())
+    got = _topk_key(sim.brute_force_topk(edge_corpus, q, k=k).collect())
+    assert ref == got
+
+
+@pytest.mark.parametrize("k", [None, 2])
+def test_block_kernel_output_does_not_depend_on_slicing(edge_corpus, monkeypatch, k):
+    """The kernel walks the right side in _MAX_CELLS slices; one right row
+    per slice must emit the rows a single slice emits, in both modes (the
+    top-k mode then re-cuts the union of the slices' cuts)."""
+    import pyarrow as pa
+
+    rows = [r for r in edge_corpus.collect() if r.vec_id is not None]
+    n = len(rows)
+    tbl = pa.table(
+        {
+            "_pside": pa.array([0] * n + [1] * n, pa.int32()),
+            "_bi": pa.array([0] * 2 * n, pa.int32()),
+            "_bj": pa.array([0] * 2 * n, pa.int32()),
+            "_pid": pa.array([r.vec_id for r in rows] * 2, pa.int64()),
+            "_pvec": pa.array([r.embedding for r in rows] * 2, pa.list_(pa.float32())),
+        }
+    )
+    kernel = sim._block_kernel(threshold=0.0) if k is None else sim._block_kernel(k=k)
+
+    def emitted():
+        return sorted(str(tuple(r.values())) for r in kernel(tbl).to_pylist())
+
+    whole = emitted()
+    monkeypatch.setattr(sim, "_MAX_CELLS", 1)
+    assert emitted() == whole
+    assert whole
 
 
 def test_brute_force_topk_empty_sides(edge_corpus):
