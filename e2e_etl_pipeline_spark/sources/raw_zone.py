@@ -7,11 +7,16 @@ sort — which mis-orders dates (SURVEY.md §1.3). The engine keeps the intent:
   * Hive-partitioned writes on (site, region, experience, ingest_date) —
     Spark manages directories; ingest_date is a proper *sortable* DATE
     partition column, injected explicitly (never wall-clock inside a query).
-  * "Latest" = max(ingest_date) via an aggregate joined back as a filter —
-    static partition pruning reads only the newest partition's files.
+  * "Latest" = the newest ingest_date in the relation's own file listing
+    (driver-side, no job), applied as an equality filter — a static
+    partition filter, so the scan reads only the newest partition's files.
 """
 
 from __future__ import annotations
+
+import datetime as dt
+from contextlib import suppress
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +33,19 @@ def write_raw(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).partitionBy(*PARTITION_COLS).parquet(path)
 
 
+def _partition_values(uri: str) -> dict[str, str]:
+    """Partition values of one data file, from its ``key=value`` path
+    segments. The listing is a URI, so each value is unescaped twice:
+    once for the URI, once for Spark's path escaping (``a b/ż`` is stored
+    as ``a b%2Fż`` and listed as ``a%20b%252F%C5%BC``)."""
+    values = {}
+    for segment in unquote(urlparse(uri).path).split("/"):
+        key, sep, value = segment.partition("=")
+        if sep and key in PARTITION_COLS:
+            values[key] = unquote(value)
+    return values
+
+
 def read_latest(
     spark: SparkSession,
     path: str,
@@ -39,11 +57,18 @@ def read_latest(
     site/region/experience subtree — all partition-pruned filters).
 
     This is A8 with the ddmmyyyy byte-sort bug fixed: comparison happens on
-    a typed DATE column, so chronological == sort order by construction.
+    typed dates, so chronological == sort order by construction. The newest
+    date comes from the relation's file listing on the driver and reaches
+    the scan as a static ``ingest_date = <date>`` partition filter.
     """
     df = spark.read.parquet(path)
-    for col, val in (("site", site), ("region", region), ("experience", experience)):
-        if val is not None:
-            df = df.where(F.col(col) == val)
-    mx = df.agg(F.max("ingest_date").alias("ingest_date"))
-    return df.join(F.broadcast(mx), "ingest_date")
+    scope = {"site": site, "region": region, "experience": experience}
+    scope = {col: val for col, val in scope.items() if val is not None}
+    dates = []
+    for values in map(_partition_values, df.inputFiles()):
+        if all(values.get(col) == val for col, val in scope.items()):
+            with suppress(ValueError):  # a NULL date: __HIVE_DEFAULT_PARTITION__
+                dates.append(dt.date.fromisoformat(values["ingest_date"]))
+    for col, val in scope.items():
+        df = df.where(F.col(col) == val)
+    return df.where(F.col("ingest_date") == F.lit(max(dates)) if dates else F.lit(False))

@@ -21,15 +21,11 @@ import-try when the package exists. Acquisition stays driver-side by
 design (SURVEY.md §3.2): the WebDriver process boundary must never sit
 inside a cluster-side operator.
 
-Relationship to sources/selenium_fetcher.py (deliberate, not drift): that
-module is the REFERENCE-FAITHFUL artifact shape — each loop emits ONE
-merged HTML document (the A28 single-file raw artifact the transform
-stage reads whole), with the reference's exact stale-round accounting.
-THIS module is the engine-native shape — one row PER offer fragment with
-running doc_ids, feeding acquire.fetched_documents row-wise so fragments
-parallelize downstream without a re-explode. Pick by output contract;
-behavior changes to either loop must be checked against the shared
-reference citations above.
+Each loop emits one row PER offer fragment with running doc_ids, feeding
+acquire.fetched_documents row-wise so fragments parallelize downstream
+without a re-explode. The reference's merged single-file raw artifact
+(A28: one ``<ul>…</ul>`` or ``<div>…</div>`` document per loop) is the
+wrapper around the concatenation of the rows' html, in row order.
 """
 
 from __future__ import annotations
@@ -40,15 +36,16 @@ from typing import Protocol
 from e2e_etl_pipeline_spark.sources.acquire import Fetcher
 
 # Site-specific listing-URL templates, the engine's version of the
-# reference's _build_url (extract_data.py:47-51 and :164-166). Options are
-# data, not code: new sites register a template + loop style.
+# reference's _build_url (extract_data.py:47-51 and :164-166, URL shapes
+# :74-79 and :163-167). Both carry the reference's with-salary filter
+# (A3). Options are data, not code: new sites register a template + loop
+# style. "ppl" is the reference's site abbreviation (config.py:13
+# SITE_ABBREVIATIONS) and the key pipeline/offers.py registers its parser
+# under — a divergent key here would make parse_offers silently drop every
+# row this fetcher produces.
 URL_TEMPLATES = {
-    "jjit": "https://it.example-jjit.invalid/{region}/all/experience-level_{experience}",
-    # "ppl" is the reference's site abbreviation (config.py:13
-    # SITE_ABBREVIATIONS) and the key pipeline/offers.py registers its
-    # parser under — a divergent key here would make parse_offers silently
-    # drop every row this fetcher produces.
-    "ppl": "https://it.example-pracuj.invalid/praca/{region};wp?et={experience}",
+    "jjit": "https://justjoin.it/job-offers/{region}?experience-level={experience}&with-salary=yes",
+    "ppl": "https://it.pracuj.pl/praca/{region};wp?et={experience}&sal=1",
 }
 LOOP_STYLE = {"jjit": "scroll", "ppl": "paginate"}
 
@@ -72,7 +69,7 @@ class BrowserPort(Protocol):
         """Click the next-page control; False if absent/disabled."""
 
     def scroll(self) -> None:
-        """Advance the virtualized list by one viewport."""
+        """Advance the virtualized list by one scroll step."""
 
     def close(self) -> None:
         """Tear the browser down (context-manager duty in the reference,
@@ -116,12 +113,10 @@ def scroll_fetch(
     seen: dict[int, str] = {}
     port.open(url)
     # Initial harvest, then baseline the watermark AFTER it
-    # (extract_data.py:218-223; selenium_fetcher.scroll_harvest parity):
-    # loop round 1 counts as progress only if its own harvest adds items
-    # beyond the initial collect. A (0, -1) baseline would grant one free
-    # round whenever the page loads non-empty, changing the harvested
-    # artifact under a tight stale budget — the reference-divergence the
-    # round-4 advisor flagged in the sibling module.
+    # (extract_data.py:218-223): loop round 1 counts as progress only if
+    # its own harvest adds items beyond the initial collect. A (0, -1)
+    # baseline would grant one free round whenever the page loads
+    # non-empty, changing the harvested artifact under a tight stale budget.
     for idx, html in port.harvest():
         seen.setdefault(idx, html)
     stale = 0
@@ -163,20 +158,24 @@ def make_browser_fetcher(port_factory) -> Fetcher:
     return fetch
 
 
+# The reference's scroll step in the A2 loop (extract_data.py:199-246).
+_SCROLL_PX = 1200
+
+
 def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
     """Real-browser adapter, available only where selenium + Chrome exist.
 
     Kept to the thinnest possible leaf: selector constants mirror the
-    reference's DOM contracts (li[data-index] harvest :182-197; offers
-    under [data-test='section-offers'] :82-85; next-button click
-    :100-106).
+    reference's DOM contracts (``#up-offers-list ul li[data-index]``
+    harvest :181-197; offers under [data-test='section-offers'] :82-85;
+    scroll-into-view next-button click :100-106).
     """
     try:
         from selenium import webdriver
         from selenium.webdriver.common.by import By
     except ImportError as exc:
         raise NotImplementedError(
-            "selenium is not installed in this environment; use "
+            "selenium_port requires the optional selenium dependency; use "
             "make_browser_fetcher with an offline BrowserPort instead"
         ) from exc
 
@@ -192,11 +191,15 @@ def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
 
         def harvest(self) -> list[tuple[int, str]]:
             if self._site == "jjit":
-                rows = self._driver.find_elements(By.CSS_SELECTOR, "li[data-index]")
-                return [
-                    (int(r.get_attribute("data-index")), r.get_attribute("outerHTML"))
-                    for r in rows
-                ]
+                # one JS round-trip for the whole virtualized window
+                # (extract_data.py:181-197); rows without a data-index are
+                # skipped, as in the reference's harvest
+                rows = self._driver.execute_script(
+                    "return Array.from(document.querySelectorAll("
+                    "'#up-offers-list ul li[data-index]'"
+                    ")).map(li => [li.getAttribute('data-index'), li.outerHTML]);"
+                )
+                return [(int(idx), html) for idx, html in rows if idx is not None]
             rows = self._driver.find_elements(
                 By.CSS_SELECTOR,
                 "[data-test='section-offers'] div[data-test='default-offer']",
@@ -212,13 +215,14 @@ def selenium_port(site: str) -> BrowserPort:  # pragma: no cover - optional dep
             # disabled-but-visible button would still be clicked there.
             if not buttons or not buttons[0].is_displayed():
                 return False
+            self._driver.execute_script(
+                "arguments[0].scrollIntoView({block: 'center'});", buttons[0]
+            )
             buttons[0].click()
             return True
 
         def scroll(self) -> None:
-            self._driver.execute_script(
-                "window.scrollBy(0, window.innerHeight);"
-            )
+            self._driver.execute_script(f"window.scrollBy(0, {_SCROLL_PX});")
 
         def close(self) -> None:
             self._driver.quit()

@@ -169,41 +169,74 @@ def test_selenium_port_raises_cleanly_without_selenium():
 
 
 def test_scroll_loops_agree_on_stale_accounting():
-    """Cross-module drift guard: selenium_fetch.scroll_fetch (row-wise) and
-    selenium_fetcher.scroll_harvest (merged artifact) implement the SAME
-    reference loop (extract_data.py:199-246); fed an identical reveal
-    schedule they must harvest the same item set and burn the same number
-    of scroll rounds — the stale-accounting drift the round-4 advisor
-    caught must not reopen."""
-    from e2e_etl_pipeline_spark.sources.selenium_fetcher import scroll_harvest
-
+    """Reference stale accounting (extract_data.py:199-246) on a reveal
+    schedule with one empty round between reveals: the harvested
+    concatenation and the number of scroll rounds per stale budget. The
+    values are the ones the retired merged-document loop produced on the
+    same schedule, so the accounting both loops agreed on cannot drift."""
     batches = [[(0, "a"), (1, "b")], [(2, "c")], [], [(3, "d")]]
-
-    class FakeListing:
-        def __init__(self):
-            self._round = 0
-            self.scrolls = 0
-
-        def visible_items(self):
-            return [
-                (str(i), h)
-                for b in batches[: self._round + 1]
-                for i, h in b
-            ]
-
-        def scroll_by(self, pixels):
-            self.scrolls += 1
-            if self._round + 1 < len(batches):
-                self._round += 1
-
-    for stale_budget in (1, 2, 5):
+    for stale_budget, html, scrolls in ((1, "ab", 0), (2, "abcd", 5), (5, "abcd", 8)):
         port = FakeScrollPort(batches)
-        listing = FakeListing()
         rows = scroll_fetch(
             port, "http://x", max_stale_rounds=stale_budget, max_rounds=50
         )
-        merged = scroll_harvest(
-            listing, max_stale_rounds=stale_budget, max_rounds=50
-        )
-        assert "".join(h for _, h in rows) == merged[4:-5], stale_budget
-        assert port.scrolls == listing.scrolls, stale_budget
+        assert "".join(h for _, h in rows) == html, stale_budget
+        assert port.scrolls == scrolls, stale_budget
+
+
+def _fragments(site):
+    """One offer fragment per offer, in the shapes synthetic_fetcher
+    merges: ``<li data-index>`` for jjit, ``div[data-test=default-offer]``
+    for ppl. Returns (wrapper tag, [(index, html)], the merged document)."""
+    import re
+
+    from e2e_etl_pipeline_spark.sources.acquire import synthetic_fetcher
+
+    [(_, merged)] = synthetic_fetcher(site, "waw", "mid")
+    if site == "jjit":
+        items = [
+            (int(m.group(1)), m.group(0))
+            for m in re.finditer(r'<li data-index="(\d+)">.*?</li>', merged)
+        ]
+        return "ul", items, merged
+    divs = re.findall(r'<div data-test="default-offer">.*?</div>', merged)
+    return "div", list(enumerate(divs)), merged
+
+
+def test_fragment_rows_parse_like_merged_document(spark):
+    """The merged A28 document is not package code: it is the wrapper
+    around the concatenation of the per-fragment rows. Parsing the rows
+    must yield the same offers as parsing the merged document."""
+    import datetime as dt
+    from collections import Counter
+
+    from e2e_etl_pipeline_spark.pipeline.offers import parse_offers
+    from e2e_etl_pipeline_spark.sources.acquire import fetched_documents
+
+    targets = [("jjit", "waw", "mid"), ("ppl", "waw", "mid")]
+    shapes = {site: _fragments(site) for site, _, _ in targets}
+    for tag, items, merged in shapes.values():
+        assert len(items) == 3
+        assert f"<{tag}>" + "".join(h for _, h in items) + f"</{tag}>" == merged
+
+    def factory(site):
+        _, items, _ = shapes[site]
+        if LOOP_STYLE[site] == "scroll":
+            # the second reveal re-renders the first offer (dedup case)
+            return FakeScrollPort([items[:2], items[:1] + items[2:]])
+        return FakePagedPort([[h for _, h in items[:2]], [h for _, h in items[2:]]])
+
+    day = dt.date(2026, 1, 15)
+    cols = ["site", "position", "company_name", "minimum", "maximum", "currency", "pay_period"]
+
+    def offers(docs):
+        parsed = parse_offers(docs.select("doc_id", "site", "html"))
+        return Counter(tuple(r) for r in parsed.select(*cols).collect())
+
+    rows = fetched_documents(spark, targets, day, fetcher=make_browser_fetcher(factory))
+    assert rows.count() == 6  # one row per fragment
+    # the default fetcher is synthetic_fetcher: one merged document per site
+    want = offers(fetched_documents(spark, targets, day))
+    assert sum(want.values()) == 6
+    assert offers(rows) == want
+    assert sum(want.values()) == 6

@@ -7,6 +7,7 @@ latest-partition pruned read → DOM parse → typed offers. Verifies the
 from __future__ import annotations
 
 import datetime as dt
+import re
 import shutil
 import tempfile
 
@@ -22,16 +23,29 @@ TARGETS = [("jjit", "waw", "junior"), ("ppl", "gd", "senior")]
 def test_raw_zone_roundtrip_and_latest(spark):
     path = tempfile.mkdtemp(prefix="e2e_raw_zone_")
     try:
-        # Two ingests; the ddmmyyyy byte-sort bug would order these wrongly
-        # (31012024 > 01082024 lexicographically, but Jan 31 < Aug 1).
+        # The ddmmyyyy byte-sort bug would order these wrongly (31012024 >
+        # 01082024 lexicographically, but Jan 31 < Aug 1; 31122023 also
+        # byte-sorts after 31012024). The two older dates carry the only
+        # rows of a region whose value needs path escaping.
+        d_older = dt.date(2023, 12, 31)
         d_old = dt.date(2024, 1, 31)
         d_new = dt.date(2024, 8, 1)
-        write_raw(fetched_documents(spark, TARGETS, d_old), path)
+        escaped = [("jjit", "a b/ż", "junior")]
+        write_raw(fetched_documents(spark, TARGETS + escaped, d_older), path)
+        write_raw(fetched_documents(spark, TARGETS + escaped, d_old), path)
         write_raw(fetched_documents(spark, TARGETS, d_new), path)
 
         latest = read_latest(spark, path)
         dates = {r.ingest_date for r in latest.select("ingest_date").distinct().collect()}
         assert dates == {d_new}
+
+        # the newest date is a static partition filter on the scan, not a
+        # join against a max aggregate over the whole zone
+        plan = latest._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*\(ingest_date#\d+ = 2024-08-01\)", plan), plan
+
+        esc = read_latest(spark, path, site="jjit", region="a b/ż").collect()
+        assert [(r.region, r.ingest_date) for r in esc] == [("a b/ż", d_old)]
 
         scoped = read_latest(spark, path, site="jjit", region="waw")
         assert scoped.count() == 1

@@ -1,6 +1,8 @@
-"""Offline contract tests for the optional live-browser fetcher loops
-(sources/selenium_fetcher.py): the pagination and scroll-harvest logic run
-against fake pages — no selenium, no network.
+"""Offline contract tests for the reference's merged single-document
+artifact (A28), derived from the per-fragment browser loops
+(sources/selenium_fetch.py): the merged document is the wrapper around
+the concatenation of the rows' html. Fake pages stand in for the
+browser — no selenium, no network.
 
 Contracts under test mirror DataExtract/extract_data.py:108-146 (page loop)
 and :199-246 (scroll harvest with keyed dedup + stale-round stop).
@@ -10,10 +12,16 @@ from __future__ import annotations
 
 import pytest
 
-from e2e_etl_pipeline_spark.sources.selenium_fetcher import (
-    paginate_collect,
-    scroll_harvest,
+from e2e_etl_pipeline_spark.sources.selenium_fetch import (
+    make_browser_fetcher,
+    paginated_fetch,
+    scroll_fetch,
+    selenium_port,
 )
+
+
+def merged(tag: str, rows: list[tuple[int, str]]) -> str:
+    return f"<{tag}>" + "".join(html for _, html in rows) + f"</{tag}>"
 
 
 class FakePagedListing:
@@ -24,15 +32,18 @@ class FakePagedListing:
         self._i = 0
         self.clicks = 0
 
-    def collect_offer_divs(self) -> list[str]:
-        return self._pages[self._i]
+    def open(self, url: str) -> None:
+        pass
 
-    def is_next_visible(self) -> bool:
-        return self._i < len(self._pages) - 1
+    def harvest(self) -> list[tuple[int, str]]:
+        return list(enumerate(self._pages[self._i]))
 
-    def click_next(self) -> None:
+    def next_page(self) -> bool:
+        if self._i >= len(self._pages) - 1:
+            return False
         self.clicks += 1
         self._i += 1
+        return True
 
 
 class FakeScrollingListing:
@@ -40,38 +51,35 @@ class FakeScrollingListing:
     re-renders repeat earlier items (the dedup case); after the feed is
     exhausted further scrolls reveal nothing (the stale case)."""
 
-    def __init__(self, windows: list[list[tuple[str, str]]]) -> None:
+    def __init__(self, windows: list[list[tuple[int, str]]]) -> None:
         self._windows = windows
         self._pos = 0
         self.scrolls = 0
 
-    def visible_items(self) -> list[tuple[str, str]]:
+    def open(self, url: str) -> None:
+        pass
+
+    def harvest(self) -> list[tuple[int, str]]:
         return self._windows[min(self._pos, len(self._windows) - 1)]
 
-    def scroll_by(self, pixels: int) -> None:
+    def scroll(self) -> None:
         self.scrolls += 1
         self._pos += 1
 
 
 def test_paginate_collects_every_page_and_stops_at_last():
     page = FakePagedListing([["<a>1</a>", "<a>2</a>"], ["<a>3</a>"], ["<a>4</a>"]])
-    html = paginate_collect(page)
+    html = merged("div", paginated_fetch(page, "http://x"))
     assert html == "<div><a>1</a><a>2</a><a>3</a><a>4</a></div>"
     assert page.clicks == 2  # never clicks past the last page
 
 
 def test_paginate_respects_max_rounds():
-    class Endless:
-        def collect_offer_divs(self):
-            return ["<a>x</a>"]
-
-        def is_next_visible(self):
+    class Endless(FakePagedListing):
+        def next_page(self):
             return True
 
-        def click_next(self):
-            pass
-
-    html = paginate_collect(Endless(), max_rounds=7)
+    html = merged("div", paginated_fetch(Endless([["<a>x</a>"]]), "http://x", max_pages=7))
     assert html.count("<a>x</a>") == 7
 
 
@@ -79,22 +87,22 @@ def test_scroll_harvest_dedups_by_index_and_orders_numerically():
     # windows overlap (items 1-2 re-rendered) and arrive out of order;
     # index 10 must sort after 2 numerically, not lexicographically
     windows = [
-        [("0", "<li>a</li>"), ("1", "<li>b</li>")],
-        [("1", "<li>b-re</li>"), ("2", "<li>c</li>"), ("10", "<li>k</li>")],
+        [(0, "<li>a</li>"), (1, "<li>b</li>")],
+        [(1, "<li>b-re</li>"), (2, "<li>c</li>"), (10, "<li>k</li>")],
     ]
-    html = scroll_harvest(FakeScrollingListing(windows), max_stale_rounds=2)
+    rows = scroll_fetch(FakeScrollingListing(windows), "http://x", max_stale_rounds=2)
     # first occurrence wins for data-index 1
-    assert html == "<ul><li>a</li><li>b</li><li>c</li><li>k</li></ul>"
+    assert merged("ul", rows) == "<ul><li>a</li><li>b</li><li>c</li><li>k</li></ul>"
 
 
 def test_scroll_harvest_stops_after_stale_rounds():
-    windows = [[("0", "<li>only</li>")]]  # nothing new ever appears
+    windows = [[(0, "<li>only</li>")]]  # nothing new ever appears
     page = FakeScrollingListing(windows)
-    html = scroll_harvest(page, max_stale_rounds=3, max_rounds=100)
-    assert html == "<ul><li>only</li></ul>"
+    rows = scroll_fetch(page, "http://x", max_stale_rounds=3, max_rounds=100)
+    assert merged("ul", rows) == "<ul><li>only</li></ul>"
     # initial harvest + 3 stale verification rounds => exactly 2 scrolls
     # before the counter trips (progress check happens before scrolling)
-    assert page.scrolls < 100
+    assert page.scrolls == 2
 
 
 def test_scroll_harvest_survives_one_stale_render_between_reveals():
@@ -102,13 +110,13 @@ def test_scroll_harvest_survives_one_stale_render_between_reveals():
     # lagging virtualized list (one empty round between reveals) must not
     # trip a 2-round stale budget while content is still arriving
     windows = [
-        [("0", "<li>a</li>")],
-        [("1", "<li>b</li>")],
-        [("2", "<li>c</li>")],
-        [("2", "<li>c</li>")],  # feed exhausted from here on
+        [(0, "<li>a</li>")],
+        [(1, "<li>b</li>")],
+        [(2, "<li>c</li>")],
+        [(2, "<li>c</li>")],  # feed exhausted from here on
     ]
-    html = scroll_harvest(FakeScrollingListing(windows), max_stale_rounds=2)
-    assert html == "<ul><li>a</li><li>b</li><li>c</li></ul>"
+    rows = scroll_fetch(FakeScrollingListing(windows), "http://x", max_stale_rounds=2)
+    assert merged("ul", rows) == "<ul><li>a</li><li>b</li><li>c</li></ul>"
 
 
 def test_selenium_fetcher_raises_cleanly_without_selenium():
@@ -118,10 +126,9 @@ def test_selenium_fetcher_raises_cleanly_without_selenium():
         pass
     else:
         pytest.skip("selenium installed here; the import gate isn't exercisable")
-    from e2e_etl_pipeline_spark.sources.selenium_fetcher import selenium_fetcher
 
     with pytest.raises(RuntimeError, match="optional selenium"):
-        selenium_fetcher("jjit", "all-locations", "junior")
+        make_browser_fetcher(selenium_port)("jjit", "all-locations", "junior")
 
 
 def test_scroll_harvest_baselines_after_initial_harvest():
@@ -129,7 +136,7 @@ def test_scroll_harvest_baselines_after_initial_harvest():
     is taken AFTER the initial collect, so a page whose content never
     changes trips a 1-round stale budget without a single scroll — the
     initial harvest itself is not loop progress."""
-    page = FakeScrollingListing([[("0", "<li>a</li>")]])
-    html = scroll_harvest(page, max_stale_rounds=1)
-    assert html == "<ul><li>a</li></ul>"
+    page = FakeScrollingListing([[(0, "<li>a</li>")]])
+    rows = scroll_fetch(page, "http://x", max_stale_rounds=1)
+    assert merged("ul", rows) == "<ul><li>a</li></ul>"
     assert page.scrolls == 0
