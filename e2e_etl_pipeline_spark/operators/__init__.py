@@ -7,7 +7,7 @@ the expensive step is a key-partitioned shuffle, never a cross product.
 from e2e_etl_pipeline_spark.operators.dedup import (  # noqa: F401
     dedup_exact_first_wins,
     simhash_fingerprints,
-    token_jaccard_pairs,
+    set_jaccard_pairs,
 )
 from e2e_etl_pipeline_spark.operators.similarity import (  # noqa: F401
     brute_force_topk,

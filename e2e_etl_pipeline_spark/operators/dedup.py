@@ -585,61 +585,85 @@ def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Exact token-set Jaccard via inverted-index join (q_dedup_jaccard)
+# Exact set-Jaccard via inverted-index join (q_dedup_jaccard, q_dedup_ngram)
 # ---------------------------------------------------------------------------
-def token_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_df: int | None = None
-) -> DataFrame:
-    """All-pairs exact Jaccard over word sets, via the inverted index:
-    join docs on shared token, count intersections, derive the union from
-    per-doc set sizes. Shuffles on token — proportional to the index size,
-    not |docs|² (pairs sharing no token never meet).
+def word_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, element) word-set frame for set_jaccard_pairs: one row per
+    distinct whitespace token of each document."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(_words(text_col))).alias("element"),
+    )
 
-    ``max_df`` is the scale guard: a token appearing in n documents emits
+
+def set_jaccard_pairs(sets: DataFrame, max_df: int | None = None) -> DataFrame:
+    """All-pairs exact Jaccard over an (id, element) set frame — word
+    tokens, char n-grams, any set — via the inverted index: join sets on a
+    shared element, count intersections, derive the union from per-id set
+    sizes. Shuffles on element — proportional to the index size, not
+    |ids|² (pairs sharing no element never meet). Returns (id_a, id_b,
+    jaccard) with id_a < id_b and the EXACT, unrounded ratio: callers
+    stable_round it and apply their own threshold (a threshold may compare
+    the rounded or the raw ratio — whichever its oracle compares).
+
+    ``max_df`` is the scale guard: an element appearing in n sets emits
     n(n-1)/2 candidate rows, so one stop-word-grade token makes the join
     quadratic in corpus size. The cutoff is prefix-filter-style
-    candidate-verify: tokens with document frequency > max_df are excluded
-    from CANDIDATE GENERATION, then each surviving candidate pair's
-    intersection is re-counted against the FULL token sets — so reported
-    Jaccard values are exact. What's lost is only pairs whose entire overlap
-    is ultra-common tokens, which cannot be high-Jaccard pairs unless their
-    sets are tiny. None = no cutoff (exact all-pairs semantics)."""
-    # .distinct() mirrors the oracle's SELECT DISTINCT (id, token): a
+    candidate-verify: elements with document frequency > max_df are
+    excluded from CANDIDATE GENERATION, then each surviving candidate
+    pair's intersection is re-counted against the FULL sets — so reported
+    Jaccard values are exact. What's lost is only pairs whose entire
+    overlap is ultra-common elements, which cannot be high-Jaccard pairs
+    unless their sets are tiny. None = no cutoff (exact all-pairs
+    semantics).
+
+    Corpus regime: the inverted-index shape is declared for SPARSE element
+    incidence (large vocabulary, bounded document frequency), where the
+    candidate stream Σ df² is far below n². A charset-bounded corpus (the
+    test fixture's 377 distinct char-3-grams over 702 docs) degenerates
+    toward the dense n² stream under max_df=None — that cost is the
+    declared semantics, not an implementation defect; a dense-regime
+    caller wants a bitmap/matmul operator with a different scaling class.
+
+    No join-strategy hint on the self-join (round-12 decision, reversing
+    round 11): a quiet interleaved min-of-3 A/B pair on the char-3-gram
+    join (plans/r12/ngram_hint_pair.json) measured SHUFFLE_HASH flat on the
+    standard layout (7.59 vs 7.44 s) and ~1.2 s WORSE on the restaged
+    multi-split layout (8.73 vs 7.53 s) — on this many-to-many join the
+    per-partition hash build over hot keys loses to sort-merge's streaming
+    merge. Planner default (SMJ) stands."""
+    # .distinct() mirrors the oracles' SELECT DISTINCT (id, element): a
     # DUPLICATED document row (the pk fuzz variant; a regenerated table
-    # could carry one) would otherwise double its set_size and
-    # intersection counts engine-side only. array_distinct dedups within
-    # a row; this dedups across rows of the same id.
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_words(text_col))).alias("token"),
-    ).distinct()
+    # could carry one) or a repeated element would otherwise double its
+    # set_size and intersection counts engine-side only.
+    toks = sets.select("id", "element").distinct()
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
     if max_df is None:
         a = toks.alias("a")
         b = toks.alias("b")
         inter = (
-            a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.id") < F.col("b.id")))
+            a.join(b, (F.col("a.element") == F.col("b.element")) & (F.col("a.id") < F.col("b.id")))
             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
-        # toks is one row per (doc, distinct token), so count(*) per token is
-        # its document frequency. Anti-join drops the hot tokens before the
-        # quadratic step. Unhinted: |hot| is usually tiny (Zipf tail) and AQE
-        # broadcasts it, but it's corpus-dependent (≤ index/max_df), so a
-        # forced broadcast could OOM; the anti-join shares the token-keyed
-        # partitioning the candidate join needs anyway.
+        # toks is one row per (id, distinct element), so count(*) per
+        # element is its document frequency. Anti-join drops the hot
+        # elements before the quadratic step. Unhinted: |hot| is usually
+        # tiny (Zipf tail) and AQE broadcasts it, but it's corpus-dependent
+        # (≤ index/max_df), so a forced broadcast could OOM; the anti-join
+        # shares the element-keyed partitioning the candidate join needs.
         hot = (
-            toks.groupBy("token")
+            toks.groupBy("element")
             .agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") > max_df)
-            .select("token")
+            .select("element")
         )
-        rare = toks.join(hot, "token", "left_anti")
+        rare = toks.join(hot, "element", "left_anti")
         a = rare.alias("a")
         b = rare.alias("b")
         cand = (
-            a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.id") < F.col("b.id")))
+            a.join(b, (F.col("a.element") == F.col("b.element")) & (F.col("a.id") < F.col("b.id")))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
         )
@@ -653,7 +677,7 @@ def token_jaccard_pairs(
             .join(
                 tb,
                 (F.col("tb.id") == F.col("id_b"))
-                & (F.col("tb.token") == F.col("ta.token")),
+                & (F.col("tb.element") == F.col("ta.element")),
             )
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
@@ -663,14 +687,8 @@ def token_jaccard_pairs(
     return inter.join(sa, "id_a").join(sb, "id_b").select(
         "id_a",
         "id_b",
-        # stable_round, not F.round: downstream thresholds compare the
-        # ROUNDED value, and integer ratios can land on exact 4dp midpoints
-        # where Spark's HALF_UP and DuckDB's half-even round() split —
-        # flipping pair MEMBERSHIP, not just a display cell (round-7
-        # review; functions/rounding.py documents the class).
-        stable_round(
+        (
             F.col("n_inter").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_inter")).cast("double"),
-            4,
+            / (F.col("size_a") + F.col("size_b") - F.col("n_inter")).cast("double")
         ).alias("jaccard"),
     )

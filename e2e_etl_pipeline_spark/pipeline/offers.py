@@ -220,9 +220,9 @@ def _parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def extract_offers(raw_docs: DataFrame) -> DataFrame:
     """(doc_id, site, html) → RAW string offer rows (RAW_OFFER_SCHEMA): the
-    DOM-walk stage alone, before any cleaning or salary parsing. Exposed
-    separately so the driver probes can bisect DOM capture from the typed
-    parse (round-9 bisect, q_offers_probe_salary_raw)."""
+    DOM-walk stage alone, before any cleaning or salary parsing. parse_offers
+    builds on it, and the benchmark's DOM-walk layer (pipeline.extract_s)
+    times it on its own."""
     return raw_docs.select("doc_id", "site", "html").mapInPandas(
         _parse_batch, schema=RAW_OFFER_SCHEMA
     )

@@ -59,14 +59,14 @@ from e2e_etl_pipeline_spark.queries import (  # noqa: F401
     curation,
 )
 from e2e_etl_pipeline_spark import registry as _registry
-from e2e_etl_pipeline_spark.queries import _order_r13
+from e2e_etl_pipeline_spark.queries import _order_r13 as _order
 
 
 def _reorder() -> None:
     """Rebuild the registry dicts in the generated driver-verification
-    order (whichever _order_r{N} module is imported above)."""
-    known_first = [k for k in _order_r13.FIRST if k in _registry.QUERIES]
-    known_last = [k for k in _order_r13.LAST if k in _registry.QUERIES]
+    order (whichever _order_r{N} module is imported above as _order)."""
+    known_first = [k for k in _order.FIRST if k in _registry.QUERIES]
+    known_last = [k for k in _order.LAST if k in _registry.QUERIES]
     listed = set(known_first) | set(known_last)
     new_oracle = [
         k for k in _registry.QUERIES if k not in listed and k in _registry.ORACLES

@@ -24,7 +24,7 @@ from e2e_etl_pipeline_spark.functions.vectors import dot
 from e2e_etl_pipeline_spark.operators import dedup as dd
 from e2e_etl_pipeline_spark.operators import similarity as sim
 from e2e_etl_pipeline_spark.operators.ranks import distributed_rank
-from e2e_etl_pipeline_spark.queries.llm import JACCARD_PAIRS_CTE
+from e2e_etl_pipeline_spark.queries.llm import JACCARD_PAIRS_CTE, word_jaccard_pairs
 from e2e_etl_pipeline_spark.registry import register
 
 
@@ -82,11 +82,7 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds instead of the O(diameter) the pre-round-11 min-label
     propagation needed (tests assert ≤ 2·log2(n) on a 100-node path)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("lang") == "de")
-    pairs = (
-        dd.token_jaccard_pairs(d, "doc_id", "text", max_df=500)
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b")
-    )
+    pairs = word_jaccard_pairs(d).select("id_a", "id_b")
     # max_iters bounds the rounds at ~the graph diameter; dup clusters are
     # near-cliques (2-3 rounds), but a mutated/regenerated corpus could
     # plant a longer path — 64 rounds of headroom costs nothing when

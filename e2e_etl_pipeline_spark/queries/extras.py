@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
+from e2e_etl_pipeline_spark.operators import dedup as dd
 from e2e_etl_pipeline_spark.operators.skew import salted_agg, salted_join
 from e2e_etl_pipeline_spark.registry import register
 
@@ -489,16 +490,10 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-3-gram Jaccard near-dup (the word-level variant is
-    q_dedup_jaccard): inverted-index join on distinct grams — candidate
-    pairs only, never the doc×doc cross product.
-
-    Corpus regime: the inverted-index shape is declared for SPARSE gram
-    incidence (large vocabulary, bounded document frequency), where the
-    candidate stream Σ df² is far below n². A charset-bounded corpus (the
-    test fixture's 377 distinct char-3-grams over 702 docs) degenerates
-    toward the dense n² stream — that cost is the declared semantics (no
-    df cutoff in the oracle), not an implementation defect; a dense-regime
-    caller wants a bitmap/matmul operator with a different scaling class."""
+    q_dedup_jaccard): the exact set-Jaccard operator
+    (operators/dedup.set_jaccard_pairs, no df cutoff — the oracle has
+    none) over distinct char-3-gram sets. Its docstring states the corpus
+    regime this charset-bounded fixture sits in."""
     d = load_table(spark, sf_dir, "documents").where(F.col("lang") == "de")
     # sequence(1, length-2) defaults to step -1 when length(text) < 3 (e.g.
     # [1, 0, -1] for a 1-char doc), yielding spurious grams the oracle's
@@ -516,40 +511,16 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.array().cast("array<string>")
                 )
             )
-        ).alias("gram"),
-    ).distinct()  # dedup across DUPLICATED doc rows too (oracle DISTINCT)
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
-    a = grams.alias("a")
-    # No join-strategy hint (round-12 decision, reversing round 11): a quiet
-    # interleaved min-of-3 A/B pair (plans/r12/ngram_hint_pair.json) measured
-    # SHUFFLE_HASH flat on the standard layout (7.59 vs 7.44 s) and ~1.2 s
-    # WORSE on the restaged multi-split layout (8.73 vs 7.53 s) — on this
-    # many-to-many join the per-partition hash build over hot char-3-gram
-    # keys loses to sort-merge's streaming merge; round 11's 11.2→6.0 s
-    # stage claim did not reproduce quietly. Planner default (SMJ) stands.
-    # The O(Σ df²) incidence stream itself is the declared semantics: this
-    # key is specified for SPARSE gram corpora (df bounded); a dense
-    # bounded-charset corpus regime belongs to the docstring note below.
-    b = grams.alias("b")
-    inter = (
-        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("set_size").alias("size_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("size_a") + F.col("size_b") - F.col("n_inter")
+        ).alias("element"),
     )
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .where(jac >= 0.4)
+        dd.set_jaccard_pairs(grams)
+        .where(F.col("jaccard") >= 0.4)
         # stable_round: the displayed cell is a ratio of ints that can
         # land on an exact 4dp midpoint where F.round (HALF_UP) and
         # DuckDB round (half-even) split (membership is safe — the
         # threshold compares the UNROUNDED ratio on both sides).
-        .select("id_a", "id_b", stable_round(jac, 4).alias("jaccard"))
+        .select("id_a", "id_b", stable_round(F.col("jaccard"), 4).alias("jaccard"))
     )
 
 

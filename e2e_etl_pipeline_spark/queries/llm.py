@@ -552,7 +552,7 @@ JACCARD_CORE_CTE = """raw_toks AS (
 # 0.49995) where DuckDB's half-even round drops the pair while Spark's
 # HALF_UP keeps it — a structural edge-set split, not just a display-cell
 # flip (round-7 review; functions/rounding.py documents the class). The
-# engine side (operators/dedup.token_jaccard_pairs) uses stable_round.
+# engine side (word_jaccard_pairs) uses stable_round.
 JACCARD_RATIO_SQL = stable_round_sql(
     "CAST(n_inter AS DOUBLE) /"
     " CAST(sa.set_size + sb.set_size - n_inter AS DOUBLE)",
@@ -568,6 +568,16 @@ JACCARD_PAIRS_CTE = f"""{JACCARD_CORE_CTE},
       JOIN sizes sb ON sb.id = id_b
       WHERE {JACCARD_RATIO_SQL} >= 0.5
     )"""
+
+
+def word_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Engine side of the shared oracle chain: exact word-set Jaccard
+    (max_df=500 candidate cutoff) as (id_a, id_b, jaccard), the ratio
+    stable_round'ed to 4 dp and thresholded ROUNDED at >= 0.5."""
+    pairs = dd.set_jaccard_pairs(dd.word_sets(docs, "doc_id", "text"), max_df=500)
+    return pairs.select(
+        "id_a", "id_b", stable_round(F.col("jaccard"), 4).alias("jaccard")
+    ).where(F.col("jaccard") >= 0.5)
 
 
 @register(
@@ -588,9 +598,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (no cross product) with a document-frequency cutoff so no single
     stop-word-grade token can go quadratic (operators/dedup.py)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("lang") == "de")
-    return dd.token_jaccard_pairs(d, "doc_id", "text", max_df=500).where(
-        F.col("jaccard") >= 0.5
-    )
+    return word_jaccard_pairs(d)
 
 
 @register(
@@ -625,9 +633,7 @@ def q_minhash_accuracy_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction can flip a boundary. Empty pair set degrades to TRUE on
     both engines (coalesce)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("lang") == "de")
-    exact = dd.token_jaccard_pairs(d, "doc_id", "text", max_df=500).where(
-        F.col("jaccard") >= 0.5
-    )
+    exact = word_jaccard_pairs(d)
     sums = dd.minhash_signature_vector(
         d, "doc_id", "text", num_hashes=32, shingle_size=1
     )

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
-from e2e_etl_pipeline_spark.pipeline.offers import extract_offers, parse_offers
+from e2e_etl_pipeline_spark.pipeline.offers import parse_offers
 from e2e_etl_pipeline_spark.functions.money import money_sum
 from e2e_etl_pipeline_spark.registry import register
 
@@ -204,7 +204,7 @@ def q_layout_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(path, ignore_errors=True)
 
 
-# --- q_offers_pipeline + driver probes -------------------------------------
+# --- q_offers_pipeline ------------------------------------------------------
 #
 # The synthetic-HTML offers pipeline renders part rows into the reference's
 # jjit DOM contract, parses them back (pipeline/offers.py), and hash-verifies
@@ -219,30 +219,21 @@ def q_layout_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebraically sanitize(p_name) on both sides. All part payload columns are
 # NULL-proofed with mirrored coalesce (a NULL format_string argument would
 # otherwise silently DROP the <li> engine-side while the oracle keeps the
-# row). The q_offers_probe_* keys are single-field variants that let the
-# DRIVER bisect any residual divergence: rawhtml red = the HTML build
-# itself differs; idx/position/salary red names the diverging parsed field.
+# row).
 #
-# ROUND-9 ROOT CAUSE (the three-round-red salary class, named): the round-8
-# bisect proved the rendered HTML byte-identical and idx/position green, so
-# the divergence sat in the four salary-derived columns. Those two keys were
-# the ONLY keys in the whole 293-key registry whose DRIVER-EDGE output
-# carried DECIMAL columns (verified by a full output-schema scan) — and
-# DECIMAL transport differs between the engines' pandas bridges: DuckDB's
-# fetchdf ships DECIMAL(12,2) as float64 (renders "950.0") while Spark's
-# toPandas ships object-of-decimal.Decimal (renders "950.00"). Values are
-# identical; the EXACT value hash is not. The local comparator's
-# float-tolerance path masked it (testing.py), which is why every local
-# --plain --exact sweep passed while the driver stayed red. Cure: the
-# staging schema keeps DECIMAL(12,2) internally (pipeline/offers.py,
-# golden-file tests), but the driver edge ships DOUBLE in BOTH dialects —
-# the same edge rule every money key already follows (registry.py rules).
-# The round-9 probes pin the diagnosis driver-side: min_decimal (the
-# suspect class, single column, expected red if transport is the cause),
-# min_double/max_double (the cure, expected green), curper (constants,
-# expected green), salary_raw (DOM capture without the parse, expected
-# green), and decimal_transport (DECIMAL output with NO pipeline at all —
-# red here proves the class is transport, independent of offers).
+# ROUND-9 ROOT CAUSE (the three-round-red salary class, named): the
+# divergence sat in the salary-derived columns, the ONLY driver-edge output
+# in the whole registry that carried DECIMAL columns (verified by a full
+# output-schema scan) — and DECIMAL transport differs between the engines'
+# pandas bridges: DuckDB's fetchdf ships DECIMAL(12,2) as float64 (renders
+# "950.0") while Spark's toPandas ships object-of-decimal.Decimal (renders
+# "950.00"). Values are identical; the EXACT value hash is not. The local
+# comparator's float-tolerance path masked it (testing.py), which is why
+# every local --plain --exact sweep passed while the driver stayed red.
+# Cure: the staging schema keeps DECIMAL(12,2) internally
+# (pipeline/offers.py, golden-file tests), but the driver edge ships DOUBLE
+# in BOTH dialects — the same edge rule every money key already follows
+# (registry.py rules).
 
 # Oracle-side sanitize: IDENTICAL semantics to functions/text.clean_position
 # (whitelist [A-Za-z0-9 .,()-], collapse space runs, trim).
@@ -271,16 +262,6 @@ _MAX_EDGE_SQL = (
     f"CAST(TRY_CAST(CAST(CAST({_SALARY_SQL} + 100 AS BIGINT) AS VARCHAR)"
     " AS DECIMAL(12,2)) AS DOUBLE)"
 )
-_OFFERS_ORACLE_FIELDS = f"""
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      'jjit'                        AS site,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      {_PNAME_SQL}                  AS position,
-      ''                            AS company_name,
-      {_MIN_EDGE_SQL}               AS minimum,
-      {_MAX_EDGE_SQL}               AS maximum,
-      'PLN'                         AS currency,
-      'month'                       AS pay_period"""
 
 
 def _offers_pname() -> F.Column:
@@ -299,10 +280,12 @@ def _offers_salary() -> F.Column:
     ).cast("long")
 
 
-def _offers_li() -> F.Column:
-    """One rendered <li> per part row (the reference's jjit DOM contract,
+def _offers_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """part → synthetic jjit HTML documents (doc_id, site, html), one
+    rendered <li> per part row (the reference's jjit DOM contract,
     DataTransform/transform_data.py:91-107)."""
-    return F.format_string(
+    p = load_table(spark, sf_dir, "part").where(F.col("p_partkey") < 100)
+    li = F.format_string(
         '<li data-index="%d"><h3>%s</h3><h6><span>%d</span><span>%d</span>'
         "<span>PLN/month</span></h6></li>",
         F.col("p_partkey"),
@@ -310,15 +293,8 @@ def _offers_li() -> F.Column:
         _offers_salary(),
         _offers_salary() + F.lit(100),
     )
-
-
-def _offers_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """part → synthetic jjit HTML documents (doc_id, site, html)."""
-    p = load_table(spark, sf_dir, "part").where(F.col("p_partkey") < 100)
     jjit_html = F.concat(
-        F.lit("<ul>"),
-        F.concat_ws("", F.collect_list(_offers_li())),
-        F.lit("</ul>"),
+        F.lit("<ul>"), F.concat_ws("", F.collect_list(li)), F.lit("</ul>")
     )
     return (
         p.groupBy((F.col("p_partkey") % 4).alias("doc_id"))
@@ -327,28 +303,19 @@ def _offers_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _offers_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """part → synthetic jjit HTML docs → mapInPandas DOM parse → typed
-    offers (staging schema: minimum/maximum DECIMAL(12,2)). Shared by the
-    composite key and all driver probes so a probe verdict speaks for the
-    exact same plan."""
-    return parse_offers(_offers_docs(spark, sf_dir))
-
-
-def _offers_edge_min() -> F.Column:
-    """Driver-edge minimum: DECIMAL staging value cast DOUBLE (round-9
-    root-cause note — DECIMAL never ships at the driver edge)."""
-    return F.col("minimum").cast("double").alias("minimum")
-
-
-def _offers_edge_max() -> F.Column:
-    return F.col("maximum").cast("double").alias("maximum")
-
-
 @register(
     "q_offers_pipeline",
     oracle=f"""
-    SELECT{_OFFERS_ORACLE_FIELDS}
+    SELECT
+      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
+      'jjit'                        AS site,
+      CAST(p_partkey AS INTEGER)    AS offer_idx,
+      {_PNAME_SQL}                  AS position,
+      ''                            AS company_name,
+      {_MIN_EDGE_SQL}               AS minimum,
+      {_MAX_EDGE_SQL}               AS maximum,
+      'PLN'                         AS currency,
+      'month'                       AS pay_period
     FROM part WHERE p_partkey < 100
     """,
 )
@@ -369,225 +336,20 @@ def q_offers_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DECIMAL(12,2) staging contract itself is exercised by
     pipeline/offers.py + tests/test_pipeline.py golden files."""
     return (
-        _offers_parsed(spark, sf_dir)
+        parse_offers(_offers_docs(spark, sf_dir))
         .select(
             "doc_id",
             "site",
             "offer_idx",
             "position",
             "company_name",
-            _offers_edge_min(),
-            _offers_edge_max(),
+            F.col("minimum").cast("double").alias("minimum"),
+            F.col("maximum").cast("double").alias("maximum"),
             "currency",
             "pay_period",
         )
         .orderBy("doc_id", "offer_idx")
     )
-
-
-@register(
-    "q_offers_probe_idx",
-    oracle="""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      'jjit'                        AS site,
-      CAST(p_partkey AS INTEGER)    AS offer_idx
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver probe 1/4 for the q_offers_pipeline bisect (VERDICT r7 task
-    1): structural fields only — doc routing and the data-index attribute.
-    Red here = the DOM walk loses/renumbers offers."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "site", "offer_idx"
-    ).orderBy("doc_id", "offer_idx")
-
-
-@register(
-    "q_offers_probe_position",
-    oracle=f"""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      {_PNAME_SQL}                  AS position
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_position(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver probe 2/4: the parsed+cleaned position text alone. Red here =
-    the h3 text path (entity decode / clean_position vs oracle regex)
-    diverges on the driver's part content."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "offer_idx", "position"
-    ).orderBy("doc_id", "offer_idx")
-
-
-@register(
-    "q_offers_probe_salary",
-    oracle=f"""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      {_MIN_EDGE_SQL}               AS minimum,
-      {_MAX_EDGE_SQL}               AS maximum,
-      'PLN'                         AS currency,
-      'month'                       AS pay_period
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_salary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver probe 3/4: the salary-span parse alone (span join → en-dash
-    split → number regex → DECIMAL cast → DOUBLE edge). Red here = the
-    numeric render or parse_salary path diverges on the driver's prices.
-    Red r6-r8 with DECIMAL edge columns; round 9 ships DOUBLE (ROUND-9
-    ROOT CAUSE note)."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "offer_idx", _offers_edge_min(), _offers_edge_max(),
-        "currency", "pay_period"
-    ).orderBy("doc_id", "offer_idx")
-
-
-# --- Round-9 sub-probes: name the diverging cell class driver-side --------
-
-# Round-9 probes (a) q_offers_probe_min_decimal and (f)
-# q_decimal_transport_probe were RETIRED in round 10 (round-9 verdict item
-# 1): both were registered RED-ON-PURPOSE to make the driver exhibit the
-# DECIMAL-output-transport hash split, the driver confirmed the class in
-# CORRECTNESS_r09 (both red with rows+schema green while every DOUBLE-edge
-# twin passed), and the class is permanently gated by
-# tests/test_construction_lazy.py (no DecimalType at the driver edge) plus
-# the local comparator's decimal-vs-float dtype gate (testing.py). Keeping
-# them registered would burn two driver-budget slots every round on a
-# proven diagnosis (they would lead every gen_order FIRST block forever).
-
-
-@register(
-    "q_offers_probe_min_double",
-    oracle=f"""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      {_MIN_EDGE_SQL}               AS minimum
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_min_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-9 probe (b): the SAME minimum value shipped as DOUBLE — the
-    cure in single-column form. Green here + red min_decimal pins the
-    divergence to decimal transport, not the parse values."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "offer_idx", _offers_edge_min()
-    ).orderBy("doc_id", "offer_idx")
-
-
-@register(
-    "q_offers_probe_max_double",
-    oracle=f"""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      {_MAX_EDGE_SQL}               AS maximum
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_max_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-9 probe (c): maximum as DOUBLE (the second parsed number — a
-    red here with min_double green would mean the 2-vs-3-span branch or the
-    +100 render diverges, not transport)."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "offer_idx", _offers_edge_max()
-    ).orderBy("doc_id", "offer_idx")
-
-
-@register(
-    "q_offers_probe_curper",
-    oracle="""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      'PLN'                         AS currency,
-      'month'                       AS pay_period
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_curper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-9 probe (d): the two string salary fields alone (regex
-    extraction from the constant "PLN/month" span). Red here = the
-    currency/period regex path itself diverges on driver data — otherwise
-    these constants are exonerated."""
-    return _offers_parsed(spark, sf_dir).select(
-        "doc_id", "offer_idx", "currency", "pay_period"
-    ).orderBy("doc_id", "offer_idx")
-
-
-@register(
-    "q_offers_probe_salary_raw",
-    oracle=f"""
-    SELECT
-      CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-      CAST(p_partkey AS INTEGER)    AS offer_idx,
-      CAST(CAST({_SALARY_SQL} AS BIGINT) AS VARCHAR) || '–'
-        || CAST(CAST({_SALARY_SQL} + 100 AS BIGINT) AS VARCHAR)
-        || '–PLN/month'             AS salary_raw
-    FROM part WHERE p_partkey < 100
-    """,
-)
-def q_offers_probe_salary_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-9 probe (e), the verdict's prescribed span-capture splitter:
-    the en-dash-joined raw salary string exactly as the DOM walk captured
-    it, BEFORE parse_salary. Oracle = the algebraic render literal. Green
-    here = span capture is perfect and any remaining red is strictly inside
-    parse_salary/the cast; red here = the DOM span path loses/merges text
-    on driver data."""
-    return extract_offers(_offers_docs(spark, sf_dir)).select(
-        "doc_id", "offer_idx", "salary_raw"
-    ).orderBy("doc_id", "offer_idx")
-
-
-
-@register(
-    "q_offers_probe_rawhtml",
-    oracle=f"""
-    WITH li AS (
-      SELECT
-        CAST(p_partkey % 4 AS BIGINT) AS doc_id,
-        p_partkey,
-        '<li data-index="' || CAST(p_partkey AS VARCHAR) || '"><h3>'
-          || {_PNAME_SQL} || '</h3><h6><span>'
-          || CAST(CAST({_SALARY_SQL} AS BIGINT) AS VARCHAR)
-          || '</span><span>'
-          || CAST(CAST({_SALARY_SQL} + 100 AS BIGINT) AS VARCHAR)
-          || '</span><span>PLN/month</span></h6></li>' AS item
-      FROM part WHERE p_partkey < 100
-    )
-    SELECT doc_id,
-           '<ul>' || string_agg(item, '' ORDER BY p_partkey) || '</ul>'
-             AS html
-    FROM li GROUP BY doc_id
-    """,
-)
-def q_offers_probe_rawhtml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver probe 4/4: the synthetic HTML document text ITSELF, before any
-    parsing, with a pinned p_partkey item order (the composite's collect_list
-    order is free because per-<li> parsing is order-independent; a full-text
-    compare is not). Red here = the HTML BUILD diverges (format_string vs SQL
-    concat, sanitize expression mismatch); green here + red parse probes =
-    the divergence is inside the DOM walk."""
-    p = load_table(spark, sf_dir, "part").where(F.col("p_partkey") < 100)
-    items = p.groupBy((F.col("p_partkey") % 4).alias("doc_id")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("p_partkey").alias("k"), _offers_li().alias("s")))
-        ).alias("arr")
-    )
-    return items.select(
-        "doc_id",
-        F.concat(
-            F.lit("<ul>"),
-            F.concat_ws("", F.transform("arr", lambda x: x["s"])),
-            F.lit("</ul>"),
-        ).alias("html"),
-    ).orderBy("doc_id")
 
 
 @register(

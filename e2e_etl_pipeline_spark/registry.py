@@ -34,8 +34,8 @@ Hash-stability rules enforced across the codebase (SURVEY.md §7 watch list):
     toPandas ships decimal.Decimal ("950.00"): rows+schema match, exact
     value-hash mismatch (round 9 — this alone was the r6-r8
     q_offers_pipeline red; the only two decimal-shipping keys were the only
-    two reds). The two round-9 diagnostic probes that ship DECIMAL on
-    purpose are the sole sanctioned exceptions.
+    two reds). No key ships DECIMAL at the driver edge
+    (tests/test_construction_lazy.py gates it registry-wide).
 
 Registration order matters: the external driver verifies keys in registration
 order under a budget. Since round 3 the order is pinned at KEY granularity by

@@ -36,3 +36,21 @@ def test_registry_consistency():
     # every key is a valid identifier-ish snake string
     for k in qs:
         assert k.startswith("q_") and " " not in k
+
+
+def test_active_order_names_every_key_once():
+    """The active queries/_order_rN lists every registered key exactly once:
+    _reorder skips stale names silently and appends unlisted keys, so a
+    deleted or renamed key would otherwise drift the driver order unseen."""
+    from collections import Counter
+
+    from e2e_etl_pipeline_spark import queries
+    from e2e_etl_pipeline_spark.registry import QUERIES
+
+    names = queries._order.FIRST + queries._order.LAST
+    dup = sorted(k for k, n in Counter(names).items() if n > 1)
+    assert not dup, f"listed more than once: {dup}"
+    stale = sorted(set(names) - set(QUERIES))
+    assert not stale, f"names no key is registered under: {stale}"
+    unlisted = sorted(set(QUERIES) - set(names))
+    assert not unlisted, f"registered keys the order does not name: {unlisted}"

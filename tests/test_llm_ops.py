@@ -218,6 +218,13 @@ def test_exact_dedup_survivor_deterministic(spark):
     assert got["other"] == (9, 1)
 
 
+def _jaccard(sets, max_df=None) -> dict:
+    return {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dd.set_jaccard_pairs(sets, max_df=max_df).collect()
+    }
+
+
 def test_jaccard_df_cutoff_blocks_hot_token_blowup(spark):
     """A token present in EVERY doc would alone emit n(n-1)/2 candidate
     rows; with max_df it must contribute none, while Jaccard values for
@@ -226,21 +233,33 @@ def test_jaccard_df_cutoff_blocks_hot_token_blowup(spark):
     rows = [(i, f"{shared} unique{i} extra{i}") for i in range(10)]
     rows += [(100, f"{shared} twin alpha"), (101, f"{shared} twin alpha beta")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    sets = dd.word_sets(df, "doc_id", "text")
 
-    cut = dd.token_jaccard_pairs(df, "doc_id", "text", max_df=5)
-    got = {(r.id_a, r.id_b): r.jaccard for r in cut.collect()}
+    cut = _jaccard(sets, max_df=5)
     # the 10 'unique' docs share ONLY the hot token -> no candidate rows
-    assert all(a >= 100 and b >= 100 for a, b in got)
+    assert all(a >= 100 and b >= 100 for a, b in cut)
     # the twin pair is found via its rare tokens, then verified against the
     # FULL sets: |{common,twin,alpha} ∩ {common,twin,alpha,beta}| = 3 of 4 —
     # the hot token is excluded from candidate gen but NOT from the verified
     # intersection, so the reported value is the exact 3/4
-    assert got[(100, 101)] == 0.75
+    assert cut[(100, 101)] == 0.75
 
-    exact = dd.token_jaccard_pairs(df, "doc_id", "text")
-    exact_pairs = {(r.id_a, r.id_b) for r in exact.collect()}
+    exact = _jaccard(sets)
     # without the cutoff every pair meets through the hot token
-    assert len(exact_pairs) == (12 * 11) // 2
+    assert len(exact) == (12 * 11) // 2
+    # the cutoff drops pairs, never changes a kept pair's value
+    assert {p: exact[p] for p in cut} == cut
+
+    # The operator owns the set semantics: a repeated (id, element) row —
+    # here a rare and a hot element — or a whole duplicated document must
+    # not inflate set sizes, intersections or document frequencies.
+    clean = [(r.id, r.element) for r in sets.collect()]
+    dup_element = clean + [(100, "alpha"), (0, shared)]
+    dup_document = clean + [r for r in clean if r[0] == 101]
+    for dirty in (dup_element, dup_document):
+        frame = spark.createDataFrame(dirty, "id long, element string")
+        assert _jaccard(frame, max_df=5) == cut
+        assert _jaccard(frame) == exact
 
 
 def test_connected_components_logarithmic_rounds_on_path(spark):
