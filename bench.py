@@ -171,6 +171,8 @@ def main() -> int:
                 # (multi-split scans); -1.0 = restage unavailable.
                 "restaged_total": restaged_total,
                 "queries_restaged": restaged,
+                # Cores the timed session ran on (its defaultParallelism).
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

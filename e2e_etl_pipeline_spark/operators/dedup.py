@@ -3,9 +3,9 @@
 Scale design notes (the part that matters at 100 TB):
   * Exact dedup is a hash aggregate on a digest of the dedup key — group on
     xxhash64(text) (8 bytes) instead of shuffling full document bodies.
-  * MinHash is computed as (doc × shingle) rows hashed k ways via xxhash64
-    with per-hash seeds, aggregated with min() — map-side partial
-    aggregation shrinks the shuffle to k values per doc. Banding then turns
+  * MinHash hashes each distinct shingle k ways (a 60-bit md5 carving per
+    hash id, reproducible in DuckDB SQL), then takes the per-document min()
+    of each — the shuffle carries k values per doc. Banding then turns
     near-dup detection into an equi-join on (band_id, band_hash): candidate
     pairs only, never all pairs.
   * SimHash reduces each doc to a 64-bit fingerprint; the banded join on
@@ -128,7 +128,6 @@ def minhash_signature_vector(
     text_col: str,
     num_hashes: int = 32,
     shingle_size: int = 3,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """(id, _m0 .. _m{k-1}) — ONE wide row per document holding all k
     minhashes (round 12). Multi-consumer pipelines (banding sides, the
@@ -143,15 +142,13 @@ def minhash_signature_vector(
     the hashed tuple). The min() aggregate partial-combines map-side, so
     the shuffle volume is k longs per document regardless of doc size.
 
-    ``hasher``: "xxhash64" (default — JVM-native, the production path) or
-    "md5" (60-bit integer carved from md5(shingle '\\n' hash_id) — the
+    Hash i of a shingle is the 60-bit integer carved from
+    md5(shingle '\\n' i) (functions/digests.md5_u60_spark_sql) — the
     delimiter is a newline because whitespace-split tokens can never
     contain one, so no (shingle, hash_id) pairing can alias another the
-    way a ':' could inside URL-like tokens (round-10 advice);
-    functions/digests.md5_u60_spark_sql): slower per byte but EXACTLY reproducible
-    in DuckDB SQL, which is what upgrades q_dedup_near from rows-only to
-    hash-checked (round-9 verdict item 3). Identical plan shape either
-    way — only the hash expression changes.
+    way a ':' could inside URL-like tokens (round-10 advice). It is
+    EXACTLY reproducible in DuckDB SQL, which makes q_dedup_near
+    hash-checked (round-9 verdict item 3).
     """
     shingled = df.select(
         F.col(id_col).alias("id"),
@@ -164,71 +161,48 @@ def minhash_signature_vector(
     # a Spark SQL string literal parses to the same newline byte F.lit
     # shipped; values are expression-identical either way.
     def h_sql(i: int) -> str:
-        if hasher == "md5":
-            return md5_u60_spark_sql(f"concat(shingle, '\\n', '{i}')")
-        if hasher == "xxhash64":
-            return f"xxhash64(shingle, CAST({i} AS BIGINT))"
-        raise ValueError(f"unsupported hasher: {hasher}")
+        return md5_u60_spark_sql(f"concat(shingle, '\\n', '{i}')")
 
-    # k min-aggregates over the shingle stream, one per hash function — NOT
-    # a k-way broadcast-join row explosion: joining the k-row hash_id frame
-    # multiplied every shingle row k× before the partial aggregation
-    # (measured 15 s at sf0.1 for k=32 vs ~3 s for this shape; optimization
-    # guide §2.3 "aggregate before you shuffle"). The hash values are
-    # unchanged expression-for-expression (hash_id enters as the literal it
-    # always was), the per-(id, hash_id) min is the same min, and the
+    # Hash each DISTINCT shingle once — md5 is costly per call (concat +
+    # digest + hex + conv chain), and corpora repeat shingles heavily
+    # (sf0.1: 260k (doc, shingle) pairs over 27k distinct shingles) — then
+    # join the k-column hash table back to the (id, shingle) stream and
+    # take k min-aggregates per document. NOT a k-way broadcast-join row
+    # explosion: joining a k-row hash_id frame multiplied every shingle row
+    # k× before the partial aggregation (measured 15 s at sf0.1 for k=32 vs
+    # ~3 s; optimization guide §2.3 "aggregate before you shuffle"). The
     # shuffle carries k longs per document in ONE row instead of k.
-    if hasher == "md5":
-        # md5 is ~20× costlier per call than xxhash64 (concat + digest +
-        # hex + conv chain), and corpora repeat shingles heavily across
-        # documents (sf0.1: 260k (doc, shingle) pairs over 27k distinct
-        # shingles — and mass duplication only widens that ratio). Hash
-        # each DISTINCT shingle once, then join the k-column hash table
-        # back to the (id, shingle) stream for the per-document min —
-        # identical value set per document, so identical mins. Costs two
-        # exchanges of the (short) shingle strings; saves (pairs/distinct)×
-        # of the dominant md5 work. The cheap xxhash64 production path
-        # keeps the join-free single-exchange shape below.
-        hashed = shingled.select("shingle").distinct().selectExpr(
-            "shingle", *[f"{h_sql(i)} AS _m{i}" for i in range(num_hashes)]
-        )
-        # SHUFFLE_HASH on the hashed side: both sides arrive partitioned by
-        # shingle and the (distinct) side builds per-partition hash tables —
-        # no sort of either side, no driver-side broadcast collect. Without
-        # the hint AQE broadcast-converts this join with BuildLeft (it
-        # compares compressed shuffle bytes, and the id+shingle stream
-        # compresses below the 32-column hash table), collecting the BIG
-        # row-count side to the driver — measured 8.7 s vs 1.2 s here. The
-        # hint stays scale-safe: the build side is per-partition distinct
-        # shingles, which more partitions always shrink (guide §3.1).
-        sums = (
-            shingled.join(hashed.hint("shuffle_hash"), "shingle")
-            .groupBy("id")
-            .agg(*[F.min(f"_m{i}").alias(f"_m{i}") for i in range(num_hashes)])
-        )
-    else:
-        sums = shingled.groupBy("id").agg(
-            *[
-                F.expr(f"min({h_sql(i)})").alias(f"_m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    return sums
+    hashed = shingled.select("shingle").distinct().selectExpr(
+        "shingle", *[f"{h_sql(i)} AS _m{i}" for i in range(num_hashes)]
+    )
+    # SHUFFLE_HASH on the hashed side: both sides arrive partitioned by
+    # shingle and the (distinct) side builds per-partition hash tables —
+    # no sort of either side, no driver-side broadcast collect. Without
+    # the hint AQE broadcast-converts this join with BuildLeft (it
+    # compares compressed shuffle bytes, and the id+shingle stream
+    # compresses below the 32-column hash table), collecting the BIG
+    # row-count side to the driver — measured 8.7 s vs 1.2 s here. The
+    # hint stays scale-safe: the build side is per-partition distinct
+    # shingles, which more partitions always shrink (guide §3.1).
+    return (
+        shingled.join(hashed.hint("shuffle_hash"), "shingle")
+        .groupBy("id")
+        .agg(*[F.min(f"_m{i}").alias(f"_m{i}") for i in range(num_hashes)])
+    )
 
 
 def lsh_candidate_pairs_vec(
     sums: DataFrame,
     num_hashes: int = 32,
     bands: int = 8,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding over the WIDE signature frame (minhash_signature_vector):
     docs agreeing on all rows of any band become a candidate pair.
     Returns (id_a, id_b, n_shared_bands) with id_a < id_b.
 
     The band string is the hash_id-ordered comma join of minhash values
-    (concat_ws over the band's k columns in order); ``hasher`` picks its
-    hash ("xxhash64" default / "md5" for the SQL-reproducible md5_u60).
+    (concat_ws over the band's k columns in order), hashed with the
+    SQL-reproducible md5_u60.
     The join key is (band_id, band_hash) — a fine-grained key whose
     groups are tiny for non-duplicate data, so the pair explosion is
     bounded by the true near-duplicate clusters, not by corpus size.
@@ -241,23 +215,14 @@ def lsh_candidate_pairs_vec(
             f"({bands}); a floor split would silently create extra short "
             "bands with far looser matching probability"
         )
-    if hasher not in ("md5", "xxhash64"):
-        raise ValueError(f"unsupported hasher: {hasher}")
     rows_per_band = num_hashes // bands
     # One F.expr string for the whole band array (the q_salary_parse
     # construction-cost rule: a ~40-node-per-band Column tree costs
     # hundreds of py4j round-trips per construction; the SQL text parses
     # JVM-side in one call). Expression-identical to the Column form:
     # CAST(b AS INT) ≡ F.lit(b).cast("int"), concat_ws of the CAST(...)
-    # columns is the hash_id-ordered band string, and the hash twins are
-    # xxhash64(e) / the md5_u60 conv chain.
-    if hasher == "md5":
-        def bh(e: str) -> str:
-            return md5_u60_spark_sql(e)
-    else:
-        def bh(e: str) -> str:
-            return f"xxhash64({e})"
-
+    # columns is the hash_id-ordered band string, and the hash is the
+    # md5_u60 conv chain.
     def band_str(band: int) -> str:
         cols = ",".join(
             f"CAST(_m{band * rows_per_band + j} AS STRING)"
@@ -269,7 +234,7 @@ def lsh_candidate_pairs_vec(
         "array("
         + ",".join(
             f"named_struct('band_id', CAST({band} AS INT),"
-            f" 'band_hash', {bh(band_str(band))})"
+            f" 'band_hash', {md5_u60_spark_sql(band_str(band))})"
             for band in range(bands)
         )
         + ")"
@@ -466,21 +431,18 @@ def dedup_corpus(
 # ---------------------------------------------------------------------------
 # SimHash (64-bit) + banded hamming join
 # ---------------------------------------------------------------------------
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, hasher: str = "xxhash64"
-) -> DataFrame:
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash) — 64-bit SimHash over whitespace tokens.
 
     Per token: a 64-bit hash → each bit contributes ±1; the per-doc bit
     sums' signs form the fingerprint. Expressed as a single aggregate over
     an array of 64 bit-contributions (still pure column expressions).
 
-    ``hasher``: "xxhash64" (default, production) or "md5" — the token's 64
-    bits come from the first 16 md5 hex nibbles as two 32-bit halves
-    (chars 1-8 = bits 63..32, chars 9-16 = bits 31..0), which a DuckDB
-    oracle reproduces verbatim (functions/digests rationale; round-9
-    verdict item 3 upgraded q_dedup_simhash from rows-only this way).
-    Same plan shape either way.
+    The token's 64 bits come from the first 16 md5 hex nibbles as two
+    32-bit halves (chars 1-8 = bits 63..32, chars 9-16 = bits 31..0),
+    which a DuckDB oracle reproduces verbatim (functions/digests
+    rationale; round-9 verdict item 3 upgraded q_dedup_simhash from
+    rows-only this way).
     """
     tokens = df.select(
         F.col(id_col).alias("id"), F.explode(_words(text_col)).alias("token")
@@ -488,25 +450,16 @@ def simhash_fingerprints(
     # Python-level loop over the 64 bit positions: shiftright's numBits must
     # be a literal int in the DataFrame API, so the array is built from 64
     # closed-form expressions (still one codegen'd projection).
-    if hasher == "md5":
-        tokens = tokens.withColumn(
-            "th_hi", F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
-        ).withColumn(
-            "th_lo", F.conv(F.substring(F.md5("token"), 9, 8), 16, 10).cast("long")
-        )
+    tokens = tokens.withColumn(
+        "th_hi", F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
+    ).withColumn(
+        "th_lo", F.conv(F.substring(F.md5("token"), 9, 8), 16, 10).cast("long")
+    )
 
-        def bit_ind(b: int) -> Column:
-            src = F.col("th_lo") if b < 32 else F.col("th_hi")
-            return F.shiftright(src, b % 32).bitwiseAND(F.lit(1))
+    def bit_ind(b: int) -> Column:
+        src = F.col("th_lo") if b < 32 else F.col("th_hi")
+        return F.shiftright(src, b % 32).bitwiseAND(F.lit(1))
 
-    elif hasher == "xxhash64":
-        tokens = tokens.withColumn("th", F.xxhash64("token"))
-
-        def bit_ind(b: int) -> Column:
-            return F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1))
-
-    else:
-        raise ValueError(f"unsupported hasher: {hasher}")
     # 64 sum-aggregates over the token stream, one per bit position —
     # NOT a 64-wide posexplode into a (id, bit) shuffle: the explode form
     # multiplied every token row 64× before the exchange (measured 30 s at

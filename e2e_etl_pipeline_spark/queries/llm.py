@@ -441,11 +441,10 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-checked since round 10 (previously rows-only — the LAST
     rows-only pair with q_dedup_simhash, round-9 verdict item 3): the
-    per-(shingle, hash_id) hash is re-keyed from xxhash64 onto the 60-bit
-    md5 carving (functions/digests.md5_u60_spark_sql), which DuckDB reproduces
+    per-(shingle, hash_id) hash is the 60-bit md5 carving
+    (functions/digests.md5_u60_spark_sql), which DuckDB reproduces
     verbatim — so signatures, band hashes, the candidate equi-join, and
-    the agreement estimate all restate in pure SQL. xxhash64 remains the
-    production hasher (hasher param default); the plan shape is identical.
+    the agreement estimate all restate in pure SQL.
     The estimate is stable_round'ed and the ≥ 0.5 threshold compares the
     rounded value on both sides (registry rule) — k/32 agreement
     fractions are exact dyadic doubles, so even the raw values match
@@ -459,9 +458,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plans/r12/q_dedup_near_executed_{before,after}.txt: 4 Generate
     # posexplode → 0). Identical hash expressions, identical oracle.
     sums = dd.minhash_signature_vector(
-        d, "doc_id", "text", num_hashes=32, shingle_size=3, hasher="md5"
+        d, "doc_id", "text", num_hashes=32, shingle_size=3
     )
-    pairs = dd.lsh_candidate_pairs_vec(sums, num_hashes=32, bands=8, hasher="md5")
+    pairs = dd.lsh_candidate_pairs_vec(sums, num_hashes=32, bands=8)
     return dd.minhash_similarity_vec(sums, pairs).where(
         F.col("est_jaccard") >= 0.5
     )
@@ -479,7 +478,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     th AS (
       -- the token's 64 hash bits as two 32-bit halves of the md5 hex
       -- (chars 1-8 = bits 63..32, chars 9-16 = bits 31..0), mirroring
-      -- simhash_fingerprints(hasher='md5')
+      -- simhash_fingerprints
       SELECT id,
              CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) AS hi,
              CAST('0x' || substr(md5(token), 9, 8) AS BIGINT) AS lo
@@ -506,14 +505,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming join is exercised in tests where true near-dups exist).
 
     Oracle-checked since round 10 (previously rows-only, round-9 verdict
-    item 3): the per-token hash is re-keyed from xxhash64 onto the first
-    16 md5 hex nibbles as two 32-bit halves, which DuckDB recomputes
-    verbatim; bit 63's weight is the explicit two's-complement literal on
-    both sides (DuckDB errors on 1::BIGINT << 63 — see
-    simhash_fingerprints). xxhash64 remains the production hasher; the
-    plan shape is identical."""
+    item 3): the per-token hash is the first 16 md5 hex nibbles as two
+    32-bit halves, which DuckDB recomputes verbatim; bit 63's weight is
+    the explicit two's-complement literal on both sides (DuckDB errors on
+    1::BIGINT << 63 — see simhash_fingerprints)."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.simhash_fingerprints(d, "doc_id", "text", hasher="md5")
+    return dd.simhash_fingerprints(d, "doc_id", "text")
 
 
 # THE exact-Jaccard contract, shared by every consumer (q_dedup_jaccard,
@@ -616,10 +613,9 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_minhash_accuracy_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable accuracy contract for the MinHash estimator behind
-    q_dedup_near (rows-only by design — xxhash64 signatures are
-    engine-specific): over the ORACLE-KNOWN exact-Jaccard ≥ 0.5 pair set
-    (the q_dedup_jaccard contract), estimate Jaccard from 32 minhashes at
-    shingle_size=1 — the SAME word-set measure the exact pairs use, so
+    q_dedup_near (the same md5 signatures): over the ORACLE-KNOWN
+    exact-Jaccard ≥ 0.5 pair set (the q_dedup_jaccard contract), estimate
+    Jaccard from 32 minhashes at shingle_size=1 — the SAME word-set measure the exact pairs use, so
     estimator and target are directly comparable — and assert TWO
     population-level bounds: mean |err| ≤ 0.12 (expected ≈ σ√(2/π) ≤
     0.07 at k=32) and max |err| ≤ 0.5.

@@ -8,15 +8,17 @@ PYTHONPATH from the JVM's environment, not the driver's ``sys.path``.
 
 ``ensure_package_shipped`` zips the package once per SparkContext and
 ``addPyFile``s it — the same mechanism that deploys the package to a
-1000-executor cluster, exercised identically on local[N].
+1000-executor cluster, exercised identically on local[N]. The zip is staged
+inside the context's own files directory, which Spark deletes when the
+context stops.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
@@ -32,7 +34,8 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    staging = tempfile.mkdtemp(prefix="e2e_pkg_ship_")
+    # A subdirectory: addPyFile copies the zip to the directory's root.
+    staging = os.path.join(SparkFiles.getRootDirectory(), "e2e_pkg_ship")
     zip_path = shutil.make_archive(
         os.path.join(staging, "e2e_etl_pipeline_spark"),
         "zip",

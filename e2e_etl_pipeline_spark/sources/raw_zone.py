@@ -21,6 +21,8 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from e2e_etl_pipeline_spark.sources.acquire import ACQUIRE_SCHEMA
+
 PARTITION_COLS = ("site", "region", "experience", "ingest_date")
 
 
@@ -59,9 +61,11 @@ def read_latest(
     This is A8 with the ddmmyyyy byte-sort bug fixed: comparison happens on
     typed dates, so chronological == sort order by construction. The newest
     date comes from the relation's file listing on the driver and reaches
-    the scan as a static ``ingest_date = <date>`` partition filter.
+    the scan as a static ``ingest_date = <date>`` partition filter. The
+    zone holds what write_raw was given, ACQUIRE_SCHEMA rows, so the read
+    declares that schema rather than inferring it with a Spark job.
     """
-    df = spark.read.parquet(path)
+    df = spark.read.schema(ACQUIRE_SCHEMA).parquet(path)
     scope = {"site": site, "region": region, "experience": experience}
     scope = {col: val for col, val in scope.items() if val is not None}
     dates = []

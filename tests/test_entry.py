@@ -54,3 +54,22 @@ def test_active_order_names_every_key_once():
     assert not stale, f"names no key is registered under: {stale}"
     unlisted = sorted(set(QUERIES) - set(names))
     assert not unlisted, f"registered keys the order does not name: {unlisted}"
+
+
+def test_package_zip_is_staged_inside_the_context(spark, monkeypatch, tmp_path):
+    """The shipped zip lives in the context's files directory, which Spark
+    deletes when the context stops; nothing lands in the temp directory."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from e2e_etl_pipeline_spark import shipping
+
+    monkeypatch.setattr(shipping, "_SHIPPED", set())
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    shipped = []
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    shipping.ensure_package_shipped(spark)
+    assert list(tmp_path.iterdir()) == []
+    root = SparkFiles.getRootDirectory()
+    assert len(shipped) == 1 and os.path.commonpath([shipped[0], root]) == root

@@ -1,5 +1,6 @@
-"""tools/perf_sweep.py isolated mode: a child that dies must surface as an
-error, never as the numbers an earlier child left in its output file."""
+"""tools/perf_sweep.py: a key's record counts what its executed plan file
+shows, and an isolated child that dies surfaces as an error, never as the
+numbers an earlier child left in its output file."""
 
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ def _load_perf_sweep():
     return mod
 
 
-def test_isolated_failed_child_reports_error(monkeypatch):
+def test_isolated_failed_child_reports_error(monkeypatch, tmp_path):
     perf_sweep = _load_perf_sweep()
     key = "q_perf_sweep_stale_probe"
     stale = f"/tmp/perf_sweep_iso_{key}.json"
@@ -28,9 +29,30 @@ def test_isolated_failed_child_reports_error(monkeypatch):
     # The "child interpreter" exits 1 without writing anything.
     monkeypatch.setattr(perf_sweep.sys, "executable", "false")
     try:
-        results = perf_sweep.run_isolated([key], "/nonexistent", 1)
+        results = perf_sweep.run_isolated([key], "/nonexistent", 1, str(tmp_path / "sweep.json"))
     finally:
         if os.path.exists(stale):
             os.remove(stale)
     assert "error" in results[key], results[key]
     assert "run" not in results[key]
+
+
+def test_record_counts_the_executed_plan(spark, sf_dir, tmp_path):
+    """q_unigram_logprob's executed plan reuses exchanges: the record's
+    reuse count is the final plan's ReusedExchange lines, and building the
+    key runs no Spark job."""
+    from e2e_etl_pipeline_spark.registry import load_all
+
+    perf_sweep = _load_perf_sweep()
+    load_all()
+    key = "q_unigram_logprob"
+    out = str(tmp_path / "sweep.json")
+    rec = perf_sweep.sweep(spark, [key], sf_dir, 1, out)[key]
+    with open(perf_sweep.plan_path(out, key)) as f:
+        plan = f.read()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    reused = sum("ReusedExchange" in line for line in final.splitlines())
+    assert reused > 0
+    assert rec["spark.plan.reused_exchanges"] == reused
+    assert rec["queries.construct_jobs"] == 0

@@ -35,7 +35,16 @@ def test_raw_zone_roundtrip_and_latest(spark):
         write_raw(fetched_documents(spark, TARGETS + escaped, d_old), path)
         write_raw(fetched_documents(spark, TARGETS, d_new), path)
 
-        latest = read_latest(spark, path)
+        # building the frame runs no Spark job (no schema inference)
+        sc = spark.sparkContext
+        sc.setJobGroup("raw-zone-read-latest", "read_latest")
+        try:
+            latest = read_latest(spark, path)
+        finally:
+            sc.setJobGroup("raw-zone-idle", "idle")
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert not sc.statusTracker().getJobIdsForGroup("raw-zone-read-latest")
+
         dates = {r.ingest_date for r in latest.select("ingest_date").distinct().collect()}
         assert dates == {d_new}
 

@@ -1,11 +1,23 @@
-"""Time every registered query at a given SF with the noop sink (guide §1.4).
+"""Profile every registered query at a given SF with the noop sink (guide §1.4).
 
 Run: PYTHONPATH=. python tools/perf_sweep.py [--min3] [--isolated] \
          [sf_dir] [out.json] [key ...]
 
 Default mode: one warmup + one timed run per key (the sweep ranks operators;
-anything worth touching gets re-measured quietly). Also records plan-shape
-stats: Exchange count, join strategies, Python eval nodes.
+anything worth touching gets re-measured quietly).
+
+Each key's record holds the wall timings (``construct``, ``warm``, ``run``,
+and ``runs`` under --min3), then, read after the clock stops, per-layer
+numbers under the names BENCHMARK.json uses, from the benchmark's own
+readers (perfbench/layers.py):
+  queries.construct_*  py4j calls and Spark jobs of one more, untimed,
+                       construction of the key;
+  spark.exec.*, spark.shuffle.*, spark.spill_bytes, spark.scan.*,
+  spark.python.*       the status store's numbers for the last timed run;
+  spark.plan.*         the shape of that run's executed (AQE-final) plan
+                       (plans, if its construction started SQL executions).
+The executed-plan text of that run goes beside the JSON output, as
+``<out stem>.<key>.plan.txt``.
 
 Quiet modes (round-12, VERDICT item 2 — contention-proof numbers):
   --min3      one warmup + THREE timed runs; records min/all three. Min-of-N
@@ -20,38 +32,73 @@ Quiet modes (round-12, VERDICT item 2 — contention-proof numbers):
 
 from __future__ import annotations
 
-import io
 import json
 import os
-import re
 import subprocess
 import sys
 import time
-from contextlib import redirect_stdout
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+from layers import PLAN_NODES, PY_SENT, Py4jCounter, SparkStats, _walk  # noqa: E402
+
+# Plan-graph node name → plan-shape counter SparkStats does not keep.
+EXTRA_NODES = {
+    "ShuffledHashJoin": "spark.plan.shj",
+    "BroadcastNestedLoopJoin": "spark.plan.bnlj",
+    "CartesianProduct": "spark.plan.cartesian",
+    "Window": "spark.plan.window",
+    "Sort": "spark.plan.sort",
+}
+# The per-layer fields of every record, 0 where the run had none.
+FIELDS = (
+    "queries.construct_py4j_calls", "queries.construct_jobs",
+    "spark.exec.jobs", "spark.exec.stages", "spark.exec.tasks", "spark.exec.failed_tasks",
+    "spark.exec.run_s", "spark.exec.cpu_s", "spark.exec.gc_s",
+    "spark.shuffle.write_bytes", "spark.shuffle.read_bytes", "spark.spill_bytes",
+    "spark.scan.input_bytes", "spark.scan.input_records", "spark.scan.files_read",
+    "spark.python.rows_sent", "spark.python.rows_received", "spark.python.bytes_sent",
+    "spark.python.bytes_received", "spark.python.run_s",
+    "spark.plan.python_nodes", "spark.plan.py_eval", "spark.plan.map_in_py",
+    "spark.plan.single_partition", *PLAN_NODES.values(), *EXTRA_NODES.values(),
+)
 
 
-def plan_stats(plan: str) -> dict:
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan))
-        - len(re.findall(r"\bReusedExchange\b", plan)),
-        "reused_exchanges": len(re.findall(r"\bReusedExchange\b", plan)),
-        "single_partition": len(re.findall(r"SinglePartition", plan)),
-        "bhj": len(re.findall(r"BroadcastHashJoin", plan)),
-        "smj": len(re.findall(r"SortMergeJoin", plan)),
-        "shj": len(re.findall(r"ShuffledHashJoin", plan)),
-        "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
-        "cartesian": len(re.findall(r"CartesianProduct", plan)),
-        "py_eval": len(re.findall(r"BatchEvalPython|ArrowEvalPython", plan)),
-        "map_in_py": len(re.findall(r"MapInArrow|MapInPandas|FlatMapGroupsInPandas", plan)),
-        "window": len(re.findall(r"\bWindow\b", plan)),
-        "sort": len(re.findall(r"\bSort \[", plan)),
-    }
+def plan_path(out_path: str, key: str) -> str:
+    return f"{os.path.splitext(out_path)[0]}.{key}.plan.txt"
 
 
-def time_key(spark, fn, sf_dir: str, n_runs: int) -> dict:
+def plan_shape(stats: SparkStats, eids) -> Counter:
+    """The plan-shape counts SparkStats leaves out, from the same plan
+    graphs. Python nodes split into per-row UDF evaluation (py_eval) and
+    the batch map/group operators (map_in_py). The graph draws a reused
+    exchange as one more edge out of the original exchange node, not as a
+    node of its own, so the reuses are each exchange's consumer edges
+    beyond the first."""
+    out: Counter = Counter()
+    for eid in eids:
+        graph = stats._json(stats.sql.planGraph(eid))  # noqa: SLF001
+        consumers = Counter(e["fromId"] for e in graph["edges"])
+        for node in _walk(graph["nodes"]):
+            name = node["name"]
+            if name in EXTRA_NODES:
+                out[EXTRA_NODES[name]] += 1
+            if any(m["name"] == PY_SENT for m in node["metrics"]):
+                out["spark.plan.py_eval" if "EvalPython" in name else "spark.plan.map_in_py"] += 1
+            if "Exchange" in name:
+                out["spark.plan.reused_exchanges"] += max(0, consumers[node["id"]] - 1)
+                if "SinglePartition" in node["desc"]:
+                    out["spark.plan.single_partition"] += 1
+    return out
+
+
+def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -> tuple[dict, str]:
+    """(record, executed-plan text of the last timed run) for one key."""
+    sc = spark.sparkContext
+    sc.setJobGroup(f"sweep/{key}/warm", key)
     t0 = time.time()
     df = fn(spark, sf_dir)
     t_construct = time.time() - t0
@@ -59,33 +106,84 @@ def time_key(spark, fn, sf_dir: str, n_runs: int) -> dict:
     df.write.format("noop").mode("overwrite").save()
     t_warm = time.time() - t0
     runs = []
-    for _ in range(n_runs):
+    for i in range(n_runs):
+        if i == n_runs - 1:
+            stats.drain()
+            stats.skip_to_now()
+            sc.setJobGroup(f"sweep/{key}/run", key)
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
     out = {
         "construct": round(t_construct, 3),
         "warm": round(t_warm, 3),
         "run": min(runs),
-        **plan_stats(buf.getvalue()),
     }
     if n_runs > 1:
         out["runs"] = runs
-    return out
+
+    # The clock has stopped: read the last timed run's layers.
+    stats.drain()
+    layer = Counter(dict.fromkeys(FIELDS, 0))
+    layer.update(stats.stage_totals(stats.jobs(f"sweep/{key}/run")))
+    first = stats.last_execution
+    layer.update(stats.new_plans())
+    layer.update(plan_shape(stats, range(first + 1, stats.last_execution + 1)))
+    plan = ""
+    if stats.last_execution > first:  # the run's noop write is its last execution
+        plan = stats.sql.execution(stats.last_execution).get().physicalPlanDescription()
+
+    sc.setJobGroup(f"sweep/{key}/construct", key)
+    with Py4jCounter(spark) as calls:
+        fn(spark, sf_dir)
+    stats.drain()
+    layer["queries.construct_py4j_calls"] = calls.calls
+    layer["queries.construct_jobs"] = len(stats.jobs(f"sweep/{key}/construct"))
+    out.update(sorted(layer.items()))
+    return out, plan
 
 
-def run_isolated(keys: list[str], sf_dir: str, n_runs: int) -> dict:
-    """One subprocess (fresh JVM + SparkSession) per key; merge child JSONs."""
+def sweep(spark, keys: list[str], sf_dir: str, n_runs: int, out_path: str) -> dict:
+    """Profile each key in this session; write each executed plan beside
+    ``out_path``."""
+    from e2e_etl_pipeline_spark.registry import QUERIES
+
+    stats = SparkStats(spark)
+    results = {}
+    for i, key in enumerate(keys):
+        try:
+            results[key], plan = time_key(spark, stats, key, QUERIES[key], sf_dir, n_runs)
+            with open(plan_path(out_path, key), "w") as f:
+                f.write(plan)
+        except Exception as e:  # noqa: BLE001
+            results[key] = {"error": f"{type(e).__name__}: {e}"[:300]}
+        r = results[key]
+        print(
+            f"[{i + 1}/{len(keys)}] {key}: "
+            + (
+                f"{r.get('run', '?')}s (warm {r.get('warm', '?')}s"
+                + (f", runs {r.get('runs')}" if "runs" in r else "")
+                + ")"
+                if "error" not in r
+                else "ERROR " + r["error"][:80]
+            ),
+            flush=True,
+        )
+    return results
+
+
+def run_isolated(keys: list[str], sf_dir: str, n_runs: int, out_path: str) -> dict:
+    """One subprocess (fresh JVM + SparkSession) per key; merge child JSONs
+    and move each child's plan file beside ``out_path``."""
     results: dict[str, dict] = {}
     flag = ["--min3"] if n_runs > 1 else []
     for i, key in enumerate(keys):
         child_out = f"/tmp/perf_sweep_iso_{key}.json"
+        child_plan = plan_path(child_out, key)
         # A failed child must report an error, not an earlier run's numbers.
-        if os.path.exists(child_out):
-            os.remove(child_out)
+        for stale in (child_out, child_plan):
+            if os.path.exists(stale):
+                os.remove(stale)
         cmd = [sys.executable, os.path.abspath(__file__), *flag, sf_dir, child_out, key]
         env = dict(os.environ, PYTHONPATH=REPO)
         proc = subprocess.run(cmd, env=env, capture_output=True, text=True)
@@ -95,6 +193,8 @@ def run_isolated(keys: list[str], sf_dir: str, n_runs: int) -> dict:
         except Exception:  # noqa: BLE001
             results[key] = {"error": f"isolated child rc={proc.returncode}: "
                             + proc.stderr.strip()[-240:]}
+        if os.path.exists(child_plan):
+            os.replace(child_plan, plan_path(out_path, key))
         r = results.get(key, {})
         print(
             f"[iso {i + 1}/{len(keys)}] {key}: "
@@ -124,39 +224,19 @@ def main() -> None:
         print(f"WARNING: unknown keys ignored: {sorted(missing)}", flush=True)
 
     if isolated:
-        results = run_isolated(keys, sf_dir, n_runs)
+        results = run_isolated(keys, sf_dir, n_runs, out_path)
     else:
         from e2e_etl_pipeline_spark.session import get_session  # noqa: E402
 
-        spark = get_session("perf_sweep")
-        results = {}
-        for i, key in enumerate(keys):
-            fn = QUERIES[key]
-            spark.sparkContext.setJobDescription(f"sweep: {key}")
-            try:
-                results[key] = time_key(spark, fn, sf_dir, n_runs)
-            except Exception as e:  # noqa: BLE001
-                results[key] = {"error": f"{type(e).__name__}: {e}"[:300]}
-            r = results[key]
-            print(
-                f"[{i + 1}/{len(keys)}] {key}: "
-                + (
-                    f"{r.get('run', '?')}s (warm {r.get('warm', '?')}s"
-                    + (f", runs {r.get('runs')}" if "runs" in r else "")
-                    + ")"
-                    if "error" not in r
-                    else "ERROR " + r["error"][:80]
-                ),
-                flush=True,
-            )
+        results = sweep(get_session("perf_sweep"), keys, sf_dir, n_runs, out_path)
     with open(out_path, "w") as f:
         json.dump(results, f, indent=1)
     ok = {k: v for k, v in results.items() if "run" in v}
     print(f"\nwrote {out_path}; total timed: {sum(v['run'] for v in ok.values()):.1f}s")
     for k, v in sorted(ok.items(), key=lambda kv: -kv[1]["run"])[:40]:
-        ex = v.get("exchanges", "?")
-        py = v.get("py_eval", "?")
-        print(f"{v['run']:8.3f}s  warm {v.get('warm', 0):7.3f}s  ex {ex:>2}  py {py}  {k}")
+        ex = v.get("spark.plan.exchanges", 0)
+        py = v.get("spark.plan.python_nodes", 0)
+        print(f"{v['run']:8.3f}s  warm {v.get('warm', 0):7.3f}s  ex {ex:>2g}  py {py:g}  {k}")
 
 
 if __name__ == "__main__":
