@@ -12,7 +12,6 @@ from e2e_etl_pipeline_spark.operators.dedup import (  # noqa: F401
 from e2e_etl_pipeline_spark.operators.similarity import (  # noqa: F401
     brute_force_topk,
     lsh_bucketed_topk,
-    with_vector_norm,
 )
 from e2e_etl_pipeline_spark.operators.multimodal import (  # noqa: F401
     MEDIA_SCHEMA,

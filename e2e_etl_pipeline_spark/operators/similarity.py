@@ -1,22 +1,25 @@
 """Exact and approximate nearest-neighbor search over embedding columns.
 
-Exact operators share one blocked Arrow kernel (_block_kernel): rows hash
-into blocks, each block's group goes to NumPy once, and every cosine is
-accumulated per dimension, left to right, in float64 — bit-identical to
-the zip_with/aggregate fold of functions/vectors.py.
-  * brute_force_topk — cosine top-k per query; each block cuts its local
-    top-k before the final per-query window.
+Every operator whose candidates are "all pairs inside a group" scores
+them in one blocked Arrow kernel (_block_kernel): rows are tagged with a
+group key, each group goes to NumPy once, and every cosine is accumulated
+per dimension, left to right, in float64 — bit-identical to the
+zip_with/aggregate fold of functions/vectors.py. The operators differ
+only in their groups:
+  * brute_force_topk — cosine top-k per query over hash blocks of the
+    corpus; each block cuts its local top-k before the final window.
   * blocked_cosine_pairs — every unordered pair at or above a threshold
-    (the exact ground truth of the dedup keys).
+    over hash-block pairs (the exact ground truth of the dedup keys).
+  * grouped_cosine_pairs — the same pairs inside caller-chosen groups:
+    LSH (table, bucket) in lsh_cosine_pairs, SemDeDup clusters.
+  * ivf_topk — coarse centroids plus probe-N: each centroid's group holds
+    the queries that probe it and the corpus vectors assigned to it.
 
-Approximate operators trade recall for cost (SURVEY.md §2 B.8, §4.2):
-  * lsh_bucketed_topk / lsh_cosine_pairs — random-hyperplane (sign) LSH:
-    vectors hash to sign-pattern buckets per table (a seeded NumPy tensor,
-    regenerated inside the bucketizer kernel); candidates come from
-    equi-joins on (table, bucket), so the cost is Σ bucket-collisions,
-    not the cross product.
-  * ivf_topk — coarse centroids plus probe-N: queries score only the
-    corpus vectors assigned to their closest centroids.
+lsh_bucketed_topk is the one approximate operator off the kernel: its
+candidates come from an id-only equi-join on (table, bucket), and only
+the surviving pairs re-attach vectors (see its docstring for the
+measured regime). Random-hyperplane buckets come from a seeded NumPy
+tensor, regenerated inside the bucketizer kernel (SURVEY.md §2 B.8, §4.2).
 """
 
 from __future__ import annotations
@@ -27,11 +30,6 @@ from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
 from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
-
-
-def with_vector_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Attach the L2 norm (norm) — precompute once, reuse across joins."""
-    return df.withColumn("norm", l2_norm(vec_col))
 
 
 # DuckDB-side twin of filter_modal_dim (embed as `__dim AS (...)` and gate
@@ -72,7 +70,8 @@ def filter_modal_dim(em: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 def _cosine_from_norms(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Column:
     """cosine via vectors.dot, reusing precomputed norms (cheaper than
-    cosine_similarity, which would re-derive both norms per pair)."""
+    cosine_similarity, which would re-derive both norms per pair) — the
+    fold of lsh_bucketed_topk, the one scorer off _block_kernel."""
     return F.when((a_norm == 0) | (b_norm == 0), F.lit(None).cast("double")).otherwise(
         dot(a_vec, b_vec) / (a_norm * b_norm)
     )
@@ -138,7 +137,7 @@ def _block_of(id_col: str, blocks: int) -> Column:
 
 def _tagged_sides(
     left: DataFrame,
-    right: DataFrame,
+    right: DataFrame | None,
     id_col: str,
     vec_col: str,
     left_keys: list[Column],
@@ -148,31 +147,34 @@ def _tagged_sides(
     """Both sides of a blocked operator on ONE frame, tagged ``_pside`` 0
     (left) and 1 (right), with their group keys, ``_pid``, ``_pvec`` and
     optional ``_pmeta``. One tagged frame, not a cogroup: two frames
-    derived from the same corpus trip the ambiguous-self-join check. NULL
-    ids never pair (every join predicate the operators mirror drops
-    them), so they are filtered here and block assignment is total."""
+    derived from the same corpus trip the ambiguous-self-join check.
+    ``right=None`` puts every left row on both sides with the same keys,
+    in one pass over ``left``. NULL ids never pair (every join predicate
+    the operators mirror drops them), so they are filtered here and block
+    assignment is total."""
 
-    def side(df: DataFrame, tag: int, keys: list[Column]) -> DataFrame:
+    def side(df: DataFrame, tag: Column, keys: list[Column]) -> DataFrame:
         meta = [F.col(meta_col).alias("_pmeta")] if meta_col else []
         return df.where(F.col(id_col).isNotNull()).select(
-            F.lit(tag).alias("_pside"),
+            tag.alias("_pside"),
             *keys,
             F.col(id_col).alias("_pid"),
             F.col(vec_col).alias("_pvec"),
             *meta,
         )
 
-    return side(left, 0, left_keys).unionByName(side(right, 1, right_keys))
+    if right is None:
+        return side(left, F.explode(F.array(F.lit(0), F.lit(1))), left_keys)
+    return side(left, F.lit(0), left_keys).unionByName(side(right, F.lit(1), right_keys))
 
 
-def _side_arrays(tbl, has_meta: bool) -> dict:
-    """One side of a block group as NumPy: ids, list offsets, lengths (-1
-    for a NULL vector), float64 element values, a per-row NULL-element
-    flag and, under ``has_meta``, the metadata in its own type."""
+def _list_arrays(col) -> dict:
+    """An Arrow list<number> column as NumPy: list starts, lengths (-1 for
+    a NULL vector), float64 element values and ``clean`` — non-NULL with
+    no NULL element."""
     import numpy as np
     import pyarrow as pa
 
-    col = tbl.column("_pvec")
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     n = len(col)
@@ -191,14 +193,23 @@ def _side_arrays(tbl, has_meta: bool) -> dict:
         row_has_null = (cum[off[1:]] - cum[off[:-1]]) > 0
     else:
         row_has_null = np.zeros(n, dtype=bool)
-    side = {
-        "ids": tbl.column("_pid").to_numpy(),
+    return {
         "clean": valid & ~row_has_null,
         "starts": off[:-1],
         "lens": lens,
         "vals": vals,
         "n": n,
     }
+
+
+def _side_arrays(tbl, has_meta: bool) -> dict:
+    """One side of a block group as NumPy: _list_arrays of its vectors,
+    its ids and, under ``has_meta``, the metadata in its own type."""
+    import numpy as np
+    import pyarrow as pa
+
+    side = _list_arrays(tbl.column("_pvec"))
+    side["ids"] = tbl.column("_pid").to_numpy()
     if has_meta:
         meta = tbl.column("_pmeta")
         if isinstance(meta, pa.ChunkedArray):
@@ -287,21 +298,21 @@ def _block_kernel(k: int | None = None, threshold: float | None = None, has_meta
     """applyInArrow kernel shared by the exact operators. A group holds
     left rows (``_pside`` 0) and right rows (``_pside`` 1); their cosines
     come from _cosine_slice, right rows walked in _MAX_CELLS slices.
-    Two emit modes:
+    Under ``has_meta`` a pair needs equal non-NULL metadata (Spark SQL
+    equality, so NaN = NaN matches), emitted as ``_meta``. Ids keep their
+    input type. Two emit modes:
 
-    * local top-k (``k``, brute_force_topk): per left ROW, its first k
-      right rows in the final window's order (_topk_cut), as (query_id,
-      neighbor_id, raw cosine[, _meta]). Pairs are DROPPED where the join
-      predicate drops them: equal ids (self-match) and, under
-      ``has_meta``, NULL or unequal metadata (Spark SQL equality, so
-      NaN = NaN matches). Per row, not per id, so a duplicated id keeps
+    * local top-k (``k``): per left ROW, its first k right rows in the
+      final window's order (_topk_cut), as (query_id, neighbor_id, raw
+      cosine[, _meta]). Equal ids (self-match) are DROPPED, as the join
+      predicate drops them. Per row, not per id, so a duplicated id keeps
       its multiplicity.
-    * threshold pairs (``threshold``, blocked_cosine_pairs): every pair
-      with a non-NULL cosine whose stable_round reaches the threshold, as
-      (id_a, id_b, raw cosine) with id_a < id_b. A group whose two sides
-      are the same block (``_bi`` = ``_bj``) keeps left id < right id, so
-      each unordered pair comes once; other groups hold disjoint blocks
-      (the block is a function of the id) and keep every cross pair.
+    * threshold pairs (``threshold``): every pair with a non-NULL cosine
+      whose stable_round reaches the threshold, as (id_a, id_b, raw
+      cosine[, _meta]) with id_a < id_b. A group whose two sides are the
+      same rows (``_bi`` = ``_bj``) keeps left id < right id, so each
+      unordered pair comes once; other groups hold disjoint blocks (the
+      block is a function of the id) and keep every cross pair.
 
     NULL and ragged vectors, NULL elements and zero norms give a NULL
     cosine: top-k emits it (ranked last), pairs drop it. A NaN cosine
@@ -335,12 +346,12 @@ def _block_kernel(k: int | None = None, threshold: float | None = None, has_meta
                         keep &= q_ids < c_ids
                 else:
                     keep = q_ids != c_ids
-                    if has_meta:
-                        qm, cm = q["meta"][:, None], c["meta"][None, lo:hi]
-                        eq = qm == cm
-                        if qm.dtype.kind == "f" and cm.dtype.kind == "f":
-                            eq |= np.isnan(qm) & np.isnan(cm)
-                        keep &= eq & q["meta_valid"][:, None] & c["meta_valid"][None, lo:hi]
+                if has_meta:
+                    qm, cm = q["meta"][:, None], c["meta"][None, lo:hi]
+                    eq = qm == cm
+                    if qm.dtype.kind == "f" and cm.dtype.kind == "f":
+                        eq |= np.isnan(qm) & np.isnan(cm)
+                    keep &= eq & q["meta_valid"][:, None] & c["meta_valid"][None, lo:hi]
                 rows, cols = np.nonzero(keep)
                 part = (rows, cols + lo, cos[rows, cols], isnull[rows, cols])
                 if k is not None:
@@ -354,23 +365,44 @@ def _block_kernel(k: int | None = None, threshold: float | None = None, has_meta
         a = left.column("_pid").take(pa.array(rows))
         b = right.column("_pid").take(pa.array(cols))
         if k is None:
-            return pa.table(
-                {
-                    "id_a": pc.min_element_wise(a, b).cast(pa.int64()),
-                    "id_b": pc.max_element_wise(a, b).cast(pa.int64()),
-                    "cosine": pa.array(cos, pa.float64()),
-                }
-            )
-        out = {
-            "query_id": a,
-            "neighbor_id": b,
-            "cosine": pa.array(cos, pa.float64(), mask=isnull),
-        }
+            out = {
+                "id_a": pc.min_element_wise(a, b),
+                "id_b": pc.max_element_wise(a, b),
+                "cosine": pa.array(cos, pa.float64()),
+            }
+        else:
+            out = {
+                "query_id": a,
+                "neighbor_id": b,
+                "cosine": pa.array(cos, pa.float64(), mask=isnull),
+            }
         if has_meta:
             out["_meta"] = right.column("_pmeta").take(pa.array(cols))
         return pa.table(out)
 
     return score
+
+
+def _score_groups(
+    u: DataFrame,
+    keys: list[str],
+    k: int | None = None,
+    threshold: float | None = None,
+    meta_col: str | None = None,
+) -> DataFrame:
+    """Run _block_kernel over the groups of the tagged frame ``u``. The
+    ids keep their input type; the metadata comes back as ``meta_col``."""
+    id_type = u.schema["_pid"].dataType.simpleString()
+    a, b = ("id_a", "id_b") if k is None else ("query_id", "neighbor_id")
+    out_schema = f"{a} {id_type}, {b} {id_type}, cosine double"
+    if meta_col:
+        meta_type = u.schema["_pmeta"].dataType.simpleString()
+        out_schema += f", _meta {meta_type}"
+    out = u.groupBy(*keys).applyInArrow(
+        _block_kernel(k=k, threshold=threshold, has_meta=meta_col is not None),
+        out_schema,
+    )
+    return out.withColumnRenamed("_meta", meta_col) if meta_col else out
 
 
 def brute_force_topk(
@@ -408,17 +440,21 @@ def brute_force_topk(
         [_block_of(id_col, blocks).alias("_blk")],
         meta_col=match_on,
     )
-    id_type = u.schema["_pid"].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-    if match_on:
-        meta_type = u.schema["_pmeta"].dataType.simpleString()
-        out_schema += f", _meta {meta_type}"
-    cand = u.groupBy("_blk").applyInArrow(
-        _block_kernel(k=k, has_meta=match_on is not None), out_schema
-    )
-    if match_on:
-        cand = cand.withColumnRenamed("_meta", match_on)
+    cand = _score_groups(u, ["_blk"], k=k, meta_col=match_on)
     return _rank_topk(cand, k, extra_cols=[match_on] if match_on else None)
+
+
+def _one_vector_per_id(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The entry contract of the LSH pair and IVF operators: NULL ids go
+    (they never pair) and each id keeps ONE vector, the lexicographic min
+    (the min-per-id GROUP BY of their oracles). Without it an id with two
+    vectors would bucket or probe with one and score with another."""
+    return (
+        df.where(F.col(id_col).isNotNull())
+        .groupBy(id_col)
+        .agg(F.min(vec_col).alias(vec_col))
+    )
+
 
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42) -> np.ndarray:
     rng = np.random.RandomState(seed)
@@ -438,86 +474,42 @@ def ivf_topk(
 
     Deterministic coarse centroids (the first ``n_centroids`` corpus vectors
     by id — a real deployment would k-means a sample; the plan shape is
-    identical). Every corpus vector is assigned to its best centroid once
-    (broadcast of the tiny centroid set, max_by argmax — no shuffle of the
-    corpus). Queries probe their ``n_probe`` closest centroids and join
-    candidates on centroid_id: the scored set is |corpus| × n_probe /
-    n_centroids in expectation, not the cross product.
-    """
+    identical). One window assigns both sides against the broadcast
+    centroid set (cscore DESC, centroid_id ASC): every corpus vector to
+    its best centroid, every query to its ``n_probe`` best. Each centroid
+    is then one _block_kernel group — its probing queries on the left, its
+    assigned corpus on the right — so the scored set is |corpus| × n_probe
+    / n_centroids in expectation, not the cross product. A corpus vector
+    sits in one group, so no (query, neighbor) pair is scored twice.
+
+    Both inputs first reduce to one vector per id (_one_vector_per_id)."""
+    corpus = _one_vector_per_id(corpus, id_col, vec_col)
+    queries = _one_vector_per_id(queries, id_col, vec_col)
     # first n BY ID (not id < n, which yields zero centroids when ids
-    # don't start at 0 — e.g. a decimated or re-keyed corpus).
-    # asc_nulls_last: Spark ASC is NULLS FIRST, so a NULL-id corpus row
-    # would otherwise become centroid #1 while a SQL oracle (DuckDB is
-    # NULLS LAST in both directions) picks real ids first — the registry's
-    # mechanical pk-variant rule applied to a LIMIT cutoff. The vector
-    # itself is the secondary key so the cutoff is a UNIQUE total order
-    # (registry LIMIT rule) even if a pathological corpus carries one id
-    # with two different embeddings; array ordering is lexicographic in
-    # both engines.
+    # don't start at 0 — e.g. a decimated or re-keyed corpus); ids are
+    # unique and non-NULL after the reduction, so the cutoff is total.
     cents = F.broadcast(
-        corpus.orderBy(F.asc_nulls_last(id_col), F.asc(vec_col))
+        corpus.orderBy(id_col)
         .limit(n_centroids)
         .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec"))
     )
 
-    def assign(df: DataFrame, prefix: str, probes: int) -> DataFrame:
-        scored = (
-            with_vector_norm(df, vec_col)
-            .select(
-                F.col(id_col).alias(f"{prefix}_id"),
-                F.col(vec_col).alias(f"{prefix}_vec"),
-                F.col("norm").alias(f"{prefix}_norm"),
-            )
-            .join(cents)
-            .select(
-                f"{prefix}_id",
-                f"{prefix}_vec",
-                f"{prefix}_norm",
-                "centroid_id",
-                dot(F.col(f"{prefix}_vec"), F.col("cent_vec")).alias("cscore"),
-            )
+    def assign(df: DataFrame, probes: int) -> DataFrame:
+        scored = df.join(cents).select(
+            id_col, vec_col, "centroid_id", dot(vec_col, "cent_vec").alias("cscore")
         )
-        if probes == 1:
-            # tie-break must MATCH the window path below (cscore desc,
-            # centroid_id asc): max of (cscore, -id) picks the smallest id
-            # on a score tie, so a corpus vector tied between cells lands
-            # in the cell its identical query twin probes first.
-            return scored.groupBy(f"{prefix}_id").agg(
-                F.max_by(
-                    "centroid_id",
-                    F.struct(F.col("cscore"), (-F.col("centroid_id")).alias("nid")),
-                ).alias("centroid_id"),
-                F.first(f"{prefix}_vec").alias(f"{prefix}_vec"),
-                F.first(f"{prefix}_norm").alias(f"{prefix}_norm"),
-            )
-        # asc_nulls_last (mechanical pk rule): a corpus with fewer than
-        # n_centroids non-NULL ids can seat a NULL-id centroid, and Spark
-        # ASC would order it FIRST where every SQL twin orders it last.
-        w = Window.partitionBy(f"{prefix}_id").orderBy(
-            F.desc("cscore"), F.asc_nulls_last("centroid_id")
-        )
+        w = Window.partitionBy(id_col).orderBy(F.desc("cscore"), "centroid_id")
         return (
             scored.withColumn("_r", F.row_number().over(w))
             .where(F.col("_r") <= probes)
             .drop("_r", "cscore")
         )
 
-    assigned = assign(corpus, "neighbor", 1)
-    probed = assign(queries, "query", n_probe)
-    scored = (
-        probed.join(assigned, "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_from_norms(
-                F.col("query_vec"), F.col("neighbor_vec"),
-                F.col("query_norm"), F.col("neighbor_norm"),
-            ).alias("cosine"),
-        )
+    group = [F.col("centroid_id").alias("_blk")]
+    u = _tagged_sides(
+        assign(queries, n_probe), assign(corpus, 1), id_col, vec_col, group, group
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(_score_groups(u, ["_blk"], k=k), k)
 
 
 def lsh_cosine_pairs(
@@ -534,37 +526,29 @@ def lsh_cosine_pairs(
     shape of LSH (q_dedup_embedding): unlike the ANN top-k, a dedup stage
     must surface EVERY above-threshold pair, so there is no per-query rank
     truncation (k would silently cap recall for hub vectors with many
-    near-duplicates). Returns (id_a, id_b, cosine) with id_a < id_b.
+    near-duplicates). Returns (id_a, id_b, cosine) with id_a < id_b and
+    the cosine stable-rounded to 4 dp.
 
-    Same bucketed equi-join core as lsh_bucketed_topk: cost is
-    Σ per-bucket collisions across tables, never the corpus cross
-    product. Recall compounds with table count as 1-(1-p)^T; the
-    (5 planes, 12 tables) default measures 0.83 recall at 500 vectors
-    and 0.74 at 5000 on the synthetic near-orthogonal corpus at
-    threshold 0.4 (tools-measured, round 7) — production corpora with
-    true near-dups (cosine > 0.9) sit far above both."""
-    pairs = _lsh_scored_pairs(
-        corpus,
-        id_col,
-        vec_col,
-        dim=dim,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
+    Each (table, bucket) is one grouped_cosine_pairs group, so the cost
+    is Σ per-bucket collisions across tables, never the corpus cross
+    product; a pair that collides in several tables is scored in each
+    (bit-identically) and kept once. The threshold applies to the rounded
+    cosine, the value both engines emit, so the edge set is
+    engine-identical by construction. Recall compounds with table count as
+    1-(1-p)^T; the (5 planes, 12 tables) default measures 0.83 recall at
+    500 vectors and 0.74 at 5000 on the synthetic near-orthogonal corpus
+    at threshold 0.4 (tools-measured, round 7) — production corpora with
+    true near-dups (cosine > 0.9) sit far above both.
+
+    The corpus first reduces to one vector per id (_one_vector_per_id)."""
+    one = _one_vector_per_id(corpus, id_col, vec_col)
+    buckets = _bucketize(one, n_planes, n_tables, seed, dim, keep_vec=True)
+    pairs = grouped_cosine_pairs(
+        buckets, F.struct("table_id", "bucket"), threshold, id_col, vec_col
     )
-    # Threshold on the ROUNDED cosine (round-9 advice): comparing the raw
-    # division-derived double against the threshold relied on bit-identical
-    # summation across engines — a corpus value a few ULPs apart near the
-    # threshold would split the edge SET, not just a display cell. The
-    # rounded value is what both engines emit, so thresholding on it makes
-    # the edge set engine-identical by construction (oracles use the same
-    # floor-form on the same comparison).
-    rounded = stable_round(F.col("cosine"), 4)
-    return pairs.where(rounded >= threshold).select(
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        rounded.alias("cosine"),
-    )
+    return pairs.select(
+        "id_a", "id_b", stable_round(F.col("cosine"), 4).alias("cosine")
+    ).distinct()
 
 
 def lsh_bucketed_topk(
@@ -584,18 +568,56 @@ def lsh_bucketed_topk(
     (table, bucket) key. 2^n_planes buckets/table keeps expected bucket size
     |corpus|/256 — the join output is linear in corpus size for spread-out
     data. Recall grows with n_tables.
-    """
-    scored = _lsh_scored_pairs(
-        corpus,
-        id_col,
-        vec_col,
-        dim=dim,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        queries=queries,
+
+    Unlike the pair operators, this one stays off _block_kernel: the
+    candidate equi-join and its dedupe shuffle ids only (the Arrow
+    bucketizer emits (id, table_id, bucket)), and only the surviving pairs
+    re-attach one vector per id and fold the cosine. Grouping on (table,
+    bucket) instead replicates every CORPUS vector into each of its
+    n_tables groups for a handful of queries: at sf0.1 on 4 cores (2,000
+    vectors, 20 queries, 6 planes × 32 tables = 2,048 mostly query-less
+    groups) a kernel prototype lost in all three measured Spark sessions
+    (2.55 → 4.02 s, 3.41 → 4.04 s, and 4.77 s against an unrecorded
+    figure for this path)."""
+    q = _bucketize(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")),
+        n_planes, n_tables, seed, dim,
     )
-    return _rank_topk(scored, k)
+    c = _bucketize(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("neighbor_vec")),
+        n_planes, n_tables, seed, dim,
+    )
+
+    def attach(df: DataFrame, prefix: str) -> DataFrame:
+        # One deterministic (vector, norm) per id: the min-per-id
+        # reduction the LSH oracles pin.
+        one = df.groupBy(F.col(id_col).alias(f"{prefix}_id")).agg(
+            F.min(vec_col).alias(f"{prefix}_vec")
+        )
+        return one.select(
+            f"{prefix}_id",
+            f"{prefix}_vec",
+            l2_norm(f"{prefix}_vec").alias(f"{prefix}_norm"),
+        )
+
+    cand = (
+        q.join(c, ["table_id", "bucket"])
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    scored = cand.join(attach(queries, "query"), "query_id").join(
+        attach(corpus, "neighbor"), "neighbor_id"
+    )
+    return _rank_topk(
+        scored.select(
+            "query_id",
+            "neighbor_id",
+            _cosine_from_norms(
+                F.col("query_vec"), F.col("neighbor_vec"), F.col("query_norm"), F.col("neighbor_norm")
+            ).alias("cosine"),
+        ),
+        k,
+    )
 
 
 def _lsh_bucketizer(
@@ -604,11 +626,13 @@ def _lsh_bucketizer(
     n_tables: int,
     seed: int,
     dim: int | None,
+    keep_vec: bool = False,
 ):
     """mapInArrow kernel: append (table_id, bucket) to every input row,
-    replicated once per table — NumPy replacement for the interpreted
-    zip_with/aggregate bucket expression (the spec kept in
-    tests/test_similarity_blocked.py) with identical bucket values (same seeded tensor, same per-dimension
+    replicated once per table, dropping the vector column unless
+    ``keep_vec`` — NumPy replacement for the interpreted zip_with/aggregate
+    bucket expression (the spec kept in tests/test_similarity_blocked.py)
+    with identical bucket values (same seeded tensor, same per-dimension
     left-to-right accumulation, so every dot's sign matches the JVM fold).
 
     Row classes, mirroring the expression form exactly:
@@ -641,15 +665,11 @@ def _lsh_bucketizer(
             n = batch.num_rows
             if n == 0:
                 continue
-            col = batch.column(vec_name)
-            lens = np.full(n, -1, dtype=np.int64)
-            valid = ~np.asarray(col.is_null())
-            off = np.asarray(col.offsets)
-            lens[valid] = (off[1:] - off[:-1])[valid]
+            v = _list_arrays(batch.column(vec_name))
             if dim is not None:
                 d = dim
             else:
-                cand = np.unique(lens[valid])
+                cand = np.unique(v["lens"][v["lens"] >= 0])
                 if len(cand) > 1:
                     raise RuntimeError(
                         "_lsh_bucketizer: mixed vector lengths "
@@ -657,40 +677,23 @@ def _lsh_bucketizer(
                         "the corpus (filter_modal_dim / size filter) first"
                     )
                 d = int(cand[0]) if len(cand) else 0
-            # gather from the RAW child array with absolute offsets —
-            # flatten() drops null entries' slots and would misalign
-            child = col.values
-            vals = child.to_numpy(zero_copy_only=False)
-            elem_null = (
-                np.asarray(child.is_null())
-                if child.null_count
-                else np.zeros(len(vals), dtype=bool)
-            )
             buckets = np.zeros((n, n_tables), dtype=np.int64)
-            conform = valid & (lens == d)
+            conform = v["clean"] & (v["lens"] == d)
             if d > 0 and conform.any():
-                # gather conforming rows' values as an (m, d) matrix
-                starts = off[:-1][conform]
-                gather = starts[:, None] + np.arange(d)[None, :]
-                V = vals[gather].astype(np.float64)
-                has_null = (
-                    elem_null[gather].any(axis=1)
-                    if elem_null.any()
-                    else np.zeros(V.shape[0], dtype=bool)
-                )
+                V = v["vals"][v["starts"][conform][:, None] + np.arange(d)]
                 W = planes_for(d)
                 acc = np.zeros((V.shape[0], n_tables * n_planes))
                 for k in range(d):
                     acc = acc + V[:, k : k + 1] * W[:, k]
                 bits = ~(acc <= 0)
-                bits &= ~has_null[:, None]
-                b = (
+                buckets[conform] = (
                     bits.reshape(-1, n_tables, n_planes).astype(np.int64)
                     << np.arange(n_planes, dtype=np.int64)[None, None, :]
                 ).sum(axis=2)
-                buckets[conform] = b
             idx = np.repeat(np.arange(n), n_tables)
-            base = batch.drop_columns([vec_name]).take(pa.array(idx))
+            base = (batch if keep_vec else batch.drop_columns([vec_name])).take(
+                pa.array(idx)
+            )
             yield pa.record_batch(
                 list(base.columns)
                 + [
@@ -706,89 +709,49 @@ def _lsh_bucketizer(
     return run
 
 
-def _lsh_scored_pairs(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int | None = None,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    queries: DataFrame | None = None,
+def _bucketize(
+    nv: DataFrame,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+    dim: int | None,
+    keep_vec: bool = False,
 ) -> DataFrame:
-    """Shared LSH core: bucketize, equi-join on (table, bucket), dedupe
-    candidate pairs, score cosine. ``queries=None`` self-joins the corpus
-    (the dedup all-pairs shape). Returns (query_id, neighbor_id, cosine)
-    unranked."""
-    self_pairs = queries is None
-    if queries is None:
-        queries = corpus
+    """The Arrow bucketizer over a two-column (id, vector) frame: one
+    (id[, vector], table_id, bucket) row per input row and table.
 
-    def bucketize(df: DataFrame, prefix: str) -> DataFrame:
-        # Arrow bucketizer (round-11 optimization): the sign-pattern
-        # buckets used to come from a SQL expression — n_tables × n_planes
-        # interpreted zip_with/aggregate dots PER VECTOR (the HOF lambdas
-        # are CodegenFallback; measured ~1.5 s per bucketized side at
-        # sf0.1 for 12×5). The mapInArrow form hands whole batches to
-        # NumPy with the identical per-dimension left-to-right IEEE
-        # accumulation, so every dot's SIGN — and therefore every bucket
-        # id — is unchanged; the hyperplane tensor is regenerated in-task
-        # from the same seeded RandomState the SQL-literal oracles embed.
-        # Output is (id, table_id, bucket) ONLY — the candidate join and
-        # its dedupe shuffle ids, never vectors (guide §2.3/§8: decide
-        # with small rows, attach the payload once afterwards).
-        nv = df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).alias(f"{prefix}_vec"),
-        )
-        id_type = nv.schema[f"{prefix}_id"].dataType.simpleString()
-        return nv.mapInArrow(
-            _lsh_bucketizer(
-                f"{prefix}_vec", n_planes, n_tables, seed, dim=dim
-            ),
-            f"{prefix}_id {id_type}, table_id int, bucket bigint",
-        )
+    Arrow, not SQL (round-11 optimization): n_tables × n_planes
+    interpreted zip_with/aggregate dots per vector measured ~1.5 s per
+    bucketized side at sf0.1 for 12×5 (the HOF lambdas are
+    CodegenFallback); the NumPy kernel keeps every bucket id, and the
+    hyperplane tensor is regenerated in-task from the same seeded
+    RandomState the SQL-literal oracles embed."""
+    fields = nv.schema.fields if keep_vec else nv.schema.fields[:1]
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+    return nv.mapInArrow(
+        _lsh_bucketizer(nv.columns[1], n_planes, n_tables, seed, dim, keep_vec),
+        f"{cols}, table_id int, bucket bigint",
+    )
 
-    def attach(df: DataFrame, prefix: str) -> DataFrame:
-        # One deterministic (vector, norm) per id for the re-attach join:
-        # min-by-vector mirrors the min-per-id reduction the LSH oracles
-        # already pin (an id duplicated by a regeneration re-attaches ONE
-        # vector, exactly like the old carry-through-dedupe plan kept one
-        # arbitrary — here deterministic — pair row).
-        one = df.groupBy(F.col(id_col).alias(f"{prefix}_id")).agg(
-            F.min(vec_col).alias(f"{prefix}_vec")
-        )
-        return one.select(
-            f"{prefix}_id",
-            f"{prefix}_vec",
-            l2_norm(f"{prefix}_vec").alias(f"{prefix}_norm"),
-        )
 
-    q = bucketize(queries, "query")
-    c = bucketize(corpus, "neighbor")
-    # Self-join (dedup) mode: keep only the ordered half of each pair
-    # BEFORE the dedupe shuffle and the cosine dot — halves both, and the
-    # unordered pair is what a dedup stage consumes anyway.
-    pair_filter = (
-        F.col("query_id") < F.col("neighbor_id")
-        if self_pairs
-        else F.col("query_id") != F.col("neighbor_id")
-    )
-    cand = (
-        q.join(c, ["table_id", "bucket"])
-        .where(pair_filter)
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.join(attach(queries, "query"), "query_id").join(
-        attach(corpus, "neighbor"), "neighbor_id"
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        _cosine_from_norms(
-            F.col("query_vec"), F.col("neighbor_vec"), F.col("query_norm"), F.col("neighbor_norm")
-        ).alias("cosine"),
-    )
+def grouped_cosine_pairs(
+    df: DataFrame,
+    group: Column,
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    meta_col: str | None = None,
+) -> DataFrame:
+    """Every unordered pair of rows that share ``group``, with id_a <
+    id_b, a non-NULL cosine and stable_round(cosine, 4) >= threshold, as
+    (id_a, id_b, raw cosine[, meta_col]). Each group is one diagonal
+    _block_kernel group (``_bi`` = ``_bj`` = the group), so the cost is
+    Σ|group|², never |df|². A pair that shares several groups comes once
+    per group; ``meta_col`` (the group's own column, say) rides along
+    from the pair's rows."""
+    keys = [group.alias("_bi"), group.alias("_bj")]
+    u = _tagged_sides(df, None, id_col, vec_col, keys, keys, meta_col=meta_col)
+    return _score_groups(u, ["_bi", "_bj"], threshold=threshold, meta_col=meta_col)
 
 
 def blocked_cosine_pairs(
@@ -821,6 +784,4 @@ def blocked_cosine_pairs(
         [block.alias("_bi"), F.explode(F.sequence(block, F.lit(blocks - 1))).alias("_bj")],
         [F.explode(F.sequence(F.lit(0), block)).alias("_bi"), block.alias("_bj")],
     )
-    return u.groupBy("_bi", "_bj").applyInArrow(
-        _block_kernel(threshold=threshold), "id_a long, id_b long, cosine double"
-    )
+    return _score_groups(u, ["_bi", "_bj"], threshold=threshold)

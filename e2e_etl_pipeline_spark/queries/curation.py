@@ -20,11 +20,11 @@ from pyspark.sql import functions as F
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
-from e2e_etl_pipeline_spark.functions.vectors import dot
 from e2e_etl_pipeline_spark.operators import dedup as dd
 from e2e_etl_pipeline_spark.operators import similarity as sim
 from e2e_etl_pipeline_spark.operators.ranks import distributed_rank
 from e2e_etl_pipeline_spark.queries.llm import JACCARD_PAIRS_CTE, word_jaccard_pairs
+from e2e_etl_pipeline_spark.queries.ml import SEED_ASSIGN_SQL, assign_to_seeds
 from e2e_etl_pipeline_spark.registry import register
 
 
@@ -119,7 +119,6 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-K_SEEDS = 8  # mirrors queries/ml.py's q_kmeans_step seeding
 SEMDEDUP_TAU = 0.4  # near-orthogonal synthetic corpus: same τ as q_dedup_embedding
 
 
@@ -149,25 +148,7 @@ SEMDEDUP_CTE = f"""emb0 AS (
     emb AS (
       SELECT vec_id, embedding FROM emb0, dim WHERE len(embedding) = dim.d
     ),
-    seeds AS (
-      SELECT vec_id AS cid, embedding AS cv
-      FROM emb WHERE vec_id < {K_SEEDS}
-    ),
-    dists AS (
-      SELECT e.vec_id, s.cid,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))))
-               AS sq
-      FROM emb e CROSS JOIN seeds s
-    ),
-    assigned AS (
-      SELECT vec_id, cid
-      FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY sq NULLS LAST, cid) AS rn
-            FROM dists)
-      WHERE rn = 1
-    ),
+    {SEED_ASSIGN_SQL},
     v AS (
       SELECT a.cid, e.vec_id, e.embedding,
              sqrt(list_sum(list_transform(e.embedding,
@@ -188,9 +169,8 @@ SEMDEDUP_CTE = f"""emb0 AS (
 
 def _semdedup_v_and_victims(spark: SparkSession, sf_dir: str):
     """Spark twin of SEMDEDUP_CTE: (v, victim_pairs) — the cleaned
-    cluster-assigned corpus (cid, vec_id, embedding, nrm; materialized
-    once via lazy localCheckpoint for its multiple consumers) and the
-    distinct (cid, victim) above-τ pairs."""
+    cluster-assigned corpus (cid, vec_id, embedding; persisted for its
+    several consumers) and the distinct (cid, victim) above-τ pairs."""
     # NULL-element guard mirroring the oracle's emb0 CTE (zip_with
     # NULL-propagates vs list_sum NULL-skips — round-7 review), then the
     # shared modal-dimension gate mirroring the dim CTE (round-7 advice:
@@ -202,62 +182,26 @@ def _semdedup_v_and_victims(spark: SparkSession, sf_dir: str):
         & ~F.exists("embedding", lambda x: x.isNull())
     )
     em = sim.filter_modal_dim(em0).select("vec_id", "embedding")
-    seeds = em.where(F.col("vec_id") < K_SEEDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    diff_sq = F.zip_with(
-        F.col("embedding"),
-        F.col("cv"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    dists = em.crossJoin(F.broadcast(seeds)).select(
-        "vec_id",
-        "cid",
-        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("sq"),
-    )
-    # NULLS LAST pins the (out-of-contract but possible) NULL-sq order to
-    # the oracle's ORDER BY sq NULLS LAST (family-wide pinning rule).
-    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("sq"), "cid")
-    assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    # One corpus-sized relation feeds multiple consumers (both self-join
+    # One corpus-sized relation feeds multiple consumers (both kernel
     # sides and the per-cluster totals); uncached, Spark re-runs the
-    # k×corpus assignment subtree per consumer (three corpus scans at
-    # 100 TB). persist(), not localCheckpoint: under AQE even a LAZY
-    # checkpoint materializes the upstream stages at .rdd-conversion time
-    # (round-8 find — construction triggered 5 jobs), while persist()
+    # k×corpus assignment subtree per consumer (an A/B measured the plain
+    # plan ~2× slower). persist(), not localCheckpoint: under AQE even a
+    # LAZY checkpoint materializes the upstream stages at .rdd-conversion
+    # time (round-8 find — construction triggered 5 jobs), while persist()
     # builds the same materialize-once InMemoryRelation with zero
     # construction jobs. v is deterministic under any partitioning (no
     # sampled boundaries), so cache-recompute divergence — the one hazard
     # checkpointing guards that persist doesn't — cannot occur here.
     v = (
-        sim.with_vector_norm(assigned.join(em, "vec_id"))
-        .select("cid", "vec_id", "embedding", F.col("norm").alias("nrm"))
+        assign_to_seeds(em)
+        .join(em, "vec_id")
+        .select("cid", "vec_id", "embedding")
         .persist()
     )
-    a = v.select(
-        F.col("cid"),
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = v.select(
-        F.col("cid").alias("cid_b"),
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos4 = stable_round(dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
+    # Each cluster is one kernel group; the victim's cid is its group's,
+    # carried through the kernel rather than joined back by id.
     victim_pairs = (
-        a.join(
-            b,
-            (F.col("cid") == F.col("cid_b")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .where((F.col("na") > 0) & (F.col("nb") > 0) & (cos4 >= SEMDEDUP_TAU))
+        sim.grouped_cosine_pairs(v, F.col("cid"), SEMDEDUP_TAU, meta_col="cid")
         .select("cid", F.col("id_b").alias("victim"))
         .distinct()
     )
@@ -292,14 +236,16 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine exactness: cosines compare on the stable-rounded (4dp)
     value with identical left-to-right summation order in both engines
     (functions/rounding.py); zero-norm vectors never match anything
-    (nrm > 0 guards both sides); counts are integers.
+    (the kernel's NULL cosine drops them); counts are integers.
 
     Scale: the k-centroid assignment broadcasts K rows (no corpus
-    shuffle); the within-cluster self-join shuffles each vector once on
-    cluster id. Cluster population is corpus/K — in production K scales
-    with the corpus (SemDeDup uses ~10^5 clusters for 10^9 docs) keeping
-    per-cluster pair counts bounded; the pairwise stage inside a cluster
-    is then Σ|C|², not |corpus|²."""
+    shuffle); each cluster is one grouped_cosine_pairs group, so the pair
+    stage shuffles each vector twice (once per kernel side) on cluster id
+    and scores the cluster as one NumPy block. Cluster population is
+    corpus/K — in production K scales with the corpus (SemDeDup uses
+    ~10^5 clusters for 10^9 docs) keeping per-cluster pair counts
+    bounded; the pairwise stage inside a cluster is then Σ|C|², not
+    |corpus|²."""
     v, victim_pairs = _semdedup_v_and_victims(spark, sf_dir)
     dropped = victim_pairs.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_dropped")
@@ -484,7 +430,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dup_cluster_sizes bound).
 
     Scale: quality is scan-stage math; exact dedup shuffles the 8-byte
-    digest; the semantic stage is the SemDeDup cluster-keyed pair join
+    digest; the semantic stage is the SemDeDup cluster-grouped kernel
     (Σ|cluster|², never corpus²) with victims broadcast back against the
     funnel (|victims| << corpus). The funnel aggregate is one grouped
     pass over flags — no stage re-reads the corpus."""

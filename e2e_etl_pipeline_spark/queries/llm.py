@@ -796,13 +796,11 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment; a non-64 corpus goes empty identically on both sides), and
     inputs reduced to one deterministic embedding per id (lexicographic
     min, mirroring the oracle's min-per-id GROUP BY — see
-    _lsh_oracle_prefix). The modal-dim-gated general path stays exercised
-    by the bound twin's exact ground truth."""
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.size("embedding") == _LSH_DIM)
-        .groupBy("vec_id")
-        .agg(F.min("embedding").alias("embedding"))
+    _lsh_oracle_prefix; lsh_cosine_pairs owns that reduction). The
+    modal-dim-gated general path stays exercised by the bound twin's
+    exact ground truth."""
+    em = load_table(spark, sf_dir, "embeddings").where(
+        F.size("embedding") == _LSH_DIM
     )
     return sim.lsh_cosine_pairs(
         em, threshold=0.4, dim=_LSH_DIM, n_planes=5, n_tables=12
@@ -1106,9 +1104,10 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     → top-10 rank) restates in pure SQL. Inputs reduce to one
     deterministic embedding per id (lexicographic min — the id→embedding
     mapping must be a FUNCTION on both sides, _lsh_oracle_prefix block
-    comment) and drop NULL ids on BOTH sides: a NULL id can never reach
-    the output (the pair filter drops it), but inside the plan it would
-    force cross-engine NULL-group/NULLS-FIRST analysis for nothing.
+    comment; ivf_topk owns that reduction) and drop NULL ids on BOTH
+    sides: a NULL id can never reach the output (the pair filter drops
+    it), but inside the plan it would force cross-engine
+    NULL-group/NULLS-FIRST analysis for nothing.
 
     ORDER MATTERS (review find, round 9): the modal gate runs on the RAW
     table BEFORE the NULL-id drop and the per-id reduction, because the
@@ -1116,11 +1115,6 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     modal dimension over post-filter rows could pick a different winner
     when duplicated or NULL-id rows skew the per-length counts."""
     em = sim.filter_modal_dim(load_table(spark, sf_dir, "embeddings"))
-    em = (
-        em.where(F.col("vec_id").isNotNull())
-        .groupBy("vec_id")
-        .agg(F.min("embedding").alias("embedding"))
-    )
     queries = em.where(F.col("vec_id") < 20)
     return sim.ivf_topk(em, queries, k=10, n_centroids=16, n_probe=2)
 

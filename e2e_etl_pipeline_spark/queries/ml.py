@@ -27,6 +27,58 @@ from e2e_etl_pipeline_spark.registry import register
 
 K_SEEDS = 8
 
+# The seed-assignment CTEs over a relation named ``emb`` (vec_id,
+# embedding): the first K_SEEDS vectors by id are the seeds, and each
+# vector takes its nearest (squared L2, seed-id tiebreak) — the SQL twin
+# of assign_to_seeds, shared by q_kmeans_step and the SemDeDup chain.
+SEED_ASSIGN_SQL = f"""seeds AS (
+      SELECT vec_id AS cid, embedding AS cv
+      FROM emb WHERE vec_id < {K_SEEDS}
+    ),
+    dists AS (
+      SELECT e.vec_id, s.cid,
+             list_sum(list_transform(range(1, len(e.embedding) + 1),
+               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
+                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))))
+               AS sq
+      FROM emb e CROSS JOIN seeds s
+    ),
+    assigned AS (
+      SELECT vec_id, cid
+      FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
+                                         ORDER BY sq NULLS LAST, cid) AS rn
+            FROM dists)
+      WHERE rn = 1
+    )"""
+
+
+def assign_to_seeds(em: DataFrame) -> DataFrame:
+    """(vec_id, cid): each vector of ``em`` (vec_id, embedding) with its
+    nearest seed, the seeds being the first K_SEEDS vectors by id —
+    SEED_ASSIGN_SQL's twin. The k seed rows broadcast against the corpus
+    (no corpus shuffle for assignment). NULLS LAST pins a NULL distance
+    to the oracle's order."""
+    seeds = em.where(F.col("vec_id") < K_SEEDS).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    )
+    diff_sq = F.zip_with(
+        F.col("embedding"),
+        F.col("cv"),
+        lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double")),
+    )
+    dists = em.crossJoin(F.broadcast(seeds)).select(
+        "vec_id",
+        "cid",
+        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("sq"),
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("sq"), "cid")
+    return (
+        dists.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("vec_id", "cid")
+    )
+
 
 @register(
     "q_embedding_centroids",
@@ -66,25 +118,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, embedding FROM embeddings
       WHERE len(embedding) = (SELECT d FROM __dim)
     ),
-    seeds AS (
-      SELECT vec_id AS cid, embedding AS cv
-      FROM emb WHERE vec_id < {K_SEEDS}
-    ),
-    dists AS (
-      SELECT e.vec_id, s.cid,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))))
-               AS sq
-      FROM emb e CROSS JOIN seeds s
-    ),
-    assigned AS (
-      SELECT vec_id, cid
-      FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY sq, cid) AS rn
-            FROM dists)
-      WHERE rn = 1
-    ),
+    {SEED_ASSIGN_SQL},
     members AS (SELECT cid, count(*) AS n_members FROM assigned GROUP BY cid),
     cells AS (
       SELECT a.cid,
@@ -113,26 +147,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Modal-dimension gate on both sides (similarity.filter_modal_dim):
     ragged vectors are excluded, not silently zip-diverged."""
     em = sim.filter_modal_dim(load_table(spark, sf_dir, "embeddings"))
-    seeds = em.where(F.col("vec_id") < K_SEEDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    diff_sq = F.zip_with(
-        F.col("embedding"),
-        F.col("cv"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    dists = em.crossJoin(F.broadcast(seeds)).select(
-        "vec_id",
-        "cid",
-        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("sq"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("sq"), "cid")
-    assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    assigned = assign_to_seeds(em)
     members = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
     cells = assigned.join(em, "vec_id").select(
         "cid", F.posexplode("embedding").alias("pos", "v")

@@ -56,3 +56,24 @@ def test_record_counts_the_executed_plan(spark, sf_dir, tmp_path):
     assert reused > 0
     assert rec["spark.plan.reused_exchanges"] == reused
     assert rec["queries.construct_jobs"] == 0
+
+
+def test_held_stages_drops_stages_the_store_evicted():
+    """Past spark.ui.retainedStages the status store evicts SKIPPED stages
+    first, even those of the job just run; the sweep must read only the
+    stages still held, or SparkStats.stage_totals fails on the rest."""
+    perf_sweep = _load_perf_sweep()
+
+    class Tracker:
+        def getStageInfo(self, sid):
+            return None if sid == 7 else object()
+
+    class Context:
+        def statusTracker(self):
+            return Tracker()
+
+    jobs = [{"stageIds": [6, 7, 8]}, {"stageIds": [7]}]
+    assert perf_sweep.held_stages(Context(), jobs) == [
+        {"stageIds": [6, 8]},
+        {"stageIds": []},
+    ]

@@ -5,6 +5,8 @@ global sort, and the hot expression paths stay inside whole-stage codegen.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.registry import QUERIES, load_all
@@ -606,21 +608,31 @@ def test_token_shards_no_single_partition(spark, sf_dir):
 
 
 def test_lsh_candidates_are_bucket_equi_join(spark, sf_dir):
-    """The LSH candidate stage must be an equi-join on (table_id, bucket) —
-    never an all-pairs product. The ONLY nested-loop join allowed is the
-    1-row hyperplane-tensor broadcast (planes ride as data, not as a
-    12k-node literal expression tree — see operators/similarity.py,
-    round-7 profile). A second BroadcastNestedLoopJoin or any
-    CartesianProduct means the bucket key fell out of the join."""
+    """The LSH candidate stage must be keyed on (table_id, bucket) —
+    never an all-pairs product. q_similarity_lsh equi-joins bucket ids on
+    it; q_dedup_embedding groups on it, each (table, bucket) one
+    _block_kernel group. The ONLY nested-loop join allowed is the 1-row
+    hyperplane-tensor broadcast (planes ride as data, not as a 12k-node
+    literal expression tree — see operators/similarity.py, round-7
+    profile). A second BroadcastNestedLoopJoin or any CartesianProduct
+    means the bucket key fell out of the candidate stage."""
     for key in ("q_dedup_embedding", "q_similarity_lsh"):
         plan = _formatted(spark, key, sf_dir)
         assert "CartesianProduct" not in plan, key
         # one planes broadcast per bucketized side, nothing more (formatted
         # explain prints each operator twice: tree + details section)
         assert plan.count("BroadcastNestedLoopJoin") <= 4, key
-        joins = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") + plan.count("BroadcastHashJoin")
-        assert joins >= 1, f"{key}: bucket equi-join missing"
         assert "table_id" in plan and "bucket" in plan, key
+    plan = _formatted(spark, "q_similarity_lsh", sf_dir)
+    joins = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") + plan.count("BroadcastHashJoin")
+    assert joins >= 1, "q_similarity_lsh: bucket equi-join missing"
+    plan = _formatted(spark, "q_dedup_embedding", sf_dir)
+    bucket_key = re.search(
+        r"struct\(table_id, table_id#\d+, bucket, bucket#\d+L?\) AS _bi#", plan
+    )
+    assert bucket_key and "FlatMapGroupsInArrow" in plan, (
+        "q_dedup_embedding: kernel groups are not keyed on (table_id, bucket)"
+    )
 
 
 def test_readability_is_shuffle_free_scan(spark, sf_dir):
@@ -633,16 +645,13 @@ def test_readability_is_shuffle_free_scan(spark, sf_dir):
 
 
 def test_semdedup_pairs_join_on_cluster_not_cross(spark, sf_dir):
-    """SemDeDup's pairwise stage must equi-join on the cluster id — the
+    """SemDeDup's pairwise stage must be keyed on the cluster id — the
     clustering is what keeps semantic dedup sub-quadratic, so a
-    CartesianProduct here means the cluster key fell out of the join. The
-    only nested-loop join allowed is the K-centroid broadcast used by the
+    CartesianProduct here means the cluster key fell out of it. Each
+    cluster is one _block_kernel group (``_bi`` = ``_bj`` = cid). The only
+    nested-loop join allowed is the K-centroid broadcast used by the
     assignment step."""
     plan = _formatted(spark, "q_semdedup_prune", sf_dir)
     assert "CartesianProduct" not in plan
-    joins = (
-        plan.count("SortMergeJoin")
-        + plan.count("ShuffledHashJoin")
-        + plan.count("BroadcastHashJoin")
-    )
-    assert joins >= 1, "cluster-keyed pair join missing"
+    assert "FlatMapGroupsInArrow" in plan
+    assert re.search(r"cid#\d+L? AS _bi#", plan), "cluster-keyed kernel groups missing"

@@ -6,8 +6,10 @@ NumPy loops that accumulate dimension by dimension in the same
 left-to-right IEEE-754 order — these tests pin that each replacement is
 BIT-identical to the expression form it replaced. Those expression
 forms live here as the executable specs (brute_force_topk_expr,
-_planes_frame_lazy, _tables_expr, _hof_pairs); the shipped package keeps
-only the kernels.
+_planes_frame_lazy, _tables_expr, _hof_pairs, and the three grouped
+scorers the kernel absorbed: lsh_cosine_pairs_expr,
+semdedup_victims_expr, ivf_topk_expr); the shipped package keeps only
+the kernels.
 """
 
 from __future__ import annotations
@@ -15,12 +17,12 @@ from __future__ import annotations
 import struct
 
 import pytest
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
-from e2e_etl_pipeline_spark.functions.vectors import dot
+from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
 from e2e_etl_pipeline_spark.operators import similarity as sim
 
 
@@ -51,16 +53,16 @@ def brute_force_topk_expr(
     (SQL equality). The matched value is emitted under the same name."""
     extra_q = [F.col(match_on).alias("_q_meta")] if match_on else []
     extra_c = [F.col(match_on).alias(match_on)] if match_on else []
-    q = sim.with_vector_norm(queries, vec_col).select(
+    q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        F.col("norm").alias("q_norm"),
+        l2_norm(vec_col).alias("q_norm"),
         *extra_q,
     )
-    c = sim.with_vector_norm(corpus, vec_col).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        F.col("norm").alias("c_norm"),
+        l2_norm(vec_col).alias("c_norm"),
         *extra_c,
     )
     cond = F.col("query_id") != F.col("neighbor_id")
@@ -141,15 +143,15 @@ def em(spark, sf_dir):
 
 
 def _hof_pairs(em, threshold: float):
-    a = sim.with_vector_norm(em).select(
+    a = em.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
+        l2_norm("embedding").alias("na"),
     )
-    b = sim.with_vector_norm(em).select(
+    b = em.select(
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
+        l2_norm("embedding").alias("nb"),
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -161,6 +163,164 @@ def _hof_pairs(em, threshold: float):
         )
         .where(stable_round(F.col("cosine"), 4) >= threshold)
     )
+
+
+def lsh_cosine_pairs_expr(
+    corpus: DataFrame,
+    threshold: float,
+    dim: int | None = None,
+    n_planes: int = 5,
+    n_tables: int = 12,
+    seed: int = 42,
+) -> DataFrame:
+    """Attach-and-fold spec for sim.lsh_cosine_pairs, as the operator
+    shipped before it moved onto the kernel: self-join the bucket ids on
+    (table, bucket), keep id_a < id_b once, re-attach one (min) vector
+    and its norm per id, fold the cosine, threshold the rounded value."""
+
+    def bucketize(prefix: str) -> DataFrame:
+        nv = corpus.select(
+            F.col("vec_id").alias(f"{prefix}_id"),
+            F.col("embedding").alias(f"{prefix}_vec"),
+        )
+        return sim._bucketize(nv, n_planes, n_tables, seed, dim)
+
+    def attach(prefix: str) -> DataFrame:
+        one = corpus.groupBy(F.col("vec_id").alias(f"{prefix}_id")).agg(
+            F.min("embedding").alias(f"{prefix}_vec")
+        )
+        return one.select(
+            f"{prefix}_id",
+            f"{prefix}_vec",
+            l2_norm(f"{prefix}_vec").alias(f"{prefix}_norm"),
+        )
+
+    cand = (
+        bucketize("query")
+        .join(bucketize("neighbor"), ["table_id", "bucket"])
+        .where(F.col("query_id") < F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    scored = cand.join(attach("query"), "query_id").join(
+        attach("neighbor"), "neighbor_id"
+    ).select(
+        "query_id",
+        "neighbor_id",
+        sim._cosine_from_norms(
+            F.col("query_vec"), F.col("neighbor_vec"),
+            F.col("query_norm"), F.col("neighbor_norm"),
+        ).alias("cosine"),
+    )
+    rounded = stable_round(F.col("cosine"), 4)
+    return scored.where(rounded >= threshold).select(
+        F.col("query_id").alias("id_a"),
+        F.col("neighbor_id").alias("id_b"),
+        rounded.alias("cosine"),
+    )
+
+
+def semdedup_victims_expr(v: DataFrame, tau: float) -> DataFrame:
+    """Self-join spec for SemDeDup's victims over ``v`` (cid, vec_id,
+    embedding): every vector whose stable-rounded cosine to a lower-id
+    vector of its cluster reaches tau, as distinct (cid, victim)."""
+    n = v.select("cid", "vec_id", "embedding", l2_norm("embedding").alias("nrm"))
+    a = n.select(
+        "cid",
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        F.col("nrm").alias("na"),
+    )
+    b = n.select(
+        F.col("cid").alias("cid_b"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        F.col("nrm").alias("nb"),
+    )
+    cos4 = stable_round(dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
+    return (
+        a.join(
+            b, (F.col("cid") == F.col("cid_b")) & (F.col("id_a") < F.col("id_b"))
+        )
+        .where((F.col("na") > 0) & (F.col("nb") > 0) & (cos4 >= tau))
+        .select("cid", F.col("id_b").alias("victim"))
+        .distinct()
+    )
+
+
+def ivf_topk_expr(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_centroids: int = 16,
+    n_probe: int = 2,
+) -> DataFrame:
+    """Join-and-fold spec for sim.ivf_topk, as the operator shipped before
+    it moved onto the kernel: norm columns, a max_by argmax for the
+    corpus and a window for the probes, a candidate equi-join on
+    centroid_id, dropDuplicates and the cosine fold. Callers pass inputs
+    already reduced to one vector per non-NULL id."""
+    cents = F.broadcast(
+        corpus.orderBy(F.asc_nulls_last("vec_id"), F.asc("embedding"))
+        .limit(n_centroids)
+        .select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("embedding").alias("cent_vec"),
+        )
+    )
+
+    def assign(df: DataFrame, prefix: str, probes: int) -> DataFrame:
+        scored = (
+            df.select(
+                F.col("vec_id").alias(f"{prefix}_id"),
+                F.col("embedding").alias(f"{prefix}_vec"),
+                l2_norm("embedding").alias(f"{prefix}_norm"),
+            )
+            .join(cents)
+            .select(
+                f"{prefix}_id",
+                f"{prefix}_vec",
+                f"{prefix}_norm",
+                "centroid_id",
+                dot(F.col(f"{prefix}_vec"), F.col("cent_vec")).alias("cscore"),
+            )
+        )
+        if probes == 1:
+            return scored.groupBy(f"{prefix}_id").agg(
+                F.max_by(
+                    "centroid_id",
+                    F.struct(F.col("cscore"), (-F.col("centroid_id")).alias("nid")),
+                ).alias("centroid_id"),
+                F.first(f"{prefix}_vec").alias(f"{prefix}_vec"),
+                F.first(f"{prefix}_norm").alias(f"{prefix}_norm"),
+            )
+        w = Window.partitionBy(f"{prefix}_id").orderBy(
+            F.desc("cscore"), F.asc_nulls_last("centroid_id")
+        )
+        return (
+            scored.withColumn("_r", F.row_number().over(w))
+            .where(F.col("_r") <= probes)
+            .drop("_r", "cscore")
+        )
+
+    scored = (
+        assign(queries, "query", n_probe)
+        .join(assign(corpus, "neighbor", 1), "centroid_id")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .select(
+            "query_id",
+            "neighbor_id",
+            sim._cosine_from_norms(
+                F.col("query_vec"), F.col("neighbor_vec"),
+                F.col("query_norm"), F.col("neighbor_norm"),
+            ).alias("cosine"),
+        )
+    )
+    return sim._rank_topk(scored, k)
+
+
+def _min_per_id(df: DataFrame) -> DataFrame:
+    return df.groupBy("vec_id").agg(F.min("embedding").alias("embedding"))
 
 
 @pytest.mark.parametrize("threshold", [0.4, 0.0])
@@ -399,3 +559,123 @@ def test_brute_force_topk_empty_sides(edge_corpus):
     empty = edge_corpus.where(F.lit(False))
     assert sim.brute_force_topk(empty, edge_corpus, k=3).count() == 0
     assert sim.brute_force_topk(edge_corpus, empty, k=3).count() == 0
+
+
+@pytest.fixture(scope="module")
+def edge_dup(spark, edge_corpus):
+    """edge_corpus plus a second, lexicographically smaller vector for id
+    1 (and another label): the duplicated-id shape whose min decides."""
+    extra = spark.createDataFrame(
+        [(1, [-2.0, 1.0], 2)], "vec_id long, embedding array<float>, label long"
+    )
+    return edge_corpus.unionByName(extra)
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.0, 0.4])
+def test_lsh_cosine_pairs_edge_parity(edge_dup, threshold):
+    """The kernel path returns the attach-and-fold spec's rows on the
+    min-reduced corpus, bit for bit: NULL vectors and elements, a ragged
+    length, NaN, zero norms, NULL ids and duplicated ids included."""
+    kw = dict(dim=2, n_planes=1, n_tables=3)
+    ref = sorted(
+        (r.id_a, r.id_b, _bits(r.cosine))
+        for r in lsh_cosine_pairs_expr(
+            _min_per_id(edge_dup), threshold, **kw
+        ).collect()
+    )
+    got = sorted(
+        (r.id_a, r.id_b, _bits(r.cosine))
+        for r in sim.lsh_cosine_pairs(edge_dup, threshold, **kw).collect()
+    )
+    assert got == ref
+    assert got
+
+
+@pytest.mark.parametrize("tau", [0.0, 0.1])
+def test_semdedup_victims_edge_parity(edge_dup, tau):
+    """grouped_cosine_pairs in SemDeDup's shape (group = cid, the cid
+    carried through the kernel) returns the self-join spec's victims,
+    per row: duplicated ids keep their multiplicity, a NULL cid pairs
+    with nothing, and int64 cids past 2^53 stay apart."""
+    v = edge_dup.select(F.col("label").alias("cid"), "vec_id", "embedding")
+    ref = sorted(semdedup_victims_expr(v, tau).collect())
+    got = sorted(
+        sim.grouped_cosine_pairs(v, F.col("cid"), tau, meta_col="cid")
+        .select("cid", F.col("id_b").alias("victim"))
+        .distinct()
+        .collect()
+    )
+    assert got == ref
+    assert got
+
+
+def test_semdedup_victims_match_self_join_on_corpus(spark, sf_dir):
+    from e2e_etl_pipeline_spark.queries import curation
+
+    v, victims = curation._semdedup_v_and_victims(spark, sf_dir)
+    try:
+        ref = sorted(semdedup_victims_expr(v, curation.SEMDEDUP_TAU).collect())
+        assert sorted(victims.collect()) == ref
+        assert ref
+    finally:
+        v.unpersist()
+
+
+@pytest.mark.parametrize("k", [2, 10])
+def test_ivf_topk_edge_parity(edge_dup, k):
+    """The kernel path returns the join-and-fold spec's rows on the
+    reduced inputs: same neighbors, bit-identical cosines, same ranks."""
+    q = edge_dup.where(F.col("vec_id") < 6)
+    one = _min_per_id(edge_dup.where(F.col("vec_id").isNotNull()))
+    ref = _topk_key(
+        ivf_topk_expr(
+            one, one.where(F.col("vec_id") < 6), k=k, n_centroids=3
+        ).collect()
+    )
+    got = _topk_key(sim.ivf_topk(edge_dup, q, k=k, n_centroids=3).collect())
+    assert ref == got
+    assert got
+
+
+def test_ivf_topk_matches_join_and_fold_on_corpus(em):
+    one = _min_per_id(em)
+    queries = one.where(F.col("vec_id") < 20)
+    ref = _topk_key(ivf_topk_expr(one, queries, k=10).collect())
+    got = _topk_key(sim.ivf_topk(em, em.where(F.col("vec_id") < 20), k=10).collect())
+    assert ref == got
+
+
+def test_duplicated_id_operators_equal_min_reduced_corpus(spark):
+    """lsh_cosine_pairs and ivf_topk take one vector per id, the
+    lexicographic min. Id 1 carries -a and a, where a is the hyperplane's
+    normal with a positive first element; id 2 carries a. Only the
+    non-min vector of id 1 shares id 2's bucket, so bucketing every row
+    would pair (1, 2) and score it with -a (cosine -1)."""
+    import numpy as np
+
+    p = sim._hyperplanes(2, 1, 1, seed=42)[0, 0]
+    a = [float(x) for x in (p if p[0] > 0 else -p)]
+    neg = [-x for x in a]
+    dup = spark.createDataFrame(
+        [(1, neg), (1, a), (2, a), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    one = _min_per_id(dup)
+    assert np.sign(np.dot(neg, p)) != np.sign(np.dot(a, p))
+
+    def pairs(df):
+        return sorted(
+            sim.lsh_cosine_pairs(
+                df, -1.0, dim=2, n_planes=1, n_tables=1
+            ).collect()
+        )
+
+    assert pairs(dup) == pairs(one)
+    assert all((r.id_a, r.id_b) != (1, 2) for r in pairs(dup))
+
+    def topk(df):
+        return _topk_key(
+            sim.ivf_topk(df, df, k=3, n_centroids=2, n_probe=1).collect()
+        )
+
+    assert topk(dup) == topk(one)

@@ -95,6 +95,18 @@ def plan_shape(stats: SparkStats, eids) -> Counter:
     return out
 
 
+def held_stages(sc, jobs: list[dict]) -> list[dict]:
+    """``jobs`` with their stage ids cut to the stages the status store
+    still holds. Once a session passes spark.ui.retainedStages, each
+    cleanup evicts SKIPPED stages first, the current job's included, and
+    SparkStats.stage_totals would fail reading them; a skipped stage adds
+    nothing to its totals anyway."""
+    tracker = sc.statusTracker()
+    for job in jobs:
+        job["stageIds"] = [s for s in job["stageIds"] if tracker.getStageInfo(s) is not None]
+    return jobs
+
+
 def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -> tuple[dict, str]:
     """(record, executed-plan text of the last timed run) for one key."""
     sc = spark.sparkContext
@@ -125,7 +137,7 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
     # The clock has stopped: read the last timed run's layers.
     stats.drain()
     layer = Counter(dict.fromkeys(FIELDS, 0))
-    layer.update(stats.stage_totals(stats.jobs(f"sweep/{key}/run")))
+    layer.update(stats.stage_totals(held_stages(sc, stats.jobs(f"sweep/{key}/run"))))
     first = stats.last_execution
     layer.update(stats.new_plans())
     layer.update(plan_shape(stats, range(first + 1, stats.last_execution + 1)))
