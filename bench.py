@@ -103,10 +103,11 @@ def main() -> int:
             fn = QUERIES.get(key)
             if fn is None:
                 continue
-            # Warm this query immediately before timing it: pays JVM startup
-            # and whole-stage-codegen compilation (one-time costs, irrelevant
-            # to steady-state throughput) without risking codegen-cache
-            # eviction by the other benchmark queries.
+            # Warm this query immediately before timing it: pays JVM start-up
+            # and first-use costs (one-time, irrelevant to steady-state
+            # throughput). The session's codegen cache holds every headline
+            # class, so this no longer guards against codegen-cache eviction;
+            # it stays so the timed window is unchanged.
             fn(spark, data_dir).write.format("noop").mode("overwrite").save()
             # Best of two timed runs: a single sample is hostage to scheduler
             # noise (a one-run outlier produced round 2's phantom 2.3×

@@ -1,6 +1,7 @@
 """tools/perf_sweep.py: a key's record counts what its executed plan file
-shows, and an isolated child that dies surfaces as an error, never as the
-numbers an earlier child left in its output file."""
+shows and the classes its timed run compiled, and an isolated child that
+dies surfaces as an error, never as the numbers an earlier child left in its
+output file."""
 
 from __future__ import annotations
 
@@ -56,6 +57,20 @@ def test_record_counts_the_executed_plan(spark, sf_dir, tmp_path):
     assert reused > 0
     assert rec["spark.plan.reused_exchanges"] == reused
     assert rec["queries.construct_jobs"] == 0
+
+
+def test_warmed_key_compiles_no_generated_classes(spark, sf_dir, tmp_path):
+    """The sweep's timed run follows a warm-up run of the same key, so every
+    generated class is a codegen cache hit: the record counts 0 Janino
+    compilations."""
+    from e2e_etl_pipeline_spark.registry import load_all
+
+    perf_sweep = _load_perf_sweep()
+    load_all()
+    key = "q_join_star"
+    rec = perf_sweep.sweep(spark, [key], sf_dir, 1, str(tmp_path / "sweep.json"))[key]
+    assert rec["codegen.compilations"] == 0, rec
+    assert rec["jvm.jit_s"] >= 0
 
 
 def test_held_stages_drops_stages_the_store_evicted():

@@ -15,7 +15,10 @@ readers (perfbench/layers.py):
   spark.exec.*, spark.shuffle.*, spark.spill_bytes, spark.scan.*,
   spark.python.*       the status store's numbers for the last timed run;
   spark.plan.*         the shape of that run's executed (AQE-final) plan
-                       (plans, if its construction started SQL executions).
+                       (plans, if its construction started SQL executions);
+  codegen.compilations generated classes Janino compiled during that run
+                       (codegen cache misses; 0 once the key is warm);
+  jvm.jit_s            JIT compile seconds the JVM spent during that run.
 The executed-plan text of that run goes beside the JSON output, as
 ``<out stem>.<key>.plan.txt``.
 
@@ -64,6 +67,7 @@ FIELDS = (
     "spark.python.bytes_received", "spark.python.run_s",
     "spark.plan.python_nodes", "spark.plan.py_eval", "spark.plan.map_in_py",
     "spark.plan.single_partition", *PLAN_NODES.values(), *EXTRA_NODES.values(),
+    "codegen.compilations", "jvm.jit_s",
 )
 
 
@@ -95,6 +99,18 @@ def plan_shape(stats: SparkStats, eids) -> Counter:
     return out
 
 
+def compile_counters(spark) -> Counter:
+    """The JVM's compile layer so far: Janino compilations of generated
+    classes, and JIT compile seconds."""
+    jvm = spark._jvm  # noqa: SLF001
+    return Counter({
+        "codegen.compilations":
+            jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+        "jvm.jit_s":
+            jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime() / 1000,
+    })
+
+
 def held_stages(sc, jobs: list[dict]) -> list[dict]:
     """``jobs`` with their stage ids cut to the stages the status store
     still holds. Once a session passes spark.ui.retainedStages, each
@@ -123,9 +139,12 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
             stats.drain()
             stats.skip_to_now()
             sc.setJobGroup(f"sweep/{key}/run", key)
+            compiles = compile_counters(spark)
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
+    compiles = compile_counters(spark) - compiles
+    compiles["jvm.jit_s"] = round(compiles["jvm.jit_s"], 3)
     out = {
         "construct": round(t_construct, 3),
         "warm": round(t_warm, 3),
@@ -141,6 +160,7 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
     first = stats.last_execution
     layer.update(stats.new_plans())
     layer.update(plan_shape(stats, range(first + 1, stats.last_execution + 1)))
+    layer.update(compiles)
     plan = ""
     if stats.last_execution > first:  # the run's noop write is its last execution
         plan = stats.sql.execution(stats.last_execution).get().physicalPlanDescription()
