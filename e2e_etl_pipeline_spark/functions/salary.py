@@ -18,9 +18,23 @@ Reference semantics (DataTransform/transform_data.py:144-173):
 The engine returns typed NULL for missing (not the reference's "" — see
 SURVEY.md §1.2); the CSV sink re-materializes "" at the edge.
 
-Everything is built-in expressions (regexp_extract_all / transform /
-element_at / CASE), so Catalyst fuses the whole parse into one codegen
-stage.
+Why the SQL is shaped as it is:
+  * One regexp_extract_all, and only the elements used (the first two) are
+    cleaned, by plain scalar functions. A `transform(..., m -> ...)` lambda
+    is CodegenFallback in Spark 4.1, so it would put the whole numbers
+    subtree back on the interpreted path.
+  * No case mapping. The currency test is an anchored case-insensitive
+    regex, not `lower(cur) = 'zł'`. Spark 4.1 case-maps through ICU by
+    default (spark.sql.icu.caseMappings.enabled), and the first lower() or
+    upper() in a JVM builds CollationAwareUTF8String's title-case table by
+    ICU-titlecasing code points: measured 1.9 s for one `lower('ZL')`
+    against ~0.08 s for other tiny queries, and an allocation burst that G1
+    keeps as committed heap. After three passes of the daily offers job
+    the driver held 834-1,266 MB of committed heap with the lower() parse
+    and 348-436 MB without it (4 cores), for the same 130-610 MB in use.
+  * `(?iu)`, not `(?i)`: Java's plain `(?i)` folds ASCII only, so `ZŁ` or
+    `DZIEŃ` would go unmatched, where the reference's Python `re` and the
+    DuckDB oracle (RE2) both fold them.
 """
 
 from __future__ import annotations
@@ -33,34 +47,35 @@ from pyspark.sql import functions as F
 # literal character. {c} is a backtick-quoted column reference.
 _NORM_SQL = "regexp_replace({c}, ' ', ' ')"
 _NUMS_SQL = (
-    "transform(regexp_extract_all(" + _NORM_SQL + ", "
-    "'\\\\d[\\\\d\\\\s]*(?:,\\\\d+)?', 0), "
-    "m -> cast(regexp_replace(regexp_replace(m, '\\\\s+', ''), ',', '.') "
-    "as double))"
+    "regexp_extract_all(" + _NORM_SQL + ", '\\\\d[\\\\d\\\\s]*(?:,\\\\d+)?', 0)"
+)
+_CLEAN_SQL = (
+    "cast(regexp_replace(regexp_replace(_m, '\\\\s+', ''), ',', '.') as double)"
 )
 _CURRENCY_SQL = (
     "CASE WHEN _cur = '' THEN cast(null as string) "
-    "ELSE CASE WHEN lower(_cur) = 'zł' THEN 'PLN' ELSE _cur END END".replace(
+    "WHEN _cur rlike '(?iu)^zł$' THEN 'PLN' ELSE _cur END".replace(
         "_cur",
-        "regexp_extract(" + _NORM_SQL + ", '(?i)(zł|PLN|EUR|USD|CHF|GBP)', 1)",
+        "regexp_extract(" + _NORM_SQL + ", '(?iu)(zł|PLN|EUR|USD|CHF|GBP)', 1)",
     )
 )
 _PERIOD_SQL = (
     "CASE WHEN _per = '' THEN cast(null as string) "
-    "ELSE CASE WHEN _per = 'godz.' THEN 'h' "
-    "ELSE CASE WHEN _per = 'mies.' THEN 'month' ELSE _per END END END".replace(
+    "WHEN _per = 'godz.' THEN 'h' "
+    "WHEN _per = 'mies.' THEN 'month' ELSE _per END".replace(
         "_per",
         "regexp_extract(" + _NORM_SQL + ", "
-        "'(?i)/\\\\s*(mies\\\\.|godz\\\\.|rok|dzień|tydzień|month|h)', 1)",
+        "'(?iu)/\\\\s*(mies\\\\.|godz\\\\.|rok|dzień|tydzień|month|h)', 1)",
     )
 )
 _PARSE_SQL = (
     "named_struct("
-    "'minimum', CASE WHEN size(_nums) >= 1 THEN try_element_at(_nums, 1) "
-    "ELSE cast(null as double) END, "
-    "'maximum', CASE WHEN size(_nums) >= 2 THEN try_element_at(_nums, 2) "
-    "WHEN size(_nums) = 1 THEN try_element_at(_nums, 1) "
-    "ELSE cast(null as double) END, "
+    "'minimum', " + _CLEAN_SQL.replace("_m", "try_element_at(_nums, 1)") + ", "
+    "'maximum', "
+    + _CLEAN_SQL.replace(
+        "_m", "coalesce(try_element_at(_nums, 2), try_element_at(_nums, 1))"
+    )
+    + ", "
     f"'currency', {_CURRENCY_SQL}, "
     f"'pay_period', {_PERIOD_SQL})"
 ).replace("_nums", _NUMS_SQL)

@@ -60,39 +60,39 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact multi-column distinct counts, two-stage: one dedup-then-count
-    aggregation per distinct column, joined on the (tiny) group key.
+    """Exact multi-column distinct counts in one dedup and one count:
+    each distinct column contributes (flag, column tag, key) rows, the
+    union is deduped with partial aggregation, and a per-flag conditional
+    count reads both columns off the deduped pairs.
 
     Why not `agg(countDistinct(a), countDistinct(b))`: Spark plans
     multi-distinct through an `Expand` that multiplies every input row by
     the number of distinct aggregates (3× here) BEFORE the shuffle — at
-    100 TB that's 300 TB shuffled. The two-stage form instead runs one
-    partial (map-side) dedup per column — each a column-pruned scan
-    shuffling only the surviving (flag, key) pairs — then counts the
-    deduped pairs and joins the per-flag counts (a broadcast of a few
-    rows). The approximate variant below (HLL) is the single-pass
-    constant-memory alternative when exactness isn't required."""
+    100 TB that's 300 TB shuffled. Here each branch is a column-pruned
+    scan, and only the surviving (flag, tag, key) triples are shuffled.
+    Why not one dedup-and-count per column joined on the flag: the two
+    branches race, and AQE built the join from whichever finished first,
+    so the executed plan and its generated classes changed from run to
+    run; this form is a single chain. The approximate variant below (HLL)
+    is the single-pass constant-memory alternative when exactness isn't
+    required."""
     li = load_table(spark, sf_dir, "lineitem")
-    # count(col), not count(1): COUNT(DISTINCT col) excludes NULLs, and the
-    # deduped frame keeps a (flag, NULL) row if the key column ever has one.
-    parts = (
-        li.select("l_returnflag", "l_partkey")
-        .distinct()
+    pairs = li.select(
+        "l_returnflag", F.lit(0).alias("tag"), F.col("l_partkey").alias("key")
+    ).unionByName(
+        li.select("l_returnflag", F.lit(1).alias("tag"), F.col("l_suppkey").alias("key"))
+    )
+    # count(key), not count(1): COUNT(DISTINCT col) excludes NULLs, and the
+    # deduped frame keeps a (flag, tag, NULL) row if a key column has one.
+    # Every row of a flag feeds both tags, so no flag group can miss one.
+    return (
+        pairs.distinct()
         .groupBy("l_returnflag")
-        .agg(F.count("l_partkey").alias("n_parts"))
+        .agg(
+            F.count(F.when(F.col("tag") == 0, F.col("key"))).alias("n_parts"),
+            F.count(F.when(F.col("tag") == 1, F.col("key"))).alias("n_suppliers"),
+        )
     )
-    supps = (
-        li.select(F.col("l_returnflag").alias("rf"), "l_suppkey")
-        .distinct()
-        .groupBy("rf")
-        .agg(F.count("l_suppkey").alias("n_suppliers"))
-    )
-    # eqNullSafe: an inner equi-join would drop a NULL-returnflag group
-    # that the oracle's GROUP BY keeps (round-4 review; schema drift
-    # precedent makes the non-null assumption unsafe).
-    return parts.join(
-        supps, F.col("l_returnflag").eqNullSafe(F.col("rf"))
-    ).select("l_returnflag", "n_parts", "n_suppliers")
 
 
 @register(

@@ -44,14 +44,12 @@ def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-_SALARY_VALUES = ",\n      ".join(f"({_sql_quote(s)})" for s in SALARY_SAMPLES)
-
-
-@register(
-    "q_salary_parse",
-    oracle=f"""
+def salary_oracle_sql(samples: list[str]) -> str:
+    """The DuckDB oracle of the salary parse over the literal ``samples``."""
+    values = ",\n      ".join(f"({_sql_quote(s)})" for s in samples)
+    return f"""
     WITH raw(salary_text) AS (VALUES
-      {_SALARY_VALUES}
+      {values}
     ),
     parsed AS (
       SELECT
@@ -79,8 +77,10 @@ _SALARY_VALUES = ",\n      ".join(f"({_sql_quote(s)})" for s in SALARY_SAMPLES)
                       WHEN 'godz.' THEN 'h'
                       ELSE period_raw END                          AS pay_period
     FROM parsed
-    """,
-)
+    """
+
+
+@register("q_salary_parse", oracle=salary_oracle_sql(SALARY_SAMPLES))
 def q_salary_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15-A21 end-to-end as one codegen'd expression tree (no UDFs)."""
     df = inline_frame(spark, [{"salary_text": s} for s in SALARY_SAMPLES], ["salary_text"])

@@ -19,8 +19,10 @@ and downstream planning work as for any source.
 from __future__ import annotations
 
 import hashlib
+import sys
 from collections.abc import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -107,5 +109,11 @@ def register_source(spark) -> None:  # noqa: ANN001
     guard is needed for the repeat case; a genuine failure (pickling, an
     older pyspark without the Python Data Source API) must propagate —
     swallowing it would resurface later as an unrelated-looking
-    DATA_SOURCE_NOT_FOUND at load() time."""
+    DATA_SOURCE_NOT_FOUND at load() time.
+
+    The classes pickle BY VALUE: Spark's Python streaming-source runner does
+    not see the package zip that shipping.ensure_package_shipped adds with
+    addPyFile, so a by-reference class failed to import there whenever the
+    driver's cwd was not the repo root and PYTHONPATH was unset."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SyntheticOffersDataSource)

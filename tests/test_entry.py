@@ -73,3 +73,49 @@ def test_package_zip_is_staged_inside_the_context(spark, monkeypatch, tmp_path):
     assert list(tmp_path.iterdir()) == []
     root = SparkFiles.getRootDirectory()
     assert len(shipped) == 1 and os.path.commonpath([shipped[0], root]) == root
+
+
+_STREAM_SOURCE_SCRIPT = """
+import importlib.util, sys
+spec = importlib.util.spec_from_file_location("__spark_entry__", sys.argv[1])
+entry = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(entry)
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+try:
+    rows = entry.queries()["q_stream_python_source"](spark, sys.argv[2]).collect()
+    print("rows", len(rows))
+finally:
+    spark.stop()
+"""
+
+
+def test_python_stream_source_runs_from_any_cwd(sf_dir, tmp_path):
+    """The streaming Python data source imports in Spark's source runner
+    when the driver runs from another directory with no PYTHONPATH: the
+    runner does not see the package zip that addPyFile ships."""
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("SPARK_LOCAL_DIRS", str(tmp_path))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _STREAM_SOURCE_SCRIPT,
+            os.path.join(REPO_ROOT, "__spark_entry__.py"),
+            sf_dir,
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 10" in out.stdout

@@ -54,10 +54,22 @@ def test_topk_no_global_sort(spark, sf_dir):
 
 
 def test_salary_parse_is_codegen(spark, sf_dir):
-    """The signature computation must stay UDF-free (SURVEY.md §4.2)."""
+    """The signature computation must stay UDF-free (SURVEY.md §4.2), and
+    free of case mapping and lambdas: the first ICU-backed lower()/upper()
+    in a JVM builds Spark's title-case table (~1.9 s and a heap that G1
+    keeps), and a higher-order function falls back to interpreted code."""
+    from e2e_etl_pipeline_spark.pipeline.offers import parse_offers
+
     plan = _formatted(spark, "q_salary_parse", sf_dir)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+    docs = spark.createDataFrame(
+        [(1, "jjit", "<ul></ul>")], "doc_id long, site string, html string"
+    )
+    for df in (QUERIES["q_salary_parse"](spark, sf_dir), parse_offers(docs)):
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        for banned in ("lower(", "upper(", "initcap(", "lambda", "transform("):
+            assert banned not in optimized, (banned, optimized[:2000])
 
 
 def test_agg_has_partial_aggregation(spark, sf_dir):
@@ -84,6 +96,9 @@ def test_count_distinct_two_stage_no_expand(spark, sf_dir):
     assert "Expand" not in plan
     # Each distinct branch carries map-side partial aggregation.
     assert plan.count("HashAggregate") >= 4
+    # One chain, no join of per-column counts: two racing branches let AQE
+    # pick the join's build side by which finished first.
+    assert "Join" not in plan
 
 
 def test_bucketed_join_no_shuffle(spark, sf_dir):

@@ -6,11 +6,13 @@ salary strings (§5.2 item 4).
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from e2e_etl_pipeline_spark.functions.salary import parse_salary
+from e2e_etl_pipeline_spark.queries.scalars import salary_oracle_sql
 from e2e_etl_pipeline_spark.queries.udf_surface import _parse_salary_py
 
 # Reference docstring examples (DataTransform/transform_data.py:131-134) +
@@ -31,6 +33,12 @@ CASES = [
     # case-insensitive period match, case-sensitive map → passthrough
     ("10 000 PLN / GODZ.", (10000.0, 10000.0, "PLN", "GODZ.")),
     ("13 500 zł brutto", (13500.0, 13500.0, "PLN", None)),
+    # Unicode case folding, as Python's re and DuckDB's RE2 fold: Java's
+    # plain (?i) folds ASCII only and would leave these NULL.
+    ("100 ZŁ", (100.0, 100.0, "PLN", None)),
+    ("100 zŁ", (100.0, 100.0, "PLN", None)),
+    ("1 200 CHF / DZIEŃ", (1200.0, 1200.0, "CHF", "DZIEŃ")),
+    ("5 000 EUR / TYDZIEŃ", (5000.0, 5000.0, "EUR", "TYDZIEŃ")),
 ]
 
 
@@ -55,14 +63,26 @@ def test_python_twin_agrees_on_cases():
         assert _parse_salary_py(text) == expected, text
 
 
+def test_oracle_sql_agrees_on_cases():
+    """q_salary_parse's DuckDB oracle, run over every handcrafted case,
+    returns the expected rows (the Unicode-cased ones included)."""
+    expected = dict(CASES)
+    rows = duckdb.sql(salary_oracle_sql(list(expected))).fetchall()
+    assert len(rows) == len(CASES)
+    for text, *parsed in rows:
+        assert tuple(parsed) == expected[text], text
+
+
 _num = st.builds(
     lambda a, sep, b: f"{a}{sep}{b}" if sep else str(a),
     st.integers(1, 999),
     st.sampled_from(["", " ", "\xa0"]),
     st.integers(0, 999),
 )
-_currency = st.sampled_from(["zł", "PLN", "EUR", "USD", "CHF", "GBP", "pln", ""])
-_period = st.sampled_from(["mies.", "godz.", "rok", "dzień", "tydzień", "h", "month", ""])
+_currency = st.sampled_from(["zł", "ZŁ", "zŁ", "PLN", "EUR", "USD", "CHF", "GBP", "pln", ""])
+_period = st.sampled_from(
+    ["mies.", "godz.", "rok", "dzień", "DZIEŃ", "tydzień", "TYDZIEŃ", "h", "month", ""]
+)
 _salary_text = st.builds(
     lambda n1, dash, n2, cur, per, dec: (
         (n1 + (f",{dec}" if dec else ""))
