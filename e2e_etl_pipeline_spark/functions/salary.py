@@ -23,8 +23,8 @@ Why the SQL is shaped as it is:
     cleaned, by plain scalar functions. A `transform(..., m -> ...)` lambda
     is CodegenFallback in Spark 4.1, so it would put the whole numbers
     subtree back on the interpreted path.
-  * No case mapping. The currency test is an anchored case-insensitive
-    regex, not `lower(cur) = 'zł'`. Spark 4.1 case-maps through ICU by
+  * No case mapping. The currency test is an anchored regex, not
+    `lower(cur) = 'zł'`. Spark 4.1 case-maps through ICU by
     default (spark.sql.icu.caseMappings.enabled), and the first lower() or
     upper() in a JVM builds CollationAwareUTF8String's title-case table by
     ICU-titlecasing code points: measured 1.9 s for one `lower('ZL')`
@@ -32,9 +32,12 @@ Why the SQL is shaped as it is:
     keeps as committed heap. After three passes of the daily offers job
     the driver held 834-1,266 MB of committed heap with the lower() parse
     and 348-436 MB without it (4 cores), for the same 130-610 MB in use.
-  * `(?iu)`, not `(?i)`: Java's plain `(?i)` folds ASCII only, so `ZŁ` or
-    `DZIEŃ` would go unmatched, where the reference's Python `re` and the
-    DuckDB oracle (RE2) both fold them.
+  * No case-insensitive regex flag: every letter is an explicit two-case
+    class (`[zZ][łŁ]`), shared with the DuckDB oracle and the Python twin.
+    Each engine folds case its own way: Java's ASCII-only flag leaves `ZŁ`
+    unmatched, its Unicode flag (like Python's `re`) folds `ı`/`İ` to `i`
+    where RE2 does not, so `'… / mıes.'` gave pay_period `mıes.` in Spark
+    and NULL in DuckDB. A class matches the same strings in all three.
 """
 
 from __future__ import annotations
@@ -42,9 +45,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Group 1 is the currency / pay-period token in its matched case, each
+# letter an explicit two-case class. The same regex text is read by Java
+# (here), RE2 (the oracle) and Python's re (the twin,
+# queries/udf_surface._parse_salary_py).
+CURRENCY_PATTERN = (
+    "([zZ][łŁ]|[pP][lL][nN]|[eE][uU][rR]|[uU][sS][dD]|[cC][hH][fF]|[gG][bB][pP])"
+)
+PERIOD_PATTERN = (
+    r"/\s*([mM][iI][eE][sS]\.|[gG][oO][dD][zZ]\.|[rR][oO][kK]|[dD][zZ][iI][eE][ńŃ]"
+    r"|[tT][yY][dD][zZ][iI][eE][ńŃ]|[mM][oO][nN][tT][hH]|[hH])"
+)
+
 # The parse as Spark SQL text. Spark SQL string literals eat one backslash
-# level, so every regex backslash is doubled here. NBSP appears as the
-# literal character. {c} is a backtick-quoted column reference.
+# level, so every regex backslash is doubled here, except in the raw (r'...')
+# literals that carry the shared patterns. NBSP appears as the literal
+# character. {c} is a backtick-quoted column reference.
 _NORM_SQL = "regexp_replace({c}, ' ', ' ')"
 _NUMS_SQL = (
     "regexp_extract_all(" + _NORM_SQL + ", '\\\\d[\\\\d\\\\s]*(?:,\\\\d+)?', 0)"
@@ -54,18 +70,15 @@ _CLEAN_SQL = (
 )
 _CURRENCY_SQL = (
     "CASE WHEN _cur = '' THEN cast(null as string) "
-    "WHEN _cur rlike '(?iu)^zł$' THEN 'PLN' ELSE _cur END".replace(
-        "_cur",
-        "regexp_extract(" + _NORM_SQL + ", '(?iu)(zł|PLN|EUR|USD|CHF|GBP)', 1)",
+    "WHEN _cur rlike '^[zZ][łŁ]$' THEN 'PLN' ELSE _cur END".replace(
+        "_cur", "regexp_extract(" + _NORM_SQL + f", r'{CURRENCY_PATTERN}', 1)"
     )
 )
 _PERIOD_SQL = (
     "CASE WHEN _per = '' THEN cast(null as string) "
     "WHEN _per = 'godz.' THEN 'h' "
     "WHEN _per = 'mies.' THEN 'month' ELSE _per END".replace(
-        "_per",
-        "regexp_extract(" + _NORM_SQL + ", "
-        "'(?iu)/\\\\s*(mies\\\\.|godz\\\\.|rok|dzień|tydzień|month|h)', 1)",
+        "_per", "regexp_extract(" + _NORM_SQL + f", r'{PERIOD_PATTERN}', 1)"
     )
 )
 _PARSE_SQL = (

@@ -2,8 +2,25 @@
 (north star, /root/repo/BASELINE.json:6): token counting, quality scoring,
 language-ID features, document fingerprinting.
 
-All built-in expressions (split / filter / aggregate / regexp_extract_all):
-at 100 TB these run inside the parquet scan stage, no shuffle, no Python.
+All built-in expressions (regexp_extract_all / filter / aggregate): at
+100 TB these run inside the parquet scan stage, no shuffle, no Python.
+
+This module is the only one that spells the whitespace class. Every
+whitespace tokenizer in the engine is ``words``; every oracle's is
+``words_sql``; a query that needs the class in another regex interpolates
+``WS_RUN``, ``PUNCT_PATTERN`` or ``BPE_ISH_PATTERN`` from here.
+
+Why ``words`` extracts instead of splitting: "split on runs of the class,
+then drop empty tokens" yields exactly the maximal runs outside the class,
+in order (NULL gives NULL and '' gives [] either way), so the two forms are
+the same tokenizer. The split form needs a ``filter(..., w -> w != '')``
+lambda, and Spark 4.1 runs every higher-order-function lambda interpreted
+(``CodegenFallback``), which also takes the expression out of its stage's
+generated code. A probe (4 cores, sf0.1, one SparkSession) found 0 differing
+rows between the forms on 5,000 documents and 20,002 random strings over
+all six class characters, NBSP, 'ł', 'é', a surrogate pair, NULL and '';
+``explode(words(text))`` -> group-by count over 40,000 documents took
+2.31 / 1.49 / 1.24 s split, 1.05 / 0.72 / 0.64 s extracting.
 """
 
 from __future__ import annotations
@@ -15,12 +32,19 @@ from pyspark.sql import functions as F
 # synthetic corpus the signal is the mechanics, not linguistics.
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
+# The whitespace class: Java's \s spelled out, never the shorthand. RE2
+# (the DuckDB oracles) leaves \x0B out of its \s while Java includes it, so
+# a shorthand class silently diverges between engines on a \v byte. The
+# escapes are regex text, read the same by Java and RE2; in SQL they go
+# inside a plain (DuckDB) or raw (Spark r'...') string literal.
+_WS = r" \t\n\x0B\f\r"
+WS_RUN = f"[{_WS}]+"
+WORD_PATTERN = f"[^{_WS}]+"
+# Punctuation: neither a word character nor whitespace.
+PUNCT_PATTERN = rf"[^\w{_WS}]"
 # BPE-ish tokenizer: letter runs, digit runs, or single non-alnum-non-space
 # symbols — the classic pre-tokenization split (public GPT-2 style).
-# Whitespace is the EXPLICIT Java-\s class [ \t\n\x0B\f\r], never the \s
-# shorthand: RE2 (DuckDB oracles) excludes \x0B from \s while Java includes
-# it, so shorthand classes silently diverge between engines on a \v byte.
-BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]"
+BPE_ISH_PATTERN = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]"
 
 FINGERPRINT_MOD = 1_000_000_007
 FINGERPRINT_BASE = 31
@@ -31,22 +55,16 @@ def _c(col: Column | str) -> Column:
 
 
 def words(col: Column | str) -> Column:
-    """Whitespace tokenization → array<string> (empty tokens removed).
-    Splits on the explicit [ \\t\\n\\x0B\\f\\r]+ class (== Java \\s, which
-    RE2 oracles cannot express as \\s — see BPE_ISH_PATTERN note)."""
-    return F.filter(F.split(_c(col), r"[ \t\n\x0B\f\r]+"), lambda w: w != "")
+    """Whitespace tokenization → array<string>: the maximal runs outside
+    the whitespace class, in order (see the module docstring)."""
+    return F.regexp_extract_all(_c(col), F.lit(WORD_PATTERN), 0)
 
 
 def words_sql(expr: str) -> str:
-    """The DuckDB-side twin of ``words()`` for oracle f-strings: the SAME
-    whitespace class, empty tokens removed. One definition so an oracle
-    cannot drift from the engine tokenizer (round-7 review; several
-    pre-round-7 oracles still carry the fragment verbatim — byte-identical
-    to this rendering, safe to migrate opportunistically)."""
+    """The DuckDB-side twin of ``words()`` for oracle f-strings: split on
+    the same whitespace class, empty tokens removed."""
     return (
-        "list_filter(regexp_split_to_array("
-        + expr
-        + ", '[ \\t\\n\\x0B\\f\\r]+'), w -> w <> '')"
+        f"list_filter(regexp_split_to_array({expr}, '{WS_RUN}'), w -> w <> '')"
     )
 
 
@@ -85,7 +103,7 @@ def punct_ratio(col: Column | str) -> Column:
     c = _c(col)
     total = F.length(c)
     punct = F.length(c) - F.length(
-        F.regexp_replace(c, r"[^\w \t\n\x0B\f\r]", "")
+        F.regexp_replace(c, PUNCT_PATTERN, "")
     )
     return F.when(total == 0, F.lit(None).cast("double")).otherwise(
         punct.cast("double") / total.cast("double")

@@ -22,6 +22,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.functions.digests import md5_u60_spark_sql
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
 
@@ -82,13 +83,6 @@ def dedup_exact_first_wins(df: DataFrame, key_cols: list[str], order_col: str) -
 # ---------------------------------------------------------------------------
 # Shingling + MinHash + LSH banding (q_dedup_near)
 # ---------------------------------------------------------------------------
-def _words(col: Column | str) -> Column:
-    # Explicit [ \t\n\x0B\f\r]+ (== Java \s): RE2-based oracles exclude \x0B
-    # from \s, so the shorthand would silently diverge between engines.
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(c, r"[ \t\n\x0B\f\r]+"), lambda w: w != "")
-
-
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams as array<string> ('a b c' style shingles) —
     the dedup'd view of positional_shingles (one gram construction)."""
@@ -103,12 +97,12 @@ def positional_shingles(col: Column | str, n: int = 3) -> Column:
     The word array is BOUND as a lambda variable (transform over a 1-element
     array, then flatten) instead of being referenced from inside the gram
     lambda: higher-order functions re-evaluate captured argument expressions
-    on every lambda invocation, so the split+filter tokenization was being
+    on every lambda invocation, so the tokenization was being
     re-run once per gram — measured 4.3 s → 0.6 s at sf0.1 for the shingle
     stream (optimization guide §1.2 per-task work). Gram text is built with
     element_at + concat_ws (no per-gram array slice allocation); output is
     string-identical to the previous slice + array_join form."""
-    ws = _words(col)
+    ws = ts.words(col)
 
     def grams_of(w: Column) -> Column:
         idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
@@ -445,7 +439,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     rows-only this way).
     """
     tokens = df.select(
-        F.col(id_col).alias("id"), F.explode(_words(text_col)).alias("token")
+        F.col(id_col).alias("id"), F.explode(ts.words(text_col)).alias("token")
     )
     # Python-level loop over the 64 bit positions: shiftright's numBits must
     # be a literal int in the DataFrame API, so the array is built from 64
@@ -545,7 +539,7 @@ def word_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     distinct whitespace token of each document."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_words(text_col))).alias("element"),
+        F.explode(F.array_distinct(ts.words(text_col))).alias("element"),
     )
 
 

@@ -25,13 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
+from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.operators.bpe import (
     bpe_apply,
     bpe_learn,
     bpe_train_merges,
 )
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
-from e2e_etl_pipeline_spark.operators.dedup import _words
 from e2e_etl_pipeline_spark.operators.ranks import bounded_rank
 from e2e_etl_pipeline_spark.operators.sketches import misra_gries_candidates
 from e2e_etl_pipeline_spark.registry import register
@@ -43,7 +43,7 @@ LANG_CAP = 60
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, token) with llm.py's whitespace tokenization."""
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.explode(_words("text")).alias("token"))
+    return d.select("doc_id", F.explode(ts.words("text")).alias("token"))
 
 
 @register(
@@ -51,8 +51,7 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     counts AS (
@@ -95,11 +94,10 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_unigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
@@ -188,11 +186,10 @@ def q_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_tfidf",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -258,11 +255,10 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_bigram_pmi",
-    oracle="""
+    oracle=f"""
     WITH ws AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                         t -> t <> '') AS w
+             {ts.words_sql("text")} AS w
       FROM documents
     ),
     tok AS (SELECT doc_id, unnest(w) AS token FROM ws),
@@ -306,7 +302,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the ranked set before the sort.
     """
     d = load_table(spark, sf_dir, "documents")
-    ws = d.select("doc_id", _words("text").alias("w"))
+    ws = d.select("doc_id", ts.words("text").alias("w"))
     pairs = ws.select(
         F.explode(
             F.when(
@@ -371,7 +367,6 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffled (dedup partitions on xxhash64(text); the shingle join
     carries shingle strings only; the final window moves (doc_id, lang)).
     """
-    from e2e_etl_pipeline_spark.functions import textstats as ts
     from e2e_etl_pipeline_spark.queries.llm import contaminated_ids
 
     d = load_table(spark, sf_dir, "documents")
@@ -383,7 +378,7 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.round(ts.quality_score("text"), 4).alias("quality"),
-        F.size(_words("text")).cast("int").alias("n_tokens"),
+        F.size(ts.words("text")).cast("int").alias("n_tokens"),
         F.xxhash64("text").alias("digest"),
     ).where(F.col("quality") >= 0.5)
 
@@ -417,10 +412,10 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_repetition",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS words
+             {ts.words_sql("text")} AS words
       FROM documents
     ),
     f AS (
@@ -463,7 +458,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_bigram_frac = 0 (ADVICE.md round-1 lesson).
     """
     d = load_table(spark, sf_dir, "documents")
-    words = _words("text")
+    words = ts.words("text")
     d = d.select("doc_id", words.alias("words"), F.size(words).alias("n"))
     dw = F.array_distinct(F.col("words"))
 
@@ -540,7 +535,7 @@ ORACLES["q_training_pipeline"] = f"""
     ),
     toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS w
+             {ts.words_sql("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -564,8 +559,7 @@ ORACLES["q_training_pipeline"] = f"""
     ),
     ranked AS (
       SELECT doc_id, lang, quality,
-        CAST(len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                             t -> t <> '')) AS INTEGER) AS n_tokens,
+        CAST(len({ts.words_sql("text")}) AS INTEGER) AS n_tokens,
         row_number() OVER (PARTITION BY lang
                            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
           AS lang_rank
@@ -655,8 +649,7 @@ COVERAGE_CUTOFFS = (100, 1000, 5000)
     "q_vocab_coverage",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+      SELECT unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     counts AS (SELECT token, count(*) AS n_occ FROM tok GROUP BY token),
@@ -721,11 +714,10 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hapax_ratio",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     tf AS (SELECT doc_id, token, count(*) AS occ FROM tok GROUP BY 1, 2),
@@ -814,10 +806,9 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_seqlen_histogram",
-    oracle="""
+    oracle=f"""
     WITH lens AS (
-      SELECT len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                             t -> t <> '')) AS n_tokens
+      SELECT len({ts.words_sql("text")}) AS n_tokens
       FROM documents
     ),
     hist AS (
@@ -843,7 +834,7 @@ def q_seqlen_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. log2/power run on identical integer inputs, so bucket
     edges agree exactly."""
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(_words("text"))
+    n_tokens = F.size(ts.words("text"))
     hist = (
         d.select(n_tokens.alias("n_tokens"))
         .where(F.col("n_tokens") > 0)
@@ -980,8 +971,7 @@ HH_K = 32  # Misra-Gries counter budget -> heavy-hitter threshold n/32
     "q_heavy_hitters",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+      SELECT unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     counts AS (SELECT token, count(*) AS n_occ FROM tok GROUP BY token),
@@ -1063,7 +1053,6 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-doc scoring is stateless column math; the rollup shuffles
     |domains| decimal partials; the corpus total is a 1-row broadcast.
     Document bodies never shuffle."""
-    from e2e_etl_pipeline_spark.functions import textstats as ts
 
     d = load_table(spark, sf_dir, "documents")
     scored = d.select(
@@ -1097,10 +1086,9 @@ def q_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_bpe_pairs",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+      SELECT unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
@@ -1169,9 +1157,8 @@ def _bpe_cte_chain(n_merges: int) -> str:
     stay empty (no pairs) while seq{n} stays valid for q_bpe_encode —
     the same early stop as the Spark loop."""
     ctes = [
-        """tok AS (
-      SELECT unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+        f"""tok AS (
+      SELECT unnest({ts.words_sql("text")}) AS token
       FROM documents
     )""",
         "counts AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token)",
@@ -1258,8 +1245,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     doc_tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     )
     SELECT doc_id,
@@ -1304,11 +1290,10 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_bm25",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1531,11 +1516,10 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_span_corruption",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id,
-             coalesce(list_filter(regexp_split_to_array(text,
-                        '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> ''), []) AS w
+             coalesce({ts.words_sql("text")}, []) AS w
       FROM documents
     ),
     mk AS (
@@ -1595,7 +1579,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     where such text is filtered or escaped upstream). The reconstruction
     test asserts loudly if one ever appears."""
     d = load_table(spark, sf_dir, "documents")
-    w = F.when(F.col("text").isNotNull(), _words("text")).otherwise(
+    w = F.when(F.col("text").isNotNull(), ts.words("text")).otherwise(
         F.array().cast("array<string>")
     )
     d = d.select("doc_id", w.alias("w"))

@@ -42,8 +42,7 @@ def quality_scored_cte(cols: str) -> str:
     and a NULL quality would diverge from the engine's defaults."""
     return f"""qtoks AS (
       SELECT {cols}, text AS _qtext,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                         x -> x <> '') AS _w
+             {ts.words_sql("text")} AS _w
       FROM documents
     ),
     qfeats AS (
@@ -54,7 +53,7 @@ def quality_scored_cte(cols: str) -> str:
                        AS DOUBLE) / len(_w) END AS _sw,
         CASE WHEN _qtext IS NULL OR length(_qtext) = 0 THEN 1.0
              ELSE CAST(length(_qtext) - length(regexp_replace(_qtext,
-                       '[^\\w \\t\\n\\x0B\\f\\r]', '', 'g')) AS DOUBLE)
+                       '{ts.PUNCT_PATTERN}', '', 'g')) AS DOUBLE)
                   / length(_qtext) END AS _pr,
         CASE WHEN _w IS NULL OR len(_w) = 0 THEN 0.0
              ELSE CAST(list_sum(list_transform(_w, t -> length(t))) AS DOUBLE)
@@ -197,10 +196,10 @@ def q_dedup_exact_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dup_span_audit",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT doc_id, source,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), w -> w <> '') AS ws
+             {ts.words_sql("text")} AS ws
       FROM documents
     ),
     grams AS (
@@ -274,11 +273,10 @@ def q_dup_span_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_substring",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(coalesce(text, ''),
-                         '[ \\t\\n\\x0B\\f\\r]+'), w -> w <> '') AS ws
+             {ts.words_sql("coalesce(text, '')")} AS ws
       FROM documents
     ),
     starts AS (
@@ -384,8 +382,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH words AS (
       SELECT doc_id AS id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                         t -> t <> '') AS ws
+             {ts.words_sql("text")} AS ws
       FROM documents
     ),
     grams AS (
@@ -468,11 +465,10 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_simhash",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id AS id,
-             unnest(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                                t -> t <> '')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents
     ),
     th AS (
@@ -515,20 +511,18 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # THE exact-Jaccard contract, shared by every consumer (q_dedup_jaccard,
 # q_minhash_accuracy_bound, curation's q_dedup_cluster_cc): oracle
-# tokenization mirrors the engine's _words exactly (split on the explicit
-# [ \t\n\x0B\f\r]+ whitespace class, drop empty tokens — a single-space
-# split would diverge on tabs / doubled spaces); the df-cutoff
+# tokenization is textstats.words_sql, the twin of the engine's words (a
+# single-space split would diverge on tabs / doubled spaces); the df-cutoff
 # (HAVING count(*) <= 500) mirrors the engine's max_df candidate-verify
 # guard: candidates come from rare tokens only, intersections are
 # re-counted on the full token sets, so Jaccard values stay exact. A
 # semantic change here changes every consumer at once — by construction,
 # not by three copies staying in sync (round-7 review).
-JACCARD_CORE_CTE = """raw_toks AS (
+JACCARD_CORE_CTE = f"""toks AS (
       SELECT DISTINCT doc_id AS id,
-             unnest(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) AS token
+             unnest({ts.words_sql("text")}) AS token
       FROM documents WHERE lang = 'de'
     ),
-    toks AS (SELECT id, token FROM raw_toks WHERE token <> ''),
     sizes AS (SELECT id, count(*) AS set_size FROM toks GROUP BY id),
     keep AS (SELECT token FROM toks GROUP BY token HAVING count(*) <= 500),
     jtoks AS (SELECT t.id, t.token FROM toks t JOIN keep USING (token)),
@@ -1369,12 +1363,12 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       doc_id,
       lang,
-      round(CAST(len(list_filter(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> ''),
+      round(CAST(len(list_filter({ts.words_sql("text")},
                  w -> lower(w) IN {_STOPWORD_SQL})) AS DOUBLE)
-            / len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')), 4)                    AS stopword_ratio,
-      CASE WHEN CAST(len(list_filter(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> ''),
+            / len({ts.words_sql("text")}), 4)                    AS stopword_ratio,
+      CASE WHEN CAST(len(list_filter({ts.words_sql("text")},
                  w -> lower(w) IN {_STOPWORD_SQL})) AS DOUBLE)
-            / len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) >= 0.05
+            / len({ts.words_sql("text")}) >= 0.05
            THEN 'en' ELSE 'other' END                             AS lang_guess
     FROM documents
     """,
@@ -1409,12 +1403,11 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quality_gopher",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id,
              coalesce(text, '') AS txt,
-             list_filter(regexp_split_to_array(coalesce(text, ''),
-                         '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS toks
+             {ts.words_sql("coalesce(text, '')")} AS toks
       FROM documents
     ),
     c AS (
@@ -1521,11 +1514,11 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tokens",
-    oracle="""
+    oracle=f"""
     SELECT
       doc_id,
-      CAST(len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) AS INTEGER)                          AS ws_tokens,
-      CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]')) AS INTEGER)
+      CAST(len({ts.words_sql("text")}) AS INTEGER)                          AS ws_tokens,
+      CAST(len(regexp_extract_all(text, '{ts.BPE_ISH_PATTERN}')) AS INTEGER)
                                                                              AS bpe_ish_tokens
     FROM documents
     """,
@@ -1542,13 +1535,13 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT
       doc_id,
       CASE WHEN text IS NULL THEN NULL ELSE
       list_reduce(
         list_prepend(CAST(0 AS BIGINT),
-          list_transform(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> ''),
+          list_transform({ts.words_sql("text")},
                          w -> CAST(length(w) + ascii(w) AS BIGINT))),
         (acc, v) -> (acc * 31 + v) % 1000000007
       ) END AS fingerprint
@@ -1697,10 +1690,10 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_decontaminate",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS w
+             {ts.words_sql("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -1812,9 +1805,9 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH guessed AS (
       SELECT
         lang,
-        CASE WHEN CAST(len(list_filter(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> ''),
+        CASE WHEN CAST(len(list_filter({ts.words_sql("text")},
                    w -> lower(w) IN {_STOPWORD_SQL})) AS DOUBLE)
-              / len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) >= 0.05
+              / len({ts.words_sql("text")}) >= 0.05
              THEN 'en' ELSE 'other' END AS lang_guess
       FROM documents
     )
@@ -2082,10 +2075,10 @@ def q_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_keep_best",
-    oracle="""
+    oracle=f"""
     WITH normed AS (
       SELECT doc_id, lang, n_chars,
-             trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))
+             trim(regexp_replace(text, '{ts.WS_RUN}', ' ', 'g'))
                AS norm
       FROM documents WHERE text IS NOT NULL
     ),
@@ -2117,12 +2110,11 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, a single exchange, no window over the corpus and no join:
     the ordering prefix (len, n_chars, -doc_id) is unique per group
     (doc_id is unique), so the trailing payload fields ride along without
-    ever influencing the comparison. The whitespace class is the pinned
-    [ \\t\\n\\x0B\\f\\r]+ (Java \\s == RE2 class, the verify-skill
-    tokenizer rule). NULL-text docs are excluded on both sides (no
+    ever influencing the comparison. Whitespace runs are textstats.WS_RUN,
+    the class both engines read alike. NULL-text docs are excluded on both sides (no
     content to canonicalize)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    norm = F.trim(F.regexp_replace("text", r"[ \t\n\x0B\f\r]+", " "))
+    norm = F.trim(F.regexp_replace("text", ts.WS_RUN, " "))
     keyed = d.select(
         "doc_id",
         "lang",

@@ -30,7 +30,6 @@ from e2e_etl_pipeline_spark.operators.ranks import (
     distributed_ntile,
 )
 from e2e_etl_pipeline_spark.registry import register
-from e2e_etl_pipeline_spark.session import pin_utc
 
 
 @register(
@@ -348,7 +347,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which needs multiple triggers) is asserted in
     tests/test_streaming.py instead.
     """
-    pin_utc(spark)
 
     def side(name: str, event_type: str) -> DataFrame:
         return (
@@ -394,10 +392,10 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_chunk",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '') AS w
+             {ts.words_sql("text")} AS w
       FROM documents
     ),
     starts AS (
@@ -431,7 +429,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.expr(r"filter(split(text, '\\s+'), t -> t != '')").alias("w"),
+        ts.words("text").alias("w"),
     ).withColumn("n_words", F.size("w"))
     # Filter empty docs BEFORE the sequence: they emit zero chunks (the
     # oracle's generate_series(1, 0) is empty, but Spark's sequence throws
@@ -459,11 +457,10 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pack_contexts",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                             t -> t <> '')) AS n_tokens
+             len({ts.words_sql("text")}) AS n_tokens
       FROM documents
     ),
     packed AS (
@@ -499,9 +496,7 @@ def q_pack_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "lang",
-        F.size(F.expr(r"filter(split(text, '\\s+'), t -> t != '')")).alias(
-            "n_tokens"
-        ),
+        F.size(ts.words("text")).alias("n_tokens"),
     )
     w = (
         Window.partitionBy("lang")
@@ -525,12 +520,10 @@ def q_pack_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_token_shards",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             CAST(coalesce(len(list_filter(
-               regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-               t -> t <> '')), 0) AS BIGINT) AS n_tokens
+             CAST(coalesce(len({ts.words_sql("text")}), 0) AS BIGINT) AS n_tokens
       FROM documents
     ),
     c AS (

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from e2e_etl_pipeline_spark.catalog import inline_frame, load_table
 from e2e_etl_pipeline_spark.functions import salary as sal
 from e2e_etl_pipeline_spark.functions import text as tx
+from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.registry import register
 
 # Literal salary strings exercising every branch of the reference's parser:
@@ -60,9 +61,9 @@ def salary_oracle_sql(samples: list[str]) -> str:
           m -> CAST(replace(regexp_replace(m, '\\s+', '', 'g'), ',', '.') AS DOUBLE)
         ) AS nums,
         nullif(regexp_extract(replace(salary_text, chr(160), ' '),
-                              '(?i)(zł|PLN|EUR|USD|CHF|GBP)', 1), '') AS cur_raw,
+                              '{sal.CURRENCY_PATTERN}', 1), '') AS cur_raw,
         nullif(regexp_extract(replace(salary_text, chr(160), ' '),
-                              '(?i)/\\s*(mies\\.|godz\\.|rok|dzień|tydzień|month|h)', 1), '') AS period_raw
+                              '{sal.PERIOD_PATTERN}', 1), '') AS period_raw
       FROM raw
     )
     SELECT
@@ -435,11 +436,10 @@ def q_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_explode_outer",
-    oracle="""
+    oracle=f"""
     WITH arrs AS (
       SELECT doc_id,
-             list_filter(list_filter(regexp_split_to_array(text,
-                           '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> ''),
+             list_filter({ts.words_sql("text")},
                          t -> length(t) > 8) AS longtoks
       FROM documents
     )
@@ -456,8 +456,5 @@ def q_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents from any downstream per-doc accounting). The oracle states
     the same semantics as unnest-over-nonempty UNION ALL the empty set."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.filter(F.split("text", "[ \t\n\x0B\f\r]+"), lambda t: t != ""),
-        lambda t: F.length(t) > 8,
-    )
+    toks = F.filter(ts.words("text"), lambda t: F.length(t) > 8)
     return d.select("doc_id", F.explode_outer(toks).alias("token"))

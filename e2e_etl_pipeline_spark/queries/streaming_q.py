@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from e2e_etl_pipeline_spark.catalog import load_table, read_events_stream
 from e2e_etl_pipeline_spark.functions.money import money_sum
 from e2e_etl_pipeline_spark.registry import register
-from e2e_etl_pipeline_spark.session import pin_utc
 from e2e_etl_pipeline_spark.streaming import windows as sw
 
 
@@ -76,7 +75,6 @@ def _run_to_memory_sink(
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows per event_type; window() aligns to the epoch
     so hour buckets equal date_trunc('hour')."""
-    pin_utc(spark)
     return sw.tumbling_agg(load_table(spark, sf_dir, "events"), "1 hour")
 
 
@@ -99,7 +97,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 minutes: each event belongs to 4
     windows. The oracle enumerates the 4 slide offsets explicitly."""
-    pin_utc(spark)
     return sw.sliding_agg(load_table(spark, sf_dir, "events"), "1 hour", "15 minutes")
 
 
@@ -131,7 +128,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap session windows per user; the oracle is the classic
     gaps-and-islands CTE (SURVEY.md §2 B.9 allows it when stable)."""
-    pin_utc(spark)
     return sw.session_agg(load_table(spark, sf_dir, "events"), "30 minutes")
 
 
@@ -153,7 +149,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py); availableNow over a static snapshot is the
     bounded case where unbounded state is safe.
     """
-    pin_utc(spark)
     stream = (
         read_events_stream(spark, sf_dir)
         .select("user_id")
@@ -181,7 +176,6 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — fully oracle-checkable, not just rows-only. Late-data
     *dropping* (which needs multiple triggers) is asserted in
     tests/test_streaming.py."""
-    pin_utc(spark)
     stream = read_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -216,7 +210,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch — no stream-side shuffle before the join; only the
     segment-count agg keeps (tiny) state. A dimension too big to
     broadcast becomes a stream-static shuffle join, still stateless."""
-    pin_utc(spark)
     stream = read_events_stream(spark, sf_dir).select("user_id", "value")
     cust = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -256,7 +249,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stores; each micro-batch shuffles only (key, idx) pairs. The
     multi-batch stale-escalation path (which no oracle can express) is
     asserted in tests/test_streaming.py."""
-    pin_utc(spark)
     stream = read_events_stream(spark, sf_dir).select(
         F.col("event_type").alias("key"), F.col("event_id").alias("idx")
     )
@@ -279,7 +271,6 @@ def q_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     import-gated — tests/test_streaming.py skips it when protobuf is
     absent and asserts the full path when present. The registered
     stateful-streaming surface remains q_stream_stateful."""
-    pin_utc(spark)
     stream = read_events_stream(spark, sf_dir).select(
         F.col("event_type").alias("key"), "value"
     )
@@ -314,7 +305,6 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each micro-batch's pages read partition-parallel; offsets are
     checkpointable JSON, so a real connector restarts where it stopped."""
-    pin_utc(spark)
     from e2e_etl_pipeline_spark.sources.synthetic_ds import register_source
 
     register_source(spark)
@@ -361,7 +351,6 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    pin_utc(spark)
     chk = tempfile.mkdtemp(prefix="e2e_spark_chk_")
     target = tempfile.mkdtemp(prefix="e2e_spark_tgt_")
     try:

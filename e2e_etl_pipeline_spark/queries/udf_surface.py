@@ -21,13 +21,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from e2e_etl_pipeline_spark.catalog import inline_frame, load_table
+from e2e_etl_pipeline_spark.functions import salary as sal
+from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
 from e2e_etl_pipeline_spark.queries.scalars import SALARY_SAMPLES
 from e2e_etl_pipeline_spark.registry import ORACLES, register
 
 _NUM_RE = re.compile(r"\d[\d\s]*(?:,\d+)?")
-_CUR_RE = re.compile(r"(zł|PLN|EUR|USD|CHF|GBP)", re.IGNORECASE)
-_PERIOD_RE = re.compile(r"/\s*(mies\.|godz\.|rok|dzień|tydzień|month|h)", re.IGNORECASE)
+_CUR_RE = re.compile(sal.CURRENCY_PATTERN)
+_PERIOD_RE = re.compile(sal.PERIOD_PATTERN)
 _PERIOD_MAP = {"mies.": "month", "godz.": "h"}
 
 
@@ -451,11 +453,10 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sql_udtf",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                         t -> t <> '')[1:3] AS ws3
+             {ts.words_sql("text")}[1:3] AS ws3
       FROM documents
     )
     SELECT doc_id,
@@ -472,22 +473,22 @@ def q_sql_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's first three whitespace tokens with positions; the oracle
     is DuckDB's zipped parallel unnest over the same slice.
 
-    The regex inside the SQL body is written with DOUBLED backslashes:
-    Spark SQL string literals consume one level of escaping ('\\x0B'
-    would parse as the three characters x0B and silently poison the
-    character class — found live while building this key).
+    The body tokenizes with textstats.WORD_PATTERN inside a RAW string
+    literal (r'...'): a plain Spark SQL literal consumes one level of
+    backslash escaping and would silently poison the character class
+    (found live while building this key).
 
     Scale: like q_sql_udf the body inlines at resolution time — the plan
     is a Generate (posexplode) over the scan, no Python boundary, and the
     LATERAL is not a join at all after inlining."""
     spark.sql(
-        r"""
+        f"""
         CREATE OR REPLACE TEMPORARY FUNCTION first_words(s STRING, n INT)
         RETURNS TABLE(idx INT, word STRING)
         RETURN SELECT CAST(t.pos AS INT) AS idx, t.col AS word
                FROM (SELECT posexplode(
-                              slice(filter(split(s, '[ \\t\\n\\x0B\\f\\r]+'),
-                                           w -> w != ''), 1, n)
+                              slice(regexp_extract_all(s, r'{ts.WORD_PATTERN}', 0),
+                                    1, n)
                             ) AS (pos, col)) t
         """
     )

@@ -36,6 +36,11 @@ Hash-stability rules enforced across the codebase (SURVEY.md §7 watch list):
     q_offers_pipeline red; the only two decimal-shipping keys were the only
     two reds). No key ships DECIMAL at the driver edge
     (tests/test_construction_lazy.py gates it registry-wide).
+  * Tokenize on whitespace only through functions/textstats: words() on
+    the engine side, words_sql() in oracles. It is the one place the
+    whitespace class is spelled (Java's and RE2's \\s differ on a vertical tab),
+    and words() carries no lambda, so it stays in generated code
+    (tests/test_textstats_properties.py gates the rule).
 
 Registration order matters: the external driver verifies keys in registration
 order under a budget. Since round 3 the order is pinned at KEY granularity by

@@ -45,19 +45,14 @@ def default_parallelism() -> int:
 
 def get_session(
     app_name: str = "e2e_etl_pipeline_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults."""
     cores = default_parallelism()
-    master = master or f"local[{cores}]"
-    shuffle_partitions = shuffle_partitions or cores
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

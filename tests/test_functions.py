@@ -5,7 +5,7 @@ on arbitrary generated text (SURVEY.md §5.2 item 4 pattern, beyond salary).
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -15,7 +15,10 @@ from e2e_etl_pipeline_spark.operators.dedup import word_shingles
 _word = st.text(
     alphabet=st.sampled_from("abcdefgzą .,!?0123456789"), min_size=1, max_size=8
 ).filter(lambda w: w.strip())
-_text = st.lists(_word, min_size=0, max_size=25).map(lambda ws: " ".join(ws))
+# Runs of every character of the whitespace class, so texts also lead and
+# trail with whitespace and mix \x0B, \f and \r between words.
+_space = st.text(alphabet=st.sampled_from(" \t\n\x0b\f\r"), min_size=1, max_size=3)
+_text = st.lists(st.one_of(_word, _space), min_size=0, max_size=40).map("".join)
 
 
 def _py_words(s: str) -> list[str]:
@@ -36,9 +39,11 @@ def _py_fingerprint(s: str) -> int:
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(st.lists(_text, min_size=1, max_size=25))
+@example(["\x0b\tlead", "trail \r\f", "\f", "in\x0bner\r\nwords", ""])
 def test_textstats_match_python(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "s string")
     rows = df.select(
+        ts.words("s").alias("w"),
         ts.whitespace_tokens("s").alias("n"),
         ts.word_fingerprint("s").alias("fp"),
         ts.quality_score("s").alias("q"),
@@ -46,6 +51,7 @@ def test_textstats_match_python(spark, texts):
     ).collect()
     for t, r in zip(texts, rows):
         words = _py_words(t)
+        assert r.w == words, (t, r.w)
         assert r.n == len(words), (t, r.n)
         assert r.fp == _py_fingerprint(t), t
         assert r.q is None or 0.0 <= r.q <= 1.0, (t, r.q)

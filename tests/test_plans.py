@@ -72,6 +72,17 @@ def test_salary_parse_is_codegen(spark, sf_dir):
             assert banned not in optimized, (banned, optimized[:2000])
 
 
+def test_words_is_lambda_free(spark):
+    """The one whitespace tokenizer carries no higher-order-function lambda:
+    Spark 4.1 interprets every lambda (CodegenFallback), so a split-then-
+    filter tokenizer would drag each text key's expression off codegen."""
+    from e2e_etl_pipeline_spark.functions import textstats as ts
+
+    df = spark.createDataFrame([("a b",)], "text string").select(ts.words("text"))
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    assert "lambdafunction" not in optimized, optimized
+
+
 def test_agg_has_partial_aggregation(spark, sf_dir):
     """Map-side combine: two HashAggregate nodes (partial + final)."""
     plan = _formatted(spark, "q_agg_groupby", sf_dir)

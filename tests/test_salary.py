@@ -33,12 +33,16 @@ CASES = [
     # case-insensitive period match, case-sensitive map → passthrough
     ("10 000 PLN / GODZ.", (10000.0, 10000.0, "PLN", "GODZ.")),
     ("13 500 zł brutto", (13500.0, 13500.0, "PLN", None)),
-    # Unicode case folding, as Python's re and DuckDB's RE2 fold: Java's
-    # plain (?i) folds ASCII only and would leave these NULL.
+    # Polish letters in either case: an ASCII-only case fold would leave
+    # these NULL.
     ("100 ZŁ", (100.0, 100.0, "PLN", None)),
     ("100 zŁ", (100.0, 100.0, "PLN", None)),
     ("1 200 CHF / DZIEŃ", (1200.0, 1200.0, "CHF", "DZIEŃ")),
     ("5 000 EUR / TYDZIEŃ", (5000.0, 5000.0, "EUR", "TYDZIEŃ")),
+    # Turkish dotless ı and dotted İ are not i: a Unicode case fold (Java,
+    # Python) matches them to 'mies.' where RE2 does not.
+    ("5 000 zł / mıes.", (5000.0, 5000.0, "PLN", None)),
+    ("5 000 zł / MİES.", (5000.0, 5000.0, "PLN", None)),
 ]
 
 
@@ -81,7 +85,8 @@ _num = st.builds(
 )
 _currency = st.sampled_from(["zł", "ZŁ", "zŁ", "PLN", "EUR", "USD", "CHF", "GBP", "pln", ""])
 _period = st.sampled_from(
-    ["mies.", "godz.", "rok", "dzień", "DZIEŃ", "tydzień", "TYDZIEŃ", "h", "month", ""]
+    ["mies.", "godz.", "rok", "dzień", "DZIEŃ", "tydzień", "TYDZIEŃ", "h", "month", "",
+     "mıes.", "MİES.", "MIES."]
 )
 _salary_text = st.builds(
     lambda n1, dash, n2, cur, per, dec: (
@@ -112,6 +117,24 @@ def test_expression_matches_python_twin(spark, texts):
     expected = [_parse_salary_py(t) for t in texts]
     got = _run_expr(spark, texts)
     assert got == expected
+
+
+def test_no_case_insensitive_regex_flag():
+    """No engine regex and no registered oracle folds case by flag: Java,
+    RE2 and Python's re each fold differently (Turkish ı/İ above), so every
+    case-insensitive match is spelled as explicit letter classes."""
+    import pathlib
+    import re
+
+    import e2e_etl_pipeline_spark as pkg
+    from e2e_etl_pipeline_spark.registry import ORACLES, load_all
+
+    flagged = re.compile(r"\(\?[a-zA-Z]*i|re\.IGNORECASE|re\.I\b")
+    root = pathlib.Path(pkg.__file__).parent
+    hits = [p.name for p in root.rglob("*.py") if flagged.search(p.read_text())]
+    load_all()
+    hits += [key for key, sql in ORACLES.items() if flagged.search(sql)]
+    assert hits == [], hits
 
 
 def test_invariants(spark):

@@ -92,41 +92,35 @@ def test_dedup_primitives_are_total_on_short_text(spark, texts):
 
 
 def test_every_oracle_tokenizer_matches_the_canonical_class():
-    """Drift lock (round-7 review): ~30 oracles still carry the
-    whitespace-split fragment verbatim rather than interpolating
-    textstats.words_sql. Any copy whose character class or empty-token
-    filter drifts from the canonical rendering would silently split
-    Spark/DuckDB parity — so every regexp_split_to_array occurrence in a
-    registered oracle must use exactly the canonical class, and the
-    engine-side words() regex must equal it too."""
+    """Drift lock: functions/textstats.py is the only package module that
+    spells the whitespace class or splits on a regex shorthand, and every
+    whitespace split in a registered oracle is textstats.words_sql's exact
+    rendering, so no copy of the tokenizer can drift from the engine's."""
+    import pathlib
     import re
 
+    import e2e_etl_pipeline_spark as pkg
     from e2e_etl_pipeline_spark.functions import textstats as ts
     from e2e_etl_pipeline_spark.registry import ORACLES, load_all
 
+    root = pathlib.Path(pkg.__file__).parent
+    spellers = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "x0B" in p.read_text() or re.search(r"\bsplit\([^)]*\\s", p.read_text())
+    )
+    assert spellers == ["functions/textstats.py"], spellers
+
     load_all()
-    canonical_class = r"[ \t\n\x0B\f\r]+"
-    # words_sql renders the canonical class (single point of truth)
-    assert canonical_class in ts.words_sql("text")
-    hits = 0
+    head, tail = ts.words_sql("\0").split("\0")
+    rendering = re.compile(
+        re.escape(head) + r"(?:(?!regexp_split_to_array).)*?" + re.escape(tail), re.S
+    )
+    tokenizing = 0
     for key, sql in ORACLES.items():
-        for m in re.finditer(r"regexp_split_to_array", sql):
-            hits += 1
-            # the split's pattern argument (a quoted literal) must be the
-            # canonical class within this call's argument window
-            window = sql[m.start() : m.start() + 160]
-            assert "'[ \\t\\n\\x0B\\f\\r]+'" in window, (
-                f"{key}: split without the canonical whitespace class "
-                f"nearby — use textstats.words_sql ({window[:80]!r})"
-            )
-        # every split must also drop empty tokens — either inline
-        # (list_filter(... , w -> w <> '')) or via a downstream
-        # WHERE token <> '' (the shared Jaccard CTE's spelling)
-        if "regexp_split_to_array" in sql:
-            assert re.search(
-                r"list_filter\(\s*regexp_split_to_array", sql
-            ) or "<> ''" in sql, (
-                f"{key}: split without any empty-token filter — a doubled "
-                "space would mint empty tokens"
-            )
-    assert hits >= 25, f"expected the fragment across the registry, saw {hits}"
+        n_split = sql.count("regexp_split_to_array")
+        tokenizing += n_split > 0
+        assert len(rendering.findall(sql)) == n_split, (
+            f"{key}: a whitespace split that is not textstats.words_sql"
+        )
+    assert tokenizing >= 40, tokenizing
