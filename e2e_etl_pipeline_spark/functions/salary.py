@@ -38,6 +38,13 @@ Why the SQL is shaped as it is:
     unmatched, its Unicode flag (like Python's `re`) folds `ı`/`İ` to `i`
     where RE2 does not, so `'… / mıes.'` gave pay_period `mıes.` in Spark
     and NULL in DuckDB. A class matches the same strings in all three.
+  * No `\\s` or `\\d` shorthand either: each engine means another class by
+    it. Java's `\\s` is textstats' whitespace class, RE2's leaves out `\\v`
+    and Python's adds the Unicode spaces, so `'5\\x0b000 zł'` and
+    `'5\\u2009000 zł'` (a thin space) each split one engine from the other
+    two; Python's `\\d` also matches non-ASCII digits. Every site uses
+    NUMBER_PATTERN, PERIOD_PATTERN and textstats.WS_RUN, which interpolate
+    textstats.WS_CHARS and spell `[0-9]`.
 """
 
 from __future__ import annotations
@@ -45,6 +52,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from e2e_etl_pipeline_spark.functions.textstats import WS_CHARS, WS_RUN
+
+# One number: a digit, then digits and whitespace, then an optional decimal
+# comma part. Read by Java, RE2 and Python's re alike (module docstring).
+NUMBER_PATTERN = rf"[0-9][0-9{WS_CHARS}]*(?:,[0-9]+)?"
 # Group 1 is the currency / pay-period token in its matched case, each
 # letter an explicit two-case class. The same regex text is read by Java
 # (here), RE2 (the oracle) and Python's re (the twin,
@@ -53,21 +65,16 @@ CURRENCY_PATTERN = (
     "([zZ][łŁ]|[pP][lL][nN]|[eE][uU][rR]|[uU][sS][dD]|[cC][hH][fF]|[gG][bB][pP])"
 )
 PERIOD_PATTERN = (
-    r"/\s*([mM][iI][eE][sS]\.|[gG][oO][dD][zZ]\.|[rR][oO][kK]|[dD][zZ][iI][eE][ńŃ]"
-    r"|[tT][yY][dD][zZ][iI][eE][ńŃ]|[mM][oO][nN][tT][hH]|[hH])"
+    rf"/[{WS_CHARS}]*([mM][iI][eE][sS]\.|[gG][oO][dD][zZ]\.|[rR][oO][kK]"
+    r"|[dD][zZ][iI][eE][ńŃ]|[tT][yY][dD][zZ][iI][eE][ńŃ]|[mM][oO][nN][tT][hH]|[hH])"
 )
 
-# The parse as Spark SQL text. Spark SQL string literals eat one backslash
-# level, so every regex backslash is doubled here, except in the raw (r'...')
-# literals that carry the shared patterns. NBSP appears as the literal
+# The parse as Spark SQL text. The shared patterns go in raw (r'...')
+# literals, which keep their backslashes. NBSP appears as the literal
 # character. {c} is a backtick-quoted column reference.
 _NORM_SQL = "regexp_replace({c}, ' ', ' ')"
-_NUMS_SQL = (
-    "regexp_extract_all(" + _NORM_SQL + ", '\\\\d[\\\\d\\\\s]*(?:,\\\\d+)?', 0)"
-)
-_CLEAN_SQL = (
-    "cast(regexp_replace(regexp_replace(_m, '\\\\s+', ''), ',', '.') as double)"
-)
+_NUMS_SQL = "regexp_extract_all(" + _NORM_SQL + f", r'{NUMBER_PATTERN}', 0)"
+_CLEAN_SQL = f"cast(regexp_replace(regexp_replace(_m, r'{WS_RUN}', ''), ',', '.') as double)"
 _CURRENCY_SQL = (
     "CASE WHEN _cur = '' THEN cast(null as string) "
     "WHEN _cur rlike '^[zZ][łŁ]$' THEN 'PLN' ELSE _cur END".replace(

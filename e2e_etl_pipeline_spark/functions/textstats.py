@@ -8,7 +8,8 @@ All built-in expressions (regexp_extract_all / filter / aggregate): at
 This module is the only one that spells the whitespace class. Every
 whitespace tokenizer in the engine is ``words``; every oracle's is
 ``words_sql``; a query that needs the class in another regex interpolates
-``WS_RUN``, ``PUNCT_PATTERN`` or ``BPE_ISH_PATTERN`` from here.
+``WS_CHARS``, ``WS_RUN``, ``PUNCT_PATTERN`` or ``BPE_ISH_PATTERN`` from
+here.
 
 Why ``words`` extracts instead of splitting: "split on runs of the class,
 then drop empty tokens" yields exactly the maximal runs outside the class,
@@ -35,16 +36,17 @@ EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 # The whitespace class: Java's \s spelled out, never the shorthand. RE2
 # (the DuckDB oracles) leaves \x0B out of its \s while Java includes it, so
 # a shorthand class silently diverges between engines on a \v byte. The
-# escapes are regex text, read the same by Java and RE2; in SQL they go
-# inside a plain (DuckDB) or raw (Spark r'...') string literal.
-_WS = r" \t\n\x0B\f\r"
-WS_RUN = f"[{_WS}]+"
-WORD_PATTERN = f"[^{_WS}]+"
+# escapes are regex text, read the same by Java, RE2 and Python's re; in SQL
+# they go inside a plain (DuckDB) or raw (Spark r'...') string literal.
+# WS_CHARS is the class's members, for composing into another class.
+WS_CHARS = r" \t\n\x0B\f\r"
+WS_RUN = f"[{WS_CHARS}]+"
+WORD_PATTERN = f"[^{WS_CHARS}]+"
 # Punctuation: neither a word character nor whitespace.
-PUNCT_PATTERN = rf"[^\w{_WS}]"
+PUNCT_PATTERN = rf"[^\w{WS_CHARS}]"
 # BPE-ish tokenizer: letter runs, digit runs, or single non-alnum-non-space
 # symbols — the classic pre-tokenization split (public GPT-2 style).
-BPE_ISH_PATTERN = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS}]"
+BPE_ISH_PATTERN = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_CHARS}]"
 
 FINGERPRINT_MOD = 1_000_000_007
 FINGERPRINT_BASE = 31

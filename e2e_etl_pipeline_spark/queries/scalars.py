@@ -57,8 +57,8 @@ def salary_oracle_sql(samples: list[str]) -> str:
         salary_text,
         list_transform(
           regexp_extract_all(replace(salary_text, chr(160), ' '),
-                             '\\d[\\d\\s]*(?:,\\d+)?'),
-          m -> CAST(replace(regexp_replace(m, '\\s+', '', 'g'), ',', '.') AS DOUBLE)
+                             '{sal.NUMBER_PATTERN}'),
+          m -> CAST(replace(regexp_replace(m, '{ts.WS_RUN}', '', 'g'), ',', '.') AS DOUBLE)
         ) AS nums,
         nullif(regexp_extract(replace(salary_text, chr(160), ' '),
                               '{sal.CURRENCY_PATTERN}', 1), '') AS cur_raw,

@@ -27,7 +27,8 @@ from e2e_etl_pipeline_spark.functions.rounding import stable_round
 from e2e_etl_pipeline_spark.queries.scalars import SALARY_SAMPLES
 from e2e_etl_pipeline_spark.registry import ORACLES, register
 
-_NUM_RE = re.compile(r"\d[\d\s]*(?:,\d+)?")
+_NUM_RE = re.compile(sal.NUMBER_PATTERN)
+_WS_RUN_RE = re.compile(ts.WS_RUN)
 _CUR_RE = re.compile(sal.CURRENCY_PATTERN)
 _PERIOD_RE = re.compile(sal.PERIOD_PATTERN)
 _PERIOD_MAP = {"mies.": "month", "godz.": "h"}
@@ -37,7 +38,7 @@ def _parse_salary_py(text: str | None) -> tuple[float | None, float | None, str 
     """Reference-faithful Python salary parse (transform_data.py:144-173) —
     the row-at-a-time twin of functions/salary.parse_salary."""
     s = (text or "").replace("\xa0", " ")
-    nums = [float(re.sub(r"\s+", "", m).replace(",", ".")) for m in _NUM_RE.findall(s)]
+    nums = [float(_WS_RUN_RE.sub("", m).replace(",", ".")) for m in _NUM_RE.findall(s)]
     cur_m = _CUR_RE.search(s)
     currency = None
     if cur_m:

@@ -13,6 +13,10 @@ if REPO_ROOT not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: a test that takes minutes, not seconds")
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

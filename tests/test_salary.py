@@ -43,6 +43,12 @@ CASES = [
     # Python) matches them to 'mies.' where RE2 does not.
     ("5 000 zł / mıes.", (5000.0, 5000.0, "PLN", None)),
     ("5 000 zł / MİES.", (5000.0, 5000.0, "PLN", None)),
+    # Whitespace is textstats' class in all three engines: \x0B is in it
+    # (RE2's \s leaves it out), a thin space is not (Python's \s has it).
+    ("5\x0b000 zł / mies.", (5000.0, 5000.0, "PLN", "month")),
+    ("5\u2009000 zł / mies.", (5.0, 0.0, "PLN", "month")),
+    # A digit is [0-9]: Python's \d also matches ARABIC-INDIC DIGIT FIVE.
+    ("\u0665 000 zł / mies.", (0.0, 0.0, "PLN", "month")),
 ]
 
 
@@ -80,7 +86,7 @@ def test_oracle_sql_agrees_on_cases():
 _num = st.builds(
     lambda a, sep, b: f"{a}{sep}{b}" if sep else str(a),
     st.integers(1, 999),
-    st.sampled_from(["", " ", "\xa0"]),
+    st.sampled_from(["", " ", "\xa0", "\x0b", "\u2009"]),
     st.integers(0, 999),
 )
 _currency = st.sampled_from(["zł", "ZŁ", "zŁ", "PLN", "EUR", "USD", "CHF", "GBP", "pln", ""])
