@@ -2,8 +2,9 @@
 (north star, /root/repo/BASELINE.json:6): token counting, quality scoring,
 language-ID features, document fingerprinting.
 
-All built-in expressions (regexp_extract_all / filter / aggregate): at
-100 TB these run inside the parquet scan stage, no shuffle, no Python.
+All built-in expressions (regexp_extract_all / array_join / filter /
+aggregate): at 100 TB these run inside the parquet scan stage, no shuffle,
+no Python.
 
 This module is the only one that spells the whitespace class. Every
 whitespace tokenizer in the engine is ``words``; every oracle's is
@@ -82,7 +83,16 @@ def bpe_ish_tokens(col: Column | str) -> Column:
 
 def stopword_ratio(col: Column | str) -> Column:
     """Fraction of words that are English function words ∈ [0,1]; NULL for
-    empty documents. The core feature of the language-ID heuristic."""
+    empty documents. The core feature of the language-ID heuristic.
+
+    It keeps its ``filter`` lambda (interpreted in Spark 4.1, module
+    docstring): no array built-in counts the elements that fall in a set.
+    ``array_intersect`` and ``array_except`` drop duplicates, so they would
+    count distinct stopwords, not occurrences, and a chain of one
+    ``array_remove`` per stopword copies the array ten times. Counting
+    whitespace-bounded stopword matches in ``lower(text)`` with one regex
+    is the candidate lambda-free form; it is not yet checked against the
+    oracles on the Unicode and whitespace test-data variants."""
     ws = words(col)
     n = F.size(ws)
     hits = F.size(F.filter(ws, lambda w: F.lower(w).isin(*EN_STOPWORDS)))
@@ -92,9 +102,12 @@ def stopword_ratio(col: Column | str) -> Column:
 
 
 def mean_word_length(col: Column | str) -> Column:
+    """Characters per word; NULL for empty documents. The words' summed
+    length is the length of their concatenation: the same integer as an
+    ``aggregate`` over ``length(w)``, in generated code, with no lambda."""
     ws = words(col)
     n = F.size(ws)
-    total = F.aggregate(ws, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w))
+    total = F.length(F.array_join(ws, ""))
     return F.when(n == 0, F.lit(None).cast("double")).otherwise(
         total.cast("double") / n.cast("double")
     )
@@ -141,7 +154,11 @@ def word_fingerprint(col: Column | str) -> Column:
     """Order-sensitive rolling (polynomial) hash over the word sequence:
     fp = Σ (fp*31 + len(word)+first_char_code) mod 1e9+7 — a content-defined
     document fingerprint computable identically in any engine with integer
-    arithmetic (no engine-specific hash function involved)."""
+    arithmetic (no engine-specific hash function involved).
+
+    It keeps its ``aggregate`` lambda: the fold weighs each word by its
+    position and reduces mod 1e9+7 at every step, and Spark has no
+    lambda-free positional sum over an array."""
     ws = words(col)
     step = lambda acc, w: (  # noqa: E731
         acc * FINGERPRINT_BASE + F.length(w) + F.ascii(w)

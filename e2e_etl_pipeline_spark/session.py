@@ -60,6 +60,36 @@ Class-data sharing (JDK 17 dynamic AppCDS) for the driver JVM:
     cannot archive, and bench.py's stdout is one JSON line.
   * A caller's own spark.driver.extraJavaOptions come after these options,
     so they win.
+
+The serial garbage collector (``-XX:+UseSerialGC``) for the driver JVM:
+  * Why. In local[N] the driver JVM is the whole engine, and its collector
+    sets most of the memory footprint. Under G1 (JDK 17's default) a
+    headline benchmark run committed ~1-1.3 GB of heap for a live set of
+    ~400 MB. A JFR recording traced the growth to Spark's TorrentBroadcast:
+    ``blockifyObject`` allocates a 4 MB chunk per broadcast (one per stage's
+    task binary and one per broadcast-join relation; 277 chunks, 1.1 GB in
+    one run). With 2 MB regions each chunk is a humongous object that starts
+    a concurrent cycle, and at one pause G1 grew the heap by 526 MB. G1
+    tuning (GCTimeRatio, region size, pause goal, young size) and a smaller
+    broadcast block size left the JVM's peak RSS at 1.5-1.9 GB; the serial
+    collector kept it at 1.1-1.2 GB. The benchmark's peak RSS fell
+    2108 -> 1593 MB on headline and 1602 -> 1419 MB on the offers job
+    (medians of 10 pairs, 4 vCPU), with CPU time and set-up unchanged.
+  * Cost. One collector thread, and every collection stops the tasks. At
+    sf0.1 the heavy LLM-family keys' quiet min-of-3 times stayed inside
+    the spread of G1's runs, with 1.6-2.5 GB of heap committed instead of
+    2.7-3.7 GB. q_dedup_near pays most: 0.14-0.25 s of collections per
+    run (G1: up to 0.03 s), about the rise of its median. Session start
+    pays ~0.07 s more in pauses (CHANGES.md has the numbers).
+  * The flag rides on the class-data-sharing options above, so a launch
+    the session leaves alone (a live conf file, an extra class-path
+    directory, a JVM already running) keeps the JVM's default collector.
+  * JDK 17 refuses to start with two collectors selected. When the
+    caller's java options or the environment name one (``_COLLECTOR``,
+    ``_JAVA_OPTIONS_ENV``), the session adds none: pass
+    ``-XX:+UseG1GC`` in spark.driver.extraJavaOptions to keep G1.
+  * An archive recorded under one collector maps under another; only the
+    JDK base archive's heap objects are left out.
 """
 
 from __future__ import annotations
@@ -69,6 +99,7 @@ import contextlib
 import glob
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 from typing import NamedTuple
@@ -89,6 +120,14 @@ _LOCALE_PIN: tuple | None = None
 _CDS_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
 # Spark's launcher puts each of these directories on the driver's class path.
 _CLASSPATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+# The driver JVM's collector (module docstring), and a JVM option that selects
+# one. Options in these variables and confs reach the driver JVM too.
+_GC = "-XX:+UseSerialGC"
+_COLLECTOR = re.compile(r"-XX:[+-]Use(Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
+_JAVA_OPTIONS_ENV = (
+    "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS",
+)
+_JAVA_OPTIONS_CONF = ("spark.driver.extraJavaOptions", "spark.driver.defaultJavaOptions")
 
 
 class _Cds(NamedTuple):
@@ -120,8 +159,9 @@ def _archive_key(spark_home: str) -> str:
 
 
 def _class_data_sharing(conf: dict[str, str]) -> _Cds | None:
-    """How to launch the driver JVM from an archive (module docstring), or
-    None when it must start without one."""
+    """How to launch the driver JVM from an archive and on the serial
+    collector (module docstring), or None when it must start without
+    either."""
     from pyspark.find_spark_home import _find_spark_home
 
     spark_home = _find_spark_home()
@@ -147,7 +187,9 @@ def _class_data_sharing(conf: dict[str, str]) -> _Cds | None:
         recording = os.path.join(cache, f"cds-{key}.{os.getpid()}.tmp")
         options = f"-XX:ArchiveClassesAtExit={recording}"
     own = conf.get("spark.driver.extraJavaOptions", "")
-    return _Cds(f"{options} {_CDS_LOG} {own}".strip(), empty, recording)
+    named = [conf.get(k, "") for k in _JAVA_OPTIONS_CONF] + [os.environ.get(v, "") for v in _JAVA_OPTIONS_ENV]
+    gc = "" if any(_COLLECTOR.search(o) for o in named) else _GC
+    return _Cds(" ".join(o for o in (options, _CDS_LOG, gc, own) if o), empty, recording)
 
 
 def _pid_alive(pid: int) -> bool:

@@ -1,7 +1,7 @@
 """tools/perf_sweep.py: a key's record counts what its executed plan file
-shows and the classes its timed run compiled, and an isolated child that
-dies surfaces as an error, never as the numbers an earlier child left in its
-output file."""
+shows, the classes its timed run compiled and the JVM's collection time and
+committed heap, and an isolated child that dies surfaces as an error, never
+as the numbers an earlier child left in its output file."""
 
 from __future__ import annotations
 
@@ -71,6 +71,20 @@ def test_warmed_key_compiles_no_generated_classes(spark, sf_dir, tmp_path):
     rec = perf_sweep.sweep(spark, [key], sf_dir, 1, str(tmp_path / "sweep.json"))[key]
     assert rec["codegen.compilations"] == 0, rec
     assert rec["jvm.jit_s"] >= 0
+    assert rec["jvm.gc_s"] >= 0
+    max_heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory() / 2**20  # noqa: SLF001
+    assert 0 < rec["jvm.heap_committed_mb"] <= max_heap, rec
+
+
+def test_gc_counter_reads_collection_time(spark):
+    """A full collection of the session's heap shows in ``jvm.gc_s``, and
+    the counters subtract to the time between two reads."""
+    perf_sweep = _load_perf_sweep()
+    before = perf_sweep.jvm_counters(spark)
+    spark._jvm.java.lang.System.gc()  # noqa: SLF001
+    spent = perf_sweep.jvm_counters(spark) - before
+    assert spent["jvm.gc_s"] > 0, spent
+    assert spent["codegen.compilations"] == 0
 
 
 def test_held_stages_drops_stages_the_store_evicted():

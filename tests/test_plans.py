@@ -83,6 +83,16 @@ def test_words_is_lambda_free(spark):
     assert "lambdafunction" not in optimized, optimized
 
 
+def test_mean_word_length_is_lambda_free(spark):
+    """mean_word_length sums word lengths as the length of their
+    concatenation, not with an ``aggregate`` lambda Spark would interpret."""
+    from e2e_etl_pipeline_spark.functions import textstats as ts
+
+    df = spark.createDataFrame([("a b",)], "text string").select(ts.mean_word_length("text"))
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    assert "lambdafunction" not in optimized, optimized
+
+
 def test_agg_has_partial_aggregation(spark, sf_dir):
     """Map-side combine: two HashAggregate nodes (partial + final)."""
     plan = _formatted(spark, "q_agg_groupby", sf_dir)

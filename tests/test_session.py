@@ -1,12 +1,14 @@
 """session.get_session: the codegen cache holds a repeated working set larger
 than Spark's default cap of 100 generated classes, and the driver JVM starts
-from a class-data-sharing archive."""
+from a class-data-sharing archive on the serial collector unless the caller
+names a collector."""
 
 from __future__ import annotations
 
 import os
 import shutil
 import subprocess
+import sys
 
 import pytest
 
@@ -49,7 +51,7 @@ def test_warm_passes_compile_no_generated_classes(spark, sf_dir):
 @pytest.fixture
 def cds_env(tmp_path, monkeypatch):
     """A cache directory and a conf directory of templates only."""
-    for var in session._CLASSPATH_ENV:  # noqa: SLF001
+    for var in (*session._CLASSPATH_ENV, *session._JAVA_OPTIONS_ENV):  # noqa: SLF001
         monkeypatch.delenv(var, raising=False)
     conf = tmp_path / "conf"
     conf.mkdir()
@@ -68,12 +70,13 @@ def test_live_conf_file_starts_without_an_archive(cds_env):
 
 def test_templates_only_conf_records_then_shares_an_archive(cds_env):
     """No archive: the recording flags and the cache's empty conf dir. An
-    archive in place: the sharing flags. JVM log lines go to stderr."""
+    archive in place: the sharing flags. JVM log lines go to stderr, and
+    the JVM runs the serial collector."""
     cache = cds_env / "cache" / "e2e_etl_pipeline_spark"
     rec = session._class_data_sharing({})  # noqa: SLF001
     assert rec.conf_dir == str(cache / "conf") and os.listdir(rec.conf_dir) == []
     assert rec.java_options.startswith(f"-XX:ArchiveClassesAtExit={rec.recording} ")
-    assert rec.java_options.endswith(session._CDS_LOG)  # noqa: SLF001
+    assert rec.java_options.endswith(f"{session._CDS_LOG} {session._GC}")  # noqa: SLF001
     assert os.path.dirname(rec.recording) == str(cache)
     archive = rec.recording.rsplit(".", 2)[0] + ".jsa"
     open(archive, "wb").close()
@@ -85,7 +88,31 @@ def test_templates_only_conf_records_then_shares_an_archive(cds_env):
 def test_callers_java_options_are_kept_last(cds_env):
     own = "-Duser.language=tr -Duser.country=TR"
     cds = session._class_data_sharing({"spark.driver.extraJavaOptions": own})  # noqa: SLF001
-    assert cds.java_options.endswith(f"{session._CDS_LOG} {own}")  # noqa: SLF001
+    assert cds.java_options.endswith(f"{session._CDS_LOG} {session._GC} {own}")  # noqa: SLF001
+
+
+@pytest.mark.parametrize("collector", ["-XX:+UseG1GC", "-XX:-UseSerialGC", "-XX:+UseParallelGC"])
+@pytest.mark.parametrize(
+    "where",
+    ["spark.driver.extraJavaOptions", "spark.driver.defaultJavaOptions", *session._JAVA_OPTIONS_ENV],  # noqa: SLF001
+)
+def test_a_named_collector_adds_no_collector_flag(cds_env, monkeypatch, collector, where):
+    """JDK 17 refuses to start with two collectors selected, so a collector
+    the caller names anywhere that reaches the driver JVM wins alone."""
+    conf = {}
+    if where.startswith("spark."):
+        conf[where] = f"-Dx=1 {collector}"
+    else:
+        monkeypatch.setenv(where, f"-Dx=1 {collector}")
+    cds = session._class_data_sharing(conf)  # noqa: SLF001
+    own = conf.get("spark.driver.extraJavaOptions")
+    assert cds.java_options.endswith(f"{session._CDS_LOG} {own}" if own else session._CDS_LOG)  # noqa: SLF001
+
+
+def test_an_option_that_selects_no_collector_keeps_the_flag(cds_env, monkeypatch):
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:+UseMaximumCompactionOnSystemGC -XX:+UseStringDeduplication")
+    cds = session._class_data_sharing({})  # noqa: SLF001
+    assert cds.java_options.endswith(f"{session._CDS_LOG} {session._GC}")  # noqa: SLF001
 
 
 class _ExitedJvm:
@@ -153,3 +180,55 @@ def test_damaged_archive_falls_back(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout == "" and "version" in out.stderr
+
+
+def test_driver_jvm_runs_the_serial_collector(spark):
+    if session._class_data_sharing({}) is None:  # noqa: SLF001
+        pytest.skip("this Spark installation leaves the launch alone")
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()  # noqa: SLF001
+    assert {b.getName() for b in beans} == {"Copy", "MarkSweepCompact"}
+
+
+def test_a_collector_in_the_environment_wins(tmp_path):
+    """A JVM launched through get_session under JAVA_TOOL_OPTIONS=-XX:+UseG1GC
+    starts, on G1: the session added no second collector."""
+    probe = (
+        "from e2e_etl_pipeline_spark.session import get_session\n"
+        "s = get_session('gc-probe')\n"
+        "beans = s._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()\n"
+        "print(sorted(b.getName() for b in beans))\n"
+    )
+    env = dict(
+        os.environ,
+        JAVA_TOOL_OPTIONS="-XX:+UseG1GC",
+        PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        SPARK_GRAFT_CPUS="1",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "['G1 Old Generation', 'G1 Young Generation']"
+
+
+@pytest.mark.parametrize("collector", ["-XX:+UseSerialGC", "-XX:+UseG1GC"])
+def test_archive_maps_under_either_collector(spark, collector):
+    """The archive a session recorded maps under both collectors with
+    -Xshare:on (which exits 1 rather than fall back), so a JVM started on
+    G1 by a caller who asks for it still starts from the archive."""
+    from pyspark import SparkContext
+
+    with open(f"/proc/{SparkContext._gateway.proc.pid}/cmdline") as f:  # noqa: SLF001
+        args = f.read().split("\0")
+    archives = [a.split("=", 1)[1] for a in args if a.startswith("-XX:SharedArchiveFile=")]
+    if not archives:
+        pytest.skip("the session's JVM did not start from an archive")
+    class_path = args[args.index("-cp") + 1]
+    out = subprocess.run(
+        [args[0], "-cp", class_path, f"-XX:SharedArchiveFile={archives[0]}", "-Xshare:on", collector, "-version"],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert out.returncode == 0, out.stderr

@@ -18,7 +18,10 @@ readers (perfbench/layers.py):
                        (plans, if its construction started SQL executions);
   codegen.compilations generated classes Janino compiled during that run
                        (codegen cache misses; 0 once the key is warm);
-  jvm.jit_s            JIT compile seconds the JVM spent during that run.
+  jvm.jit_s            JIT compile seconds the JVM spent during that run;
+  jvm.gc_s             garbage-collection seconds during that run, summed
+                       over the JVM's collectors;
+  jvm.heap_committed_mb  heap the JVM held from the OS at the end of it.
 The executed-plan text of that run goes beside the JSON output, as
 ``<out stem>.<key>.plan.txt``.
 
@@ -67,7 +70,7 @@ FIELDS = (
     "spark.python.bytes_received", "spark.python.run_s",
     "spark.plan.python_nodes", "spark.plan.py_eval", "spark.plan.map_in_py",
     "spark.plan.single_partition", *PLAN_NODES.values(), *EXTRA_NODES.values(),
-    "codegen.compilations", "jvm.jit_s",
+    "codegen.compilations", "jvm.jit_s", "jvm.gc_s", "jvm.heap_committed_mb",
 )
 
 
@@ -99,16 +102,23 @@ def plan_shape(stats: SparkStats, eids) -> Counter:
     return out
 
 
-def compile_counters(spark) -> Counter:
-    """The JVM's compile layer so far: Janino compilations of generated
-    classes, and JIT compile seconds."""
+def jvm_counters(spark) -> Counter:
+    """The JVM's compile and GC layers so far: Janino compilations of
+    generated classes, JIT compile seconds and collection seconds."""
     jvm = spark._jvm  # noqa: SLF001
+    mgmt = jvm.java.lang.management.ManagementFactory
     return Counter({
         "codegen.compilations":
             jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
-        "jvm.jit_s":
-            jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime() / 1000,
+        "jvm.jit_s": mgmt.getCompilationMXBean().getTotalCompilationTime() / 1000,
+        "jvm.gc_s": sum(gc.getCollectionTime() for gc in mgmt.getGarbageCollectorMXBeans()) / 1000,
     })
+
+
+def heap_committed_mb(spark) -> float:
+    """Heap the JVM holds from the OS now, in MB."""
+    heap = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean().getHeapMemoryUsage()  # noqa: SLF001
+    return round(heap.getCommitted() / 2**20, 1)
 
 
 def held_stages(sc, jobs: list[dict]) -> list[dict]:
@@ -139,12 +149,14 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
             stats.drain()
             stats.skip_to_now()
             sc.setJobGroup(f"sweep/{key}/run", key)
-            compiles = compile_counters(spark)
+            counters = jvm_counters(spark)
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
-    compiles = compile_counters(spark) - compiles
-    compiles["jvm.jit_s"] = round(compiles["jvm.jit_s"], 3)
+    counters = jvm_counters(spark) - counters
+    for name in ("jvm.jit_s", "jvm.gc_s"):
+        counters[name] = round(counters[name], 3)
+    counters["jvm.heap_committed_mb"] = heap_committed_mb(spark)
     out = {
         "construct": round(t_construct, 3),
         "warm": round(t_warm, 3),
@@ -160,7 +172,7 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
     first = stats.last_execution
     layer.update(stats.new_plans())
     layer.update(plan_shape(stats, range(first + 1, stats.last_execution + 1)))
-    layer.update(compiles)
+    layer.update(counters)
     plan = ""
     if stats.last_execution > first:  # the run's noop write is its last execution
         plan = stats.sql.execution(stats.last_execution).get().physicalPlanDescription()
