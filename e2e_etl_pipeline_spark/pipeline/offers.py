@@ -4,14 +4,23 @@ Reference behavior (SURVEY.md §2 A9-A12, §3.1): BeautifulSoup parses a whole
 HTML document, each offer node becomes one row of six string fields, with ""
 for anything missing. Engine design:
 
-  * Parse runs inside an Arrow-batched mapInPandas over (doc rows) — one
-    Python parse per document, vectorized transport, parallel across
-    partitions (the reference is single-threaded row-at-a-time Python).
+  * Parse runs inside mapInArrow over (doc rows) — one Python parse per
+    document, Arrow record batches in and out, parallel across partitions
+    (the reference is single-threaded row-at-a-time Python).
   * The DOM walk uses stdlib html.parser (bs4/lxml aren't in this
     container); selectors are data (per-site config), not code — SURVEY.md
     §4.3's brittle-selector note.
-  * Each document explodes into N offer rows (the UDTF shape): the parser
-    returns the rows directly from mapInPandas.
+  * Each document explodes into N offer rows (the UDTF shape): the kernel
+    returns one record batch of offer rows per input batch.
+  * The kernel builds its output from Arrow buffers and never imports
+    pandas. ``doc_id`` and ``site`` are ``take``n from the input batch, so
+    their types and NULLs pass through exactly (a pandas frame turned a
+    NULL-bearing int64 column into float64, rounding ids past 2**53 and
+    failing the job on 2**63 - 1). The other columns come from
+    ``pa.Array.from_buffers``, never ``pa.array``/``from_pydict``/
+    ``from_pylist`` on Python lists: in pyarrow 16 those import pandas
+    lazily (``_is_array_like`` → ``_pandas_api``), ~33 MB more in every
+    worker.
   * Salary strings are NOT parsed in Python: the raw salary text column
     feeds the codegen'd column-expression parser
     (functions/salary.parse_salary), keeping the hot arithmetic JVM-side.
@@ -22,13 +31,16 @@ for anything missing. Engine design:
 
 from __future__ import annotations
 
+import array
 from collections.abc import Iterator
 from html.parser import HTMLParser
+from itertools import accumulate
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from e2e_etl_pipeline_spark.functions.salary import parse_salary
 from e2e_etl_pipeline_spark.functions.text import clean_position, clean_text
@@ -200,21 +212,47 @@ class _PracujParser(HTMLParser):
 _PARSERS = {"jjit": _JJITParser, "ppl": _PracujParser}
 
 
-def _parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: list[dict] = []
-        for doc_id, site, html in zip(pdf["doc_id"], pdf["site"], pdf["html"]):
+# RAW_OFFER_SCHEMA in Arrow types: mapInArrow does not coerce a yielded batch.
+_ARROW_SCHEMA = to_arrow_schema(RAW_OFFER_SCHEMA)
+_TEXT = ("position_raw", "company_raw", "salary_raw")
+
+
+def _int32(values: list[int]) -> pa.Array:
+    data = pa.py_buffer(array.array("i", values))
+    return pa.Array.from_buffers(pa.int32(), len(values), [None, data])
+
+
+def _strings(values: list[str]) -> pa.Array:
+    encoded = [v.encode() for v in values]
+    offsets = array.array("i", accumulate(map(len, encoded), initial=0))
+    return pa.Array.from_buffers(
+        pa.string(), len(values), [None, pa.py_buffer(offsets), pa.py_buffer(b"".join(encoded))]
+    )
+
+
+def _parse_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        rows: list[int] = []
+        offers: list[dict] = []
+        sites = batch.column("site").to_pylist()
+        for row, (site, html) in enumerate(zip(sites, batch.column("html").to_pylist())):
             parser_cls = _PARSERS.get(site)
             if parser_cls is None:
                 continue
             p = parser_cls()
             p.feed(html or "")
             p.close()
-            for offer in p.offers:
-                out.append({"doc_id": doc_id, "site": site, **offer})
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "site", "offer_idx", "position_raw", "company_raw", "salary_raw"],
+            rows.extend([row] * len(p.offers))
+            offers.extend(p.offers)
+        take = _int32(rows)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id").take(take),
+                batch.column("site").take(take),
+                _int32([o["offer_idx"] for o in offers]),
+                *(_strings([o[name] for o in offers]) for name in _TEXT),
+            ],
+            schema=_ARROW_SCHEMA,
         )
 
 
@@ -223,15 +261,19 @@ def extract_offers(raw_docs: DataFrame) -> DataFrame:
     DOM-walk stage alone, before any cleaning or salary parsing. parse_offers
     builds on it, and the benchmark's DOM-walk layer (pipeline.extract_s)
     times it on its own."""
-    return raw_docs.select("doc_id", "site", "html").mapInPandas(
-        _parse_batch, schema=RAW_OFFER_SCHEMA
-    )
+    # The kernel hands doc_id and site back as they arrive: cast them to the
+    # output's types here (a no-op on the usual long and string columns).
+    return raw_docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("site").cast("string").alias("site"),
+        "html",
+    ).mapInArrow(_parse_batch, schema=RAW_OFFER_SCHEMA)
 
 
 def parse_offers(raw_docs: DataFrame) -> DataFrame:
     """(doc_id, site, html) → typed offer rows (OFFER_SCHEMA + provenance).
 
-    DOM walk in mapInPandas; everything downstream (cleaning + salary parse)
+    DOM walk in mapInArrow; everything downstream (cleaning + salary parse)
     is codegen'd column expressions.
     """
     extracted = extract_offers(raw_docs)

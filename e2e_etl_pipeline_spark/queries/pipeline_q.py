@@ -322,7 +322,7 @@ def _offers_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_offers_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full transform stage end-to-end: synthetic HTML docs
     (both site DOM contracts, built deterministically from the part table) →
-    mapInPandas DOM parse → codegen'd clean + salary parse → typed offers.
+    mapInArrow DOM parse → codegen'd clean + salary parse → typed offers.
     Golden-file correctness lives in tests/test_pipeline.py.
 
     Every parsed field is an algebraic function of the part row that built

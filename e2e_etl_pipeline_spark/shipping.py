@@ -11,6 +11,15 @@ PYTHONPATH from the JVM's environment, not the driver's ``sys.path``.
 1000-executor cluster, exercised identically on local[N]. The zip is staged
 inside the context's own files directory, which Spark deletes when the
 context stops.
+
+The workers' launch path: Spark starts the worker daemon with PYTHONPATH set
+to ``pyspark.zip``, the py4j zip and the spark-core jar, then
+``spark.executorEnv.PYTHONPATH``, then the JVM's own PYTHONPATH. A session
+``session.get_session`` starts appends the engine's daemon directory to
+``spark.executorEnv.PYTHONPATH``; that daemon drops the jar and (same
+version installed) pyspark.zip before it forks workers (session.py
+docstring). Each task then puts its ``addPyFile`` zips, this package's
+included, ahead of all of that, so the package always comes from the zip.
 """
 
 from __future__ import annotations

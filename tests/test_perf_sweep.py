@@ -1,6 +1,6 @@
 """tools/perf_sweep.py: a key's record counts what its executed plan file
-shows, the classes its timed run compiled and the JVM's collection time and
-committed heap, and an isolated child that dies surfaces as an error, never
+shows, the classes its timed run compiled, the JVM's collection time,
+committed heap and threads, and its Python workers, and an isolated child that dies surfaces as an error, never
 as the numbers an earlier child left in its output file."""
 
 from __future__ import annotations
@@ -74,6 +74,25 @@ def test_warmed_key_compiles_no_generated_classes(spark, sf_dir, tmp_path):
     assert rec["jvm.gc_s"] >= 0
     max_heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory() / 2**20  # noqa: SLF001
     assert 0 < rec["jvm.heap_committed_mb"] <= max_heap, rec
+
+
+def test_record_counts_the_python_workers(spark, sf_dir, tmp_path):
+    """A key with an Arrow kernel leaves the worker daemon and at least one
+    worker under the JVM: the record counts them and their high-water RSS,
+    which is the sum of each process's VmHWM, and the JVM's threads."""
+    from e2e_etl_pipeline_spark.registry import load_all
+
+    perf_sweep = _load_perf_sweep()
+    load_all()
+    rec = perf_sweep.sweep(spark, ["q_map_in_arrow"], sf_dir, 1, str(tmp_path / "sweep.json"))["q_map_in_arrow"]
+    assert rec["spark.plan.python_nodes"] > 0, rec
+    assert rec["python.workers"] >= 2, rec
+    # No Python worker weighs less than 10 MB or more than 1 GB.
+    assert 10 * rec["python.workers"] < rec["python.worker_rss_mb"] < 1024 * rec["python.workers"], rec
+    assert rec["jvm.threads"] > 0, rec
+    now = perf_sweep.worker_layer(spark)
+    assert now["python.workers"] == rec["python.workers"]
+    assert now["jvm.threads"] > 0
 
 
 def test_gc_counter_reads_collection_time(spark):

@@ -10,7 +10,17 @@ import glob
 import shutil
 import tempfile
 
-from e2e_etl_pipeline_spark.pipeline.offers import offers_to_staging_csv, parse_offers
+import pyarrow as pa
+import pytest
+
+from e2e_etl_pipeline_spark.pipeline.offers import (
+    _PARSERS,
+    RAW_OFFER_SCHEMA,
+    _parse_batch,
+    extract_offers,
+    offers_to_staging_csv,
+    parse_offers,
+)
 
 JJIT_HTML = (
     "<ul>"
@@ -58,6 +68,103 @@ def test_golden_offers(spark):
         (1, "ppl", 0, "Staff SRE", "Initech", 11000.0, 12000.0, "PLN", "month"),
         (1, "ppl", 1, "Analyst", "Hooli", 31.25, 31.25, "PLN", "h"),
     ]
+
+
+@pytest.mark.parametrize("big", [2**53 + 1, 2**63 - 1])
+def test_extract_offers_keeps_doc_id_exact(spark, big):
+    """One input batch holding a NULL doc_id and a large one: a pandas frame
+    made the column float64, which rounded 2**53 + 1 to 2**53 and failed the
+    job on 2**63 - 1. The Arrow kernel takes doc_id from the batch as is."""
+    docs = spark.createDataFrame(
+        [(None, "ppl", PPL_HTML), (big, "ppl", PPL_HTML), (7, "ppl", PPL_HTML)],
+        "doc_id long, site string, html string",
+    ).coalesce(1)
+    got = sorted((r["doc_id"] is None, r["doc_id"] or 0) for r in extract_offers(docs).collect())
+    assert got == [(False, 7)] * 2 + [(False, big)] * 2 + [(True, 0)] * 2
+
+
+# Edge inputs for the kernel: NULL html, NULL and unknown site, a document
+# with no offers, a truncated one, and multibyte text.
+EDGE_DOCS = [
+    (10, "jjit", None),
+    (11, "ppl", None),
+    (12, None, JJIT_HTML),
+    (13, "indeed", PPL_HTML),
+    (14, "jjit", "<ul></ul>"),
+    (15, "ppl", "<html><body><p>nothing here</p></body></html>"),
+    (16, "jjit", "<ul><li data-index='3'><h3>Cut Off Dev</h3><h6><span>10"),
+    (17, "ppl", "<div data-test='default-offer'><a data-test='link-offer-title'>Half"),
+    (
+        18,
+        "jjit",
+        "<ul><li data-index='0'><h3>Programista ★ Łódź 😀</h3>"
+        "<p>Zażółć gęślą</p><h6><span>9 000</span><span>zł/mies.</span></h6></li></ul>",
+    ),
+    (
+        19,
+        "ppl",
+        "<div data-test='default-offer'><a data-test='link-offer-title'>Kierownik ★</a>"
+        "<h3 data-test='text-company-name'>Spółka 😀</h3>"
+        "<span data-test='offer-salary'>12 000 zł / mies.</span></div>",
+    ),
+]
+
+
+def _direct_rows(docs) -> list[tuple]:
+    """The offer rows of the parser classes run on each document directly."""
+    rows = []
+    for doc_id, site, html in docs:
+        if site not in _PARSERS:
+            continue
+        p = _PARSERS[site]()
+        p.feed(html or "")
+        p.close()
+        rows.extend(
+            (doc_id, site, o["offer_idx"], o["position_raw"], o["company_raw"], o["salary_raw"])
+            for o in p.offers
+        )
+    return rows
+
+
+def test_arrow_kernel_matches_the_parsers_on_edge_inputs(spark):
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, site string, html string").coalesce(1)
+    out = extract_offers(docs)
+    assert out.schema == RAW_OFFER_SCHEMA
+    want = _direct_rows(EDGE_DOCS)
+    assert {r[0] for r in want} == {16, 17, 18, 19}
+    assert sorted(tuple(r) for r in out.collect()) == sorted(want)
+
+
+def test_arrow_kernel_on_an_empty_batch(spark):
+    """An empty input batch gives an empty batch of the output schema, and
+    an empty frame gives no rows."""
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()), pa.array([], pa.string()), pa.array([], pa.string())],
+        names=["doc_id", "site", "html"],
+    )
+    (batch,) = _parse_batch(iter([empty]))
+    assert batch.num_rows == 0
+    assert batch.schema == pa.schema(
+        [
+            ("doc_id", pa.int64()),
+            ("site", pa.string()),
+            ("offer_idx", pa.int32()),
+            ("position_raw", pa.string()),
+            ("company_raw", pa.string()),
+            ("salary_raw", pa.string()),
+        ]
+    )
+    docs = spark.createDataFrame([], "doc_id long, site string, html string")
+    assert extract_offers(docs).collect() == []
+
+
+def test_arrow_kernel_casts_narrow_doc_ids(spark):
+    """An int doc_id column still comes back as RAW_OFFER_SCHEMA's long:
+    mapInArrow does not coerce the batches a kernel yields."""
+    docs = spark.createDataFrame([(5, "ppl", PPL_HTML)], "doc_id int, site string, html string")
+    out = extract_offers(docs)
+    assert out.schema == RAW_OFFER_SCHEMA
+    assert sorted(tuple(r)[:3] for r in out.collect()) == [(5, "ppl", 0), (5, "ppl", 1)]
 
 
 def test_csv_sink_reference_compat(spark):

@@ -21,7 +21,14 @@ readers (perfbench/layers.py):
   jvm.jit_s            JIT compile seconds the JVM spent during that run;
   jvm.gc_s             garbage-collection seconds during that run, summed
                        over the JVM's collectors;
-  jvm.heap_committed_mb  heap the JVM held from the OS at the end of it.
+  jvm.heap_committed_mb  heap the JVM held from the OS at the end of it;
+  jvm.threads          the JVM's live threads at the end of it;
+  python.workers       the Python processes the JVM started (the worker
+                       daemon and the workers it forked) alive at the end
+                       of it;
+  python.worker_rss_mb their summed high-water RSS (VmHWM) then. Workers
+                       outlive a key, so the mark covers what they ran
+                       before it in the same session too.
 The executed-plan text of that run goes beside the JSON output, as
 ``<out stem>.<key>.plan.txt``.
 
@@ -38,6 +45,7 @@ Quiet modes (round-12, VERDICT item 2 — contention-proof numbers):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import subprocess
@@ -49,7 +57,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
-from layers import PLAN_NODES, PY_SENT, Py4jCounter, SparkStats, _walk  # noqa: E402
+from layers import PLAN_NODES, PY_SENT, Py4jCounter, SparkStats, _walk, process_tree  # noqa: E402
 
 # Plan-graph node name → plan-shape counter SparkStats does not keep.
 EXTRA_NODES = {
@@ -70,7 +78,8 @@ FIELDS = (
     "spark.python.bytes_received", "spark.python.run_s",
     "spark.plan.python_nodes", "spark.plan.py_eval", "spark.plan.map_in_py",
     "spark.plan.single_partition", *PLAN_NODES.values(), *EXTRA_NODES.values(),
-    "codegen.compilations", "jvm.jit_s", "jvm.gc_s", "jvm.heap_committed_mb",
+    "codegen.compilations", "jvm.jit_s", "jvm.gc_s", "jvm.heap_committed_mb", "jvm.threads",
+    "python.workers", "python.worker_rss_mb",
 )
 
 
@@ -121,6 +130,23 @@ def heap_committed_mb(spark) -> float:
     return round(heap.getCommitted() / 2**20, 1)
 
 
+def worker_layer(spark) -> dict:
+    """The JVM's live threads, and the Python processes it started (the
+    worker daemon and its workers) with their summed VmHWM in MB, now."""
+    jvm = spark._jvm  # noqa: SLF001
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    kids = [p for p in process_tree(pid) if p != pid]
+    kb = 0
+    for kid in kids:
+        with contextlib.suppress(OSError), open(f"/proc/{kid}/status") as f:
+            kb += next((int(line.split()[1]) for line in f if line.startswith("VmHWM:")), 0)
+    return {
+        "jvm.threads": jvm.java.lang.management.ManagementFactory.getThreadMXBean().getThreadCount(),
+        "python.workers": len(kids),
+        "python.worker_rss_mb": round(kb / 1024, 1),
+    }
+
+
 def held_stages(sc, jobs: list[dict]) -> list[dict]:
     """``jobs`` with their stage ids cut to the stages the status store
     still holds. Once a session passes spark.ui.retainedStages, each
@@ -157,6 +183,7 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
     for name in ("jvm.jit_s", "jvm.gc_s"):
         counters[name] = round(counters[name], 3)
     counters["jvm.heap_committed_mb"] = heap_committed_mb(spark)
+    counters.update(worker_layer(spark))
     out = {
         "construct": round(t_construct, 3),
         "warm": round(t_warm, 3),
