@@ -18,4 +18,4 @@ Design principles (SURVEY.md §3.4, §4.2):
 __version__ = "0.1.0"
 
 from e2e_etl_pipeline_spark.session import get_session  # noqa: F401
-from e2e_etl_pipeline_spark.catalog import TABLES, load_table, register_views  # noqa: F401
+from e2e_etl_pipeline_spark.catalog import TABLES, load_table  # noqa: F401

@@ -175,9 +175,3 @@ def inline_frame(spark: SparkSession, rows: list[dict], columns: list[str]) -> D
         raise ValueError("inline_frame requires at least one row")
     structs = [F.struct(*[F.lit(r[c]).alias(c) for c in columns]) for r in rows]
     return spark.range(1).select(F.inline(F.array(*structs)))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for SQL-mode queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

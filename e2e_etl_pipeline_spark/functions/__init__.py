@@ -8,7 +8,6 @@ codegen applies").
 from e2e_etl_pipeline_spark.functions.text import (  # noqa: F401
     clean_position,
     clean_text,
-    normalize_number_str,
 )
 from e2e_etl_pipeline_spark.functions.salary import (  # noqa: F401
     parse_salary,

@@ -5,8 +5,6 @@ Semantics lifted from the reference's transformers:
     spaces, trim (DataTransform/transform_data.py:38-44).
   * clean_text      — NBSP→space, collapse all whitespace, trim
     (DataTransform/transform_data.py:124-127).
-  * normalize_number_str — drop space thousands-separators, comma→dot
-    decimal (DataTransform/transform_data.py:80-83,148-151).
 
 All pure column expressions → whole-stage codegen, no Python boundary.
 """
@@ -30,11 +28,3 @@ def clean_position(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     kept = F.regexp_replace(c, r"[^A-Za-z0-9 .,()\-]", "")
     return F.trim(F.regexp_replace(kept, r" {2,}", " "))
-
-
-def normalize_number_str(col: Column | str) -> Column:
-    """`"11 000"→"11000"`, `"31,25"→"31.25"` (A17/A18 normalization)."""
-    c = F.col(col) if isinstance(col, str) else col
-    no_nbsp = F.regexp_replace(c, NBSP, " ")
-    no_spaces = F.regexp_replace(no_nbsp, r"\s+", "")
-    return F.regexp_replace(no_spaces, ",", ".")

@@ -5,7 +5,6 @@ the expensive step is a key-partitioned shuffle, never a cross product.
 """
 
 from e2e_etl_pipeline_spark.operators.dedup import (  # noqa: F401
-    dedup_exact_first_wins,
     simhash_fingerprints,
     set_jaccard_pairs,
 )
@@ -14,7 +13,6 @@ from e2e_etl_pipeline_spark.operators.similarity import (  # noqa: F401
     lsh_bucketed_topk,
 )
 from e2e_etl_pipeline_spark.operators.multimodal import (  # noqa: F401
-    MEDIA_SCHEMA,
     attach_fake_media,
     extract_media_features,
 )

@@ -19,7 +19,7 @@ from __future__ import annotations
 import operator
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.functions import textstats as ts
@@ -48,36 +48,6 @@ def content_digest(col: Column | str, bits: int = 64) -> Column:
             F.xxhash64(F.concat(c, F.lit("\x01"))).alias("h2"),
         )
     raise ValueError(f"unsupported digest width: {bits}")
-
-
-def dedup_exact_first_wins(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """Keep exactly one row per key: the first under (order_col NULLS LAST,
-    remaining columns) — a total order, so ties on order_col and NULL keys
-    or NULL order values still yield exactly one survivor per key group
-    (the previous min+semi-join formulation dropped all-NULL-order groups
-    — NULL never equi-joins — and kept BOTH rows of an order tie).
-
-    Deterministic (unlike dropDuplicates, whose survivor depends on
-    partitioning). One shuffle on the keys; at very hot keys prefer a
-    min_by(struct(...)) aggregate, which map-side combines.
-    """
-    # asc_nulls_last on the tiebreaks too: a bare column is ASC NULLS
-    # FIRST in Spark but NULLS LAST under a DuckDB window default, so an
-    # unpinned nullable tiebreak would pick opposite survivors on an
-    # order_col tie (the family-wide pinning rule).
-    tiebreak = [
-        F.col(c).asc_nulls_last()
-        for c in df.columns
-        if c not in key_cols and c != order_col
-    ]
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(order_col).asc_nulls_last(), *tiebreak
-    )
-    return (
-        df.withColumn("_fw_rn", F.row_number().over(w))
-        .where(F.col("_fw_rn") == 1)
-        .drop("_fw_rn")
-    )
 
 
 # ---------------------------------------------------------------------------

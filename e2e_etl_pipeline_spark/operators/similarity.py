@@ -20,6 +20,10 @@ candidates come from an id-only equi-join on (table, bucket), and only
 the surviving pairs re-attach vectors (see its docstring for the
 measured regime). Random-hyperplane buckets come from a seeded NumPy
 tensor, regenerated inside the bucketizer kernel (SURVEY.md §2 B.8, §4.2).
+
+The oracle twins sit beside their operators: modal_dim_sql (the gate),
+rank_topk_sql (the top-k epilogue) and brute_force_topk_sql (the exact
+top-k, the ground truth the approximate modes are checked against).
 """
 
 from __future__ import annotations
@@ -28,17 +32,28 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
-from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
+from e2e_etl_pipeline_spark.functions.vectors import (
+    cosine_from_norms,
+    cosine_sql,
+    dot,
+    l2_norm,
+    l2_norm_sql,
+)
 
 
-# DuckDB-side twin of filter_modal_dim (embed as `__dim AS (...)` and gate
-# consumers with `len(embedding) = (SELECT d FROM __dim)`).
-MODAL_DIM_SQL = """
-      SELECT len(embedding) AS d FROM embeddings
-      WHERE embedding IS NOT NULL
-      GROUP BY 1 ORDER BY count(*) DESC, d ASC LIMIT 1
-"""
+def modal_dim_sql(src: str = "embeddings") -> str:
+    """DuckDB-side twin of filter_modal_dim: the modal vector length of
+    relation ``src`` as a 1-row query. Embed it as ``__dim AS (...)`` and
+    gate consumers with ``len(embedding) = (SELECT d FROM __dim)``."""
+    return (
+        f"SELECT len(embedding) AS d FROM {src} WHERE embedding IS NOT NULL "
+        "GROUP BY 1 ORDER BY count(*) DESC, d ASC LIMIT 1"
+    )
+
+
+# The gate over the embeddings table, the one every oracle but SemDeDup's uses.
+MODAL_DIM_SQL = modal_dim_sql()
 
 
 def filter_modal_dim(em: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -68,22 +83,13 @@ def filter_modal_dim(em: DataFrame, vec_col: str = "embedding") -> DataFrame:
     ).drop("__d")
 
 
-def _cosine_from_norms(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Column:
-    """cosine via vectors.dot, reusing precomputed norms (cheaper than
-    cosine_similarity, which would re-derive both norms per pair) — the
-    fold of lsh_bucketed_topk, the one scorer off _block_kernel."""
-    return F.when((a_norm == 0) | (b_norm == 0), F.lit(None).cast("double")).otherwise(
-        dot(a_vec, b_vec) / (a_norm * b_norm)
-    )
-
-
 def _rank_topk(scored: DataFrame, k: int, extra_cols: list[str] | None = None) -> DataFrame:
     """Shared top-k epilogue: deterministic per-query ranking (4-dp-rounded
     cosine desc, neighbor_id tiebreak), rank filter, 4-dp rounding.
     stable_round, not round: the cosine is a division-derived double, so a
     4-dp-midpoint rendering would round apart across engines under plain
-    round() (functions/rounding.py — review find, round 7); the matching
-    oracles use the floor(x*1e4+0.5)/1e4 form.
+    round() (functions/rounding.py — review find, round 7). Its DuckDB
+    twin is rank_topk_sql.
 
     The window ORDERS BY the ROUNDED cosine (round-9 advice): ordering raw
     doubles relied on bit-identical left-to-right summation across Spark's
@@ -114,6 +120,22 @@ def _rank_topk(scored: DataFrame, k: int, extra_cols: list[str] | None = None) -
             *(extra_cols or []),
         )
     )
+
+
+def rank_topk_sql(scored: str, k: int, extra_cols: list[str] | None = None) -> str:
+    """The DuckDB-side twin of _rank_topk over relation ``scored``
+    (query_id, neighbor_id, raw cosine, ``extra_cols``): the same window
+    order, rank filter and stable-rounded cosine, the same columns."""
+    rounded = stable_round_sql("cosine", 4)
+    extra = "".join(f", {c}" for c in extra_cols or [])
+    return f"""
+    SELECT query_id, neighbor_id, {rounded} AS cosine,
+           CAST(rank AS INTEGER) AS rank{extra}
+    FROM (SELECT *, row_number() OVER (
+            PARTITION BY query_id ORDER BY {rounded} DESC, neighbor_id) AS rank
+          FROM {scored})
+    WHERE rank <= {k}
+    """
 
 
 # Bound on score-matrix cells (left rows × right rows) per kernel slice: the
@@ -444,6 +466,35 @@ def brute_force_topk(
     return _rank_topk(cand, k, extra_cols=[match_on] if match_on else None)
 
 
+def brute_force_topk_sql(k: int, query_where: str, match_on: str | None = None) -> str:
+    """The DuckDB oracle of brute_force_topk over the ``embeddings``
+    table, both sides gated to the modal dimension: every (query,
+    neighbor) pair but the self-match, the queries being the rows that
+    satisfy ``query_where``, with equal non-NULL ``match_on`` values when
+    it is given, ranked by rank_topk_sql."""
+    q_meta = f", {match_on} AS q_meta" if match_on else ""
+    c_meta = f", {match_on}" if match_on else ""
+    on = f" AND q_meta = {match_on}" if match_on else ""
+    return f"""
+    WITH __dim AS ({MODAL_DIM_SQL}),
+    q AS (
+      SELECT vec_id AS query_id, embedding AS qv{q_meta},
+             {l2_norm_sql("embedding")} AS qn
+      FROM embeddings WHERE {query_where}
+        AND len(embedding) = (SELECT d FROM __dim)
+    ),
+    c AS (
+      SELECT vec_id AS neighbor_id, embedding AS cv{c_meta},
+             {l2_norm_sql("embedding")} AS cn
+      FROM embeddings WHERE len(embedding) = (SELECT d FROM __dim)
+    ),
+    scored AS (
+      SELECT query_id, neighbor_id{c_meta}, {cosine_sql("qv", "cv", "qn", "cn")} AS cosine
+      FROM q JOIN c ON query_id != neighbor_id{on}
+    )
+    {rank_topk_sql("scored", k, [match_on] if match_on else None)}"""
+
+
 def _one_vector_per_id(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The entry contract of the LSH pair and IVF operators: NULL ids go
     (they never pair) and each id keeps ONE vector, the lexicographic min
@@ -612,7 +663,7 @@ def lsh_bucketed_topk(
         scored.select(
             "query_id",
             "neighbor_id",
-            _cosine_from_norms(
+            cosine_from_norms(
                 F.col("query_vec"), F.col("neighbor_vec"), F.col("query_norm"), F.col("neighbor_norm")
             ).alias("cosine"),
         ),

@@ -59,7 +59,7 @@ from e2e_etl_pipeline_spark.queries import (  # noqa: F401
     curation,
 )
 from e2e_etl_pipeline_spark import registry as _registry
-from e2e_etl_pipeline_spark.queries import _order_r13 as _order
+from e2e_etl_pipeline_spark.queries import _order_r14 as _order
 
 
 def _reorder() -> None:

@@ -31,7 +31,7 @@ from e2e_etl_pipeline_spark.operators.bpe import (
     bpe_learn,
     bpe_train_merges,
 )
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
 from e2e_etl_pipeline_spark.operators.ranks import bounded_rank
 from e2e_etl_pipeline_spark.operators.sketches import misra_gries_candidates
 from e2e_etl_pipeline_spark.registry import register
@@ -893,9 +893,15 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q_mix_weights' oracle ratios: each language's share of the documents
+# and of the sqrt-tempered weight.
+_SHARE_SQL = "CAST(w.n_docs AS DOUBLE) / CAST(t.n_total AS DOUBLE)"
+_WEIGHT_SQL = "CAST(w.w_raw AS DOUBLE) / CAST(t.w_sum AS DOUBLE)"
+
+
 @register(
     "q_mix_weights",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang
     ),
@@ -913,13 +919,9 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       w.lang,
       w.n_docs,
-      floor(CAST(w.n_docs AS DOUBLE) / CAST(t.n_total AS DOUBLE)
-            * 10000.0 + 0.5) / 10000.0 AS share_before,
-      floor(CAST(w.w_raw AS DOUBLE) / CAST(t.w_sum AS DOUBLE)
-            * 10000.0 + 0.5) / 10000.0 AS mix_weight,
-      floor((CAST(w.w_raw AS DOUBLE) / CAST(t.w_sum AS DOUBLE))
-            / (CAST(w.n_docs AS DOUBLE) / CAST(t.n_total AS DOUBLE))
-            * 10000.0 + 0.5) / 10000.0 AS boost
+      {stable_round_sql(_SHARE_SQL, 4)} AS share_before,
+      {stable_round_sql(_WEIGHT_SQL, 4)} AS mix_weight,
+      {stable_round_sql(f"({_WEIGHT_SQL}) / ({_SHARE_SQL})", 4)} AS boost
     FROM w CROSS JOIN tot t
     """,
 )
@@ -1034,8 +1036,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tot AS (SELECT sum(sum_q) AS tq, sum(n_docs) AS td FROM dom)
     SELECT domain, n_docs,
-           floor(CAST(sum_q AS DOUBLE) / n_docs * 10000.0 + 0.5) / 10000.0
-             AS avg_quality
+           {stable_round_sql("CAST(sum_q AS DOUBLE) / n_docs", 4)} AS avg_quality
     FROM dom, tot
     WHERE sum_q * td >= tq * n_docs
     ORDER BY domain

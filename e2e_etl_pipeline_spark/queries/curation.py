@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
+from e2e_etl_pipeline_spark.functions.vectors import cosine_sql, l2_norm_sql
 from e2e_etl_pipeline_spark.operators import dedup as dd
 from e2e_etl_pipeline_spark.operators import similarity as sim
 from e2e_etl_pipeline_spark.operators.ranks import distributed_rank
@@ -142,17 +143,14 @@ SEMDEDUP_CTE = f"""emb0 AS (
       -- (DuckDB list_sum skips the out-of-range NULL terms giving a
       -- partial distance; Spark zip_with NULL-propagates) — round-7
       -- advice. Off-dimension vectors are excluded on BOTH sides.
-      SELECT len(embedding) AS d FROM emb0
-      GROUP BY 1 ORDER BY count(*) DESC, d ASC LIMIT 1
+      {sim.modal_dim_sql("emb0")}
     ),
     emb AS (
       SELECT vec_id, embedding FROM emb0, dim WHERE len(embedding) = dim.d
     ),
     {SEED_ASSIGN_SQL},
     v AS (
-      SELECT a.cid, e.vec_id, e.embedding,
-             sqrt(list_sum(list_transform(e.embedding,
-                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT a.cid, e.vec_id, e.embedding, {l2_norm_sql("e.embedding")} AS nrm
       FROM assigned a JOIN emb e USING (vec_id)
     ),
     dropped AS (
@@ -160,9 +158,7 @@ SEMDEDUP_CTE = f"""emb0 AS (
       FROM v a JOIN v b ON a.cid = b.cid AND a.vec_id < b.vec_id
       WHERE a.nrm > 0 AND b.nrm > 0
         AND {stable_round_sql(
-            "list_sum(list_transform(range(1, len(a.embedding) + 1), "
-            "i -> CAST(a.embedding[i] AS DOUBLE) "
-            "* CAST(b.embedding[i] AS DOUBLE))) / (a.nrm * b.nrm)", 4
+            cosine_sql("a.embedding", "b.embedding", "a.nrm", "b.nrm"), 4
         )} >= {SEMDEDUP_TAU}
     )"""
 

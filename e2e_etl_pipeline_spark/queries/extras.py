@@ -587,7 +587,7 @@ def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_gini",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT o_orderpriority,
              CAST(o_totalprice AS DECIMAL(14,2)) AS x,
@@ -598,10 +598,10 @@ def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT o_orderpriority,
            count(*) AS n_orders,
-           floor((2.0 * CAST(sum(i * x) AS DOUBLE)
-                    / (count(*) * CAST(sum(x) AS DOUBLE))
-                  - (count(*) + 1.0) / count(*)) * 1000000.0 + 0.5)
-             / 1000000.0 AS gini
+           {stable_round_sql(
+               "2.0 * CAST(sum(i * x) AS DOUBLE) / (count(*) * CAST(sum(x) AS DOUBLE))"
+               " - (count(*) + 1.0) / count(*)", 6
+           )} AS gini
     FROM ranked GROUP BY o_orderpriority
     """,
 )

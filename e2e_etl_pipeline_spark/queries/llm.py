@@ -19,7 +19,7 @@ from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions import textstats as ts
 from e2e_etl_pipeline_spark.functions.digests import md5_u60_sql, md5_u120, md5_u120_sql
 from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
-from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
+from e2e_etl_pipeline_spark.functions.vectors import cosine_sql, dot_sql, l2_norm, l2_norm_sql
 from e2e_etl_pipeline_spark.operators import dedup as dd
 from e2e_etl_pipeline_spark.operators import multimodal as mm
 from e2e_etl_pipeline_spark.operators import similarity as sim
@@ -219,8 +219,8 @@ def q_dedup_exact_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
       b.source,
       b.n_docs,
       CAST(coalesce(f.n_flagged, 0) AS BIGINT)              AS n_flagged,
-      floor(coalesce(f.n_flagged, 0) * 1.0 / b.n_docs * 10000.0 + 0.5)
-        / 10000.0                                           AS flagged_share
+      {stable_round_sql("coalesce(f.n_flagged, 0) * 1.0 / b.n_docs", 4)}
+                                                            AS flagged_share
     FROM base b LEFT JOIN per_source_flagged f USING (source)
     """,
 )
@@ -421,8 +421,9 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     est AS (
       SELECT c.id_a, c.id_b,
-             floor(avg(CASE WHEN sa.minhash = sb.minhash THEN 1.0 ELSE 0.0 END)
-                   * 10000.0 + 0.5) / 10000.0 AS est_jaccard
+             {stable_round_sql(
+                 "avg(CASE WHEN sa.minhash = sb.minhash THEN 1.0 ELSE 0.0 END)", 4
+             )} AS est_jaccard
       FROM cand c
       JOIN sig sa ON sa.id = c.id_a
       JOIN sig sb ON sb.id = c.id_b AND sb.hash_id = sa.hash_id
@@ -728,17 +729,14 @@ def _lsh_oracle_prefix(n_planes: int, n_tables: int) -> str:
     ),
     buckets AS (
       SELECT b.vec_id, p.table_id,
-             sum(CASE WHEN list_sum(list_transform(range(1, {_LSH_DIM} + 1),
-                        i -> CAST(b.embedding[i] AS DOUBLE) * p.w[i])) > 0
+             sum(CASE WHEN {dot_sql("b.embedding", "p.w")} > 0
                  THEN (CAST(1 AS BIGINT) << p.plane_idx)
                  ELSE CAST(0 AS BIGINT) END) AS bucket
       FROM base b CROSS JOIN planes p
       GROUP BY b.vec_id, p.table_id
     ),
     norms AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT vec_id, embedding, {l2_norm_sql("embedding")} AS nrm
       FROM base
     )"""
 
@@ -754,11 +752,7 @@ def _lsh_oracle_prefix(n_planes: int, n_tables: int) -> str:
     ),
     scored AS (
       SELECT c.id_a, c.id_b,
-             CASE WHEN an.nrm = 0 OR bn.nrm = 0 THEN NULL
-                  ELSE list_sum(list_transform(range(1, {_LSH_DIM} + 1),
-                         i -> CAST(an.embedding[i] AS DOUBLE)
-                              * CAST(bn.embedding[i] AS DOUBLE)))
-                       / (an.nrm * bn.nrm) END AS cosine
+             {cosine_sql("an.embedding", "bn.embedding", "an.nrm", "bn.nrm")} AS cosine
       FROM cand c
       JOIN norms an ON an.vec_id = c.id_a
       JOIN norms bn ON bn.vec_id = c.id_b
@@ -806,22 +800,17 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH __dim AS ({sim.MODAL_DIM_SQL}),
     v AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT vec_id, embedding, {l2_norm_sql("embedding")} AS nrm
       FROM embeddings WHERE len(embedding) = (SELECT d FROM __dim)
     ),
     p AS (
-      SELECT list_sum(list_transform(range(1, len(a.embedding) + 1),
-               i -> CAST(a.embedding[i] AS DOUBLE)
-                    * CAST(b.embedding[i] AS DOUBLE)))
-             / (a.nrm * b.nrm) AS cosine
+      SELECT {cosine_sql("a.embedding", "b.embedding", "a.nrm", "b.nrm")} AS cosine
       FROM v a JOIN v b ON a.vec_id < b.vec_id
       WHERE a.nrm > 0 AND b.nrm > 0
     )
     SELECT CAST((SELECT count(*) FROM v) AS BIGINT)            AS n_corpus,
            CAST(count(*) FILTER (
-             WHERE floor(cosine * 10000.0 + 0.5) / 10000.0 >= 0.4
+             WHERE {stable_round_sql("cosine", 4)} >= 0.4
            ) AS BIGINT)                                        AS n_true_pairs,
            TRUE                                                 AS dedup_recall_ok
     FROM p
@@ -898,12 +887,8 @@ def q_dedup_embedding_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_vector_norm",
-    oracle="""
-    SELECT
-      vec_id,
-      round(sqrt(list_sum(list_transform(embedding,
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS norm,
-      label
+    oracle=f"""
+    SELECT vec_id, round({l2_norm_sql("embedding")}, 4) AS norm, label
     FROM embeddings
     """,
 )
@@ -916,39 +901,7 @@ def q_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_similarity_topk",
-    oracle=f"""
-    WITH __dim AS ({sim.MODAL_DIM_SQL}),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS qv,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
-      FROM embeddings WHERE vec_id < 20
-        AND len(embedding) = (SELECT d FROM __dim)
-    ),
-    c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS cn
-      FROM embeddings WHERE len(embedding) = (SELECT d FROM __dim)
-    ),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(1, len(qv) + 1),
-               i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))) / (qn * cn) AS cosine
-      FROM q CROSS JOIN c
-      WHERE query_id != neighbor_id
-    )
-    SELECT query_id, neighbor_id,
-           -- stable_round twin (floor form): cosine is division-derived,
-           -- plain round() is the cross-engine midpoint hazard
-           floor(cosine * 10000.0 + 0.5) / 10000.0 AS cosine, rank
-    FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY floor(cosine * 10000.0 + 0.5) / 10000.0 DESC, neighbor_id)
-        AS INTEGER) AS rank
-      FROM scored
-    )
-    WHERE rank <= 10
-    """,
+    oracle=sim.brute_force_topk_sql(10, "vec_id < 20"),
 )
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-10 for 20 query vectors — the
@@ -962,36 +915,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_similarity_filtered",
-    oracle=f"""
-    WITH __dim AS ({sim.MODAL_DIM_SQL}),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS qv, label AS ql,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
-      FROM embeddings WHERE vec_id < 20
-        AND len(embedding) = (SELECT d FROM __dim)
-    ),
-    c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv, label,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS cn
-      FROM embeddings WHERE len(embedding) = (SELECT d FROM __dim)
-    ),
-    scored AS (
-      SELECT query_id, neighbor_id, label,
-             list_sum(list_transform(range(1, len(qv) + 1),
-               i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))) / (qn * cn) AS cosine
-      FROM q JOIN c ON q.ql = c.label AND q.query_id != c.neighbor_id
-    )
-    SELECT query_id, neighbor_id,
-           floor(cosine * 10000.0 + 0.5) / 10000.0 AS cosine, rank, label
-    FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY floor(cosine * 10000.0 + 0.5) / 10000.0 DESC, neighbor_id)
-        AS INTEGER) AS rank
-      FROM scored
-    )
-    WHERE rank <= 5
-    """,
+    oracle=sim.brute_force_topk_sql(5, "vec_id < 20", match_on="label"),
 )
 def q_similarity_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered vector search (the vector-database 'filtered ANN'
@@ -1016,7 +940,7 @@ def q_similarity_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_similarity_ivf",
     oracle=f"""
-    WITH __dim AS ({{MODAL}}),
+    WITH __dim AS ({sim.MODAL_DIM_SQL}),
     base AS (
       -- min-per-id, not DISTINCT: the id→embedding mapping must be a
       -- FUNCTION on both sides (see _lsh_oracle_prefix block comment)
@@ -1032,16 +956,12 @@ def q_similarity_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM base ORDER BY vec_id, embedding LIMIT 16
     ),
     norms AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      SELECT vec_id, embedding, {l2_norm_sql("embedding")} AS nrm
       FROM base
     ),
     cscores AS (
       SELECT b.vec_id, c.centroid_id,
-             list_sum(list_transform(range(1, len(b.embedding) + 1),
-               i -> CAST(b.embedding[i] AS DOUBLE)
-                    * CAST(c.cent_vec[i] AS DOUBLE))) AS cscore
+             {dot_sql("b.embedding", "c.cent_vec")} AS cscore
       FROM base b CROSS JOIN cents c
     ),
     assigned AS (
@@ -1065,25 +985,12 @@ def q_similarity_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT c.query_id, c.neighbor_id,
-             CASE WHEN qn.nrm = 0 OR cn.nrm = 0 THEN NULL
-                  ELSE list_sum(list_transform(range(1, len(qn.embedding) + 1),
-                         i -> CAST(qn.embedding[i] AS DOUBLE)
-                              * CAST(cn.embedding[i] AS DOUBLE)))
-                       / (qn.nrm * cn.nrm) END AS cosine
+             {cosine_sql("qn.embedding", "cn.embedding", "qn.nrm", "cn.nrm")} AS cosine
       FROM cand c
       JOIN norms qn ON qn.vec_id = c.query_id
       JOIN norms cn ON cn.vec_id = c.neighbor_id
     )
-    SELECT query_id, neighbor_id,
-           {stable_round_sql('cosine', 4)} AS cosine,
-           CAST(rank AS INTEGER) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY floor(cosine * 10000.0 + 0.5) / 10000.0 DESC,
-                     neighbor_id) AS rank
-          FROM scored)
-    WHERE rank <= 10
-    """.replace("{MODAL}", sim.MODAL_DIM_SQL),
+    {sim.rank_topk_sql("scored", 10)}""",
 )
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (coarse quantizer + probe-2): the training-free
@@ -1135,25 +1042,12 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT c.query_id, c.neighbor_id,
-             CASE WHEN qn.nrm = 0 OR cn.nrm = 0 THEN NULL
-                  ELSE list_sum(list_transform(range(1, {_LSH_DIM} + 1),
-                         i -> CAST(qn.embedding[i] AS DOUBLE)
-                              * CAST(cn.embedding[i] AS DOUBLE)))
-                       / (qn.nrm * cn.nrm) END AS cosine
+             {cosine_sql("qn.embedding", "cn.embedding", "qn.nrm", "cn.nrm")} AS cosine
       FROM cand c
       JOIN norms qn ON qn.vec_id = c.query_id
       JOIN norms cn ON cn.vec_id = c.neighbor_id
     )
-    SELECT query_id, neighbor_id,
-           {stable_round_sql('cosine', 4)} AS cosine,
-           CAST(rank AS INTEGER) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id
-            ORDER BY floor(cosine * 10000.0 + 0.5) / 10000.0 DESC,
-                     neighbor_id) AS rank
-          FROM scored)
-    WHERE rank <= 10
-    """,
+    {sim.rank_topk_sql("scored", 10)}""",
 )
 def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH ANN: equi-join on (table, bucket) replaces the
@@ -1200,35 +1094,7 @@ def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_similarity_recall_bound",
     oracle=f"""
-    WITH __dim AS ({sim.MODAL_DIM_SQL}),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS qv,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
-      FROM embeddings WHERE vec_id < 20
-        AND len(embedding) = (SELECT d FROM __dim)
-    ),
-    c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS cn
-      FROM embeddings WHERE len(embedding) = (SELECT d FROM __dim)
-    ),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(1, len(qv) + 1),
-               i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))) / (qn * cn) AS cosine
-      FROM q CROSS JOIN c
-      WHERE query_id != neighbor_id
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id
-      FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY floor(cosine * 10000.0 + 0.5) / 10000.0 DESC, neighbor_id) AS rank
-        FROM scored
-      )
-      WHERE rank <= 10
-    )
+    WITH exact AS ({sim.brute_force_topk_sql(10, "vec_id < 20")})
     SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
            CAST(count(*) AS BIGINT)                 AS n_exact_pairs,
            TRUE                                     AS lsh_recall_ok,

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
+from e2e_etl_pipeline_spark.functions.vectors import sq_dist, sq_dist_sql
 from e2e_etl_pipeline_spark.operators import similarity as sim
 from e2e_etl_pipeline_spark.registry import register
 
@@ -37,10 +38,7 @@ SEED_ASSIGN_SQL = f"""seeds AS (
     ),
     dists AS (
       SELECT e.vec_id, s.cid,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))))
-               AS sq
+             {sq_dist_sql("e.embedding", "s.cv")} AS sq
       FROM emb e CROSS JOIN seeds s
     ),
     assigned AS (
@@ -61,16 +59,8 @@ def assign_to_seeds(em: DataFrame) -> DataFrame:
     seeds = em.where(F.col("vec_id") < K_SEEDS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    diff_sq = F.zip_with(
-        F.col("embedding"),
-        F.col("cv"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
     dists = em.crossJoin(F.broadcast(seeds)).select(
-        "vec_id",
-        "cid",
-        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("sq"),
+        "vec_id", "cid", sq_dist("embedding", "cv").alias("sq")
     )
     w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("sq"), "cid")
     return (

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from e2e_etl_pipeline_spark.catalog import load_table
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
 from e2e_etl_pipeline_spark.pipeline.offers import parse_offers
 from e2e_etl_pipeline_spark.functions.money import money_sum
 from e2e_etl_pipeline_spark.registry import register
@@ -1024,7 +1024,7 @@ def q_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cache_reuse",
-    oracle="""
+    oracle=f"""
     WITH per_cust AS (
       SELECT o_custkey,
              count(*) AS n_orders,
@@ -1040,8 +1040,8 @@ def q_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round(p.spend, 2) AS DOUBLE)                    AS spend,
            -- nullif: signed totals can cancel avg_spend to exactly 0
            -- (values-fuzz class); ANSI Spark raises on double /0
-           floor(CAST(p.spend AS DOUBLE) / nullif(o.avg_spend, 0.0)
-                 * 10000.0 + 0.5) / 10000.0                     AS vs_avg
+           {stable_round_sql("CAST(p.spend AS DOUBLE) / nullif(o.avg_spend, 0.0)", 4)}
+                                                                AS vs_avg
     FROM per_cust p CROSS JOIN overall o
     WHERE CAST(p.spend AS DOUBLE) > 2 * o.avg_spend
     """,

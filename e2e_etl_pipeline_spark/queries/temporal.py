@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
 from e2e_etl_pipeline_spark.registry import register
 
 
@@ -1976,7 +1976,7 @@ def q_pareto_topshare(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ks_test",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT value,
              count(*) FILTER (WHERE user_id % 2 = 0) AS na,
@@ -1996,9 +1996,9 @@ def q_pareto_topshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(t.t_a AS BIGINT)  AS n_a,
            CAST(t.t_b AS BIGINT)  AS n_b,
-           floor(max(abs(cum_na / nullif(t.t_a, 0.0)
-                         - cum_nb / nullif(t.t_b, 0.0))) * 1000000.0 + 0.5)
-             / 1000000.0 AS ks_stat
+           {stable_round_sql(
+               "max(abs(cum_na / nullif(t.t_a, 0.0) - cum_nb / nullif(t.t_b, 0.0)))", 6
+           )} AS ks_stat
     FROM cum CROSS JOIN tot t
     GROUP BY t.t_a, t.t_b
     """,
@@ -2137,7 +2137,7 @@ def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_spearman",
-    oracle="""
+    oracle=f"""
     WITH src AS (
       SELECT l_quantity AS x, l_extendedprice AS y
       FROM lineitem
@@ -2167,10 +2167,11 @@ def q_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ranked
     )
     SELECT CAST(n AS BIGINT) AS n,
-           floor(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / nullif(sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                               * CAST(n * syy - sy * sy AS DOUBLE)), 0.0)
-                 * 1000000.0 + 0.5) / 1000000.0 AS spearman
+           {stable_round_sql(
+               "CAST(n * sxy - sx * sy AS DOUBLE)"
+               " / nullif(sqrt(CAST(n * sxx - sx * sx AS DOUBLE)"
+               " * CAST(n * syy - sy * sy AS DOUBLE)), 0.0)", 6
+           )} AS spearman
     FROM s
     """,
 )

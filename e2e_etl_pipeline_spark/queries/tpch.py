@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
 from e2e_etl_pipeline_spark.registry import register
 
 
@@ -290,10 +290,11 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT
       o_year,
-      floor(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume ELSE CAST(0 AS DECIMAL(16,4)) END)
-                 AS DOUBLE)
-            / nullif(CAST(sum(volume) AS DOUBLE), 0) * 10000.0 + 0.5) / 10000.0
-        AS mkt_share
+      {stable_round_sql(
+          "CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume"
+          " ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE)"
+          " / nullif(CAST(sum(volume) AS DOUBLE), 0)", 4
+      )} AS mkt_share
     FROM (
       SELECT
         year(o_orderdate) AS o_year,
@@ -525,12 +526,13 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_tpch_q14",
     oracle=f"""
     SELECT
-      floor(100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-                                  THEN CAST({_REVENUE_SQL} AS DECIMAL(16,4))
-                                  ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE)
-            / nullif(CAST(sum(CAST({_REVENUE_SQL} AS DECIMAL(16,4)))
-                           AS DOUBLE), 0) * 10000.0 + 0.5) / 10000.0
-        AS promo_revenue
+      {stable_round_sql(
+          "100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'"
+          f" THEN CAST({_REVENUE_SQL} AS DECIMAL(16,4))"
+          " ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE)"
+          f" / nullif(CAST(sum(CAST({_REVENUE_SQL} AS DECIMAL(16,4))) AS DOUBLE), 0)",
+          4,
+      )} AS promo_revenue
     FROM lineitem
     JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-09-01'
@@ -824,7 +826,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q_tpch_q17",
-    oracle="""
+    oracle=f"""
     WITH brand_li AS (
       SELECT l_partkey, CAST(l_quantity AS DECIMAL(12,2)) AS qty,
              CAST(l_extendedprice AS DECIMAL(12,2)) AS price
@@ -837,7 +839,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM brand_li GROUP BY l_partkey
     )
     SELECT
-      floor(CAST(sum(price) AS DOUBLE) / 7.0 * 100.0 + 0.5) / 100.0 AS avg_yearly
+      {stable_round_sql("CAST(sum(price) AS DOUBLE) / 7.0", 2)} AS avg_yearly
     FROM brand_li
     JOIN cut USING (l_partkey)
     WHERE qty * 5 * n < sum_qty

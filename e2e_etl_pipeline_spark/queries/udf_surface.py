@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from e2e_etl_pipeline_spark.catalog import inline_frame, load_table
 from e2e_etl_pipeline_spark.functions import salary as sal
 from e2e_etl_pipeline_spark.functions import textstats as ts
-from e2e_etl_pipeline_spark.functions.rounding import stable_round
+from e2e_etl_pipeline_spark.functions.rounding import stable_round, stable_round_sql
 from e2e_etl_pipeline_spark.queries.scalars import SALARY_SAMPLES
 from e2e_etl_pipeline_spark.registry import ORACLES, register
 
@@ -150,11 +150,10 @@ def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_approx_percentile",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            count(*)                                          AS n_rows,
-           floor(quantile_cont(l_quantity, 0.5) * 10000.0 + 0.5)
-             / 10000.0                                       AS exact_median,
+           {stable_round_sql("quantile_cont(l_quantity, 0.5)", 4)} AS exact_median,
            TRUE AS ok_p25, TRUE AS ok_p50, TRUE AS ok_p75
     FROM lineitem
     GROUP BY l_returnflag

@@ -41,6 +41,12 @@ Hash-stability rules enforced across the codebase (SURVEY.md §7 watch list):
     whitespace class is spelled (Java's and RE2's \\s differ on a vertical tab),
     and words() carries no lambda, so it stays in generated code
     (tests/test_textstats_properties.py gates the rule).
+  * Vector math goes only through functions/vectors: dot, l2_norm,
+    cosine_similarity / cosine_from_norms and sq_dist on the engine side,
+    their *_sql twins in oracles, so both engines fold the same terms in
+    the same order. Round through rounding.stable_round_sql, never a
+    hand-written floor(x * 10^n + 0.5) / 10^n
+    (tests/test_vectors_properties.py gates both).
 
 Registration order matters: the external driver verifies keys in registration
 order under a budget. Since round 3 the order is pinned at KEY granularity by

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from e2e_etl_pipeline_spark.catalog import load_table
 from e2e_etl_pipeline_spark.functions.rounding import stable_round
-from e2e_etl_pipeline_spark.functions.vectors import dot, l2_norm
+from e2e_etl_pipeline_spark.functions.vectors import cosine_from_norms, dot, l2_norm
 from e2e_etl_pipeline_spark.operators import similarity as sim
 
 
@@ -74,7 +74,7 @@ def brute_force_topk_expr(
         .select(
             "query_id",
             "neighbor_id",
-            sim._cosine_from_norms(
+            cosine_from_norms(
                 F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
             ).alias("cosine"),
             *([F.col(match_on)] if match_on else []),
@@ -206,7 +206,7 @@ def lsh_cosine_pairs_expr(
     ).select(
         "query_id",
         "neighbor_id",
-        sim._cosine_from_norms(
+        cosine_from_norms(
             F.col("query_vec"), F.col("neighbor_vec"),
             F.col("query_norm"), F.col("neighbor_norm"),
         ).alias("cosine"),
@@ -310,7 +310,7 @@ def ivf_topk_expr(
         .select(
             "query_id",
             "neighbor_id",
-            sim._cosine_from_norms(
+            cosine_from_norms(
                 F.col("query_vec"), F.col("neighbor_vec"),
                 F.col("query_norm"), F.col("neighbor_norm"),
             ).alias("cosine"),

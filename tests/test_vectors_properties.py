@@ -230,3 +230,112 @@ def test_modal_dim_keys_leave_no_persisted_state(spark, sf_dir, tmp_path, monkey
     for v in held:
         v.unpersist()
     assert cache.isEmpty(), "a modal-dim key left a persisted frame behind"
+
+
+def test_vectors_py_is_the_only_vector_fold():
+    """Drift lock: functions/vectors.py is the only package module that
+    spells the dot, norm, cosine or squared-distance fold, in the engine
+    dialect (zip_with, a double-cast product) or the oracle one (a
+    sqrt(list_sum(...)) norm, an element-wise cast product or difference).
+    And no module hand-writes the stable-round form floor(x * 10^n + 0.5)
+    / 10^n, which rounding.stable_round_sql renders, except
+    similarity._round4, the NumPy kernel's twin of stable_round. (The
+    BM25 idf's ``(N - df + 0.5) / (df + 0.5)`` is no rounding; the
+    pattern takes a literal scale before ``+ 0.5) /``.)"""
+    import inspect
+    import pathlib
+    import re
+
+    import e2e_etl_pipeline_spark as pkg
+    from e2e_etl_pipeline_spark.operators import similarity as sim
+
+    fold = re.compile(
+        r"sqrt\(list_sum\(|\[i\] AS DOUBLE\) [*-] CAST\(|F\.zip_with\("
+        r'|[a-z]\.cast\("double"\) [*-] [a-z]\.cast\("double"\)'
+    )
+    hand_round = re.compile(r"\* \d+(?:\.\d+)? \+ 0\.5\) /")
+    round4 = " ".join(inspect.getsource(sim._round4).split())
+    root = pathlib.Path(pkg.__file__).parent
+    folders, rounders = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        text = " ".join(path.read_text().split())
+        if fold.search(text):
+            folders.append(rel)
+        if hand_round.search(text.replace(round4, "")):
+            rounders.append(rel)
+    assert folders == ["functions/vectors.py"], folders
+    assert rounders == [], rounders
+
+
+def test_sql_twins_are_bit_identical_to_the_engine(spark, tmp_path):
+    """dot_sql, l2_norm_sql, cosine_sql and sq_dist_sql in DuckDB give the
+    same doubles, bit for bit, as dot, l2_norm, cosine_similarity /
+    cosine_from_norms and sq_dist in Spark, on FLOAT and DOUBLE vectors of
+    one length with no NULL element (the contract the modal gate
+    enforces), zero vectors included."""
+    import struct
+
+    import duckdb
+
+    from e2e_etl_pipeline_spark.functions import vectors as vx
+
+    rng = np.random.RandomState(11)
+    n, dim = 48, 24
+    vecs = {name: rng.randn(n, dim) * rng.choice([1e-3, 1.0, 1e3], (n, 1)) for name in "abcd"}
+    for name in "ac":
+        vecs[name][0] = 0.0
+    for name in "bd":
+        vecs[name][1] = 0.0
+    vecs["b"][2] = vecs["a"][2]
+    vecs["d"][3] = -vecs["c"][3]
+    schema = T.StructType(
+        [T.StructField("i", T.IntegerType())]
+        + [T.StructField(name, T.ArrayType(T.FloatType())) for name in "ab"]
+        + [T.StructField(name, T.ArrayType(T.DoubleType())) for name in "cd"]
+    )
+    rows = [
+        (i, *(vecs[name][i].astype(np.float32 if name in "ab" else np.float64).tolist() for name in "abcd"))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "vectors")
+    df.write.parquet(path)
+
+    def engine(x, y):
+        return [
+            vx.dot(x, y),
+            vx.l2_norm(x),
+            vx.cosine_similarity(x, y),
+            vx.cosine_from_norms(x, y, vx.l2_norm(x), vx.l2_norm(y)),
+            vx.sq_dist(x, y),
+        ]
+
+    def twin(x, y):
+        return [
+            vx.dot_sql(x, y),
+            vx.l2_norm_sql(x),
+            vx.cosine_sql(x, y),
+            vx.cosine_sql(x, y, vx.l2_norm_sql(x), vx.l2_norm_sql(y)),
+            vx.sq_dist_sql(x, y),
+        ]
+
+    pairs = [("a", "b"), ("c", "d"), ("a", "d"), ("b", "b")]
+    cols = [c for x, y in pairs for c in engine(x, y)]
+    spark_rows = sorted(
+        tuple(r) for r in spark.read.parquet(path).select("i", *cols).collect()
+    )
+    con = duckdb.connect()
+    sql = ", ".join(e for x, y in pairs for e in twin(x, y))
+    duck_rows = sorted(
+        con.execute(f"SELECT i, {sql} FROM read_parquet('{path}/*.parquet')").fetchall()
+    )
+
+    def bits(row):
+        return [None if v is None else struct.pack("<d", v) for v in row]
+
+    assert len(spark_rows) == len(duck_rows) == n
+    assert [bits(r) for r in spark_rows] == [bits(r) for r in duck_rows]
+    by_i = {r[0]: r for r in spark_rows}
+    # the zero vectors gave NULL cosines on both sides: (a, b) is pair 0
+    assert by_i[0][3] is None and by_i[1][3] is None
