@@ -1,7 +1,8 @@
 """tools/perf_sweep.py: a key's record counts what its executed plan file
-shows, the classes its timed run compiled, the JVM's collection time,
-committed heap and threads, and its Python workers, and an isolated child that dies surfaces as an error, never
-as the numbers an earlier child left in its output file."""
+shows, the classes its timed run compiled, the JVM's collection time, the
+CPU of the processes it forked, committed heap and threads, and its Python
+workers, and an isolated child that dies surfaces as an error, never as
+the numbers an earlier child left in its output file."""
 
 from __future__ import annotations
 
@@ -104,6 +105,22 @@ def test_gc_counter_reads_collection_time(spark):
     spent = perf_sweep.jvm_counters(spark) - before
     assert spent["jvm.gc_s"] > 0, spent
     assert spent["codegen.compilations"] == 0
+
+
+def test_child_cpu_counter_reads_reaped_children(spark):
+    """Processes the JVM starts and waits for show in ``jvm.child_cpu_s``.
+    One ``true`` can take less than a clock tick, so it starts enough of
+    them to cross several."""
+    perf_sweep = _load_perf_sweep()
+    jvm = spark._jvm  # noqa: SLF001
+    before = perf_sweep.jvm_counters(spark)
+    command = spark.sparkContext._gateway.new_array(jvm.java.lang.String, 1)  # noqa: SLF001
+    command[0] = "true"
+    for _ in range(100):
+        jvm.java.lang.ProcessBuilder(command).start().waitFor()
+    spent = perf_sweep.jvm_counters(spark) - before
+    assert spent["jvm.child_cpu_s"] > 0, spent
+    assert "jvm.child_cpu_s" in perf_sweep.FIELDS
 
 
 def test_held_stages_drops_stages_the_store_evicted():

@@ -1,7 +1,8 @@
 """session.get_session: the codegen cache holds a repeated working set larger
 than Spark's default cap of 100 generated classes, and the driver JVM starts
 from a class-data-sharing archive on the serial collector unless the caller
-names a collector."""
+names a collector, with the fork-free local filesystem's jar appended to the
+archive's class path."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -232,3 +234,116 @@ def test_archive_maps_under_either_collector(spark, collector):
         timeout=60,
     )
     assert out.returncode == 0, out.stderr
+
+
+def _share(cds_env) -> None:
+    """Put an archive file in place for the key, so launches share it."""
+    rec = session._class_data_sharing({})  # noqa: SLF001
+    open(rec.recording.rsplit(".", 2)[0] + ".jsa", "wb").close()
+
+
+def test_a_sharing_launch_appends_the_fork_free_jar(cds_env):
+    """The recording launch sets neither the jar nor the confs that name its
+    classes, so the archive's class path never names it. A launch from the
+    archive sets both: the jar, compiled once into the cache, goes on the
+    launcher's SPARK_DIST_CLASSPATH, which the launcher appends."""
+    cache = cds_env / "cache" / "e2e_etl_pipeline_spark"
+    rec = session._class_data_sharing({})  # noqa: SLF001
+    assert rec.fs_jar is None and rec.fs_conf == {}
+    assert rec.launch_env() == {"SPARK_CONF_DIR": rec.conf_dir}
+    _share(cds_env)
+    use = session._class_data_sharing({})  # noqa: SLF001
+    assert use.fs_conf == session._FS_CONF  # noqa: SLF001
+    assert use.launch_env() == {"SPARK_CONF_DIR": use.conf_dir, "SPARK_DIST_CLASSPATH": use.fs_jar}
+    assert os.path.dirname(use.fs_jar) == str(cache)
+    with zipfile.ZipFile(use.fs_jar) as z:
+        assert "e2e_etl_pipeline_spark/ForkFreeLocalFileSystem$Fs.class" in z.namelist()
+    mtime = os.stat(use.fs_jar).st_mtime_ns
+    assert session._class_data_sharing({}).fs_jar == use.fs_jar  # noqa: SLF001
+    assert os.stat(use.fs_jar).st_mtime_ns == mtime, "compiled again"
+    archive = use.java_options.split()[0].split("=", 1)[1]
+    assert sorted(os.listdir(cache)) == sorted(["conf", os.path.basename(archive), os.path.basename(use.fs_jar)])
+
+
+@pytest.mark.parametrize("where", ["conf", "PYSPARK_SUBMIT_ARGS", "JAVA_TOOL_OPTIONS"])
+def test_a_callers_filesystem_is_kept(cds_env, monkeypatch, where):
+    """A filesystem conf the caller sets wins; the session sets the other.
+    With both set the launch gets neither a conf nor the jar."""
+    _share(cds_env)
+    named = {}
+    for key in session._FS_CONF:  # noqa: SLF001
+        if where == "conf":
+            named[key] = "org.apache.hadoop.fs.LocalFileSystem"
+        elif where == "PYSPARK_SUBMIT_ARGS":
+            monkeypatch.setenv(where, f"{os.environ.get(where, '')} --conf {key}=x pyspark-shell")
+        else:
+            monkeypatch.setenv(where, f"{os.environ.get(where, '')} -D{key}=x")
+        cds = session._class_data_sharing(named)  # noqa: SLF001
+        if len(cds.fs_conf) == 1:
+            assert key not in cds.fs_conf and cds.fs_jar
+    assert cds.fs_conf == {} and cds.fs_jar is None
+
+
+def test_a_cluster_master_gets_no_fork_free_jar(cds_env):
+    """Executors off the driver JVM would not have the jar on their class
+    path."""
+    _share(cds_env)
+    cds = session._class_data_sharing({"spark.master": "spark://host:7077"})  # noqa: SLF001
+    assert cds.fs_conf == {} and cds.fs_jar is None
+
+
+def _java_home_with(tmp_path, javac: str | None) -> str:
+    """A JDK directory with the real one's release file, and ``javac`` (a
+    shell script) as its compiler, or no compiler at all."""
+    home = tmp_path / "jdk"
+    (home / "bin").mkdir(parents=True)
+    shutil.copy(os.path.join(session._java_home(), "release"), home / "release")  # noqa: SLF001
+    if javac is not None:
+        (home / "bin" / "javac").write_text(f"#!/bin/sh\n{javac}\n")
+        (home / "bin" / "javac").chmod(0o755)
+    return str(home)
+
+
+@pytest.mark.parametrize(
+    "javac", [None, 'echo "error: no"; touch "$3/Partial.class"; exit 1'], ids=["missing", "failing"]
+)
+def test_without_a_working_javac_the_launch_keeps_stock_hadoop(cds_env, monkeypatch, capfd, javac):
+    """A JRE-only host (no javac) or a compile that fails: no conf, no
+    class-path entry, and nothing left in the cache but the archive and
+    the empty conf dir. Compiler output never reaches stdout."""
+    home = _java_home_with(cds_env, javac)
+    monkeypatch.setattr(session, "_java_home", lambda: home)
+    _share(cds_env)
+    cds = session._class_data_sharing({})  # noqa: SLF001
+    assert capfd.readouterr().out == ""
+    assert cds.fs_conf == {} and cds.fs_jar is None
+    assert "SPARK_DIST_CLASSPATH" not in cds.launch_env()
+    archive = cds.java_options.split()[0].split("=", 1)[1]
+    assert sorted(os.listdir(cds_env / "cache" / "e2e_etl_pipeline_spark")) == [os.path.basename(archive), "conf"]
+
+
+def test_archive_maps_with_the_fork_free_jar_appended(spark):
+    """With -Xshare:on (which exits 1 rather than fall back) the archive
+    maps under the session JVM's class path, which ends with the jar, and
+    under that class path without it, as the recording launch had it. The
+    session's local filesystem is the jar's."""
+    from pyspark import SparkContext
+
+    with open(f"/proc/{SparkContext._gateway.proc.pid}/cmdline") as f:  # noqa: SLF001
+        args = f.read().split("\0")
+    archives = [a.split("=", 1)[1] for a in args if a.startswith("-XX:SharedArchiveFile=")]
+    if not archives:
+        pytest.skip("the session's JVM did not start from an archive")
+    jar = session._class_data_sharing({}).fs_jar  # noqa: SLF001
+    class_path = args[args.index("-cp") + 1]
+    assert class_path.endswith(os.pathsep + jar)
+    for cp in (class_path, class_path[: -len(os.pathsep + jar)]):
+        out = subprocess.run(
+            [args[0], "-cp", cp, f"-XX:SharedArchiveFile={archives[0]}", "-Xshare:on", "-version"],
+            capture_output=True,
+            text=True,
+            timeout=60,
+        )
+        assert out.returncode == 0, out.stderr
+    local = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    assert local.getClass().getName() == session._FS_CONF["spark.hadoop.fs.file.impl"]  # noqa: SLF001

@@ -21,6 +21,9 @@ readers (perfbench/layers.py):
   jvm.jit_s            JIT compile seconds the JVM spent during that run;
   jvm.gc_s             garbage-collection seconds during that run, summed
                        over the JVM's collectors;
+  jvm.child_cpu_s      CPU seconds of the child processes the JVM reaped
+                       during that run (cutime + cstime in /proc/<jvm>/stat),
+                       so a layer that forks a command per file shows;
   jvm.heap_committed_mb  heap the JVM held from the OS at the end of it;
   jvm.threads          the JVM's live threads at the end of it;
   python.workers       the Python processes the JVM started (the worker
@@ -78,7 +81,7 @@ FIELDS = (
     "spark.python.bytes_received", "spark.python.run_s",
     "spark.plan.python_nodes", "spark.plan.py_eval", "spark.plan.map_in_py",
     "spark.plan.single_partition", *PLAN_NODES.values(), *EXTRA_NODES.values(),
-    "codegen.compilations", "jvm.jit_s", "jvm.gc_s", "jvm.heap_committed_mb", "jvm.threads",
+    "codegen.compilations", "jvm.jit_s", "jvm.gc_s", "jvm.child_cpu_s", "jvm.heap_committed_mb", "jvm.threads",
     "python.workers", "python.worker_rss_mb",
 )
 
@@ -111,9 +114,17 @@ def plan_shape(stats: SparkStats, eids) -> Counter:
     return out
 
 
+def child_cpu_s(pid: int) -> float:
+    """User + system CPU seconds of the children ``pid`` has reaped."""
+    with open(f"/proc/{pid}/stat") as f:
+        rest = f.read().rsplit(")", 1)[1].split()
+    return (int(rest[13]) + int(rest[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def jvm_counters(spark) -> Counter:
-    """The JVM's compile and GC layers so far: Janino compilations of
-    generated classes, JIT compile seconds and collection seconds."""
+    """The JVM's compile, GC and fork layers so far: Janino compilations of
+    generated classes, JIT compile seconds, collection seconds and the CPU
+    seconds of the child processes it reaped."""
     jvm = spark._jvm  # noqa: SLF001
     mgmt = jvm.java.lang.management.ManagementFactory
     return Counter({
@@ -121,6 +132,7 @@ def jvm_counters(spark) -> Counter:
             jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
         "jvm.jit_s": mgmt.getCompilationMXBean().getTotalCompilationTime() / 1000,
         "jvm.gc_s": sum(gc.getCollectionTime() for gc in mgmt.getGarbageCollectorMXBeans()) / 1000,
+        "jvm.child_cpu_s": child_cpu_s(jvm.java.lang.ProcessHandle.current().pid()),
     })
 
 
@@ -180,7 +192,7 @@ def time_key(spark, stats: SparkStats, key: str, fn, sf_dir: str, n_runs: int) -
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 3))
     counters = jvm_counters(spark) - counters
-    for name in ("jvm.jit_s", "jvm.gc_s"):
+    for name in ("jvm.jit_s", "jvm.gc_s", "jvm.child_cpu_s"):
         counters[name] = round(counters[name], 3)
     counters["jvm.heap_committed_mb"] = heap_committed_mb(spark)
     counters.update(worker_layer(spark))
